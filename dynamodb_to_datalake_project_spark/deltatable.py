@@ -42,6 +42,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from urllib.parse import unquote
 
 CHECKPOINT_INTERVAL = 10
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -117,14 +118,19 @@ def table_snapshot(table_path: str) -> dict:
 
 
 def partition_values_of(rel_file: str, partition_cols: list[str]) -> dict:
-    """Hive path segments `col=val/...` -> Delta partitionValues
-    (null encoded per the hive sentinel)."""
+    """Hive path segments `col=val/...` -> Delta partitionValues: the
+    real values, null for the hive sentinel. Spark's writer escapes
+    `:` `/` `%` `=` and other ASCII specials in directory names as
+    `%XX`; `unquote` undoes exactly that, so OCC overlap checks see a
+    commit on `a:b` (directory `a%3Ab`) as touching `a:b`, the value
+    the merge's touched set holds."""
     vals: dict[str, "str | None"] = {}
     for seg in rel_file.split("/")[:-1]:
         if "=" in seg:
             c, _, v = seg.partition("=")
+            c = unquote(c)
             if c in partition_cols:
-                vals[c] = None if v == _HIVE_NULL else v
+                vals[c] = None if v == _HIVE_NULL else unquote(v)
     return {c: vals.get(c) for c in partition_cols}
 
 

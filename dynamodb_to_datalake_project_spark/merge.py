@@ -16,6 +16,12 @@ Two implementations:
   overwrite). At 100 TB the target table is huge but a CDC batch
   touches a handful of time partitions — reading and rewriting just
   those keeps merge cost proportional to the batch, not the table.
+  Once the table has a Delta log, the read is a file list: the live
+  files of the touched partition directories (named by Spark's own
+  writer rule), so no step lists the whole lake and no partition
+  predicate is built. Only the one-time bootstrap of a table without
+  a log and the `max_touched_partitions` fallback read the whole
+  table.
 
 Round 10 makes the lake table a REAL Delta-protocol table: every
 commit appends `_delta_log/<v>.json` actions (see `deltatable.py`),
@@ -188,14 +194,90 @@ def _align_schemas(
 
 
 def touched_partitions(source: DataFrame, partition_cols: list[str]) -> list[dict]:
-    """Distinct partition tuples present in the incoming batch.
+    """Distinct partition tuples present in the incoming batch, each
+    value as the string Spark's partitioned writer puts in the
+    directory name (cast to string; None for null).
 
     The collect is bounded by the number of partitions in ONE batch
     (minutes of data), not table size — safe at scale.
     """
     return [
-        r.asDict() for r in source.select(*partition_cols).distinct().collect()
+        r.asDict()
+        for r in source.select(
+            *[F.col(c).cast("string").alias(c) for c in partition_cols]
+        )
+        .distinct()
+        .collect()
     ]
+
+
+def _partition_rels(
+    spark: SparkSession, partition_cols: list[str], parts: list[dict]
+) -> list[str]:
+    """Table-relative directory of each touched partition ('.' for an
+    unpartitioned table), named by Spark's own writer rule
+    (`ExternalCatalogUtils.getPartitionPathString`: escapes `:` `/`
+    `%` `=` and the like, maps null and "" to
+    `__HIVE_DEFAULT_PARTITION__`) — so a name always matches the
+    directory the staged write creates for that partition."""
+    if not partition_cols:
+        return ["."]
+    path_string = (
+        spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .getPartitionPathString
+    )
+    # one JVM call per distinct (column, value): a minute-grained batch
+    # repeats its year..hour values across every touched partition
+    seg = {
+        (c, v): path_string(c, v)
+        for c in partition_cols
+        for v in {p[c] for p in parts}
+    }
+    return sorted(
+        {"/".join(seg[c, p[c]] for c in partition_cols) for p in parts}
+    )
+
+
+def _log_schema(table_path: str):
+    """The table's schema from its Delta log, not from one sampled
+    footer: after schema evolution old partitions lack the new columns
+    and a footer-inferred read could silently drop them (NULL-backfill
+    needs the full schema)."""
+    from pyspark.sql import types as T
+
+    return T.StructType.fromJson(
+        json.loads(deltatable._schema_json_of(table_path))
+    )
+
+
+def _read_touched(
+    spark: SparkSession, table_path: str, rels: list[str], retain: bool
+) -> DataFrame:
+    """The merge target of a table with a Delta log: the live data
+    files of the touched partitions only, read with the log's schema.
+    Nothing lists the whole lake — a swap-mode table's directories ARE
+    its snapshot, so only the touched ones are listed; a retain-mode
+    table takes the log's active files under them. The file list does
+    the partition pruning, so no predicate is needed."""
+    schema = _log_schema(table_path)
+    if retain:
+        wanted = set(rels)
+        files = sorted(
+            f
+            for f in deltatable.snapshot_at(table_path)["active_files"]
+            if (f.rpartition("/")[0] or ".") in wanted
+        )
+    else:
+        files = [
+            f for rel in rels for f in deltatable.data_files_under(table_path, rel)
+        ]
+    if not files:
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.schema(schema)
+        .option("basePath", table_path)
+        .parquet(*[os.path.join(table_path, f) for f in files])
+    )
 
 
 def _apply_commit(table_path: str, commit_id: str) -> None:
@@ -537,6 +619,65 @@ def _claim_tip(
     return None
 
 
+def _create_table(
+    table_path: str,
+    source: DataFrame,
+    keys: list[str],
+    precombine: list[str],
+    partition_cols: list[str],
+    op_col: "str | None",
+    delete_types: tuple[str, ...],
+    delta_log: bool,
+    retain_files: bool,
+) -> None:
+    """First batch: nothing to lose, write the deduped batch directly
+    as the table (replayable from the checkpointed batch if
+    interrupted), then commit log version 0. Table CREATION is not
+    concurrency-safe (two creators would race the overwrite itself,
+    log or no log) — the reference serializes job starts
+    (MaxConcurrentRuns=1)."""
+    cols = [c for c in source.columns if c != op_col]
+    empty = source.select(*cols).limit(0)
+    deduped = upsert_dataframes(
+        empty,
+        source,
+        keys,
+        precombine,
+        op_col=op_col,
+        delete_types=delete_types,
+    )
+    deduped.write.mode("overwrite").partitionBy(*partition_cols).parquet(
+        table_path
+    )
+    if not delta_log:
+        return
+    txn = uuid.uuid4().hex[:12]
+    if not deltatable.claim_version(table_path, 0, txn):
+        raise ConcurrentWriteConflict(
+            f"{table_path}: concurrent table creation"
+        )
+    actions = [
+        {
+            "commitInfo": {
+                "txnId": txn,
+                "operation": "CREATE TABLE AS SELECT",
+                "readVersion": -1,
+            }
+        },
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        deltatable.meta_action(
+            deltatable.schema_string(deduped.schema),
+            partition_cols,
+            {deltatable.RETAIN_CONFIG_KEY: "true" if retain_files else "false"},
+        ),
+    ] + [
+        {"add": deltatable.build_add(table_path, f, partition_cols)}
+        for f in _all_data_files(table_path)
+    ]
+    deltatable.append_commit(table_path, 0, actions, txn)
+    deltatable.release_claim(table_path, 0)
+
+
 def merge_into_parquet(
     spark: SparkSession,
     table_path: str,
@@ -558,8 +699,12 @@ def merge_into_parquet(
 
     1. replay any interrupted prior commit (`recover_pending_commits`);
     2. derive touched partition tuples from the batch (small collect);
-    3. read only those partitions of the target (partition pruning via
-       predicate on partition columns);
+    3. read only those partitions of the target: with a Delta log,
+       the live data files of the touched partitions (`_read_touched`,
+       the log's schema, basePath for the partition columns); without
+       one (bootstrap) or past `max_touched_partitions`, the whole
+       table, pruned by a predicate on the partition columns in the
+       bootstrap case;
     4. union + latest-wins dedup (optionally honoring `op_col` hard
        deletes — see `upsert_dataframes`);
     5. write the rewritten partitions to `_staging/<commit_id>/`, then
@@ -598,14 +743,15 @@ def merge_into_parquet(
         # would bloat analysis and the write rewrites most of the table
         # anyway. Correctness is identical; only pruning is skipped.
         parts = None
-    # our touched set in Delta partitionValues form (None = all)
+    # our touched set in Delta partitionValues form (None = all); the
+    # writer stores "" as null, so "" names the null partition
     ours = (
         None
         if parts is None
-        else [
-            {c: (None if p[c] is None else str(p[c])) for c in partition_cols}
-            for p in parts
-        ]
+        else [{c: p[c] or None for c in partition_cols} for p in parts]
+    )
+    touched_rels = (
+        None if ours is None else _partition_rels(spark, partition_cols, ours)
     )
     from pyspark.errors import AnalysisException
 
@@ -613,103 +759,54 @@ def merge_into_parquet(
         base_version = (
             deltatable.current_version(table_path) if delta_log else -1
         )
-        try:
-            if retain_files and base_version >= 0:
-                # retained-file table: the directory holds superseded
-                # files; only the log's active set is the table
-                target = deltatable.read_snapshot_df(spark, table_path)
-            else:
-                reader = spark.read
-                if delta_log and base_version >= 0:
-                    # read with the LOG's schema, not one sampled
-                    # footer's: after schema evolution old partitions
-                    # lack the new columns and a footer-inferred read
-                    # could silently drop them (NULL-backfill needs
-                    # the full schema)
-                    sj = deltatable._schema_json_of(table_path)
-                    if sj:
-                        from pyspark.sql import types as T
-
-                        reader = reader.schema(
-                            T.StructType.fromJson(json.loads(sj))
-                        )
-                target = reader.parquet(table_path)
-        except AnalysisException as e:
-            # ONLY a missing/uninitialized table means "first batch":
-            # write the deduped batch as the table. Any other failure
-            # (transient IO, permissions, corrupt footer) must
-            # propagate — treating it as first-batch would overwrite
-            # real partitions with batch-only rows.
-            cond = getattr(e, "getErrorClass", lambda: "")() or str(e)
-            if not (
-                "PATH_NOT_FOUND" in cond or "UNABLE_TO_INFER_SCHEMA" in cond
-            ):
-                raise
-            # first batch: nothing to lose, write directly (replayable
-            # from the checkpointed batch if interrupted). Table
-            # CREATION is not concurrency-safe (two creators would race
-            # the overwrite itself, log or no log) — the reference
-            # serializes job starts (MaxConcurrentRuns=1).
-            cols = [c for c in source.columns if c != op_col]
-            empty = source.select(*cols).limit(0)
-            deduped = upsert_dataframes(
-                empty,
-                source,
-                keys,
-                precombine,
-                op_col=op_col,
-                delete_types=delete_types,
-            )
-            deduped.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-                table_path
-            )
-            if delta_log:
-                txn = uuid.uuid4().hex[:12]
-                if not deltatable.claim_version(table_path, 0, txn):
-                    raise ConcurrentWriteConflict(
-                        f"{table_path}: concurrent table creation"
+        if base_version >= 0 and touched_rels is not None:
+            target = _read_touched(spark, table_path, touched_rels, retain_files)
+        else:
+            # whole-table read: the one-time bootstrap of a table
+            # without a log, or the touched-partition cap fallback
+            try:
+                if base_version < 0:
+                    target = spark.read.parquet(table_path)
+                elif retain_files:
+                    # the directory holds superseded files; only the
+                    # log's active set is the table
+                    target = deltatable.read_snapshot_df(spark, table_path)
+                else:
+                    target = spark.read.schema(_log_schema(table_path)).parquet(
+                        table_path
                     )
-                actions = [
-                    {
-                        "commitInfo": {
-                            "txnId": txn,
-                            "operation": "CREATE TABLE AS SELECT",
-                            "readVersion": -1,
-                        }
-                    },
-                    {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-                    deltatable.meta_action(
-                        deltatable.schema_string(deduped.schema),
-                        partition_cols,
-                        {
-                            deltatable.RETAIN_CONFIG_KEY: (
-                                "true" if retain_files else "false"
-                            )
-                        },
-                    ),
-                ] + [
-                    {"add": deltatable.build_add(table_path, f, partition_cols)}
-                    for f in _all_data_files(table_path)
-                ]
-                deltatable.append_commit(table_path, 0, actions, txn)
-                deltatable.release_claim(table_path, 0)
-            return
+            except AnalysisException as e:
+                # ONLY a missing/uninitialized table means "first
+                # batch". Any other failure (transient IO, permissions,
+                # corrupt footer) must propagate — treating it as
+                # first-batch would overwrite real partitions with
+                # batch-only rows.
+                cond = getattr(e, "getErrorClass", lambda: "")() or str(e)
+                if not (
+                    "PATH_NOT_FOUND" in cond or "UNABLE_TO_INFER_SCHEMA" in cond
+                ):
+                    raise
+                _create_table(
+                    table_path, source, keys, precombine, partition_cols,
+                    op_col, delete_types, delta_log, retain_files,
+                )
+                return
         schema_changed = False
         if evolve_schema:
             target, source, schema_changed = _align_schemas(
                 target, source, op_col, partition_cols
             )
-        if parts is None:
-            existing = target
-        else:
+        existing = target
+        if ours is not None and base_version < 0:
+            # log-less table: prune the whole-table read to the touched
+            # partitions. eqNullSafe: a null partition value (e.g. from
+            # an unparseable timestamp) must still match its existing
+            # partition — plain == excludes those rows and the dynamic
+            # overwrite would then drop them.
             pred = F.lit(False)
-            for p in parts:
+            for p in ours:
                 clause = F.lit(True)
                 for c in partition_cols:
-                    # eqNullSafe: a null partition value (e.g. from an
-                    # unparseable timestamp) must still match its
-                    # existing partition — plain == excludes those rows
-                    # and the dynamic overwrite would then drop them.
                     clause = clause & F.col(c).eqNullSafe(F.lit(p[c]))
                 pred = pred | clause
             existing = target.filter(pred)
@@ -740,22 +837,16 @@ def merge_into_parquet(
         removed: list[str] = []
         if op_col and partition_cols:
             staged = set(rels)
-            if parts is not None:
+            if touched_rels is not None:
                 # hard deletes can empty a touched partition entirely —
                 # it then has no staged replacement and must be dropped
-                # at commit time. Best-effort dir-name reconstruction
-                # (partition values here are pipeline-derived simple
-                # strings, P3); an unmatchable name just leaves the
-                # partition for the next compaction.
-                for p in parts:
-                    rel = "/".join(
-                        f"{c}={'__HIVE_DEFAULT_PARTITION__' if p[c] is None else p[c]}"
-                        for c in partition_cols
-                    )
-                    if rel not in staged and os.path.isdir(
-                        os.path.join(table_path, rel)
-                    ):
-                        removed.append(rel)
+                # at commit time
+                removed = [
+                    rel
+                    for rel in touched_rels
+                    if rel not in staged
+                    and os.path.isdir(os.path.join(table_path, rel))
+                ]
             else:
                 # full-table merge (touched-partition cap exceeded): the
                 # staged output IS the whole table, so any on-disk leaf

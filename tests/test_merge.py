@@ -1419,3 +1419,207 @@ def test_schema_evolution_time_travel_pre_evolution(spark, tmp_path):
     assert "rank" not in v0.columns
     v1 = deltatable.read_snapshot_df(spark, path, 1)
     assert {r.id: r["rank"] for r in v1.collect()} == {"a": None, "b": 9}
+
+
+def test_partition_values_unescape_writer_path_names():
+    """The log's partitionValues carry the real values: Spark's writer
+    escapes `:` `%` `=` `/` in directory names as `%XX`."""
+    from dynamodb_to_datalake_project_spark import deltatable
+
+    pv = deltatable.partition_values_of(
+        "p=a%3Ab/q=50%25/r=__HIVE_DEFAULT_PARTITION__/part-0.parquet",
+        ["p", "q", "r"],
+    )
+    assert pv == {"p": "a:b", "q": "50%", "r": None}
+
+
+def test_merge_occ_conflict_on_escaped_partition_value(spark, tmp_path):
+    """Two writers on partition value "a:b" (directory `p=a%3Ab`): the
+    interleaved commit must be seen as touching "a:b", so the stale
+    writer retries on top of it instead of swapping its stale copy of
+    the partition over the other writer's update."""
+    import json as _json
+
+    from dynamodb_to_datalake_project_spark import deltatable
+
+    path = str(tmp_path / "lake")
+    schema = "id string, update_at string, note string, p string"
+    b0 = spark.createDataFrame(
+        [("a", "2023-01-01T10:00:00", "v1", "a:b"),
+         ("b", "2023-01-01T10:00:00", "v1", "a:b")],
+        schema,
+    )
+    merge.merge_into_parquet(spark, path, b0, ["id"], ["update_at"], ["p"])
+    batch_a = spark.createDataFrame(
+        [("a", "2023-01-01T12:00:00", "vA", "a:b")], schema
+    )
+    batch_b = spark.createDataFrame(
+        [("c", "2023-01-01T11:00:00", "vB", "a:b")], schema
+    )
+    fired = []
+
+    def interleave_a():
+        if not fired:
+            fired.append(1)
+            merge.merge_into_parquet(
+                spark, path, batch_a, ["id"], ["update_at"], ["p"]
+            )
+
+    merge.merge_into_parquet(
+        spark, path, batch_b, ["id"], ["update_at"], ["p"],
+        _hook_before_commit=interleave_a,
+    )
+    v2 = dict(deltatable.read_commits(path))[2]
+    ci = next(
+        _json.loads(ln)["commitInfo"]
+        for ln in v2.splitlines()
+        if "commitInfo" in ln
+    )
+    assert ci["readVersion"] == 1, (
+        "the stale writer must have retried on top of the other commit"
+    )
+    result = {r.id: r.note for r in spark.read.parquet(path).collect()}
+    assert result == {"a": "vA", "b": "v1", "c": "vB"}
+
+
+def test_hard_delete_drops_emptied_escaped_partition(spark, tmp_path):
+    """delete_mode='hard' empties partition "x:y" (directory
+    `day=x%3Ay`): the partition is dropped at commit, and the lake
+    equals the fold of the two batches."""
+    from dynamodb_to_datalake_project_spark import cdc
+
+    table = str(tmp_path / "lake")
+    schema = "id string, update_at string, note string, day string, event_name string"
+    initial = spark.createDataFrame(
+        [
+            ("a", "2023-01-01T00:00:00", "v1", "x:y", "INSERT"),
+            ("b", "2023-01-01T00:00:00", "v1", "x:y", "INSERT"),
+            ("c", "2023-01-01T00:00:00", "v1", "d1", "INSERT"),
+        ],
+        schema,
+    )
+    batch = spark.createDataFrame(
+        [
+            ("a", "2023-01-02T00:00:00", None, "x:y", "REMOVE"),
+            ("b", "2023-01-02T00:00:00", None, "x:y", "REMOVE"),
+            ("c", "2023-01-02T00:00:00", "v2", "d1", "MODIFY"),
+        ],
+        schema,
+    )
+    fn = cdc.make_merge_batch_fn(
+        table, ["id"], ["update_at"], ["day"],
+        event_type_col="event_name", delete_mode="hard",
+    )
+    fn(initial, 0)
+    assert os.path.isdir(os.path.join(table, "day=x%3Ay"))
+    fn(batch, 1)
+    assert not os.path.isdir(os.path.join(table, "day=x%3Ay"))
+    state = {
+        r.id: (r.note, r.day) for r in spark.read.parquet(table).collect()
+    }
+    assert state == {"c": ("v2", "d1")}
+
+
+def _listing_jobs(spark, group):
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        desc = store.job(jid).description()
+        if desc.isDefined() and desc.get().startswith("Listing leaf files"):
+            out.append(desc.get())
+    return out
+
+
+def test_merge_reads_only_touched_partition_files(spark, tmp_path):
+    """Shape: on a 41-partition table, a batch touching ONE partition
+    merges without a whole-lake listing job (the target is a file list
+    of the touched partition), and every row of the untouched
+    partitions survives."""
+    path = str(tmp_path / "lake")
+    schema = "id string, update_at string, note string, day string"
+    days = [f"2023-02-{d:02d}" for d in range(1, 29)] + [
+        f"2023-03-{d:02d}" for d in range(1, 14)
+    ]
+    assert len(days) >= 40
+    rows = [
+        (f"{day}-{i}", f"{day}T00:00:00", "v1", day)
+        for day in days
+        for i in range(2)
+    ]
+    merge.merge_into_parquet(
+        spark, path, spark.createDataFrame(rows, schema),
+        ["id"], ["update_at"], ["day"],
+    )
+    sc = spark.sparkContext
+    # control: a whole-table read of this lake does launch a listing job
+    sc.setJobGroup("whole_read", "whole-table read")
+    try:
+        assert spark.read.parquet(path).count() == len(rows)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _listing_jobs(spark, "whole_read")
+
+    batch = spark.createDataFrame(
+        [(f"{days[5]}-0", f"{days[5]}T01:00:00", "v2", days[5]),
+         (f"{days[5]}-9", f"{days[5]}T01:00:00", "new", days[5])],
+        schema,
+    )
+    sc.setJobGroup("one_partition_merge", "merge touching one partition")
+    try:
+        merge.merge_into_parquet(
+            spark, path, batch, ["id"], ["update_at"], ["day"]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("one_partition_merge")
+    assert _listing_jobs(spark, "one_partition_merge") == []
+
+    state = {r.id: r.note for r in spark.read.parquet(path).collect()}
+    expect = {r[0]: r[2] for r in rows}
+    expect[f"{days[5]}-0"] = "v2"
+    expect[f"{days[5]}-9"] = "new"
+    assert state == expect
+
+
+@pytest.mark.parametrize("retain", [False, True])
+def test_merge_escaped_and_null_partitions_keep_untouched_rows(
+    spark, tmp_path, retain
+):
+    """Touched partitions whose values are null, "", "a:b" and "50%"
+    keep every row the batch does not touch: each partition's files are
+    found under the directory Spark's writer named for it (a wrongly
+    built name would leave the old rows out of the merge target and the
+    swap would drop them). Null and "" share the hive null partition."""
+    from dynamodb_to_datalake_project_spark import deltatable
+
+    path = str(tmp_path / "lake")
+    schema = "id string, update_at string, note string, p string"
+    values = [None, "", "a:b", "50%"]
+    rows = [
+        (f"k{j}-{i}", "2023-01-01T00:00:00", "v1", v)
+        for j, v in enumerate(values)
+        for i in range(2)
+    ] + [("plain-0", "2023-01-01T00:00:00", "v1", "plain")]
+    merge.merge_into_parquet(
+        spark, path, spark.createDataFrame(rows, schema),
+        ["id"], ["update_at"], ["p"], retain_files=retain,
+    )
+    expect = {r[0]: r[2] for r in rows}
+    for j, v in enumerate(values):
+        batch = spark.createDataFrame(
+            [(f"k{j}-0", "2023-01-02T00:00:00", f"v2-{j}", v),
+             (f"k{j}-new", "2023-01-02T00:00:00", "new", v)],
+            schema,
+        )
+        merge.merge_into_parquet(
+            spark, path, batch, ["id"], ["update_at"], ["p"]
+        )
+        expect[f"k{j}-0"] = f"v2-{j}"
+        expect[f"k{j}-new"] = "new"
+        if retain:
+            table = deltatable.read_snapshot_df(spark, path)
+        else:
+            table = spark.read.parquet(path)
+        state = {r.id: r.note for r in table.collect()}
+        assert state == expect, (v, state)
