@@ -181,35 +181,6 @@ _PRIORITY: list[str] = [
     "multimodal_ogg_stats",
     "multimodal_webm_stats",
     "q12_late_priority_count",
-    "q13_order_distribution",
-    "q20_stock_promotion",
-    "q2_min_cost_supplier",
-    "q4_priority_late_ship",
-    "q5_local_supplier_volume",
-    "q7_nation_volume",
-    "q9_product_profit",
-    "range_join_follow_events",
-    "referential_audit",
-    "retention_cohorts",
-    "rollup_incremental",
-    "sample_hash_bucket",
-    "sample_stratified_exact",
-    "session_basket_lift",
-    "session_paths_topk",
-    "sessionization",
-    "sim_knn_bruteforce",
-    "sim_label_norm_stats",
-    "sketch_cms_estimate",
-    "sketch_hll_overlap_exact",
-    "sketch_kmv_distinct",
-    "sketch_kmv_source_jaccard",
-    "sketch_quantile_grid",
-    "stats_corr_matrix",
-    "stats_linear_fit",
-    "text_bm25_topk",
-    "text_novelty_score",
-    "token_count_bpe",
-    "w5_sliding_time_window",
     # --- freshest r7+ blocks, r10 order preserved ---
     "parquet_gzip_value_scan",
     "iceberg_manifest_audit",

@@ -243,15 +243,24 @@ def table_retain_mode(table_path: str) -> "bool | None":
     commits retained history, that silently destroys the time travel
     those commits paid to keep, so writers validate their flag against
     this record."""
+    meta = _latest_meta(table_path) or {}
+    val = (meta.get("configuration") or {}).get(RETAIN_CONFIG_KEY)
+    return None if val is None else val == "true"
+
+
+def _latest_meta(
+    table_path: str, version: "int | None" = None
+) -> "dict | None":
+    """The latest metaData action body at or before `version` (None =
+    tip), or None when the log has none."""
     for _v, content in reversed(read_commits(table_path)):
+        if version is not None and _v > version:
+            continue
         for line in content.splitlines():
             if '"metaData"' in line:
                 a = json.loads(line)
                 if "metaData" in a:
-                    val = (a["metaData"].get("configuration") or {}).get(
-                        RETAIN_CONFIG_KEY
-                    )
-                    return None if val is None else val == "true"
+                    return a["metaData"]
     return None
 
 
@@ -503,16 +512,16 @@ def maybe_write_checkpoint(
 
 def overlaps(
     committed: "list[dict] | None",
-    ours: "list[dict] | None",
+    ours: list[dict],
     partition_cols: list[str],
 ) -> bool:
-    """Partition-level conflict predicate: None = whole table."""
+    """Partition-level conflict predicate: `committed` None = an
+    intervening commit touched the whole table."""
     if committed is None:
-        return True  # an intervening commit touched the whole table
+        return True
     if not committed:
         return False  # nothing committed since our base read
-    if ours is None:
-        return True  # we rewrite the whole table over new commits
+
     def norm(pv: dict) -> tuple:
         return tuple(
             None if pv.get(c) is None else str(pv[c])
@@ -596,15 +605,8 @@ def _schema_json_of(
     `version` (None = tip) — time travel reads the schema AS OF the
     snapshot, so pre-evolution versions come back without the later
     columns."""
-    for _v, content in reversed(read_commits(table_path)):
-        if version is not None and _v > version:
-            continue
-        for line in content.splitlines():
-            if '"metaData"' in line:
-                a = json.loads(line)
-                if "metaData" in a:
-                    return a["metaData"]["schemaString"]
-    return None
+    meta = _latest_meta(table_path, version)
+    return None if meta is None else meta["schemaString"]
 
 
 def vacuum(table_path: str, retain_versions: int = 0) -> list[str]:

@@ -1271,13 +1271,20 @@ def _triangle_count_broadcast(und: DataFrame, n_edges: int):
     fail the both-out-edges test), which is the same enumeration the
     wedge join performs. Credits: a and b each count the intersection
     size, every common neighbor c counts 1. Integer-exact. Returns
-    None when the node table is too wide for the offsets array budget
-    (caller falls back to the distributed join)."""
+    None for non-integral node ids (a string id does not fit the int64
+    arrays, a float id would be truncated) or when the node table is
+    too wide for the offsets array budget — the caller falls back to
+    the distributed join."""
     import numpy as np
     import pandas as pd
 
     spark = und.sparkSession
     pdf = und.select("u", "v").toPandas()
+    if len(pdf) and not (
+        str(pdf["u"].dtype).startswith("int")
+        and str(pdf["v"].dtype).startswith("int")
+    ):
+        return None
     uu = pdf["u"].to_numpy(np.int64)
     vv = pdf["v"].to_numpy(np.int64)
     nodes = np.unique(np.concatenate([uu, vv])) if len(uu) else np.zeros(0, np.int64)

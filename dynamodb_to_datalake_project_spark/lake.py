@@ -494,7 +494,7 @@ def register_table(
         # only the unpartitioned-layout case is benign; a real repair
         # failure on a partitioned table must surface (a silently
         # partitionless registration reads as 0 rows downstream)
-        cond = getattr(e, "getErrorClass", lambda: "")() or str(e)
+        cond = getattr(e, "getCondition", lambda: "")() or str(e)
         if "NOT_A_PARTITIONED_TABLE" not in cond:
             raise
 

@@ -16,12 +16,11 @@ Two implementations:
   overwrite). At 100 TB the target table is huge but a CDC batch
   touches a handful of time partitions — reading and rewriting just
   those keeps merge cost proportional to the batch, not the table.
-  Once the table has a Delta log, the read is a file list: the live
-  files of the touched partition directories (named by Spark's own
-  writer rule), so no step lists the whole lake and no partition
-  predicate is built. Only the one-time bootstrap of a table without
-  a log and the `max_touched_partitions` fallback read the whole
-  table.
+  The read is always a file list: the live files of the touched
+  partition directories (named by Spark's own writer rule), so no
+  step reads the whole lake and no partition predicate is built. A
+  table without a log yet (bootstrap) is read the same way, with the
+  schema inferred from its footers instead of the log's.
 
 Round 10 makes the lake table a REAL Delta-protocol table: every
 commit appends `_delta_log/<v>.json` actions (see `deltatable.py`),
@@ -251,15 +250,18 @@ def _log_schema(table_path: str):
 
 
 def _read_touched(
-    spark: SparkSession, table_path: str, rels: list[str], retain: bool
+    spark: SparkSession,
+    table_path: str,
+    rels: list[str],
+    schema,
+    retain: bool,
 ) -> DataFrame:
-    """The merge target of a table with a Delta log: the live data
-    files of the touched partitions only, read with the log's schema.
-    Nothing lists the whole lake — a swap-mode table's directories ARE
-    its snapshot, so only the touched ones are listed; a retain-mode
-    table takes the log's active files under them. The file list does
-    the partition pruning, so no predicate is needed."""
-    schema = _log_schema(table_path)
+    """The merge target: the live data files of the touched partitions
+    only, read with `schema`. Nothing lists the whole lake — a
+    swap-mode table's directories ARE its snapshot, so only the
+    touched ones are listed; a retain-mode table takes the log's
+    active files under them. The file list does the partition
+    pruning, so no predicate is needed."""
     if retain:
         wanted = set(rels)
         files = sorted(
@@ -433,9 +435,7 @@ def recover_pending_commits(
     return replayed
 
 
-def _resolve_retain_mode(
-    table_path: str, retain_files: "bool | None", delta_log: bool = True
-) -> bool:
+def _resolve_retain_mode(table_path: str, retain_files: "bool | None") -> bool:
     """Resolve the caller's `retain_files` flag against the TABLE's
     recorded mode (metaData.configuration, `deltatable.
     table_retain_mode`). None = inherit the table's mode (False for
@@ -445,11 +445,7 @@ def _resolve_retain_mode(
     to keep (silent time-travel destruction), and a retain commit on
     a swap table would leave superseded files a plain directory scan
     double-counts."""
-    recorded = (
-        deltatable.table_retain_mode(table_path)
-        if delta_log and os.path.isdir(table_path)
-        else None
-    )
+    recorded = deltatable.table_retain_mode(table_path)
     if retain_files is None:
         return bool(recorded)
     if recorded is not None and bool(retain_files) != recorded:
@@ -480,10 +476,11 @@ def _delta_actions(
     """The Delta actions of one merge commit. Incremental commits
     (base_version >= 0) remove the live files of every touched
     partition and add their staged replacements; a BOOTSTRAP commit
-    (legacy table without a log, base_version < 0) instead records
-    the full post-merge active set — untouched live files plus the
-    staged ones — under protocol + metaData, with no removes (there
-    is no prior log to remove against)."""
+    (a table without a log, base_version < 0: a legacy table's first
+    merge, or `_create_table`) instead records the full post-merge
+    active set — untouched live files plus the staged ones — under
+    protocol + metaData, with no removes (there is no prior log to
+    remove against)."""
     actions: list[dict] = [
         {
             "commitInfo": {
@@ -494,19 +491,12 @@ def _delta_actions(
         }
     ]
     if base_version < 0:
-        actions.append({"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}})
-        actions.append(
-            deltatable.meta_action(
-                schema_json,
-                partition_cols,
-                {deltatable.RETAIN_CONFIG_KEY: "true" if retain else "false"},
-            )
-        )
-    elif schema_changed:
-        # schema evolution: this commit's metaData replaces the
-        # table's current metadata (the Delta protocol rule) — the
-        # retention config rides along so table_retain_mode keeps
-        # reading the latest metaData
+        actions.append({"protocol": dict(deltatable._PROTOCOL)})
+    if base_version < 0 or schema_changed:
+        # the first metaData, or schema evolution: this commit's
+        # metaData replaces the table's current metadata (the Delta
+        # protocol rule) — the retention config rides along so
+        # table_retain_mode keeps reading the latest metaData
         actions.append(
             deltatable.meta_action(
                 schema_json,
@@ -525,7 +515,7 @@ def _delta_actions(
             # retained-file mode: the directory holds superseded
             # files too — the LOG's active set, restricted to the
             # touched/removed partitions, is what this commit removes
-            touched_rels = {r for r in list(rels) + list(removed)}
+            touched_rels = set(rels) | set(removed)
             for f in deltatable.snapshot_at(table_path)["active_files"]:
                 rel_dir = "/".join(f.split("/")[:-1]) or "."
                 if rel_dir in touched_rels:
@@ -591,7 +581,7 @@ def _all_data_files(root: str) -> list[str]:
 def _claim_tip(
     table_path: str,
     base_version: int,
-    ours: "list[dict] | None",
+    ours: list[dict],
     partition_cols: list[str],
     txn_id: str,
     spins: int = 200,
@@ -619,6 +609,41 @@ def _claim_tip(
     return None
 
 
+def _stage(
+    df: DataFrame, table_path: str, partition_cols: list[str]
+) -> "tuple[str, str, list[str]]":
+    """Write `df` to a fresh `_staging/<commit_id>/` (partitioned like
+    the table). Returns (commit_id, staging dir, the staging-relative
+    directories that received data files)."""
+    commit_id = uuid.uuid4().hex[:12]
+    staging = os.path.join(table_path, "_staging", commit_id)
+    writer = df.write.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(staging)
+    rels = sorted(
+        {
+            os.path.relpath(root, staging)
+            for root, _dirs, files in os.walk(staging)
+            if any(f.endswith(".parquet") for f in files)
+        }
+    )
+    return commit_id, staging, rels
+
+
+def _commit(table_path: str, commit_id: str, manifest: dict) -> None:
+    """Write the commit marker, then apply it. The marker's atomic
+    rename is the commit point: before it the table is untouched,
+    after it `_apply_commit` replays idempotently."""
+    cdir = os.path.join(table_path, "_commits")
+    os.makedirs(cdir, exist_ok=True)
+    marker_tmp = os.path.join(cdir, f".{commit_id}.json.tmp")
+    with open(marker_tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(marker_tmp, os.path.join(cdir, f"{commit_id}.json"))
+    _apply_commit(table_path, commit_id)
+
+
 def _create_table(
     table_path: str,
     source: DataFrame,
@@ -627,7 +652,6 @@ def _create_table(
     partition_cols: list[str],
     op_col: "str | None",
     delete_types: tuple[str, ...],
-    delta_log: bool,
     retain_files: bool,
 ) -> None:
     """First batch: nothing to lose, write the deduped batch directly
@@ -649,31 +673,17 @@ def _create_table(
     deduped.write.mode("overwrite").partitionBy(*partition_cols).parquet(
         table_path
     )
-    if not delta_log:
-        return
     txn = uuid.uuid4().hex[:12]
     if not deltatable.claim_version(table_path, 0, txn):
         raise ConcurrentWriteConflict(
             f"{table_path}: concurrent table creation"
         )
-    actions = [
-        {
-            "commitInfo": {
-                "txnId": txn,
-                "operation": "CREATE TABLE AS SELECT",
-                "readVersion": -1,
-            }
-        },
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        deltatable.meta_action(
-            deltatable.schema_string(deduped.schema),
-            partition_cols,
-            {deltatable.RETAIN_CONFIG_KEY: "true" if retain_files else "false"},
-        ),
-    ] + [
-        {"add": deltatable.build_add(table_path, f, partition_cols)}
-        for f in _all_data_files(table_path)
-    ]
+    # a bootstrap commit with nothing staged: every written file is added
+    actions = _delta_actions(
+        table_path, table_path, [], [], [], partition_cols, -1,
+        deltatable.schema_string(deduped.schema), txn,
+        retain=retain_files, operation="CREATE TABLE AS SELECT",
+    )
     deltatable.append_commit(table_path, 0, actions, txn)
     deltatable.release_claim(table_path, 0)
 
@@ -685,10 +695,8 @@ def merge_into_parquet(
     keys: list[str],
     precombine: list[str],
     partition_cols: list[str],
-    max_touched_partitions: int = 2000,
     op_col: str | None = None,
     delete_types: tuple[str, ...] = ("REMOVE",),
-    delta_log: bool = True,
     retain_files: "bool | None" = None,
     evolve_schema: bool = False,
     max_commit_retries: int = 3,
@@ -699,12 +707,12 @@ def merge_into_parquet(
 
     1. replay any interrupted prior commit (`recover_pending_commits`);
     2. derive touched partition tuples from the batch (small collect);
-    3. read only those partitions of the target: with a Delta log,
-       the live data files of the touched partitions (`_read_touched`,
-       the log's schema, basePath for the partition columns); without
-       one (bootstrap) or past `max_touched_partitions`, the whole
-       table, pruned by a predicate on the partition columns in the
-       bootstrap case;
+    3. read only those partitions of the target (`_read_touched`): the
+       live data files of the touched partition directories, with
+       basePath for the partition columns and the log's schema — or,
+       for the one-time bootstrap of a table without a log, the schema
+       inferred from its footers (such a table is in swap mode, so its
+       directories are its snapshot);
     4. union + latest-wins dedup (optionally honoring `op_col` hard
        deletes — see `upsert_dataframes`);
     5. write the rewritten partitions to `_staging/<commit_id>/`, then
@@ -728,91 +736,54 @@ def merge_into_parquet(
     """
     if os.path.isdir(table_path):
         recover_pending_commits(table_path, staging_grace_seconds=3600.0)
-    retain_files = _resolve_retain_mode(table_path, retain_files, delta_log)
-    if retain_files and not delta_log:
-        raise ValueError(
-            "retain_files needs the delta log: without the active-set "
-            "fold a directory full of superseded files is unreadable"
-        )
+    retain_files = _resolve_retain_mode(table_path, retain_files)
     parts = touched_partitions(source, partition_cols)
     if not parts:
         return
-    if len(parts) > max_touched_partitions:
-        # A batch touching thousands of partitions (e.g. a backfill)
-        # degrades to a full-table merge: one OR-clause per partition
-        # would bloat analysis and the write rewrites most of the table
-        # anyway. Correctness is identical; only pruning is skipped.
-        parts = None
-    # our touched set in Delta partitionValues form (None = all); the
-    # writer stores "" as null, so "" names the null partition
-    ours = (
-        None
-        if parts is None
-        else [{c: p[c] or None for c in partition_cols} for p in parts]
-    )
-    touched_rels = (
-        None if ours is None else _partition_rels(spark, partition_cols, ours)
-    )
+    # our touched set in Delta partitionValues form; the writer stores
+    # "" as null, so "" names the null partition
+    ours = [{c: p[c] or None for c in partition_cols} for p in parts]
+    touched_rels = _partition_rels(spark, partition_cols, ours)
     from pyspark.errors import AnalysisException
 
     for _attempt in range(max_commit_retries):
-        base_version = (
-            deltatable.current_version(table_path) if delta_log else -1
-        )
-        if base_version >= 0 and touched_rels is not None:
-            target = _read_touched(spark, table_path, touched_rels, retain_files)
+        base_version = deltatable.current_version(table_path)
+        if base_version >= 0:
+            schema = _log_schema(table_path)
         else:
-            # whole-table read: the one-time bootstrap of a table
-            # without a log, or the touched-partition cap fallback
+            # no log yet: the table is in swap mode (its directories
+            # are its snapshot, whatever retain_files says), and its
+            # footers give the schema
             try:
-                if base_version < 0:
-                    target = spark.read.parquet(table_path)
-                elif retain_files:
-                    # the directory holds superseded files; only the
-                    # log's active set is the table
-                    target = deltatable.read_snapshot_df(spark, table_path)
-                else:
-                    target = spark.read.schema(_log_schema(table_path)).parquet(
-                        table_path
-                    )
+                schema = spark.read.parquet(table_path).schema
             except AnalysisException as e:
                 # ONLY a missing/uninitialized table means "first
                 # batch". Any other failure (transient IO, permissions,
                 # corrupt footer) must propagate — treating it as
                 # first-batch would overwrite real partitions with
                 # batch-only rows.
-                cond = getattr(e, "getErrorClass", lambda: "")() or str(e)
+                cond = getattr(e, "getCondition", lambda: "")() or str(e)
                 if not (
                     "PATH_NOT_FOUND" in cond or "UNABLE_TO_INFER_SCHEMA" in cond
                 ):
                     raise
                 _create_table(
                     table_path, source, keys, precombine, partition_cols,
-                    op_col, delete_types, delta_log, retain_files,
+                    op_col, delete_types, retain_files,
                 )
                 return
+        target = _read_touched(
+            spark, table_path, touched_rels, schema,
+            retain_files and base_version >= 0,
+        )
         schema_changed = False
         if evolve_schema:
             target, source, schema_changed = _align_schemas(
                 target, source, op_col, partition_cols
             )
-        existing = target
-        if ours is not None and base_version < 0:
-            # log-less table: prune the whole-table read to the touched
-            # partitions. eqNullSafe: a null partition value (e.g. from
-            # an unparseable timestamp) must still match its existing
-            # partition — plain == excludes those rows and the dynamic
-            # overwrite would then drop them.
-            pred = F.lit(False)
-            for p in ours:
-                clause = F.lit(True)
-                for c in partition_cols:
-                    clause = clause & F.col(c).eqNullSafe(F.lit(p[c]))
-                pred = pred | clause
-            existing = target.filter(pred)
         src_cols = list(target.columns) + ([op_col] if op_col else [])
         merged = upsert_dataframes(
-            existing,
+            target,
             source.select(*src_cols),
             keys,
             precombine,
@@ -821,44 +792,19 @@ def merge_into_parquet(
         )
 
         # --- atomic commit: stage, claim, mark, swap ---
-        commit_id = uuid.uuid4().hex[:12]
-        staging = os.path.join(table_path, "_staging", commit_id)
-        writer = merged.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(staging)
-        rels = sorted(
-            {
-                os.path.relpath(root, staging)
-                for root, _dirs, files in os.walk(staging)
-                if any(f.endswith(".parquet") for f in files)
-            }
-        )
+        commit_id, staging, rels = _stage(merged, table_path, partition_cols)
         removed: list[str] = []
         if op_col and partition_cols:
+            # hard deletes can empty a touched partition entirely — it
+            # then has no staged replacement and must be dropped at
+            # commit time
             staged = set(rels)
-            if touched_rels is not None:
-                # hard deletes can empty a touched partition entirely —
-                # it then has no staged replacement and must be dropped
-                # at commit time
-                removed = [
-                    rel
-                    for rel in touched_rels
-                    if rel not in staged
-                    and os.path.isdir(os.path.join(table_path, rel))
-                ]
-            else:
-                # full-table merge (touched-partition cap exceeded): the
-                # staged output IS the whole table, so any on-disk leaf
-                # partition without a staged replacement was emptied by
-                # hard deletes and must still be dropped — the cap
-                # changes pruning, never delete semantics.
-                for root, _dirs, files in os.walk(table_path):
-                    rel = os.path.relpath(root, table_path)
-                    if rel == "." or rel.split(os.sep)[0].startswith(("_", ".")):
-                        continue
-                    if any(f.endswith(".parquet") for f in files) and rel not in staged:
-                        removed.append(rel)
+            removed = [
+                rel
+                for rel in touched_rels
+                if rel not in staged
+                and os.path.isdir(os.path.join(table_path, rel))
+            ]
         # unpartitioned tables: record the CURRENT root data files so
         # replay deletes exactly these and never a freshly-swapped
         # staged file
@@ -870,56 +816,50 @@ def merge_into_parquet(
                 if os.path.isfile(os.path.join(table_path, name))
                 and not name.startswith(("_", "."))
             )
-        manifest = {
-            "partitions": rels,
-            "removed": removed,
-            "root_removed": root_removed,
-            "retain": bool(retain_files),
-        }
         if _hook_before_commit is not None:
             _hook_before_commit()
-        if delta_log:
-            claimed = _claim_tip(
-                table_path, base_version, ours, partition_cols, commit_id
-            )
-            if claimed is not None and not os.path.isdir(staging):
-                # defense in depth: if anything collected our staging
-                # while we raced (shouldn't happen inside the grace
-                # window), restage rather than commit adds for files
-                # that no longer exist
-                deltatable.release_claim(table_path, claimed)
-                claimed = None
-            if claimed is None:
-                # OCC loss: someone committed over our touched
-                # partitions since our read — the staged merge is
-                # stale. Discard and recompute from the new snapshot.
-                shutil.rmtree(staging, ignore_errors=True)
-                continue
-            manifest["delta"] = {
-                "version": claimed,
-                "txn": commit_id,
-                "actions": _delta_actions(
-                    table_path,
-                    staging,
-                    rels,
-                    removed,
-                    root_removed,
-                    partition_cols,
-                    base_version,
-                    deltatable.schema_string(merged.schema),
-                    commit_id,
-                    retain=retain_files,
-                    schema_changed=schema_changed,
-                ),
-            }
-        cdir = os.path.join(table_path, "_commits")
-        os.makedirs(cdir, exist_ok=True)
-        marker_tmp = os.path.join(cdir, f".{commit_id}.json.tmp")
-        with open(marker_tmp, "w") as f:
-            json.dump(manifest, f)
-        # the commit point: one atomic rename makes the merge durable
-        os.replace(marker_tmp, os.path.join(cdir, f"{commit_id}.json"))
-        _apply_commit(table_path, commit_id)
+        claimed = _claim_tip(
+            table_path, base_version, ours, partition_cols, commit_id
+        )
+        if claimed is not None and not os.path.isdir(staging):
+            # defense in depth: if anything collected our staging
+            # while we raced (shouldn't happen inside the grace
+            # window), restage rather than commit adds for files
+            # that no longer exist
+            deltatable.release_claim(table_path, claimed)
+            claimed = None
+        if claimed is None:
+            # OCC loss: someone committed over our touched partitions
+            # since our read — the staged merge is stale. Discard and
+            # recompute from the new snapshot.
+            shutil.rmtree(staging, ignore_errors=True)
+            continue
+        actions = _delta_actions(
+            table_path,
+            staging,
+            rels,
+            removed,
+            root_removed,
+            partition_cols,
+            base_version,
+            deltatable.schema_string(merged.schema),
+            commit_id,
+            retain=retain_files,
+            schema_changed=schema_changed,
+        )
+        _commit(
+            table_path,
+            commit_id,
+            {
+                "partitions": rels,
+                "removed": removed,
+                "root_removed": root_removed,
+                "retain": bool(retain_files),
+                "delta": {
+                    "version": claimed, "txn": commit_id, "actions": actions
+                },
+            },
+        )
         return
     raise ConcurrentWriteConflict(
         f"{table_path}: lost the commit race {max_commit_retries} times"
@@ -1004,19 +944,7 @@ def optimize_table(
         else:
             df = df.coalesce(1)
 
-        commit_id = uuid.uuid4().hex[:12]
-        staging = os.path.join(table_path, "_staging", commit_id)
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(staging)
-        rels = sorted(
-            {
-                os.path.relpath(root, staging)
-                for root, _dirs, fl in os.walk(staging)
-                if any(f.endswith(".parquet") for f in fl)
-            }
-        )
+        commit_id, staging, rels = _stage(df, table_path, partition_cols)
         root_removed = sorted(todo.get(".", []))
         ours = (
             [
@@ -1032,37 +960,33 @@ def optimize_table(
         if claimed is None:
             shutil.rmtree(staging, ignore_errors=True)
             continue
-        manifest = {
-            "partitions": rels,
-            "removed": [],
-            "root_removed": root_removed,
-            "retain": bool(retain_files),
-            "delta": {
-                "version": claimed,
-                "txn": commit_id,
-                "actions": _delta_actions(
-                    table_path,
-                    staging,
-                    rels,
-                    [],
-                    root_removed,
-                    partition_cols,
-                    base_version,
-                    deltatable.schema_string(df.schema),
-                    commit_id,
-                    retain=retain_files,
-                    data_change=False,
-                    operation="OPTIMIZE",
-                ),
+        actions = _delta_actions(
+            table_path,
+            staging,
+            rels,
+            [],
+            root_removed,
+            partition_cols,
+            base_version,
+            deltatable.schema_string(df.schema),
+            commit_id,
+            retain=retain_files,
+            data_change=False,
+            operation="OPTIMIZE",
+        )
+        _commit(
+            table_path,
+            commit_id,
+            {
+                "partitions": rels,
+                "removed": [],
+                "root_removed": root_removed,
+                "retain": bool(retain_files),
+                "delta": {
+                    "version": claimed, "txn": commit_id, "actions": actions
+                },
             },
-        }
-        cdir = os.path.join(table_path, "_commits")
-        os.makedirs(cdir, exist_ok=True)
-        marker_tmp = os.path.join(cdir, f".{commit_id}.json.tmp")
-        with open(marker_tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(marker_tmp, os.path.join(cdir, f"{commit_id}.json"))
-        _apply_commit(table_path, commit_id)
+        )
         return len(todo)
     raise ConcurrentWriteConflict(
         f"{table_path}: optimize lost the commit race {max_commit_retries} times"

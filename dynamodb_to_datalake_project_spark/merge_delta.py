@@ -78,9 +78,9 @@ def merge_into_delta(
     delete_types: tuple[str, ...] = ("REMOVE",),
 ) -> None:
     """`DeltaTable.merge` with latest-wins precombine semantics —
-    drop-in for `merge.merge_into_parquet` (same signature minus the
-    parquet-specific `max_touched_partitions` knob: Delta's log prunes
-    files by the merge condition itself).
+    drop-in for `merge.merge_into_parquet` (its first eight
+    parameters; Delta's log prunes files by the merge condition
+    itself and runs its own commit protocol).
 
     MERGE requires at most one source row per target key, so the batch
     is first collapsed with the SAME latest-wins window the DataFrame

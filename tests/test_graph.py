@@ -370,6 +370,32 @@ def test_triangle_count_hand_built_graph(spark):
     assert triangle_count(star).count() == 0
 
 
+def test_triangle_count_non_integer_ids_match_wedge_join(spark, monkeypatch):
+    """String and float node ids give the same counts under the
+    default broadcast budget as on the wedge-join path (budget 0): the
+    broadcast closure works on int64 arrays, so it must step aside
+    rather than fail on strings or truncate 1.5 to 1."""
+    from dynamodb_to_datalake_project_spark import graph
+
+    k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
+    extra = [(3, 4), (4, 5), (3, 5), (5, 6), (6, 7)]
+    graphs = [
+        spark.createDataFrame(
+            [(f"n{a}", f"n{b}") for a, b in k4 + extra], "src string, dst string"
+        ),
+        spark.createDataFrame(
+            [(a + 0.5, b + 0.5) for a, b in k4 + extra] + [(1.5, 1.0)],
+            "src double, dst double",
+        ),
+    ]
+    for df in graphs:
+        default = {tuple(r) for r in graph.triangle_count(df).collect()}
+        with monkeypatch.context() as m:
+            m.setattr(graph, "_TRI_BROADCAST_EDGES", 0)
+            wedge = {tuple(r) for r in graph.triangle_count(df).collect()}
+        assert default == wedge and len(wedge) == 6, (default, wedge)
+
+
 def test_clustering_coefficient_hand_built(spark):
     """K4 nodes have coefficient 1.0 (neighborhood is a clique); a
     path's interior node 0.0; the K4 node bridged to an outside

@@ -316,11 +316,11 @@ def test_unpartitioned_replay_half_applied_swap_loses_nothing(spark, tmp_path):
     assert got == {("a", "new"), ("b", "new")}  # nothing lost, nothing stale
 
 
-def test_full_merge_fallback_still_removes_emptied_partition(spark, tmp_path):
-    """Regression: when the touched-partition cap degrades the merge to
-    a full-table rewrite, hard deletes must STILL drop partitions they
-    emptied (the cap changes pruning, never delete semantics)."""
-    path = str(tmp_path / "caplake")
+def test_logless_bootstrap_hard_delete_removes_emptied_partition(spark, tmp_path):
+    """Regression: a two-partition hard-delete batch on a table without
+    a log (its bootstrap merge reads the touched directories) must
+    drop the partition it emptied and keep the one it updated."""
+    path = str(tmp_path / "lake")
     cols = ["id", "update_at", "note", "day"]
     spark.createDataFrame(
         _ts_rows(
@@ -337,7 +337,7 @@ def test_full_merge_fallback_still_removes_emptied_partition(spark, tmp_path):
     )
     merge.merge_into_parquet(
         spark, path, batch, ["id"], ["update_at"], ["day"],
-        op_col="event_name", max_touched_partitions=1,  # force full merge
+        op_col="event_name",
     )
     state = {(r.id, r.note) for r in spark.read.parquet(path).collect()}
     assert state == {("b", "v2")}
@@ -1206,7 +1206,7 @@ def test_live_marker_and_staging_protected_by_grace(spark, tmp_path):
         spark.createDataFrame(
             _ts_rows([("a", "2023-01-01T10:00:00", "v1")]), cols
         ),
-        ["id"], ["update_at"], ["day"], delta_log=False,
+        ["id"], ["update_at"], ["day"],
     )
 
     # hand-build a committed-but-unapplied state (marker + staging)
@@ -1582,16 +1582,21 @@ def test_merge_reads_only_touched_partition_files(spark, tmp_path):
     assert state == expect
 
 
-@pytest.mark.parametrize("retain", [False, True])
+@pytest.mark.parametrize("start", [False, True, "logless"])
 def test_merge_escaped_and_null_partitions_keep_untouched_rows(
-    spark, tmp_path, retain
+    spark, tmp_path, start
 ):
     """Touched partitions whose values are null, "", "a:b" and "50%"
     keep every row the batch does not touch: each partition's files are
     found under the directory Spark's writer named for it (a wrongly
     built name would leave the old rows out of the merge target and the
-    swap would drop them). Null and "" share the hive null partition."""
+    swap would drop them). Null and "" share the hive null partition.
+    `start` creates the table: a swap-mode merge (False), a retain-mode
+    merge (True), or a plain partitioned write with no log ("logless"),
+    whose first merge is the bootstrap read of those directories."""
     from dynamodb_to_datalake_project_spark import deltatable
+
+    retain = start is True
 
     path = str(tmp_path / "lake")
     schema = "id string, update_at string, note string, p string"
@@ -1601,10 +1606,14 @@ def test_merge_escaped_and_null_partitions_keep_untouched_rows(
         for j, v in enumerate(values)
         for i in range(2)
     ] + [("plain-0", "2023-01-01T00:00:00", "v1", "plain")]
-    merge.merge_into_parquet(
-        spark, path, spark.createDataFrame(rows, schema),
-        ["id"], ["update_at"], ["p"], retain_files=retain,
-    )
+    first = spark.createDataFrame(rows, schema)
+    if start == "logless":
+        first.write.partitionBy("p").parquet(path)
+    else:
+        merge.merge_into_parquet(
+            spark, path, first, ["id"], ["update_at"], ["p"],
+            retain_files=retain,
+        )
     expect = {r[0]: r[2] for r in rows}
     for j, v in enumerate(values):
         batch = spark.createDataFrame(

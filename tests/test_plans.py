@@ -178,3 +178,13 @@ def test_every_headline_query_exists_in_catalog():
 
     missing = [q for q in bench.HEADLINE if q not in catalog.QUERIES]
     assert not missing, missing
+
+
+def test_priority_order_has_no_duplicates():
+    """`_PRIORITY` names each query once: a later copy of a name is
+    dead (the first occurrence sets the order) and hides how many
+    queries the lead really holds."""
+    from collections import Counter
+
+    dups = [n for n, k in Counter(catalog._PRIORITY).items() if k > 1]
+    assert not dups, dups
