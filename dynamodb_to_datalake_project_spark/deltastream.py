@@ -15,7 +15,9 @@ resumes exactly after the last committed version — verified through a
 stop/extend/restart test.
 
 Scale shape: `partitions()` parses only the JSON commits in
-(start, end] (KB each, never the table); each add file becomes one
+(start, end] (KB each, never the table) and takes the schema as of
+`end` from `deltatable.snapshot_at` (newest checkpoint plus its
+tail, never the whole log); each add file becomes one
 InputPartition read executor-side via pyarrow. A 100 TB table with a
 minutes-cadence merge stream yields micro-batches proportional to the
 batch's touched partitions, not table size.
@@ -61,9 +63,7 @@ def _adds_of_versions(
     """(path, partitionValues) of every dataChange=true add action in
     versions (start_v, end_v] — a pure JSON walk of KB-sized commits."""
     out = []
-    for v, content in deltatable.read_commits(table_path):
-        if not (start_v < v <= end_v):
-            continue
+    for _v, content in deltatable.read_commits(table_path, start_v, end_v):
         for line in content.splitlines():
             if '"add"' not in line:
                 continue

@@ -1,4 +1,5 @@
-"""Delta-protocol transaction log WRITER for the lake merge path.
+"""Delta-protocol transaction log for the lake merge path: writer and
+the one reader.
 
 `merge.merge_into_parquet` keeps a partitioned parquet table current
 with an atomic stage-mark-swap protocol. This module makes that table
@@ -15,7 +16,16 @@ incremental.py:172-194 merges into it) delegates the table-format
 commit to Hudi's timeline. Here the timeline is the Delta log, kept
 by composition of two zero-dep pieces this repo already owns:
 `llm.parquetmeta` (footer stats for add-action numRecords) and
-`llm.deltalog` (the replayer that audits what this module writes).
+`llm.deltalog` (the fold that replays what this module writes).
+
+Reads: every snapshot, schema, retain-mode and time-travel lookup is
+`snapshot_at` — the newest usable checkpoint at or below the version
+(pyarrow-read, one action per row) plus the JSON commits after it,
+folded once by `llm.deltalog.replay_delta_log`. A read opens at most
+one checkpoint and `CHECKPOINT_INTERVAL` commit files, however long
+the table's history. A checkpoint without `metaData.configuration`
+(an older writer's) is never a start point: it would lose the
+table's retain mode.
 
 Physical layout note: the merge path swaps whole partition
 directories, physically deleting replaced files at commit time —
@@ -57,17 +67,22 @@ def _version_path(table_path: str, version: int) -> str:
     return os.path.join(log_dir(table_path), f"{version:020d}.json")
 
 
-def list_versions(table_path: str) -> list[int]:
+def _log_files(table_path: str) -> "tuple[list[int], list[int]]":
+    """(JSON commit versions, checkpoint versions) in the log, each
+    sorted — one directory listing."""
     d = log_dir(table_path)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for f in os.listdir(d):
-        if f.endswith(".json") and not f.startswith((".", "_")):
-            stem = f[: -len(".json")]
-            if stem.isdigit():
-                out.append(int(stem))
-    return sorted(out)
+    commits, checkpoints = [], []
+    for f in os.listdir(d) if os.path.isdir(d) else ():
+        stem, _, ext = f.partition(".")
+        if stem.isdigit() and ext == "json":
+            commits.append(int(stem))
+        elif stem.isdigit() and ext == "checkpoint.parquet":
+            checkpoints.append(int(stem))
+    return sorted(commits), sorted(checkpoints)
+
+
+def list_versions(table_path: str) -> list[int]:
+    return _log_files(table_path)[0]
 
 
 def current_version(table_path: str) -> int:
@@ -75,41 +90,26 @@ def current_version(table_path: str) -> int:
     return vs[-1] if vs else -1
 
 
-def read_commits(table_path: str) -> list[tuple[int, str]]:
+def _read_versions(table_path: str, versions) -> list[tuple[int, str]]:
     out = []
-    for v in list_versions(table_path):
+    for v in versions:
         with open(_version_path(table_path, v)) as f:
             out.append((v, f.read()))
     return out
 
 
-def table_snapshot(table_path: str) -> dict:
-    """Cold-read the table state the way a production Delta reader
-    does: `_last_checkpoint` -> parquet checkpoint + trailing JSON
-    commits (llm.deltalog.replay_delta_checkpoint), else a full JSON
-    fold (replay_delta_log)."""
-    from dynamodb_to_datalake_project_spark.llm.deltalog import (
-        replay_delta_checkpoint,
-        replay_delta_log,
+def read_commits(
+    table_path: str, after: int = -1, upto: "int | None" = None
+) -> list[tuple[int, str]]:
+    """(version, content) of the JSON commits in (after, upto]; the
+    whole log by default."""
+    return _read_versions(
+        table_path,
+        [
+            v for v in list_versions(table_path)
+            if v > after and (upto is None or v <= upto)
+        ],
     )
-
-    d = log_dir(table_path)
-    lc = os.path.join(d, "_last_checkpoint")
-    if os.path.isfile(lc):
-        with open(lc) as f:
-            cp_version = json.load(f)["version"]
-        cp_file = os.path.join(
-            d, f"{cp_version:020d}.checkpoint.parquet"
-        )
-        with open(cp_file, "rb") as f:
-            cp = f.read()
-        tail = [
-            (v, open(_version_path(table_path, v)).read())
-            for v in list_versions(table_path)
-            if v > cp_version
-        ]
-        return replay_delta_checkpoint(cp, cp_version, tail)
-    return replay_delta_log(read_commits(table_path))
 
 
 # ---------------------------------------------------------------------------
@@ -243,25 +243,9 @@ def table_retain_mode(table_path: str) -> "bool | None":
     commits retained history, that silently destroys the time travel
     those commits paid to keep, so writers validate their flag against
     this record."""
-    meta = _latest_meta(table_path) or {}
+    meta = snapshot_at(table_path)["meta"] or {}
     val = (meta.get("configuration") or {}).get(RETAIN_CONFIG_KEY)
     return None if val is None else val == "true"
-
-
-def _latest_meta(
-    table_path: str, version: "int | None" = None
-) -> "dict | None":
-    """The latest metaData action body at or before `version` (None =
-    tip), or None when the log has none."""
-    for _v, content in reversed(read_commits(table_path)):
-        if version is not None and _v > version:
-            continue
-        for line in content.splitlines():
-            if '"metaData"' in line:
-                a = json.loads(line)
-                if "metaData" in a:
-                    return a["metaData"]
-    return None
 
 
 # ---------------------------------------------------------------------------
@@ -346,20 +330,16 @@ def committed_touched(
     table (an action without partitionValues on a partitioned
     table, or any action on an unpartitioned one)."""
     touched: list[dict] = []
-    for v in list_versions(table_path):
-        if v <= after_version:
-            continue
-        with open(_version_path(table_path, v)) as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                (kind, body), = action.items()
-                if kind in ("add", "remove"):
-                    pv = body.get("partitionValues")
-                    if not pv:
-                        return None
-                    touched.append(pv)
+    for _v, content in read_commits(table_path, after=after_version):
+        for line in content.splitlines():
+            if not line.strip():
+                continue
+            (kind, body), = json.loads(line).items()
+            if kind in ("add", "remove"):
+                pv = body.get("partitionValues")
+                if not pv:
+                    return None
+                touched.append(pv)
     return touched
 
 
@@ -395,10 +375,11 @@ def maybe_write_checkpoint(
 ) -> "int | None":
     """Checkpoint the snapshot every `interval` commits: a parquet
     file with one action per row (add / remove / metaData / protocol
-    struct columns — the layout `llm.deltalog.replay_delta_checkpoint`
-    and real Delta readers consume) plus `_last_checkpoint`. Uses
-    pyarrow for the nested-struct write; returns the checkpointed
-    version or None."""
+    struct columns — the layout `snapshot_at`, the zero-dep
+    `llm.deltalog.replay_delta_checkpoint` and real Delta readers
+    consume; metaData carries `configuration`, so the table's retain
+    mode survives) plus `_last_checkpoint`. Uses pyarrow for the
+    nested-struct write; returns the checkpointed version or None."""
     if interval is None:
         interval = CHECKPOINT_INTERVAL  # read at call time: test-tunable
     v = current_version(table_path)
@@ -412,100 +393,76 @@ def maybe_write_checkpoint(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from dynamodb_to_datalake_project_spark.llm.deltalog import (
-        replay_delta_log,
-    )
-
     # Fold ONLY commits <= v: nothing blocks a concurrent writer from
     # filling v+1 while this runs (our caller's claim covers only v),
     # and a checkpoint labeled v that embeds v+1's actions would make
     # cold reads replay v+1 twice — adds/removes are idempotent but
     # the declared version/counters would lie about the contents.
-    commits_le_v = [
-        (cv, body) for cv, body in read_commits(table_path) if cv <= v
+    snap = snapshot_at(table_path, v)
+    meta = snap["meta"] or {}
+    str_map = pa.map_(pa.string(), pa.string())
+    types = {
+        "add": pa.struct(
+            [
+                ("path", pa.string()),
+                ("partitionValues", str_map),
+                ("size", pa.int64()),
+                ("modificationTime", pa.int64()),
+                ("dataChange", pa.bool_()),
+                ("stats", pa.string()),
+            ]
+        ),
+        "remove": pa.struct([("path", pa.string())]),
+        "metaData": pa.struct(
+            [
+                ("id", pa.string()),
+                ("schemaString", pa.string()),
+                ("partitionColumns", pa.list_(pa.string())),
+                ("configuration", str_map),
+            ]
+        ),
+        "protocol": pa.struct(
+            [
+                ("minReaderVersion", pa.int64()),
+                ("minWriterVersion", pa.int64()),
+            ]
+        ),
+    }
+    rows: list[dict] = [
+        {"protocol": dict(_PROTOCOL)},
+        {
+            "metaData": {
+                "id": meta.get("id") or uuid.uuid4().hex,
+                "schemaString": meta.get("schemaString") or "{}",
+                "partitionColumns": snap["partition_cols"],
+                "configuration": meta.get("configuration") or {},
+            }
+        },
     ]
-    snap = replay_delta_log(commits_le_v)
-    pv_t = pa.map_(pa.string(), pa.string())
-    add_t = pa.struct(
-        [
-            ("path", pa.string()),
-            ("partitionValues", pv_t),
-            ("size", pa.int64()),
-            ("modificationTime", pa.int64()),
-            ("dataChange", pa.bool_()),
-            ("stats", pa.string()),
-        ]
-    )
-    rem_t = pa.struct([("path", pa.string())])
-    meta_t = pa.struct(
-        [
-            ("id", pa.string()),
-            ("schemaString", pa.string()),
-            ("partitionColumns", pa.list_(pa.string())),
-        ]
-    )
-    proto_t = pa.struct(
-        [("minReaderVersion", pa.int64()), ("minWriterVersion", pa.int64())]
-    )
-
-    # recover schemaString / partitionValues from the latest commits
-    schema_json, meta_id = None, uuid.uuid4().hex
-    part_values: dict[str, dict] = {}
-    for _v, content in commits_le_v:
-        for line in content.splitlines():
-            if not line.strip():
-                continue
-            a = json.loads(line)
-            (kind, body), = a.items()
-            if kind == "metaData":
-                schema_json = body["schemaString"]
-                meta_id = body.get("id", meta_id)
-            elif kind == "add":
-                part_values[body["path"]] = body.get(
-                    "partitionValues", {}
-                )
-
-    n = len(snap["active_files"]) + 2
-    rows_add: list = [None, None]
     for path, info in sorted(snap["active_files"].items()):
-        rows_add.append(
+        rows.append(
             {
-                "path": path,
-                "partitionValues": list(
-                    (part_values.get(path) or {}).items()
-                ),
-                "size": info["size"],
-                "modificationTime": 0,
-                "dataChange": False,
-                "stats": json.dumps(
-                    {"numRecords": info["num_records"]}
-                ),
+                "add": {
+                    "path": path,
+                    "partitionValues": info["partition_values"],
+                    "size": info["size"],
+                    "modificationTime": 0,
+                    "dataChange": False,
+                    "stats": json.dumps(
+                        {"numRecords": info["num_records"]}
+                    ),
+                }
             }
         )
-    rows_rem: list = [None] * n
-    rows_meta: list = [
-        None,
-        {
-            "id": meta_id,
-            "schemaString": schema_json or "{}",
-            "partitionColumns": snap["partition_cols"],
-        },
-    ] + [None] * (n - 2)
-    rows_proto: list = [dict(_PROTOCOL)] + [None] * (n - 1)
     t = pa.table(
-        {
-            "add": pa.array(rows_add, add_t),
-            "remove": pa.array(rows_rem, rem_t),
-            "metaData": pa.array(rows_meta, meta_t),
-            "protocol": pa.array(rows_proto, proto_t),
-        }
+        {k: pa.array([r.get(k) for r in rows], typ) for k, typ in types.items()}
     )
     tmp = cp_file + ".tmp"
     pq.write_table(t, tmp)
     os.replace(tmp, cp_file)
     lc_tmp = os.path.join(log_dir(table_path), "._last_checkpoint.tmp")
     with open(lc_tmp, "w") as f:
-        json.dump({"version": v, "size": n}, f)
+        json.dump({"version": v, "size": len(rows)}, f)
     os.replace(lc_tmp, os.path.join(log_dir(table_path), "_last_checkpoint"))
     return v
 
@@ -536,9 +493,36 @@ def overlaps(
 # ---------------------------------------------------------------------------
 
 
+def _checkpoint_actions(table_path: str, version: int) -> "list[dict] | None":
+    """The rows of checkpoint `version` as action dicts (maps as
+    dicts), or None when its metaData has no `configuration` column:
+    an older writer dropped it, and starting there would read a
+    retain-files table as swap mode — whose next commit would rmtree
+    the history it retained."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(log_dir(table_path), f"{version:020d}.checkpoint.parquet")
+    with open(path, "rb") as f:
+        t = pq.read_table(f)
+    if t.schema.field("metaData").type.get_field_index("configuration") < 0:
+        return None
+    actions = []
+    for row in t.to_pylist():
+        if row.get("add"):
+            row["add"]["partitionValues"] = dict(row["add"]["partitionValues"] or ())
+        if row.get("metaData"):
+            row["metaData"]["configuration"] = dict(
+                row["metaData"]["configuration"] or ()
+            )
+        actions.append({k: a for k, a in row.items() if a is not None})
+    return actions
+
+
 def snapshot_at(table_path: str, version: "int | None" = None) -> dict:
-    """Snapshot as of `version` (None = latest): a pure fold of the
-    JSON commit prefix. Time travel is exact on METADATA always; the
+    """Snapshot as of `version` (None = latest): the newest usable
+    checkpoint at or below it plus the JSON commits after it, folded
+    by `llm.deltalog.replay_delta_log` (an empty table without a log
+    folds to version -1). Time travel is exact on METADATA always; the
     DATA files are readable only while they are physically retained
     (merge `retain_files=True` keeps them; the default swap mode and
     `vacuum` delete them — the Delta VACUUM-horizon rule)."""
@@ -546,15 +530,21 @@ def snapshot_at(table_path: str, version: "int | None" = None) -> dict:
         replay_delta_log,
     )
 
-    commits = read_commits(table_path)
-    if version is not None:
-        if version > (commits[-1][0] if commits else -1):
-            raise ValueError(
-                f"delta: version {version} beyond log tip "
-                f"{commits[-1][0] if commits else -1}"
-            )
-        commits = [(v, c) for v, c in commits if v <= version]
-    return replay_delta_log(commits)
+    commits, checkpoints = _log_files(table_path)
+    tip = commits[-1] if commits else -1
+    if version is None:
+        version = tip
+    elif version > tip:
+        raise ValueError(f"delta: version {version} beyond log tip {tip}")
+    start = None
+    for n in reversed([n for n in checkpoints if n <= version]):
+        actions = _checkpoint_actions(table_path, n)
+        if actions is not None:
+            start = (n, actions)
+            break
+    base = start[0] if start else -1
+    tail = [v for v in commits if base < v <= version]
+    return replay_delta_log(_read_versions(table_path, tail), start)
 
 
 def read_snapshot_df(
@@ -566,11 +556,9 @@ def read_snapshot_df(
     superseded files as duplicates). Partition columns come back via
     basePath. Raises a clear error when time travel reaches files
     the table no longer retains."""
-    import os as _os
-
     snap = snapshot_at(table_path, version)
     files = sorted(snap["active_files"])
-    missing = [f for f in files if not _os.path.isfile(_os.path.join(table_path, f))]
+    missing = [f for f in files if not os.path.isfile(os.path.join(table_path, f))]
     if missing:
         raise FileNotFoundError(
             f"delta: version {snap['version']} references "
@@ -580,22 +568,20 @@ def read_snapshot_df(
         )
     from pyspark.sql import types as T
 
-    schema_json = _schema_json_of(table_path, snap["version"])
+    # the LOG's schema as of this version, not a sampled footer's:
+    # post-evolution snapshots must NULL-backfill old files' missing
+    # columns; pre-evolution time travel must NOT grow the later
+    # columns
+    schema_json = (snap["meta"] or {}).get("schemaString")
     if not files:
         schema = T.StructType.fromJson(
-            __import__("json").loads(
-                schema_json or '{"type":"struct","fields":[]}'
-            )
+            json.loads(schema_json or '{"type":"struct","fields":[]}')
         )
         return spark.createDataFrame([], schema)
     reader = spark.read.option("basePath", table_path)
     if schema_json:
-        # the LOG's schema as of this version, not a sampled footer's:
-        # post-evolution snapshots must NULL-backfill old files'
-        # missing columns; pre-evolution time travel must NOT grow
-        # the later columns
         reader = reader.schema(T.StructType.fromJson(json.loads(schema_json)))
-    return reader.parquet(*[_os.path.join(table_path, f) for f in files])
+    return reader.parquet(*[os.path.join(table_path, f) for f in files])
 
 
 def _schema_json_of(
@@ -605,8 +591,7 @@ def _schema_json_of(
     `version` (None = tip) — time travel reads the schema AS OF the
     snapshot, so pre-evolution versions come back without the later
     columns."""
-    meta = _latest_meta(table_path, version)
-    return None if meta is None else meta["schemaString"]
+    return (snapshot_at(table_path, version)["meta"] or {}).get("schemaString")
 
 
 def vacuum(table_path: str, retain_versions: int = 0) -> list[str]:

@@ -23,8 +23,6 @@ executors, swap for reliable `checkpoint()` to survive node loss.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -139,9 +137,7 @@ def connected_components(
 
 
 #: broadcast-relation budget for local component resolution (edges)
-_CC_LOCAL_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", 2_000_000)
-)
+_CC_LOCAL_EDGES = 2_000_000
 
 #: broadcast-relation budget for the NODE-SIZED side of the iterative
 #: graph operators' per-round joins (labels / ranks / frontier /
@@ -152,9 +148,7 @@ _CC_LOCAL_EDGES = int(
 #: the edge stream untouched per round. Catalyst cannot see these
 #: sizes (no stats behind an RDD scan) — the guard uses the measured
 #: node/edge count the operator already holds.
-_GRAPH_BC_NODES = int(
-    os.environ.get("SPARK_GRAFT_GRAPH_BROADCAST_NODES", 4_000_000)
-)
+_GRAPH_BC_NODES = 4_000_000
 
 
 def _bc_if_small(df: DataFrame, n_rows_bound: int) -> DataFrame:
@@ -164,9 +158,10 @@ def _bc_if_small(df: DataFrame, n_rows_bound: int) -> DataFrame:
 
 def _connected_components_local(e: DataFrame):
     """(node, component-min) by vectorized min-label propagation with
-    pointer jumping over the collected canonical edge set. Returns
-    None for non-integral node ids (numpy's string order need not
-    match SQL's) — the caller falls back to the star loop."""
+    pointer jumping over the collected canonical edge set, typed like
+    the input node ids (as the star loop's output is). Returns None
+    for non-integral node ids (numpy's string order need not match
+    SQL's) — the caller falls back to the star loop."""
     import numpy as np
 
     spark = e.sparkSession
@@ -180,8 +175,6 @@ def _connected_components_local(e: DataFrame):
     lo = pdf["lo"].to_numpy(np.int64) if len(pdf) else np.zeros(0, np.int64)
     nodes = np.unique(np.concatenate([hi, lo]))
     K = len(nodes)
-    if K == 0:
-        return spark.createDataFrame([], "node long, component long")
     ui = np.searchsorted(nodes, hi)
     vi = np.searchsorted(nodes, lo)
     # min-label propagation: parent starts as self; each sweep pushes
@@ -208,7 +201,10 @@ def _connected_components_local(e: DataFrame):
     import pandas as pd
 
     out = pd.DataFrame({"node": nodes, "component": nodes[parent]})
-    return spark.createDataFrame(out, schema="node long, component long")
+    t = e.schema["hi"].dataType
+    return spark.createDataFrame(
+        out, schema="node long, component long"
+    ).select(F.col("node").cast(t), F.col("component").cast(t))
 
 
 def dedup_clusters(
@@ -1252,11 +1248,8 @@ def triangle_count(
 
 #: broadcast-closure budget for triangle counting: edges up to this
 #: fit the same relation class Spark broadcasts for joins (64 MB
-#: session threshold — 4M edges ≈ 64 MB of packed adjacency);
-#: overridable for cluster profiles
-_TRI_BROADCAST_EDGES = int(
-    os.environ.get("SPARK_GRAFT_TRI_BROADCAST_EDGES", 4_000_000)
-)
+#: session threshold — 4M edges ≈ 64 MB of packed adjacency)
+_TRI_BROADCAST_EDGES = 4_000_000
 
 
 def _triangle_count_broadcast(und: DataFrame, n_edges: int):

@@ -10,10 +10,16 @@ files/rows, which schema, which writer protocol?"), and the honest
 zero-dep companion to `merge_delta.py` (whose Delta MERGE leg needs
 the real delta-spark package).
 
-Subset contract: JSON commits only (parquet checkpoints raise
-NotImplementedError — reading them is `llm.parquetmeta`'s job),
-unknown action types are ignored per the protocol's forward-compat
-rule, malformed JSON or out-of-order versions raise ValueError.
+Subset contract: one fold, `replay_delta_log`, reads every Delta log
+in the package. It starts from nothing or from a parquet checkpoint's
+rows (one action per row) and folds the JSON commits after it;
+`deltatable.snapshot_at` feeds it pyarrow-read checkpoints, and
+`replay_delta_checkpoint` feeds it rows read by the zero-dep
+nested-column reader. Unknown action types are ignored per the
+protocol's forward-compat rule; malformed JSON, a line or row that is
+not exactly one action, a metaData without a schema and out-of-order
+versions raise ValueError; v2-checkpoint actions (`checkpointMetadata`)
+raise NotImplementedError.
 """
 
 from __future__ import annotations
@@ -21,73 +27,95 @@ from __future__ import annotations
 import json
 
 
-def replay_delta_log(commits: "list[tuple[int, str]]") -> dict:
+def replay_delta_log(
+    commits: "list[tuple[int, str]]",
+    checkpoint: "tuple[int, list[dict]] | None" = None,
+) -> dict:
     """Fold JSON commit files (version, content) into the table
-    snapshot: {"version", "protocol", "schema_cols", "partition_cols",
-    "active_files": {path: {"size", "num_records"}}, "n_removed",
-    "total_bytes", "total_rows"}. Versions must be contiguous from 0
-    (the protocol requires it for a cold read)."""
+    snapshot: {"version", "protocol", "meta" (the latest metaData
+    body, or None), "schema_cols", "partition_cols", "active_files":
+    {path: {"size", "num_records", "partition_values"}}, "n_removed",
+    "total_bytes", "total_rows"}.
+
+    The fold starts empty, or from `checkpoint` = (its version N, its
+    rows as action dicts). The commits must be contiguous from 0, or
+    from N + 1 (the protocol requires it for a cold read). A
+    checkpoint's remove rows are expired tombstones and are skipped,
+    so n_removed counts the removes of the folded JSON commits."""
+    base, rows = checkpoint or (-1, [])
     commits = sorted(commits)
-    if [v for v, _ in commits] != list(range(len(commits))):
-        raise ValueError("delta: commit versions not contiguous from 0")
-    protocol = None
+    if [v for v, _ in commits] != list(
+        range(base + 1, base + 1 + len(commits))
+    ):
+        raise ValueError(
+            f"delta: commit versions not contiguous from {base + 1}"
+        )
+
+    def actions():
+        for row in rows:
+            yield base, row
+        for version, content in commits:
+            for line in content.splitlines():
+                if not line.strip():
+                    continue
+                try:
+                    action = json.loads(line)
+                except json.JSONDecodeError as exc:
+                    raise ValueError(
+                        f"delta: malformed action in commit {version}: {exc}"
+                    )
+                yield version, action
+
+    protocol = meta = None
     schema_cols: "list[str]" = []
     partition_cols: "list[str]" = []
     active: "dict[str, dict]" = {}
     n_removed = 0
-    for version, content in commits:
-        for line in content.splitlines():
-            if not line.strip():
-                continue
+    for version, action in actions():
+        if not isinstance(action, dict) or len(action) != 1:
+            raise ValueError(
+                f"delta: every line or row of version {version} must "
+                f"hold exactly one action"
+            )
+        (kind, body), = action.items()
+        if kind == "protocol":
+            protocol = (
+                body.get("minReaderVersion"),
+                body.get("minWriterVersion"),
+            )
+        elif kind == "metaData":
             try:
-                action = json.loads(line)
-            except json.JSONDecodeError as exc:
-                raise ValueError(
-                    f"delta: malformed action in commit {version}: {exc}"
-                )
-            if not isinstance(action, dict) or len(action) != 1:
-                raise ValueError(
-                    f"delta: action must be a single-key object "
-                    f"(commit {version})"
-                )
-            (kind, body), = action.items()
-            if kind == "protocol":
-                protocol = (
-                    body.get("minReaderVersion"),
-                    body.get("minWriterVersion"),
-                )
-            elif kind == "metaData":
+                schema = json.loads(body["schemaString"])
+            except (KeyError, json.JSONDecodeError) as exc:
+                raise ValueError(f"delta: bad metaData schema: {exc}")
+            meta = body
+            schema_cols = [f["name"] for f in schema.get("fields", [])]
+            partition_cols = body.get("partitionColumns") or []
+        elif kind == "add":
+            stats = {}
+            if body.get("stats"):
                 try:
-                    schema = json.loads(body["schemaString"])
-                except (KeyError, json.JSONDecodeError) as exc:
-                    raise ValueError(f"delta: bad metaData schema: {exc}")
-                schema_cols = [f["name"] for f in schema.get("fields", [])]
-                partition_cols = body.get("partitionColumns", [])
-            elif kind == "add":
-                path = body["path"]
-                stats = {}
-                if body.get("stats"):
-                    try:
-                        stats = json.loads(body["stats"])
-                    except json.JSONDecodeError as exc:
-                        raise ValueError(f"delta: bad add stats: {exc}")
-                active[path] = {
-                    "size": body.get("size", 0),
-                    "num_records": stats.get("numRecords"),
-                }
-            elif kind == "remove":
-                if active.pop(body["path"], None) is not None:
-                    n_removed += 1
-            elif kind in ("commitInfo", "txn", "cdc", "domainMetadata"):
-                continue  # forward-compat: recognized-and-ignored
-            elif kind == "checkpointMetadata":
-                raise NotImplementedError(
-                    "delta: parquet checkpoints not implemented"
-                )
-            # unknown keys: ignored (protocol forward-compat rule)
+                    stats = json.loads(body["stats"])
+                except json.JSONDecodeError as exc:
+                    raise ValueError(f"delta: bad add stats: {exc}")
+            active[body["path"]] = {
+                "size": body.get("size") or 0,
+                "num_records": stats.get("numRecords"),
+                "partition_values": body.get("partitionValues") or {},
+            }
+        elif kind == "remove":
+            if version > base and active.pop(body["path"], None) is not None:
+                n_removed += 1
+        elif kind == "checkpointMetadata":
+            raise NotImplementedError(
+                "delta: v2 checkpoints (checkpointMetadata) not implemented"
+            )
+        # commitInfo / txn / cdc / domainMetadata and unknown keys:
+        # ignored (protocol forward-compat rule)
     return {
-        "version": len(commits) - 1,
+        "version": base + len(commits),
         "protocol": protocol,
+        "meta": meta,
         "schema_cols": schema_cols,
         "partition_cols": partition_cols,
         "active_files": active,
@@ -103,119 +131,55 @@ def replay_delta_checkpoint(
     checkpoint: bytes, version: int, commits: "list[tuple[int, str]]"
 ) -> dict:
     """Cold-start the snapshot from a parquet CHECKPOINT (the real
-    Delta read path — `_last_checkpoint` points here so a reader
-    never replays the whole JSON history), then fold the JSON
-    commits after it. The checkpoint is a parquet file with one
-    action per row (struct columns add/remove/metaData/protocol);
-    it is read by the zero-dep nested-column reader — closing the
-    boundary `replay_delta_log` declares for checkpoints.
+    Delta read path — a reader never replays the whole JSON history),
+    then fold the JSON commits after it. The checkpoint is a parquet
+    file with one action per row (struct columns add/remove/metaData/
+    protocol), read by the zero-dep nested-column reader; its rows
+    and the tail go through the one `replay_delta_log` fold.
 
     Subset: add.path/size/stats, remove.path, protocol.min*Version,
-    metaData.schemaString (partitionColumns is a LIST — repeated
-    columns stay an honest reader boundary, so partition columns
-    resolve only from post-checkpoint metaData actions)."""
+    metaData.schemaString (partitionColumns, partitionValues and
+    configuration are LIST/MAP — repeated columns stay an honest
+    reader boundary, so partition columns resolve only from
+    post-checkpoint metaData actions; `deltatable.snapshot_at` reads
+    checkpoints with pyarrow instead)."""
     from dynamodb_to_datalake_project_spark.llm.parquetmeta import (
         read_parquet_column_full,
     )
 
-    add_path = read_parquet_column_full(checkpoint, "add.path")
-    add_size = read_parquet_column_full(checkpoint, "add.size")
-    add_stats = read_parquet_column_full(checkpoint, "add.stats")
-    rem_path = read_parquet_column_full(checkpoint, "remove.path")
-    proto_r = read_parquet_column_full(
-        checkpoint, "protocol.minReaderVersion"
-    )
-    proto_w = read_parquet_column_full(
-        checkpoint, "protocol.minWriterVersion"
-    )
-    meta_schema = read_parquet_column_full(
-        checkpoint, "metaData.schemaString"
-    )
+    def col(name):
+        return read_parquet_column_full(checkpoint, name)
 
-    active: "dict[str, dict]" = {}
-    protocol = None
-    schema_cols: "list[str]" = []
+    def text(b):
+        return None if b is None else b.decode("utf-8")
+
+    add_path, add_size, add_stats = (
+        col("add.path"), col("add.size"), col("add.stats")
+    )
+    rem_path = col("remove.path")
+    proto_r = col("protocol.minReaderVersion")
+    proto_w = col("protocol.minWriterVersion")
+    meta_schema = col("metaData.schemaString")
+    rows = []
     for i in range(len(add_path)):
-        filled = [
-            add_path[i] is not None,
-            rem_path[i] is not None,
-            proto_r[i] is not None,
-            meta_schema[i] is not None,
-        ]
-        if sum(filled) != 1:
-            raise ValueError(
-                f"delta: checkpoint row {i} must hold exactly one action"
-            )
+        row = {}
         if add_path[i] is not None:
-            stats = {}
-            if add_stats[i]:
-                try:
-                    stats = json.loads(add_stats[i].decode("utf-8"))
-                except json.JSONDecodeError as exc:
-                    raise ValueError(f"delta: bad checkpoint stats: {exc}")
-            active[add_path[i].decode("utf-8")] = {
-                "size": add_size[i] or 0,
-                "num_records": stats.get("numRecords"),
+            row["add"] = {
+                "path": text(add_path[i]),
+                "size": add_size[i],
+                "stats": text(add_stats[i]),
             }
-        elif proto_r[i] is not None:
-            protocol = (proto_r[i], proto_w[i])
-        elif meta_schema[i] is not None:
-            try:
-                schema = json.loads(meta_schema[i].decode("utf-8"))
-            except json.JSONDecodeError as exc:
-                raise ValueError(f"delta: bad checkpoint schema: {exc}")
-            schema_cols = [f["name"] for f in schema.get("fields", [])]
-        # remove rows in a checkpoint are expired tombstones: ignored
-
-    commits = sorted(commits)
-    if [v for v, _ in commits] != list(
-        range(version + 1, version + 1 + len(commits))
-    ):
-        raise ValueError(
-            "delta: post-checkpoint commits not contiguous from "
-            f"version {version + 1}"
-        )
-    partition_cols: "list[str]" = []
-    n_removed = 0
-    for v, content in commits:
-        for line in content.splitlines():
-            if not line.strip():
-                continue
-            try:
-                action = json.loads(line)
-            except json.JSONDecodeError as exc:
-                raise ValueError(f"delta: malformed action in {v}: {exc}")
-            (kind, body), = action.items()
-            if kind == "protocol":
-                protocol = (
-                    body.get("minReaderVersion"),
-                    body.get("minWriterVersion"),
-                )
-            elif kind == "metaData":
-                schema = json.loads(body["schemaString"])
-                schema_cols = [f["name"] for f in schema.get("fields", [])]
-                partition_cols = body.get("partitionColumns", [])
-            elif kind == "add":
-                stats = json.loads(body["stats"]) if body.get("stats") else {}
-                active[body["path"]] = {
-                    "size": body.get("size", 0),
-                    "num_records": stats.get("numRecords"),
-                }
-            elif kind == "remove":
-                if active.pop(body["path"], None) is not None:
-                    n_removed += 1
-    return {
-        "version": version + len(commits),
-        "protocol": protocol,
-        "schema_cols": schema_cols,
-        "partition_cols": partition_cols,
-        "active_files": active,
-        "n_removed": n_removed,
-        "total_bytes": sum(f["size"] for f in active.values()),
-        "total_rows": sum(
-            f["num_records"] or 0 for f in active.values()
-        ),
-    }
+        if rem_path[i] is not None:
+            row["remove"] = {"path": text(rem_path[i])}
+        if proto_r[i] is not None:
+            row["protocol"] = {
+                "minReaderVersion": proto_r[i],
+                "minWriterVersion": proto_w[i],
+            }
+        if meta_schema[i] is not None:
+            row["metaData"] = {"schemaString": text(meta_schema[i])}
+        rows.append(row)
+    return replay_delta_log(commits, checkpoint=(version, rows))
 
 
 def delta_checkpoint_stats(docs):

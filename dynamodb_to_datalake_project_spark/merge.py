@@ -1009,8 +1009,8 @@ def q_delta_write_replay(spark, sf_dir):
     (version 0 CREATE, then two MERGE commits that remove+add the
     rewritten partitions), an explicit Delta checkpoint is cut, and
     the returned census is read COLD from the log alone
-    (`deltatable.table_snapshot` via `_last_checkpoint` + trailing
-    JSON) — per-partition numRecords summed from add-action stats.
+    (`deltatable.snapshot_at`: that checkpoint + trailing JSON) —
+    per-partition numRecords summed from add-action stats.
     Internal invariants cross-check the log against the live files
     and an independent Spark read before anything is returned; the
     DuckDB oracle recomputes the census from the source table.
@@ -1045,7 +1045,7 @@ def q_delta_write_replay(spark, sf_dir):
             )
         deltatable.maybe_write_checkpoint(table, interval=2)
 
-        snap = deltatable.table_snapshot(table)  # checkpoint cold read
+        snap = deltatable.snapshot_at(table)  # checkpoint cold read
         if snap["version"] != 2:
             raise AssertionError(f"expected log version 2, got {snap}")
         live = set(_all_data_files(table))

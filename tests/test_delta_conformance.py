@@ -130,7 +130,7 @@ def test_golden_spec_log_replays(tmp_path):
     table = str(tmp_path / "golden")
     _write_golden(table)
 
-    snap = deltatable.table_snapshot(table)
+    snap = deltatable.snapshot_at(table)
     assert snap["version"] == 1
     assert set(snap["active_files"]) == {
         "part-00000-8d9a7f3e.c000.snappy.parquet"
@@ -224,7 +224,7 @@ def test_writer_actions_carry_spec_fields(spark, tmp_path):
     assert {"protocol", "metaData", "add", "remove", "commitInfo"} <= kinds
 
     # live adds point at real files whose size matches
-    snap = deltatable.table_snapshot(table)
+    snap = deltatable.snapshot_at(table)
     for rel, info in snap["active_files"].items():
         full = os.path.join(table, rel)
         assert os.path.isfile(full)
@@ -275,5 +275,90 @@ def test_checkpoint_layout_readable_by_pyarrow(spark, tmp_path, monkeypatch):
     assert sum(1 for r in rows if r["protocol"] is not None) == 1
     assert sum(1 for r in rows if r["metaData"] is not None) == 1
     n_adds = sum(1 for r in rows if r["add"] is not None)
-    snap = deltatable.table_snapshot(table)
+    snap = deltatable.snapshot_at(table)
     assert n_adds == len(snap["active_files"])
+
+
+def test_snapshot_reads_bounded_by_checkpoint_interval(tmp_path, monkeypatch):
+    """A 250-commit log grown through append_commit +
+    maybe_write_checkpoint (synthetic add/remove actions, a schema
+    change mid-history, a null partition): at every version the
+    checkpoint-plus-tail snapshot equals the full JSON fold of the
+    commit prefix, and no read opens more than one checkpoint and
+    CHECKPOINT_INTERVAL commit files, however long the history."""
+    import builtins
+
+    from dynamodb_to_datalake_project_spark.llm.deltalog import (
+        replay_delta_log,
+    )
+
+    table = str(tmp_path / "t")
+    os.makedirs(deltatable.log_dir(table))
+
+    def schema(n):
+        return json.dumps({"type": "struct", "fields": [
+            {"name": f"c{i}", "type": "long", "nullable": True,
+             "metadata": {}} for i in range(n)]})
+
+    real_open = builtins.open
+    opened: list[str] = []
+
+    def counting_open(file, *a, **k):
+        opened.append(str(file))
+        return real_open(file, *a, **k)
+
+    def opens(fn, *args):
+        opened.clear()
+        with monkeypatch.context() as m:
+            m.setattr(builtins, "open", counting_open)
+            out = fn(*args)
+        n_cp = sum(f.endswith(".checkpoint.parquet") for f in opened)
+        n_json = sum(f.endswith(".json") for f in opened)
+        assert n_cp <= 1 and n_json <= deltatable.CHECKPOINT_INTERVAL, (
+            fn.__name__, args, n_cp, n_json
+        )
+        return out
+
+    commits: list[tuple[int, str]] = []
+    live: dict[int, str] = {}
+    for v in range(250):
+        actions: list[dict] = [{"commitInfo": {"txnId": f"t{v}"}}]
+        if v == 0:
+            actions.append({"protocol": dict(deltatable._PROTOCOL)})
+        if v in (0, 137):
+            actions.append(deltatable.meta_action(
+                schema(2 if v == 0 else 3), ["p"],
+                {deltatable.RETAIN_CONFIG_KEY: "true" if v else "false"},
+            ))
+        for k in (v % 5, (v + 2) % 5):
+            pv = {"p": None if k == 4 else str(k)}
+            if k in live:
+                actions.append({"remove": {
+                    "path": live[k], "partitionValues": pv,
+                    "deletionTimestamp": 0, "dataChange": True}})
+            live[k] = f"p={k}/part-{v:03d}.parquet"
+            actions.append({"add": {
+                "path": live[k], "partitionValues": pv, "size": 100 + v,
+                "modificationTime": 0, "dataChange": True,
+                "stats": json.dumps({"numRecords": 1 + (v + k) % 7})}})
+        deltatable.append_commit(table, v, actions, f"t{v}")
+        deltatable.maybe_write_checkpoint(table)
+        commits.append((v, "\n".join(json.dumps(a) for a in actions)))
+        if v >= 248:  # the tip, and the tip one commit earlier
+            assert opens(deltatable.snapshot_at, table)["version"] == v
+            assert opens(deltatable.table_retain_mode, table) is True
+            assert opens(deltatable._schema_json_of, table) == schema(3)
+
+    cps = sorted(
+        f for f in os.listdir(deltatable.log_dir(table))
+        if f.endswith(".checkpoint.parquet")
+    )
+    assert len(cps) == 24  # versions 10, 20, ..., 240
+    for v in range(250):
+        snap = opens(deltatable.snapshot_at, table, v)
+        fold = replay_delta_log(commits[: v + 1])
+        assert snap["version"] == fold["version"] == v
+        assert snap["active_files"] == fold["active_files"]
+        assert snap["total_rows"] == fold["total_rows"]
+        for key in ("schemaString", "configuration"):
+            assert snap["meta"][key] == fold["meta"][key]

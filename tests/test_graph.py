@@ -27,6 +27,27 @@ def test_cc_chain_and_cliques(spark):
     )
 
 
+def test_cc_int32_ids_same_schema_both_paths(spark, monkeypatch):
+    """int (int32) node ids: the collected local path (default budget)
+    and the distributed star loop (a budget below every edge count,
+    -1, so the empty edge list takes the star loop too) return the
+    same schema and rows — the result type does not depend on the
+    edge count."""
+    from dynamodb_to_datalake_project_spark import graph
+
+    edges = [(i, i + 1) for i in range(5)] + [(20, 21), (22, 21)]
+    for rows in (edges, []):
+        df = spark.createDataFrame(rows, "a int, b int")
+        local = connected_components(df, "a", "b")
+        with monkeypatch.context() as m:
+            m.setattr(graph, "_CC_LOCAL_EDGES", -1)
+            star = connected_components(df, "a", "b")
+            star_rows = sorted(map(tuple, star.collect()))
+        assert local.schema == star.schema
+        assert [f.dataType.simpleString() for f in local.schema] == ["int", "int"]
+        assert sorted(map(tuple, local.collect())) == star_rows
+
+
 def test_dedup_clusters_singletons(spark):
     docs = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
     pairs = spark.createDataFrame([(1, 3), (3, 5)], "a_id long, b_id long")

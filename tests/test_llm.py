@@ -5391,6 +5391,7 @@ def test_delta_checkpoint_replay_rules():
 
     from dynamodb_to_datalake_project_spark.llm.deltalog import (
         replay_delta_checkpoint,
+        replay_delta_log,
     )
 
     add_t = pa.struct([("path", pa.string()), ("size", pa.int64()),
@@ -5442,6 +5443,16 @@ def test_delta_checkpoint_replay_rules():
     ])
     with _pt.raises(ValueError, match="exactly one action"):
         replay_delta_checkpoint(bad, 0, [])
+    # a malformed tail line raises what the full JSON fold raises
+    for line, exc in (
+        ("[1]", ValueError),
+        (json.dumps({"metaData": {}}), ValueError),
+        (json.dumps({"checkpointMetadata": {}}), NotImplementedError),
+    ):
+        with _pt.raises(exc):
+            replay_delta_checkpoint(cp, 2, [(3, line)])
+        with _pt.raises(exc):
+            replay_delta_log([(0, line)])
 
 
 def test_avro_arrays_and_iceberg_bounds_pruning():

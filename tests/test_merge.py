@@ -639,7 +639,7 @@ def test_delta_log_written_and_replayable(spark, tmp_path):
     merge.merge_into_parquet(spark, path, b2, ["id"], ["update_at"], ["day"])
 
     assert deltatable.list_versions(path) == [0, 1, 2]
-    snap = deltatable.table_snapshot(path)
+    snap = deltatable.snapshot_at(path)
     assert snap["version"] == 2
     assert snap["partition_cols"] == ["day"]
     assert set(snap["schema_cols"]) == set(cols) | {"ts"} or set(
@@ -682,7 +682,7 @@ def test_delta_log_bootstrap_legacy_table(spark, tmp_path):
         _ts_rows([("a", "2023-01-01T12:00:00", "v2")]), cols
     )
     merge.merge_into_parquet(spark, path, batch, ["id"], ["update_at"], ["day"])
-    snap = deltatable.table_snapshot(path)
+    snap = deltatable.snapshot_at(path)
     assert snap["version"] == 0 and snap["protocol"] == (1, 2)
     assert set(snap["active_files"]) == set(merge._all_data_files(path))
     assert snap["total_rows"] == 2
@@ -733,7 +733,7 @@ def test_delta_log_crash_replay_completes_log_fill(spark, tmp_path):
     replayed = merge.recover_pending_commits(path)
     assert replayed == [cid]
     assert {r.note for r in spark.read.parquet(path).collect()} == {"new"}
-    snap = deltatable.table_snapshot(path)
+    snap = deltatable.snapshot_at(path)
     assert snap["version"] == 1
     assert set(snap["active_files"]) == set(merge._all_data_files(path))
     assert not os.path.exists(
@@ -779,7 +779,7 @@ def test_delta_precommit_crash_rolls_back_claim(spark, tmp_path):
     _os.utime(claim, (old, old))
     merge.merge_into_parquet(spark, path, b1, ["id"], ["update_at"], ["day"])
     assert deltatable.list_versions(path) == [0, 1]
-    assert deltatable.table_snapshot(path)["total_rows"] == 2
+    assert deltatable.snapshot_at(path)["total_rows"] == 2
 
     # explicit recovery entry point (grace 0) rolls back immediately
     assert deltatable.claim_version(path, 2, "dead111")
@@ -835,7 +835,7 @@ def test_merge_occ_conflict_retries_no_lost_rows(spark, tmp_path):
     )
     # v0 create, v1 = A, v2 = B's retried commit reading version 1
     assert deltatable.list_versions(path) == [0, 1, 2]
-    snap = deltatable.table_snapshot(path)
+    snap = deltatable.snapshot_at(path)
     assert set(snap["active_files"]) == set(merge._all_data_files(path))
     assert snap["total_rows"] == 3
     import json as _json
@@ -926,7 +926,7 @@ def test_delta_checkpoint_cold_read_equals_json_fold(spark, tmp_path, monkeypatc
         )
     lc = os.path.join(path, "_delta_log", "_last_checkpoint")
     assert os.path.isfile(lc)
-    cold = deltatable.table_snapshot(path)  # checkpoint + tail path
+    cold = deltatable.snapshot_at(path)  # checkpoint + tail path
     fold = replay_delta_log(deltatable.read_commits(path))
     assert cold["active_files"] == fold["active_files"]
     assert cold["version"] == fold["version"] == 2
@@ -1128,7 +1128,7 @@ def test_merge_occ_three_writer_interleavings_no_lost_updates(spark, tmp_path):
 
     versions = deltatable.list_versions(path)
     assert versions == [0, 1, 2, 3]
-    snap = deltatable.table_snapshot(path)
+    snap = deltatable.snapshot_at(path)
     assert set(snap["active_files"]) == set(merge._all_data_files(path))
     assert snap["total_rows"] == 3
     # every commit's readVersion is exactly the version before it
@@ -1189,6 +1189,75 @@ def test_retain_mode_is_a_table_property(spark, tmp_path):
     with pytest.raises(ValueError, match="retainFiles"):
         m(spath, [("b", "2023-01-02T10:00:00", "v1")], retain_files=True)
     m(spath, [("b", "2023-01-02T10:00:00", "v1")])  # None inherits swap
+
+
+def _drop_checkpoint_configuration(path, version):
+    """Rewrite checkpoint `version` in the older layout, whose
+    metaData struct has no `configuration` column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dynamodb_to_datalake_project_spark import deltatable
+
+    cp = os.path.join(
+        deltatable.log_dir(path), f"{version:020d}.checkpoint.parquet"
+    )
+    t = pq.read_table(cp)
+    meta_t = t.schema.field("metaData").type
+    old_t = pa.struct([
+        meta_t.field(i) for i in range(meta_t.num_fields)
+        if meta_t.field(i).name != "configuration"
+    ])
+    rows = t.column("metaData").to_pylist()
+    for r in rows:
+        if r is not None:
+            r.pop("configuration", None)
+    i = t.schema.get_field_index("metaData")
+    pq.write_table(t.set_column(i, "metaData", pa.array(rows, old_t)), cp)
+
+
+def test_checkpoint_without_configuration_is_not_a_start_point(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint whose metaData lacks `configuration` (the older
+    writer's layout) would read a retain-files table as swap mode,
+    and the next swap commit would rmtree the retained history. Reads
+    fold from an earlier usable checkpoint, or from version 0."""
+    from dynamodb_to_datalake_project_spark import deltatable
+    from dynamodb_to_datalake_project_spark.llm.deltalog import (
+        replay_delta_log,
+    )
+
+    monkeypatch.setattr(deltatable, "CHECKPOINT_INTERVAL", 1)
+    path = str(tmp_path / "lake")
+    cols = ["id", "update_at", "note", "day"]
+
+    def m(rows, **kw):
+        merge.merge_into_parquet(
+            spark, path, spark.createDataFrame(_ts_rows(rows), cols),
+            ["id"], ["update_at"], ["day"], **kw,
+        )
+
+    m([("a", "2023-01-01T10:00:00", "v1")], retain_files=True)
+    m([("a", "2023-01-01T12:00:00", "v2")])
+    m([("b", "2023-01-02T10:00:00", "v1")])
+    ld = deltatable.log_dir(path)
+    assert {1, 2} <= {
+        int(f[:20]) for f in os.listdir(ld) if f.endswith(".checkpoint.parquet")
+    }
+    fold = replay_delta_log(deltatable.read_commits(path))
+    # first the newest checkpoint is unusable, then both are
+    for v in (2, 1):
+        _drop_checkpoint_configuration(path, v)
+        snap = deltatable.snapshot_at(path)
+        assert snap["meta"]["configuration"] == fold["meta"]["configuration"]
+        assert snap["active_files"] == fold["active_files"]
+        assert deltatable.table_retain_mode(path) is True
+        assert {r.note for r in deltatable.read_snapshot_df(spark, path, 0).collect()} == {"v1"}
+    # an inheriting commit keeps retaining: version 0 stays readable
+    m([("a", "2023-01-01T14:00:00", "v3")])
+    assert deltatable.table_retain_mode(path) is True
+    assert deltatable.read_snapshot_df(spark, path, 0).count() == 1
 
 
 def test_live_marker_and_staging_protected_by_grace(spark, tmp_path):
