@@ -243,8 +243,13 @@ def table_retain_mode(table_path: str) -> "bool | None":
     commits retained history, that silently destroys the time travel
     those commits paid to keep, so writers validate their flag against
     this record."""
-    meta = snapshot_at(table_path)["meta"] or {}
-    val = (meta.get("configuration") or {}).get(RETAIN_CONFIG_KEY)
+    return retain_mode(snapshot_at(table_path)["meta"])
+
+
+def retain_mode(meta: "dict | None") -> "bool | None":
+    """`table_retain_mode` of a snapshot's `meta` (its latest
+    metaData body, None for a table without a log)."""
+    val = ((meta or {}).get("configuration") or {}).get(RETAIN_CONFIG_KEY)
     return None if val is None else val == "true"
 
 

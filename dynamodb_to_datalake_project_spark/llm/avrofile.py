@@ -24,21 +24,19 @@ import json
 import struct
 import zlib
 
+from dynamodb_to_datalake_project_spark.llm.bitio import (
+    read_uvarint,
+    unzigzag,
+    uvarint,
+    zigzag,
+)
+
 _MAGIC = b"Obj\x01"
 _SIMPLE = ("null", "boolean", "int", "long", "double", "string", "bytes")
 
 
 def _zz_encode(v: int) -> bytes:
-    u = (v << 1) ^ (v >> 63) if v < 0 else v << 1
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return uvarint(zigzag(v))
 
 
 class _AvroReader:
@@ -54,16 +52,8 @@ class _AvroReader:
         return out
 
     def zigzag(self) -> int:
-        out = shift = 0
-        while True:
-            b = self.read(1)[0]
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-            if shift > 70:
-                raise ValueError("avro: varint too long")
-        return (out >> 1) ^ -(out & 1)
+        u, self.pos = read_uvarint(self.buf, self.pos, "avro")
+        return unzigzag(u)
 
     def bytes_(self) -> bytes:
         n = self.zigzag()

@@ -9,7 +9,9 @@ coefficients + shift) subframes, wasted-bits, Rice-coded residuals
 (both 4- and 5-bit parameter methods, partition orders, raw-bits
 escape), all four channel assignments (independent, left/side,
 right/side, mid/side — side channels carry one extra bit), frame
-CRC-16, and the STREAMINFO MD5 check over the decoded samples.
+CRC-16, and the STREAMINFO MD5 check over the decoded samples. The
+MSB-first bit reader/writer and both CRCs come from `llm.bitio`; the
+UTF-8 frame-number coding is the FLAC layer over them.
 
 Encoder emits valid fixed-blocksize streams: per-subframe choice of
 CONSTANT or the best FIXED predictor (order 0-2 by residual magnitude),
@@ -31,6 +33,13 @@ from __future__ import annotations
 import hashlib
 import struct
 
+from dynamodb_to_datalake_project_spark.llm.bitio import (
+    MsbReader,
+    MsbWriter,
+    crc8,
+    crc16,
+)
+
 _FIXED_COEFS = {
     0: [],
     1: [1],
@@ -48,39 +57,6 @@ _SAMPLE_RATE_TABLE = {
 }
 
 _SAMPLE_SIZE_TABLE = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
-
-
-def _crc_table(poly: int, width: int) -> "list[int]":
-    top, mask = 1 << (width - 1), (1 << width) - 1
-    tbl = []
-    for b in range(256):
-        crc = b << (width - 8)
-        for _ in range(8):
-            crc = ((crc << 1) ^ poly) & mask if crc & top else (crc << 1) & mask
-        tbl.append(crc)
-    return tbl
-
-
-#: table-driven CRCs (identical values to the former per-bit loops —
-#: the table entry IS the 8-bit-unrolled loop for that input byte)
-_CRC8_TABLE = _crc_table(0x07, 8)
-_CRC16_TABLE = _crc_table(0x8005, 16)
-
-
-def _crc8(data: bytes) -> int:
-    """CRC-8, polynomial x^8 + x^2 + x + 1 (0x07), init 0."""
-    crc, tbl = 0, _CRC8_TABLE
-    for b in data:
-        crc = tbl[crc ^ b]
-    return crc
-
-
-def _crc16(data: bytes) -> int:
-    """CRC-16, polynomial x^16 + x^15 + x^2 + 1 (0x8005), init 0."""
-    crc, tbl = 0, _CRC16_TABLE
-    for b in data:
-        crc = ((crc << 8) & 0xFFFF) ^ tbl[(crc >> 8) ^ b]
-    return crc
 
 
 def _pcm_bytes_le(samples: "list[int]", nbytes: int) -> bytes:
@@ -112,67 +88,10 @@ def _utf8_number_encode(n: int) -> bytes:
     raise ValueError("frame number too large for UTF-8 coding")
 
 
-class _Reader:
-    """MSB-first bit reader (FLAC bit order is the opposite of VP8L's)."""
+class _Reader(MsbReader):
+    """MSB-first bit reader plus FLAC's UTF-8-coded frame numbers."""
 
-    def __init__(self, data: bytes, pos: int = 0):
-        self.d = data
-        self.pos = pos  # byte position
-        self.bit = 0  # bits consumed within d[pos]
-
-    def read(self, n: int) -> int:
-        # all n bits in one int.from_bytes + shift (the former per-bit
-        # loop paid ~5 Python ops per BIT); same bytes touched, same
-        # truncation condition, identical value by MSB-first order
-        if n == 0:
-            return 0
-        need = self.bit + n
-        nby = (need + 7) >> 3
-        chunk = self.d[self.pos : self.pos + nby]
-        if len(chunk) < nby:
-            raise ValueError("truncated FLAC bitstream")
-        v = (int.from_bytes(chunk, "big") >> (nby * 8 - need)) & (
-            (1 << n) - 1
-        )
-        self.pos += need >> 3
-        self.bit = need & 7
-        return v
-
-    def signed(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v >> (n - 1) else v
-
-    def unary(self) -> int:
-        # scan whole bytes for the terminating 1-bit instead of
-        # reading bit-by-bit; value and end position are identical
-        d, pos, bit, q = self.d, self.pos, self.bit, 0
-        nd = len(d)
-        while True:
-            if pos >= nd:
-                raise ValueError("truncated FLAC bitstream")
-            cur = d[pos] & (0xFF >> bit)
-            if cur:
-                hb = cur.bit_length()  # 1..8; the 1-bit is at 8-hb
-                q += (8 - hb) - bit
-                bit = 9 - hb
-                if bit == 8:
-                    bit = 0
-                    pos += 1
-                break
-            q += 8 - bit
-            bit = 0
-            pos += 1
-            if q > 1 << 24:
-                raise ValueError("corrupt Rice quotient")
-        if q > 1 << 24:
-            raise ValueError("corrupt Rice quotient")
-        self.pos, self.bit = pos, bit
-        return q
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
+    what = "FLAC"
 
     def utf8_number(self) -> int:
         b0 = self.read(8)
@@ -190,40 +109,6 @@ class _Reader:
                 raise ValueError("bad UTF-8-coded frame number")
             n = (n << 6) | (b & 0x3F)
         return n
-
-
-class _Writer:
-    """MSB-first bit writer. Bits accumulate in an int and flush to
-    `out` whole bytes at a time (the former per-bit appender paid ~5
-    Python ops per BIT); `out` always holds every completed byte, so
-    the encoder's byte-aligned CRC reads over `out` see identical
-    bytes."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.bit = 0  # bits pending in acc (0..7 after write())
-
-    def write(self, v: int, n: int) -> None:
-        acc = (self.acc << n) | (v & ((1 << n) - 1))
-        nb = self.bit + n
-        if nb >= 8:
-            flush = nb & ~7
-            nb -= flush
-            self.out += (acc >> nb).to_bytes(flush >> 3, "big")
-            acc &= (1 << nb) - 1
-        self.acc = acc
-        self.bit = nb
-
-    def signed(self, v: int, n: int) -> None:
-        self.write(v & ((1 << n) - 1), n)
-
-    def unary(self, q: int) -> None:
-        self.write(1, q + 1)
-
-    def align(self) -> None:
-        if self.bit:
-            self.write(0, 8 - self.bit)
 
 
 # ---------------------------------------------------------------------------
@@ -385,7 +270,7 @@ def decode_flac_samples(payload: bytes) -> dict:
         else:
             raise ValueError("invalid sample rate code")
         header_end = r.pos + (1 if r.bit else 0)
-        if _crc8(payload[frame_start:header_end]) != r.read(8):
+        if crc8(payload[frame_start:header_end]) != r.read(8):
             raise ValueError("FLAC frame header CRC-8 mismatch")
         if ch_code < 8:
             if ch_code + 1 != n_channels:
@@ -411,7 +296,7 @@ def decode_flac_samples(payload: bytes) -> dict:
             subs.append(_read_subframe(r, block_size, bps + extra))
         r.align()
         crc16_read = r.read(16)
-        if _crc16(payload[frame_start : r.pos - 2]) != crc16_read:
+        if crc16(payload[frame_start : r.pos - 2]) != crc16_read:
             raise ValueError("FLAC frame CRC-16 mismatch")
         if assign == "left_side":
             subs = [subs[0], [l - s for l, s in zip(subs[0], subs[1])]]
@@ -477,7 +362,7 @@ def _best_fixed_order(sub: "list[int]") -> int:
     return best
 
 
-def _write_residual(w: _Writer, res: "list[int]") -> None:
+def _write_residual(w: MsbWriter, res: "list[int]") -> None:
     """Single-partition Rice residual with an estimated parameter."""
     w.write(0, 2)  # method: 4-bit Rice parameters
     w.write(0, 4)  # partition order 0
@@ -497,7 +382,7 @@ def _write_residual(w: _Writer, res: "list[int]") -> None:
         w.write((1 << k) | (u & kmask), (u >> k) + 1 + k)
 
 
-def _write_subframe(w: _Writer, sub: "list[int]", bps: int) -> None:
+def _write_subframe(w: MsbWriter, sub: "list[int]", bps: int) -> None:
     if all(v == sub[0] for v in sub):
         w.write(0, 1); w.write(0, 6); w.write(0, 1)
         w.signed(sub[0], bps)
@@ -536,7 +421,7 @@ def encode_flac(
         raise ValueError("sample out of range for bits_per_sample")
     nbytes = (bits_per_sample + 7) // 8
     md5 = hashlib.md5(_pcm_bytes_le(samples, nbytes)).digest()
-    si = _Writer()
+    si = MsbWriter("FLAC")
     si.write(block_size, 16); si.write(block_size, 16)
     si.write(0, 24); si.write(0, 24)  # frame sizes unknown
     si.write(sample_rate, 20)
@@ -549,7 +434,7 @@ def encode_flac(
     frame_no = 0
     for start in range(0, total, block_size):
         n = min(block_size, total - start)
-        w = _Writer()
+        w = MsbWriter("FLAC")
         w.write(0b11111111111110, 14)
         w.write(0, 1)  # reserved
         w.write(0, 1)  # fixed-blocksize strategy
@@ -562,11 +447,11 @@ def encode_flac(
             w.write(b, 8)
         w.write(n - 1, 16)
         w.align()
-        w.write(_crc8(bytes(w.out)), 8)
+        w.write(crc8(bytes(w.out)), 8)
         for ch in range(n_channels):
             _write_subframe(w, channels[ch][start : start + n], bits_per_sample)
         w.align()
-        w.write(_crc16(bytes(w.out)), 16)
+        w.write(crc16(bytes(w.out)), 16)
         out += w.out
         frame_no += 1
     return bytes(out)

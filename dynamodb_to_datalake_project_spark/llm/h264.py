@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
+from dynamodb_to_datalake_project_spark.llm.bitio import MsbReader, MsbWriter
 
 #: profile_idc values that carry the chroma-format/bit-depth SPS
 #: extension (ISO 14496-10 §7.3.2.1.1 condition list)
@@ -47,71 +48,38 @@ NAL_SPS = 7
 NAL_PPS = 8
 
 
-class _BitReader:
-    """MSB-first bit reader with exp-Golomb ue(v)/se(v) (§9.1)."""
+class _BitReader(MsbReader):
+    """MSB-first bit reader plus exp-Golomb ue(v)/se(v) (§9.1)."""
 
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-
-    def bit(self) -> int:
-        if self.pos >= 8 * len(self.data):
-            raise ValueError("h264: bit read past end of RBSP")
-        b = (self.data[self.pos >> 3] >> (7 - (self.pos & 7))) & 1
-        self.pos += 1
-        return b
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
+    what = "h264"
 
     def ue(self) -> int:
-        zeros = 0
-        while self.bit() == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("h264: exp-Golomb run too long (corrupt)")
-        return (1 << zeros) - 1 + self.bits(zeros) if zeros else 0
+        zeros = self.unary(31)
+        return (1 << zeros) - 1 + self.read(zeros) if zeros else 0
 
     def se(self) -> int:
         k = self.ue()
         return (k + 1) // 2 if k % 2 else -(k // 2)
 
 
-class _BitWriter:
-    """MSB-first bit writer with ue(v) and RBSP trailing bits."""
+class _BitWriter(MsbWriter):
+    """MSB-first bit writer plus ue(v) and RBSP trailing bits."""
 
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def bits(self, v: int, n: int) -> None:
-        if v < 0 or v >> n:
-            raise ValueError(f"h264: value {v} overflows {n} bits")
-        self.acc = (self.acc << n) | v
-        self.n += n
-        while self.n >= 8:
-            self.n -= 8
-            self.buf.append((self.acc >> self.n) & 0xFF)
-        self.acc &= (1 << self.n) - 1
+    what = "h264"
 
     def ue(self, v: int) -> None:
         if v < 0:
             raise ValueError("h264: ue(v) needs a non-negative value")
         k = v + 1
         nbits = k.bit_length()
-        self.bits(0, nbits - 1)
-        self.bits(k, nbits)
+        self.write(0, nbits - 1)
+        self.write(k, nbits)
 
     def trailing(self) -> bytes:
         """rbsp_trailing_bits: stop bit then zero-align (§7.3.2.11)."""
-        self.bits(1, 1)
-        if self.n:
-            self.bits(0, 8 - self.n)
-        return bytes(self.buf)
+        self.write(1, 1)
+        self.align()
+        return bytes(self.out)
 
 
 def rbsp_to_ebsp(rbsp: bytes) -> bytes:
@@ -165,32 +133,32 @@ def encode_sps(
     progressive case every web/ingest stream uses). `crop` is the
     (left, right, top, bottom) frame_crop offsets in crop units."""
     w = _BitWriter()
-    w.bits(profile_idc, 8)
-    w.bits(0, 8)  # constraint_set flags + reserved_zero_2bits
-    w.bits(level_idc, 8)
+    w.write(profile_idc, 8)
+    w.write(0, 8)  # constraint_set flags + reserved_zero_2bits
+    w.write(level_idc, 8)
     w.ue(sps_id)
     if profile_idc in _HIGH_PROFILES:
         w.ue(1)  # chroma_format_idc: 4:2:0
         w.ue(0)  # bit_depth_luma_minus8
         w.ue(0)  # bit_depth_chroma_minus8
-        w.bits(0, 1)  # qpprime_y_zero_transform_bypass_flag
-        w.bits(0, 1)  # seq_scaling_matrix_present_flag
+        w.write(0, 1)  # qpprime_y_zero_transform_bypass_flag
+        w.write(0, 1)  # seq_scaling_matrix_present_flag
     w.ue(4)  # log2_max_frame_num_minus4
     w.ue(0)  # pic_order_cnt_type
     w.ue(4)  # log2_max_pic_order_cnt_lsb_minus4
     w.ue(num_ref_frames)
-    w.bits(0, 1)  # gaps_in_frame_num_value_allowed_flag
+    w.write(0, 1)  # gaps_in_frame_num_value_allowed_flag
     w.ue(width_mbs - 1)
     w.ue(height_map_units - 1)
-    w.bits(1, 1)  # frame_mbs_only_flag
-    w.bits(1, 1)  # direct_8x8_inference_flag
+    w.write(1, 1)  # frame_mbs_only_flag
+    w.write(1, 1)  # direct_8x8_inference_flag
     if crop is None:
-        w.bits(0, 1)  # frame_cropping_flag
+        w.write(0, 1)  # frame_cropping_flag
     else:
-        w.bits(1, 1)
+        w.write(1, 1)
         for v in crop:
             w.ue(v)
-    w.bits(0, 1)  # vui_parameters_present_flag
+    w.write(0, 1)  # vui_parameters_present_flag
     return w.trailing()
 
 
@@ -203,9 +171,9 @@ def parse_sps(rbsp: bytes) -> dict:
     interlaced streams (frame_mbs_only_flag=0) parse with the map-unit
     doubling the spec prescribes."""
     r = _BitReader(rbsp)
-    profile_idc = r.bits(8)
-    r.bits(8)  # constraint flags
-    level_idc = r.bits(8)
+    profile_idc = r.read(8)
+    r.read(8)  # constraint flags
+    level_idc = r.read(8)
     sps_id = r.ue()
     chroma_format_idc = 1
     separate_colour_plane = 0
@@ -214,11 +182,11 @@ def parse_sps(rbsp: bytes) -> dict:
         if chroma_format_idc > 3:
             raise ValueError(f"h264: chroma_format_idc {chroma_format_idc}")
         if chroma_format_idc == 3:
-            separate_colour_plane = r.bit()
+            separate_colour_plane = r.read(1)
         r.ue()  # bit_depth_luma_minus8
         r.ue()  # bit_depth_chroma_minus8
-        r.bit()  # qpprime_y_zero_transform_bypass_flag
-        if r.bit():
+        r.read(1)  # qpprime_y_zero_transform_bypass_flag
+        if r.read(1):
             raise NotImplementedError(
                 "h264: seq_scaling_matrix (scaling lists) is decoder "
                 "machinery — out of demux scope"
@@ -228,7 +196,7 @@ def parse_sps(rbsp: bytes) -> dict:
     if poc_type == 0:
         r.ue()  # log2_max_pic_order_cnt_lsb_minus4
     elif poc_type == 1:
-        r.bit()  # delta_pic_order_always_zero_flag
+        r.read(1)  # delta_pic_order_always_zero_flag
         r.se()  # offset_for_non_ref_pic
         r.se()  # offset_for_top_to_bottom_field
         for _ in range(r.ue()):
@@ -236,15 +204,15 @@ def parse_sps(rbsp: bytes) -> dict:
     elif poc_type > 2:
         raise ValueError(f"h264: pic_order_cnt_type {poc_type} is reserved")
     num_ref_frames = r.ue()
-    r.bit()  # gaps_in_frame_num_value_allowed_flag
+    r.read(1)  # gaps_in_frame_num_value_allowed_flag
     width_mbs = r.ue() + 1
     height_map_units = r.ue() + 1
-    frame_mbs_only = r.bit()
+    frame_mbs_only = r.read(1)
     if not frame_mbs_only:
-        r.bit()  # mb_adaptive_frame_field_flag
-    r.bit()  # direct_8x8_inference_flag
+        r.read(1)  # mb_adaptive_frame_field_flag
+    r.read(1)  # direct_8x8_inference_flag
     crop = (0, 0, 0, 0)
-    if r.bit():  # frame_cropping_flag
+    if r.read(1):  # frame_cropping_flag
         crop = (r.ue(), r.ue(), r.ue(), r.ue())
     # §7.4.2.1.1: crop units depend on chroma sampling and field coding
     if chroma_format_idc == 0 or separate_colour_plane:

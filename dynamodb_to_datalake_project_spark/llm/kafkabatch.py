@@ -13,29 +13,25 @@ protocol spec, both directions:
   timestampDelta, offsetDelta, key, value, header array (each header
   a varint-framed key/value pair).
 
-The CRC is verified on parse (table-driven CRC32C from
-`llm.tfrecord`); compression attribute bits other than none raise
-NotImplementedError (honest boundary), malformed framing raises
-ValueError. Offline segment replay is an Arrow map-only walk."""
+The CRC is verified on parse (CRC32C from `llm.bitio`); compression
+attribute bits other than none raise NotImplementedError (honest
+boundary), malformed framing raises ValueError. Offline segment replay is an Arrow map-only walk."""
 
 from __future__ import annotations
 
 import struct
 
-from dynamodb_to_datalake_project_spark.llm.tfrecord import crc32c
+from dynamodb_to_datalake_project_spark.llm.bitio import (
+    crc32c,
+    read_uvarint,
+    unzigzag,
+    uvarint,
+    zigzag,
+)
 
 
 def _zz(v: int) -> bytes:
-    u = (v << 1) ^ (v >> 63) if v < 0 else v << 1
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return uvarint(zigzag(v))
 
 
 class _VReader:
@@ -44,18 +40,8 @@ class _VReader:
         self.pos = pos
 
     def zigzag(self) -> int:
-        out = shift = 0
-        while True:
-            if self.pos >= len(self.buf):
-                raise ValueError("kafka: truncated varint")
-            b = self.buf[self.pos]
-            self.pos += 1
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return (out >> 1) ^ -(out & 1)
-            shift += 7
-            if shift > 70:
-                raise ValueError("kafka: varint too long")
+        u, self.pos = read_uvarint(self.buf, self.pos, "kafka")
+        return unzigzag(u)
 
     def vbytes(self) -> "bytes | None":
         n = self.zigzag()

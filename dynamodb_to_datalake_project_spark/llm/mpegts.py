@@ -25,31 +25,16 @@ from pyspark.sql import types as T
 
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
+from dynamodb_to_datalake_project_spark.llm.bitio import crc32_msb
 
 TS_PACKET = 188
 _PAYLOAD = TS_PACKET - 4
 
 
-def _crc_table():
-    tbl = []
-    for i in range(256):
-        r = i << 24
-        for _ in range(8):
-            r = ((r << 1) ^ 0x04C11DB7 if r & 0x80000000 else r << 1) & 0xFFFFFFFF
-        tbl.append(r)
-    return tuple(tbl)
-
-
-_CRC = _crc_table()
-
-
 def mpeg_crc32(data: bytes) -> int:
     """MPEG-2 PSI CRC-32: same polynomial as Ogg's, but init all-ones
     (and still unreflected, no final xor)."""
-    crc = 0xFFFFFFFF
-    for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _CRC[((crc >> 24) & 0xFF) ^ b]
-    return crc
+    return crc32_msb(data, 0xFFFFFFFF)
 
 
 def _ts_packet(pid: int, pusi: bool, cc: int, payload: bytes) -> bytes:

@@ -59,6 +59,12 @@ from pyspark.sql import types as T
 
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
+from dynamodb_to_datalake_project_spark.llm.bitio import (
+    MsbReader,
+    MsbWriter,
+    crc16,
+    crc32_msb,
+)
 
 #: canonical multimodal record shape: opaque payload + typed metadata
 MULTIMODAL_SCHEMA = T.StructType(
@@ -832,14 +838,17 @@ _JPEG_HUFF_AC_CHROM = (
 #: de-zigzagged quant matrices are built once per process, not per
 #: frame. All caches are size-capped; cached arrays are never mutated
 #: by callers.
-_JPEG_HUFF_CACHE: "dict[bytes, dict]" = {}
+_JPEG_HUFF_CACHE: "dict[bytes, list]" = {}
 _JPEG_DQT_CACHE: "dict[tuple, object]" = {}
 _JPEG_IDCT_A = None
 
 
-def _jpeg_huff_lut(bits: "list[int]", values: "list[int]") -> dict:
-    """Canonical Huffman: {(code_length, code): value}, cached on the
-    raw (bits, values) bytes."""
+def _jpeg_huff_table(bits: "list[int]", values: "list[int]") -> list:
+    """Canonical Huffman table as its cache entry [lut, peek]: lut =
+    {(code_length, code): value}; peek = the (value, length) flat
+    peek-16 lists `_jpeg_fast_lut` fills on first decode use. Cached
+    on the raw (bits, values) bytes; past the cap the oldest entry
+    makes room, so a table seen again is always a hit."""
     key = bytes(bits) + bytes(values)
     hit = _JPEG_HUFF_CACHE.get(key)
     if hit is not None:
@@ -851,9 +860,10 @@ def _jpeg_huff_lut(bits: "list[int]", values: "list[int]") -> dict:
             k += 1
             code += 1
         code <<= 1
-    if len(_JPEG_HUFF_CACHE) < 256:
-        _JPEG_HUFF_CACHE[key] = lut
-    return lut
+    if len(_JPEG_HUFF_CACHE) >= 256:
+        del _JPEG_HUFF_CACHE[next(iter(_JPEG_HUFF_CACHE))]
+    hit = _JPEG_HUFF_CACHE[key] = [lut, None]
+    return hit
 
 
 def _jpeg_idct_matrix():
@@ -924,30 +934,21 @@ def _jpeg_entropy_segments(
     return segs
 
 
-#: (value, length) flat peek-16 tables per canonical Huffman table —
-#: keyed by id() of the lut dict (entries pin the dict, so ids cannot
-#: be recycled); `_jpeg_huff_lut`'s own cache makes the id key hit for
-#: every frame of an MJPEG stream / image from one encoder.
-_JPEG_FASTLUT_CACHE: "dict[int, tuple]" = {}
+def _jpeg_fast_lut(table: list) -> "tuple[list, list]":
+    """The (value, length) flat peek-16 lists of a `_jpeg_huff_table`
+    entry, built once and kept in the entry."""
+    if table[1] is None:
+        import numpy as np
 
-
-def _jpeg_fast_lut(lut: dict) -> "tuple[list, list]":
-    hit = _JPEG_FASTLUT_CACHE.get(id(lut))
-    if hit is not None:
-        return hit[1], hit[2]
-    import numpy as np
-
-    val = np.zeros(65536, np.int32)
-    ln = np.zeros(65536, np.int32)
-    for (length, code), v in lut.items():
-        lo = code << (16 - length)
-        hi = lo + (1 << (16 - length))
-        val[lo:hi] = v
-        ln[lo:hi] = length
-    ent = (lut, val.tolist(), ln.tolist())
-    if len(_JPEG_FASTLUT_CACHE) < 256:
-        _JPEG_FASTLUT_CACHE[id(lut)] = ent
-    return ent[1], ent[2]
+        val = np.zeros(65536, np.int32)
+        ln = np.zeros(65536, np.int32)
+        for (length, code), v in table[0].items():
+            lo = code << (16 - length)
+            hi = lo + (1 << (16 - length))
+            val[lo:hi] = v
+            ln[lo:hi] = length
+        table[1] = (val.tolist(), ln.tolist())
+    return table[1]
 
 
 #: bytes of entropy segment windowed per chunk: bounds the transient
@@ -1051,7 +1052,7 @@ def decode_jpeg_array(payload: bytes) -> dict:
                 values = list(seg[i + 17 : i + 17 + nvals])
                 if len(values) < nvals:
                     raise ValueError("truncated JPEG DHT")
-                huff[(cls, tid)] = _jpeg_huff_lut(bits, values)
+                huff[(cls, tid)] = _jpeg_huff_table(bits, values)
                 i += 17 + nvals
         elif marker in (0xC0, 0xC1):  # SOF0/SOF1: baseline/ext sequential
             _, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
@@ -1329,7 +1330,7 @@ def _jpeg_encode_codes(bits, values):
     hit = _JPEG_ENCODE_CODES_CACHE.get(key)
     if hit is None:
         hit = {
-            v: (c, l) for (l, c), v in _jpeg_huff_lut(bits, values).items()
+            v: (c, l) for (l, c), v in _jpeg_huff_table(bits, values)[0].items()
         }
         if len(_JPEG_ENCODE_CODES_CACHE) < 256:
             _JPEG_ENCODE_CODES_CACHE[key] = hit
@@ -4757,44 +4758,6 @@ def encode_mp3_stream(
     return bytes(out)
 
 
-class _MsbBits:
-    """MSB-first bit accumulator (ISO 11172-3 bitstream order — the
-    opposite of VP8L's LSB-first `_Bits` in webp.py)."""
-
-    def __init__(self, data: bytes = b""):
-        self.data = data
-        self.pos = 0  # bit cursor for reads
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, v: int, n: int) -> None:
-        if v < 0 or v >> n:
-            raise ValueError(f"mp3 side info: value {v} overflows {n} bits")
-        self.acc = (self.acc << n) | v
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.buf.append((self.acc << (8 - self.nbits)) & 0xFF)
-            self.acc = self.nbits = 0
-        return bytes(self.buf)
-
-    def read(self, n: int) -> int:
-        if self.pos + n > 8 * len(self.data):
-            raise ValueError("mp3 side info: bit read past end")
-        v = 0
-        for _ in range(n):
-            byte = self.data[self.pos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
-
-
 _MP3_GR_FIELDS = (
     ("part2_3_length", 12),
     ("big_values", 9),
@@ -4815,7 +4778,7 @@ def encode_mp3_side_info(si: dict, channels: int = 2) -> bytes:
     scfsi, and per-(granule, channel) the 59-bit field group. Only
     normal blocks (window_switching_flag=0) are encoded; granule
     Huffman payloads stay honestly out of scope."""
-    w = _MsbBits()
+    w = MsbWriter("mp3 side info")
     w.write(si["main_data_begin"], 9)
     w.write(si.get("private_bits", 0), 5 if channels == 1 else 3)
     for c in range(channels):
@@ -4832,7 +4795,8 @@ def encode_mp3_side_info(si: dict, channels: int = 2) -> bytes:
             w.write(gr["region1_count"], 3)
             for name, _w in _MP3_GR_TAIL:
                 w.write(gr[name], 1)
-    out = w.flush()
+    w.align()
+    out = bytes(w.out)
     assert len(out) == (17 if channels == 1 else 32)
     return out
 
@@ -4846,7 +4810,7 @@ def parse_mp3_side_info(data: bytes, channels: int = 2) -> dict:
     need = 17 if channels == 1 else 32
     if len(data) < need:
         raise ValueError(f"mp3 side info: need {need} bytes, got {len(data)}")
-    r = _MsbBits(data[:need])
+    r = MsbReader(data[:need], what="mp3 side info")
     out: dict = {"main_data_begin": r.read(9)}
     out["private_bits"] = r.read(5 if channels == 1 else 3)
     out["scfsi"] = [r.read(4) for _ in range(channels)]
@@ -5352,55 +5316,9 @@ def q_multimodal_mp3_sideinfo(spark, sf_dir):
 # Ogg container walk (RFC 3533) — demux-only, with REAL page CRCs
 # ---------------------------------------------------------------------------
 
-def _ogg_crc_table():
-    # CRC-32, polynomial 0x04C11DB7, NOT reflected, init 0, no final
-    # xor — the Ogg variant (RFC 3533 §6), different from zlib's
-    tbl = []
-    for i in range(256):
-        r = i << 24
-        for _ in range(8):
-            r = ((r << 1) ^ 0x04C11DB7 if r & 0x80000000 else r << 1) & 0xFFFFFFFF
-        tbl.append(r)
-    return tuple(tbl)
-
-
-_OGG_CRC = _ogg_crc_table()
-
-#: per-byte bit reversal (for the zlib mapping below)
-_BITREV8 = bytes(int(f"{i:08b}"[::-1], 2) for i in range(256))
-_BITREV32 = None
-
-
 def ogg_crc(data: bytes) -> int:
-    """Ogg's unreflected CRC-32 via C-speed zlib: CRC with an
-    unreflected polynomial P over message M equals the bit-reversed
-    reflected-P CRC of the byte-bit-reversed message (the standard
-    reflection identity), and zlib's polynomial 0xEDB88320 IS
-    bitrev32(0x04C11DB7). zlib's init/final-xor conditioning is undone
-    algebraically (raw(0, m) = ~crc32(m, 0xFFFFFFFF)). Verified
-    value-identical to the table loop on random buffers; the loop
-    remains as `_ogg_crc_ref` for the property test."""
-    global _BITREV32
-    import zlib
-
-    if _BITREV32 is None:
-        _BITREV32 = [int(f"{x:08b}"[::-1], 2) for x in range(256)]
-    raw = ~zlib.crc32(data.translate(_BITREV8), 0xFFFFFFFF) & 0xFFFFFFFF
-    br = _BITREV32
-    return (
-        br[raw >> 24]
-        | (br[(raw >> 16) & 0xFF] << 8)
-        | (br[(raw >> 8) & 0xFF] << 16)
-        | (br[raw & 0xFF] << 24)
-    )
-
-
-def _ogg_crc_ref(data: bytes) -> int:
-    """Reference table-driven form (RFC 3533 §6 literal)."""
-    crc = 0
-    for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _OGG_CRC[((crc >> 24) & 0xFF) ^ b]
-    return crc
+    """Ogg page CRC (RFC 3533 §6): unreflected CRC-32, init 0."""
+    return crc32_msb(data, 0)
 
 
 def encode_ogg_stream(
@@ -6382,17 +6300,6 @@ _AAC_RATES = (
 _AAC_SAMPLES_PER_FRAME = 1024  # one raw_data_block
 
 
-def _crc16_adts(data: bytes) -> int:
-    """CRC-16 with the ADTS polynomial x^16+x^15+x^2+1 (0x8005),
-    MSB-first, initial value 0xFFFF (ISO 13818-7 adts_error_check)."""
-    crc = 0xFFFF
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005 if crc & 0x8000 else crc << 1) & 0xFFFF
-    return crc
-
-
 def encode_aac_adts(
     payloads: "list[bytes]",
     profile: int,
@@ -6432,7 +6339,7 @@ def encode_aac_adts(
         hdr[6] = 0xFC | 0  # fullness lo + number_of_rdbs-1 = 0
         out += hdr
         if crc:
-            out += _crc16_adts(bytes(hdr)).to_bytes(2, "big")
+            out += crc16(bytes(hdr), 0xFFFF).to_bytes(2, "big")
         out += payload
     return bytes(out)
 
@@ -6487,7 +6394,7 @@ def parse_aac_adts(payload: bytes) -> dict:
             raise ValueError("aac: stream parameters change mid-stream")
         if protected:
             want = int.from_bytes(payload[pos + 7 : pos + 9], "big")
-            if _crc16_adts(payload[pos : pos + 7]) != want:
+            if crc16(payload[pos : pos + 7], 0xFFFF) != want:
                 raise ValueError(f"aac: CRC mismatch at offset {pos}")
             crc_frames += 1
         n += 1

@@ -19,7 +19,8 @@ from __future__ import annotations
 
 import zlib
 
-from dynamodb_to_datalake_project_spark.llm.tfrecord import _PbReader
+from dynamodb_to_datalake_project_spark.llm.bitio import read_uvarint, unzigzag
+from dynamodb_to_datalake_project_spark.llm.tfrecord import _pb_walk
 
 _ORC_COMPRESSION = {
     0: "NONE", 1: "ZLIB", 2: "SNAPPY", 3: "LZO", 4: "LZ4", 5: "ZSTD",
@@ -87,7 +88,7 @@ def parse_orc_tail(payload: bytes) -> dict:
     footer_len = None
     compression = 0
     magic = None
-    for field, wire, v in _PbReader(ps_raw).fields():
+    for field, wire, v in _pb_walk(ps_raw):
         if field == 1 and wire == 0:
             footer_len = v
         elif field == 2 and wire == 0:
@@ -110,11 +111,11 @@ def parse_orc_tail(payload: bytes) -> dict:
     stripes: "list[dict]" = []
     kinds: "list[str]" = []
     field_names: "list[str]" = []
-    for field, wire, v in _PbReader(footer).fields():
+    for field, wire, v in _pb_walk(footer):
         if field == 2 and wire == 0:
             content_length = v
         elif field == 3 and wire == 2:  # StripeInformation
-            si = {sf: sv for sf, sw, sv in _PbReader(v).fields()}
+            si = {sf: sv for sf, sw, sv in _pb_walk(v)}
             stripes.append(
                 {
                     "offset": si.get(1, 0),
@@ -127,7 +128,7 @@ def parse_orc_tail(payload: bytes) -> dict:
             stripe_rows.append(si.get(5, 0))
         elif field == 4 and wire == 2:  # Type
             kind = 0
-            for tf, tw, tv in _PbReader(v).fields():
+            for tf, tw, tv in _pb_walk(v):
                 if tf == 1 and tw == 0:
                     kind = tv
                 elif tf == 3 and tw == 2:
@@ -273,24 +274,6 @@ def _unpack_bits(buf: bytes, pos: int, n: int, w: int):
     return out, pos
 
 
-def _varint(buf: bytes, pos: int):
-    """Unsigned LEB128 (protobuf varint) used by RLEv1/v2 literals."""
-    v = shift = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("orc: truncated varint")
-        b = buf[pos]
-        pos += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return v, pos
-        shift += 7
-
-
-def _unzigzag(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
-
-
 def rlev2_decode(buf: bytes, signed: bool) -> "list[int]":
     """Integer RLE v2: decode ALL runs in `buf` (a whole ORC stream).
     Sub-encodings per the spec: short repeat (00), direct (01),
@@ -312,7 +295,7 @@ def rlev2_decode(buf: bytes, signed: bool) -> "list[int]":
             v = int.from_bytes(buf[pos : pos + width], "big")
             pos += width
             if signed:
-                v = _unzigzag(v)
+                v = unzigzag(v)
             out.extend([v] * count)
         elif kind == 1:  # direct
             w = _bit_width((h >> 1) & 0x1F)
@@ -322,7 +305,7 @@ def rlev2_decode(buf: bytes, signed: bool) -> "list[int]":
             pos += 1
             vals, pos = _unpack_bits(buf, pos, count, w)
             if signed:
-                out.extend(_unzigzag(v) for v in vals)
+                out.extend(unzigzag(v) for v in vals)
             else:
                 out.extend(vals)
         elif kind == 2:  # patched base
@@ -361,11 +344,11 @@ def rlev2_decode(buf: bytes, signed: bool) -> "list[int]":
                 raise ValueError("orc: truncated delta header")
             count = ((h & 1) << 8 | buf[pos]) + 1
             pos += 1
-            base, pos = _varint(buf, pos)
+            base, pos = read_uvarint(buf, pos, "orc")
             if signed:
-                base = _unzigzag(base)
-            db_raw, pos = _varint(buf, pos)
-            delta_base = _unzigzag(db_raw)
+                base = unzigzag(base)
+            db_raw, pos = read_uvarint(buf, pos, "orc")
+            delta_base = unzigzag(db_raw)
             vals = [base]
             if count > 1:
                 vals.append(base + delta_base)
@@ -455,12 +438,12 @@ def read_orc_column(payload: bytes, column: str) -> list:
         )
         streams: "list[tuple[int, int, int]]" = []
         encodings: "list[tuple[int, int]]" = []
-        for f, w, v in _PbReader(sfoot).fields():
+        for f, w, v in _pb_walk(sfoot):
             if f == 1 and w == 2:
-                d = {sf: sv for sf, sw, sv in _PbReader(v).fields()}
+                d = {sf: sv for sf, sw, sv in _pb_walk(v)}
                 streams.append((d.get(1, 0), d.get(2, 0), d.get(3, 0)))
             elif f == 2 and w == 2:
-                d = {sf: sv for sf, sw, sv in _PbReader(v).fields()}
+                d = {sf: sv for sf, sw, sv in _pb_walk(v)}
                 encodings.append((d.get(1, 0), d.get(2, 0)))
         enc, dict_size = encodings[col]
         if enc not in (2, 3):  # DIRECT_V2 / DICTIONARY_V2

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import struct
 
+from dynamodb_to_datalake_project_spark.llm.bitio import read_uvarint, unzigzag
+
 # thrift compact element types
 _CT_STOP = 0
 _CT_TRUE = 1
@@ -52,19 +54,11 @@ class _Reader:
         return b
 
     def varint(self) -> int:
-        out = shift = 0
-        while True:
-            b = self.byte()
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return out
-            shift += 7
-            if shift > 70:
-                raise ValueError("parquet: varint too long")
+        v, self.pos = read_uvarint(self.buf, self.pos, "parquet")
+        return v
 
     def zigzag(self) -> int:
-        v = self.varint()
-        return (v >> 1) ^ -(v & 1)
+        return unzigzag(self.varint())
 
     def binary(self) -> bytes:
         n = self.varint()
@@ -864,19 +858,6 @@ def _inflate_page(blob: bytes, codec: int, want: int) -> bytes:
     return blob
 
 
-def _uvarint(data: bytes, at: int) -> "tuple[int, int]":
-    v = s = 0
-    while True:
-        if at >= len(data):
-            raise ValueError("parquet: truncated varint")
-        b = data[at]
-        at += 1
-        v |= (b & 0x7F) << s
-        if b < 0x80:
-            return v, at
-        s += 7
-
-
 def _delta_binary_packed(
     data: bytes, at: int, n: int
 ) -> "tuple[list[int], int]":
@@ -889,10 +870,10 @@ def _delta_binary_packed(
     values carry no data bytes. Returns (first n values, offset past
     the encoding) — the offset matters because DELTA_LENGTH/
     DELTA_BYTE_ARRAY embed this stream ahead of raw bytes."""
-    block, at = _uvarint(data, at)
-    nmini, at = _uvarint(data, at)
-    total, at = _uvarint(data, at)
-    uz, at = _uvarint(data, at)
+    block, at = read_uvarint(data, at, "parquet")
+    nmini, at = read_uvarint(data, at, "parquet")
+    total, at = read_uvarint(data, at, "parquet")
+    uz, at = read_uvarint(data, at, "parquet")
     if nmini == 0 or block % nmini or (block // nmini) % 8:
         raise ValueError("parquet: bad delta-binary-packed header")
     if total < n:
@@ -903,11 +884,11 @@ def _delta_binary_packed(
     if total == 0:
         return [], at
     per_mini = block // nmini
-    out = [(uz >> 1) ^ -(uz & 1)]
+    out = [unzigzag(uz)]
     remaining = total - 1
     while remaining > 0:
-        uz, at = _uvarint(data, at)
-        min_delta = (uz >> 1) ^ -(uz & 1)
+        uz, at = read_uvarint(data, at, "parquet")
+        min_delta = unzigzag(uz)
         widths = data[at : at + nmini]
         if len(widths) != nmini:
             raise ValueError("parquet: truncated miniblock widths")

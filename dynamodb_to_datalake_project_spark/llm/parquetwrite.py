@@ -35,6 +35,8 @@ NotImplementedError.
 
 from __future__ import annotations
 
+from dynamodb_to_datalake_project_spark.llm.bitio import uvarint, zigzag
+
 # thrift compact type nibbles
 _T_TRUE, _T_FALSE, _T_BYTE = 1, 2, 3
 _T_I16, _T_I32, _T_I64, _T_DOUBLE = 4, 5, 6, 7
@@ -68,13 +70,8 @@ def snappy_compress(data: bytes) -> bytes:
     always legal), long matches chunked at 64. Every output is
     decodable by snappy_decompress AND by pyarrow's snappy (the
     tests cross-check both)."""
-    out = bytearray()
     n = len(data)
-    v = n
-    while v >= 0x80:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
+    out = bytearray(uvarint(n))
 
     def emit_literal(lo: int, hi: int) -> None:
         ln = hi - lo
@@ -130,15 +127,10 @@ class _TWriter:
         self._last = [0]
 
     def _varint(self, v: int) -> None:
-        while True:
-            if v < 0x80:
-                self.b.append(v)
-                return
-            self.b.append((v & 0x7F) | 0x80)
-            v >>= 7
+        self.b += uvarint(v)
 
     def _zigzag(self, v: int) -> None:
-        self._varint((v << 1) ^ (v >> 63) if v < 0 else v << 1)
+        self.b += uvarint(zigzag(v))
 
     def _field_hdr(self, fid: int, ctype: int) -> None:
         delta = fid - self._last[-1]
@@ -318,23 +310,17 @@ def _rle_hybrid_indices(idx: "list[int]", bw: int) -> bytes:
     body = bytearray()
     vbytes = (bw + 7) // 8
 
-    def varint(v: int) -> None:
-        while v >= 0x80:
-            body.append((v & 0x7F) | 0x80)
-            v >>= 7
-        body.append(v)
-
     def flush(buf: "list[int]") -> None:
         groups = len(buf) // 8
         if groups:
-            varint((groups << 1) | 1)
+            body.extend(uvarint((groups << 1) | 1))
             for g in range(groups):
                 acc = 0
                 for t, v in enumerate(buf[g * 8 : g * 8 + 8]):
                     acc |= v << (t * bw)
                 body.extend(acc.to_bytes(bw, "little"))
         for v in buf[groups * 8 :]:
-            varint(1 << 1)
+            body.extend(uvarint(1 << 1))
             body.extend(v.to_bytes(vbytes, "little"))
         buf.clear()
 
@@ -347,7 +333,7 @@ def _rle_hybrid_indices(idx: "list[int]", bw: int) -> bytes:
         run = j - i
         if run >= 8:
             flush(pending)
-            varint(run << 1)
+            body.extend(uvarint(run << 1))
             body.extend(idx[i].to_bytes(vbytes, "little"))
         else:
             pending.extend(idx[i:j])
@@ -366,28 +352,10 @@ def _rle_def_levels(levels: "list[int]") -> bytes:
         j = i
         while j < len(levels) and levels[j] == levels[i]:
             j += 1
-        run = j - i
-        v = run << 1
-        while v >= 0x80:
-            body.append((v & 0x7F) | 0x80)
-            v >>= 7
-        body.append(v)
+        body += uvarint((j - i) << 1)
         body.append(levels[i])
         i = j
     return len(body).to_bytes(4, "little") + bytes(body)
-
-
-def _uvarint_b(v: int) -> bytes:
-    out = bytearray()
-    while v >= 0x80:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
-    return bytes(out)
-
-
-def _zigzag_b(v: int) -> bytes:
-    return _uvarint_b((v << 1) ^ (v >> 63) if v < 0 else v << 1)
 
 
 def delta_binary_packed_encode(
@@ -404,17 +372,17 @@ def delta_binary_packed_encode(
     and no bytes."""
     per_mini = block // nmini
     out = bytearray()
-    out += _uvarint_b(block)
-    out += _uvarint_b(nmini)
-    out += _uvarint_b(len(vals))
-    out += _zigzag_b(vals[0] if vals else 0)
+    out += uvarint(block)
+    out += uvarint(nmini)
+    out += uvarint(len(vals))
+    out += uvarint(zigzag(vals[0] if vals else 0))
     if len(vals) <= 1:
         return bytes(out)
     deltas = [b - a for a, b in zip(vals, vals[1:])]
     for bs in range(0, len(deltas), block):
         chunk = deltas[bs : bs + block]
         mind = min(chunk)
-        out += _zigzag_b(mind)
+        out += uvarint(zigzag(mind))
         adj = [d - mind for d in chunk]
         widths = []
         for m in range(nmini):

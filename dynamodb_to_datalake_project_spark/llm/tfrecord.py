@@ -4,12 +4,13 @@ shard format, hand-rolled from the public specs with zero TF:
 - TFRecord framing: per record, little-endian u64 length + masked
   CRC32C of the length bytes + payload + masked CRC32C of the payload
   (mask = ((crc >> 15 | crc << 17) + 0xa282ead8) mod 2^32). CRC32C
-  (Castagnoli) is table-driven here — stdlib zlib.crc32 is the IEEE
+  (Castagnoli) comes from `llm.bitio` — stdlib zlib.crc32 is the IEEE
   polynomial and CANNOT verify these frames.
 - tf.train.Example: protobuf wire decode for the fixed public schema
   Example{features: Features{feature: map<string, Feature>}} with
   Feature one of bytes_list/float_list/int64_list — varint/length-
   delimited wire types, packed and unpacked repeated int64/float.
+  `_pb_walk` is also the protobuf reader of `llm.orcmeta`.
 
 Corrupt frames (bad CRC, truncation) and malformed protobuf raise
 ValueError; features outside the three list kinds raise
@@ -20,58 +21,17 @@ from __future__ import annotations
 
 import struct
 
-_CRC32C_TABLE = []
-for _i in range(256):
-    _c = _i
-    for _ in range(8):
-        _c = (_c >> 1) ^ 0x82F63B78 if _c & 1 else _c >> 1
-    _CRC32C_TABLE.append(_c)
-
-
-def crc32c(data: bytes, crc: int = 0) -> int:
-    """CRC-32C (Castagnoli, poly 0x1EDC6F41 reflected) — the checksum
-    TFRecord, Kafka v2 batches, and iSCSI use."""
-    crc ^= 0xFFFFFFFF
-    for b in data:
-        crc = (crc >> 8) ^ _CRC32C_TABLE[(crc ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFF
+from dynamodb_to_datalake_project_spark.llm.bitio import (
+    crc32c,
+    crc32c_batch,
+    read_uvarint,
+    uvarint,
+)
 
 
 def _masked_crc(data: bytes) -> int:
     c = crc32c(data)
     return (((c >> 15) | (c << 17)) + 0xA282EAD8) & 0xFFFFFFFF
-
-
-def crc32c_batch(blobs: "list[bytes]") -> "list[int]":
-    """Vectorized CRC-32C over many blobs: group by length, then one
-    numpy table-lookup pass per BYTE POSITION (the per-blob chain is
-    sequential, but across blobs each step vectorizes) — ~50x the
-    per-byte Python loop on TFRecord-sized shards. Bit-identical to
-    `crc32c`."""
-    import numpy as np
-
-    out = [0] * len(blobs)
-    by_len: "dict[int, list[int]]" = {}
-    for i, b in enumerate(blobs):
-        by_len.setdefault(len(b), []).append(i)
-    tab = np.array(_CRC32C_TABLE, dtype=np.uint32)
-    for ln, idxs in by_len.items():
-        if ln == 0:
-            continue  # crc32c(b"") == 0 already
-        if len(idxs) < 8:  # numpy setup loses on tiny groups
-            for i in idxs:
-                out[i] = crc32c(blobs[i])
-            continue
-        mat = np.frombuffer(
-            b"".join(blobs[i] for i in idxs), dtype=np.uint8
-        ).reshape(len(idxs), ln)
-        crc = np.full(len(idxs), 0xFFFFFFFF, dtype=np.uint32)
-        for j in range(ln):
-            crc = (crc >> np.uint32(8)) ^ tab[(crc ^ mat[:, j]) & 0xFF]
-        crc ^= 0xFFFFFFFF
-        for k, i in enumerate(idxs):
-            out[i] = int(crc[k])
-    return out
 
 
 def _masked_crc_batch(blobs: "list[bytes]") -> "list[int]":
@@ -134,88 +94,12 @@ def parse_tfrecord(payload: bytes) -> "list[bytes]":
 # --- minimal protobuf wire codec (public encoding spec) ---------------
 
 
-#: single-byte varints (values 0..127 — tags, small lengths, small
-#: ints: the overwhelming majority of TFRecord varints) preencoded
-_PB_VARINT1 = [bytes((v,)) for v in range(0x80)]
-
-
-def _pb_varint(v: int) -> bytes:
-    if 0 <= v < 0x80:
-        return _PB_VARINT1[v]
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _pb_tag(field: int, wire: int) -> bytes:
-    return _pb_varint((field << 3) | wire)
+    return uvarint((field << 3) | wire)
 
 
 def _pb_len(field: int, body: bytes) -> bytes:
-    return _pb_tag(field, 2) + _pb_varint(len(body)) + body
-
-
-class _PbReader:
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.pos = 0
-
-    def varint(self) -> int:
-        buf, pos = self.buf, self.pos
-        if pos < len(buf):  # 1-byte fast path
-            b = buf[pos]
-            if not b & 0x80:
-                self.pos = pos + 1
-                return b
-        out = shift = 0
-        while True:
-            if self.pos >= len(self.buf):
-                raise ValueError("protobuf: truncated varint")
-            b = self.buf[self.pos]
-            self.pos += 1
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return out
-            shift += 7
-            if shift > 70:
-                raise ValueError("protobuf: varint too long")
-
-    def fields(self):
-        """Yield (field_number, wire_type, value) over the buffer;
-        value is int for varint/fixed, bytes for length-delimited."""
-        while self.pos < len(self.buf):
-            tag = self.varint()
-            field, wire = tag >> 3, tag & 7
-            if wire == 0:
-                yield field, wire, self.varint()
-            elif wire == 2:
-                ln = self.varint()
-                if self.pos + ln > len(self.buf):
-                    raise ValueError("protobuf: truncated bytes field")
-                yield field, wire, self.buf[self.pos : self.pos + ln]
-                self.pos += ln
-            elif wire == 5:
-                if self.pos + 4 > len(self.buf):
-                    raise ValueError("protobuf: truncated fixed32")
-                (v,) = struct.unpack_from("<I", self.buf, self.pos)
-                self.pos += 4
-                yield field, wire, v
-            elif wire == 1:
-                if self.pos + 8 > len(self.buf):
-                    raise ValueError("protobuf: truncated fixed64")
-                (v,) = struct.unpack_from("<Q", self.buf, self.pos)
-                self.pos += 8
-                yield field, wire, v
-            else:
-                raise NotImplementedError(
-                    f"protobuf: wire type {wire} not implemented"
-                )
+    return _pb_tag(field, 2) + uvarint(len(body)) + body
 
 
 def encode_tf_example(features: "dict[str, object]") -> bytes:
@@ -231,7 +115,7 @@ def encode_tf_example(features: "dict[str, object]") -> bytes:
             isinstance(x, int) for x in value
         ):
             packed = b"".join(
-                _pb_varint(x & 0xFFFFFFFFFFFFFFFF) for x in value
+                uvarint(x & 0xFFFFFFFFFFFFFFFF) for x in value
             )
             kind = _pb_len(3, _pb_len(1, packed))  # int64_list packed
         elif isinstance(value, list) and all(
@@ -249,57 +133,32 @@ def encode_tf_example(features: "dict[str, object]") -> bytes:
 
 
 def _pb_walk(buf: bytes):
-    """(field, wire, value) triples of one message as a list — the
-    same walk `_PbReader.fields` yields, without per-level generator
-    and reader objects (the tf.Example parser visits 5 nested
-    messages per tiny record; object setup dominated the decode)."""
+    """(field, wire, value) triples of one message as a list; value is
+    int for varint/fixed, bytes for length-delimited. A 1-byte varint
+    (tags, small lengths and ints: nearly every TFRecord varint) is
+    read inline; `read_uvarint` takes the rest."""
     out = []
     pos, n = 0, len(buf)
     while pos < n:
         tag = buf[pos]
-        if tag & 0x80:
-            tag = shift = 0
-            while True:
-                if pos >= n:
-                    raise ValueError("protobuf: truncated varint")
-                b = buf[pos]
-                pos += 1
-                tag |= (b & 0x7F) << shift
-                if not b & 0x80:
-                    break
-                shift += 7
-                if shift > 70:
-                    raise ValueError("protobuf: varint too long")
-        else:
+        if tag < 0x80:
             pos += 1
+        else:
+            tag, pos = read_uvarint(buf, pos, "protobuf")
         field, wire = tag >> 3, tag & 7
         if wire == 0:
-            v = shift = 0
-            while True:
-                if pos >= n:
-                    raise ValueError("protobuf: truncated varint")
-                b = buf[pos]
+            if pos < n and buf[pos] < 0x80:
+                v = buf[pos]
                 pos += 1
-                v |= (b & 0x7F) << shift
-                if not b & 0x80:
-                    break
-                shift += 7
-                if shift > 70:
-                    raise ValueError("protobuf: varint too long")
+            else:
+                v, pos = read_uvarint(buf, pos, "protobuf")
             out.append((field, 0, v))
         elif wire == 2:
-            ln = shift = 0
-            while True:
-                if pos >= n:
-                    raise ValueError("protobuf: truncated varint")
-                b = buf[pos]
+            if pos < n and buf[pos] < 0x80:
+                ln = buf[pos]
                 pos += 1
-                ln |= (b & 0x7F) << shift
-                if not b & 0x80:
-                    break
-                shift += 7
-                if shift > 70:
-                    raise ValueError("protobuf: varint too long")
+            else:
+                ln, pos = read_uvarint(buf, pos, "protobuf")
             if pos + ln > n:
                 raise ValueError("protobuf: truncated bytes field")
             out.append((field, 2, buf[pos : pos + ln]))
@@ -350,9 +209,15 @@ def parse_tf_example(payload: bytes) -> "dict[str, object]":
                             vals: "list[int]" = []
                             for lf, lw, lv in _pb_walk(kv):
                                 if lf == 1 and lw == 2:  # packed
-                                    pr = _PbReader(lv)
-                                    while pr.pos < len(lv):
-                                        u = pr.varint()
+                                    at = 0
+                                    while at < len(lv):
+                                        u = lv[at]
+                                        if u < 0x80:
+                                            at += 1
+                                        else:
+                                            u, at = read_uvarint(
+                                                lv, at, "protobuf"
+                                            )
                                         vals.append(
                                             u - (1 << 64)
                                             if u >= 1 << 63 else u

@@ -3,8 +3,8 @@
 Decoder implements the public VP8L bitstream specification
 ("WebP Lossless Bitstream Specification", RFC 9649 / the
 developers.google.com/speed/webp/docs/webp_lossless_bitstream_specification
-text): RIFF/WEBP container walk, LSB-first bit reader, canonical
-prefix codes (simple 1/2-symbol form and the normal form with the
+text): RIFF/WEBP container walk, LSB-first bit reader (`llm.bitio`),
+canonical prefix codes (simple 1/2-symbol form and the normal form with the
 code-length code, repeat codes 16/17/18, default previous length 8,
 and the optional max_symbol truncation), color cache, LZ77 backward
 references with the 120-entry 2D distance map, meta prefix-code
@@ -32,6 +32,8 @@ decode/inspect leg (see llm/multimodal.py's module docstring).
 from __future__ import annotations
 
 import struct
+
+from dynamodb_to_datalake_project_spark.llm.bitio import LsbReader, LsbWriter
 
 _MAX_ALPHABETS = (280, 256, 256, 256, 40)  # green+len+cache, R, B, A, dist
 
@@ -65,28 +67,6 @@ def _subsample(size: int, bits: int) -> int:
     return (size + (1 << bits) - 1) >> bits
 
 
-class _Bits:
-    """LSB-first bit reader over the VP8L payload (truncation raises
-    the module's clean ValueError contract, like the GIF reader)."""
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.d = data
-        self.byte = pos
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            if self.byte >= len(self.d):
-                raise ValueError("truncated VP8L bitstream")
-            v |= ((self.d[self.byte] >> self.bit) & 1) << i
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.byte += 1
-        return v
-
-
 class _Prefix:
     """Canonical prefix code: symbol lookup via bit-by-bit descent,
     RFC1951-style canonical assignment (codes ordered by length then
@@ -111,7 +91,7 @@ class _Prefix:
         if code != (1 << prev_len):
             raise ValueError("prefix code lengths are not complete")
 
-    def read(self, bits: _Bits) -> int:
+    def read(self, bits: LsbReader) -> int:
         if self.single is not None:
             return self.single
         code, ln = 0, 0
@@ -125,7 +105,7 @@ class _Prefix:
                 return sym
 
 
-def _read_prefix_code(bits: _Bits, alphabet_size: int) -> _Prefix:
+def _read_prefix_code(bits: LsbReader, alphabet_size: int) -> _Prefix:
     """One prefix code, simple or normal form (spec §6.2)."""
     if bits.read(1):  # simple code: 1 or 2 symbols, stated inline
         num = bits.read(1) + 1
@@ -174,7 +154,7 @@ def _read_prefix_code(bits: _Bits, alphabet_size: int) -> _Prefix:
     return _Prefix(lengths)
 
 
-def _prefix_value(bits: _Bits, code: int) -> int:
+def _prefix_value(bits: LsbReader, code: int) -> int:
     """LZ77 length/distance prefix decoding (spec §5.2.2)."""
     if code < 4:
         return code + 1
@@ -184,7 +164,7 @@ def _prefix_value(bits: _Bits, code: int) -> int:
 
 
 def _decode_entropy_image(
-    bits: _Bits, w: int, h: int, is_level0: bool
+    bits: LsbReader, w: int, h: int, is_level0: bool
 ) -> "list[int]":
     """Decode one entropy-coded ARGB image (spec §5.2.2) into a flat
     list of uint32 pixels. `is_level0` gates the meta-prefix-code bit
@@ -472,7 +452,7 @@ def decode_webp_array(payload: bytes) -> dict:
         raise ValueError("WebP payload has no VP8L chunk")
     if not vp8l or vp8l[0] != 0x2F:
         raise ValueError("bad VP8L signature")
-    bits = _Bits(vp8l, 1)
+    bits = LsbReader(vp8l, 1, "VP8L")
     w = bits.read(14) + 1
     h = bits.read(14) + 1
     bits.read(1)  # alpha-is-used hint
@@ -540,25 +520,15 @@ def decode_webp(payload: bytes) -> dict:
 # encoder
 
 
-class _BitWriter:
-    """LSB-first bit writer (the inverse of _Bits)."""
+class _BitWriter(LsbWriter):
+    """LSB-first bit writer plus MSB-first Huffman codes."""
 
-    def __init__(self):
-        self.out = bytearray()
-        self.bit = 0
-
-    def write(self, value: int, n: int) -> None:
-        for i in range(n):
-            if self.bit == 0:
-                self.out.append(0)
-            if (value >> i) & 1:
-                self.out[-1] |= 1 << self.bit
-            self.bit = (self.bit + 1) % 8
+    what = "VP8L"
 
     def write_code(self, code: int, length: int) -> None:
         """Huffman codes transmit MSB-first (canonical convention)."""
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
+        if length:
+            self.write(int(f"{code:0{length}b}"[::-1], 2), length)
 
 
 def _balanced_lengths(freqs: "dict[int, int]") -> "dict[int, int]":
@@ -674,6 +644,7 @@ def encode_webp(px: "object", width: int, height: int) -> bytes:
         wtr.write_code(*g_codes[g])
         wtr.write_code(*r_codes[r])
         wtr.write_code(*b_codes[b])
+    wtr.align()
     payload = bytes(wtr.out)
     chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
     if len(payload) & 1:

@@ -49,6 +49,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dynamodb_to_datalake_project_spark import dedup, deltatable
 from dynamodb_to_datalake_project_spark.catalog import query
@@ -237,37 +238,23 @@ def _partition_rels(
     )
 
 
-def _log_schema(table_path: str):
-    """The table's schema from its Delta log, not from one sampled
-    footer: after schema evolution old partitions lack the new columns
-    and a footer-inferred read could silently drop them (NULL-backfill
-    needs the full schema)."""
-    from pyspark.sql import types as T
-
-    return T.StructType.fromJson(
-        json.loads(deltatable._schema_json_of(table_path))
-    )
-
-
 def _read_touched(
     spark: SparkSession,
     table_path: str,
     rels: list[str],
     schema,
-    retain: bool,
+    active_files: "dict | None",
 ) -> DataFrame:
     """The merge target: the live data files of the touched partitions
     only, read with `schema`. Nothing lists the whole lake — a
-    swap-mode table's directories ARE its snapshot, so only the
-    touched ones are listed; a retain-mode table takes the log's
-    active files under them. The file list does the partition
-    pruning, so no predicate is needed."""
-    if retain:
+    swap-mode table (`active_files` None) has its directories as its
+    snapshot, so only the touched ones are listed; a retain-mode table
+    takes its snapshot's `active_files` under them. The file list does
+    the partition pruning, so no predicate is needed."""
+    if active_files is not None:
         wanted = set(rels)
         files = sorted(
-            f
-            for f in deltatable.snapshot_at(table_path)["active_files"]
-            if (f.rpartition("/")[0] or ".") in wanted
+            f for f in active_files if (f.rpartition("/")[0] or ".") in wanted
         )
     else:
         files = [
@@ -435,17 +422,19 @@ def recover_pending_commits(
     return replayed
 
 
-def _resolve_retain_mode(table_path: str, retain_files: "bool | None") -> bool:
+def _resolve_retain_mode(
+    table_path: str, retain_files: "bool | None", meta: "dict | None"
+) -> bool:
     """Resolve the caller's `retain_files` flag against the TABLE's
-    recorded mode (metaData.configuration, `deltatable.
-    table_retain_mode`). None = inherit the table's mode (False for
+    recorded mode (the snapshot's metaData.configuration, `deltatable.
+    retain_mode`). None = inherit the table's mode (False for
     new/legacy tables); an explicit flag that CONTRADICTS the record
     is rejected — a swap-mode commit on a retained-history table
     would physically rmtree the historical files earlier commits paid
     to keep (silent time-travel destruction), and a retain commit on
     a swap table would leave superseded files a plain directory scan
     double-counts."""
-    recorded = deltatable.table_retain_mode(table_path)
+    recorded = deltatable.retain_mode(meta)
     if retain_files is None:
         return bool(recorded)
     if recorded is not None and bool(retain_files) != recorded:
@@ -736,8 +725,11 @@ def merge_into_parquet(
     """
     if os.path.isdir(table_path):
         recover_pending_commits(table_path, staging_grace_seconds=3600.0)
-    retain_files = _resolve_retain_mode(table_path, retain_files)
     parts = touched_partitions(source, partition_cols)
+    # one snapshot per attempt: its version is the OCC base, its meta
+    # the schema and the retain mode, its active files the target
+    snap = deltatable.snapshot_at(table_path)
+    retain_files = _resolve_retain_mode(table_path, retain_files, snap["meta"])
     if not parts:
         return
     # our touched set in Delta partitionValues form; the writer stores
@@ -746,10 +738,17 @@ def merge_into_parquet(
     touched_rels = _partition_rels(spark, partition_cols, ours)
     from pyspark.errors import AnalysisException
 
-    for _attempt in range(max_commit_retries):
-        base_version = deltatable.current_version(table_path)
+    for attempt in range(max_commit_retries):
+        if attempt:
+            snap = deltatable.snapshot_at(table_path)
+        base_version = snap["version"]
         if base_version >= 0:
-            schema = _log_schema(table_path)
+            # the log's schema, not one sampled footer's: after schema
+            # evolution old partitions lack the new columns, and
+            # NULL-backfill needs the full schema
+            schema = T.StructType.fromJson(
+                json.loads(snap["meta"]["schemaString"])
+            )
         else:
             # no log yet: the table is in swap mode (its directories
             # are its snapshot, whatever retain_files says), and its
@@ -774,7 +773,7 @@ def merge_into_parquet(
                 return
         target = _read_touched(
             spark, table_path, touched_rels, schema,
-            retain_files and base_version >= 0,
+            snap["active_files"] if retain_files and base_version >= 0 else None,
         )
         schema_changed = False
         if evolve_schema:
@@ -916,14 +915,16 @@ def optimize_table(
     bytes (file-level pruning via the log), never the table."""
     if os.path.isdir(table_path):
         recover_pending_commits(table_path, staging_grace_seconds=3600.0)
-    retain_files = _resolve_retain_mode(table_path, retain_files)
-    for _attempt in range(max_commit_retries):
-        base_version = deltatable.current_version(table_path)
+    snap = deltatable.snapshot_at(table_path)
+    retain_files = _resolve_retain_mode(table_path, retain_files, snap["meta"])
+    for attempt in range(max_commit_retries):
+        if attempt:
+            snap = deltatable.snapshot_at(table_path)
+        base_version = snap["version"]
         if base_version < 0:
             raise ValueError(
                 f"optimize: {table_path} has no delta log to plan from"
             )
-        snap = deltatable.snapshot_at(table_path)
         by_part: dict[str, list[str]] = {}
         for f in snap["active_files"]:
             rel = "/".join(f.split("/")[:-1]) or "."

@@ -868,6 +868,23 @@ def test_jpeg_restart_interval_decode_and_errors():
         multimodal.decode_jpeg_array(_mini_restart_jpeg(b"\xff\xd0\x3f"))
 
 
+def test_jpeg_huffman_cache_keeps_hitting_past_its_cap(monkeypatch):
+    """One cache holds each Huffman table with its peek-16 lists: after
+    300 distinct tables (more than the 256-entry cap), a repeated table
+    still returns the same cached lists, and the lists agree with the
+    table's codes."""
+    monkeypatch.setattr(multimodal, "_JPEG_HUFF_CACHE", {})
+    bits = [2] + [0] * 15  # two 1-bit codes: 0 and 1
+    for i in range(300):
+        multimodal._jpeg_huff_table(bits, [i % 256, i // 256])
+    assert len(multimodal._JPEG_HUFF_CACHE) == 256
+    last = [299 % 256, 299 // 256]
+    val, ln = multimodal._jpeg_fast_lut(multimodal._jpeg_huff_table(bits, last))
+    again = multimodal._jpeg_fast_lut(multimodal._jpeg_huff_table(bits, last))
+    assert again[0] is val and again[1] is ln
+    assert (val[0], ln[0], val[0xFFFF], ln[0xFFFF]) == (last[0], 1, last[1], 1)
+
+
 class _VP8LWriter:
     """Spec bit writer for hand-building golden VP8L streams — LSB
     first within bytes, prefix codes MSB-first — kept independent of
@@ -1220,7 +1237,7 @@ def test_flac_bit_primitives_match_references():
     regression gate for the codec rewrite."""
     import random
 
-    from dynamodb_to_datalake_project_spark.llm import flac
+    from dynamodb_to_datalake_project_spark.llm import bitio, flac
 
     rng = random.Random(12)
 
@@ -1242,8 +1259,8 @@ def test_flac_bit_primitives_match_references():
 
     for _ in range(50):
         d = bytes(rng.randrange(256) for _ in range(rng.randrange(0, 200)))
-        assert flac._crc8(d) == crc8_ref(d)
-        assert flac._crc16(d) == crc16_ref(d)
+        assert bitio.crc8(d) == crc8_ref(d)
+        assert bitio.crc16(d) == crc16_ref(d)
 
     # writer/reader round-trip over random (value, width) sequences,
     # byte-compared against a per-bit reference writer
@@ -1252,7 +1269,7 @@ def test_flac_bit_primitives_match_references():
             (rng.randrange(1 << n), n)
             for n in (rng.randrange(1, 24) for _ in range(rng.randrange(1, 60)))
         ]
-        w = flac._Writer()
+        w = bitio.MsbWriter()
         ref_bits = []
         for v, n in fields:
             w.write(v, n)
@@ -1269,7 +1286,7 @@ def test_flac_bit_primitives_match_references():
         for v, n in fields:
             assert r.read(n) == v
     # unary scan across byte boundaries + truncation behavior
-    w = flac._Writer()
+    w = bitio.MsbWriter()
     for q in (0, 1, 7, 8, 9, 30):
         w.unary(q)
     w.align()
@@ -1288,11 +1305,13 @@ def test_ogg_crc_zlib_mapping_matches_reference():
     table loop on random buffers and the empty buffer."""
     import random
 
+    from dynamodb_to_datalake_project_spark.llm import bitio
+
     rng = random.Random(33)
-    assert multimodal.ogg_crc(b"") == multimodal._ogg_crc_ref(b"") == 0
+    assert multimodal.ogg_crc(b"") == bitio.crc32_msb_ref(b"") == 0
     for _ in range(60):
         d = bytes(rng.randrange(256) for _ in range(rng.randrange(0, 1200)))
-        assert multimodal.ogg_crc(d) == multimodal._ogg_crc_ref(d)
+        assert multimodal.ogg_crc(d) == bitio.crc32_msb_ref(d)
 
 
 def test_flac_roundtrip_lossless():
@@ -3342,25 +3361,25 @@ def test_h264_annexb_walk_sps_and_rejects():
 
     # SPS: interlaced (frame_mbs_only=0) doubles map units
     w = h._BitWriter()
-    w.bits(77, 8); w.bits(0, 8); w.bits(30, 8)
+    w.write(77, 8); w.write(0, 8); w.write(30, 8)
     w.ue(0); w.ue(4); w.ue(2)  # sps_id, frame_num, poc_type 2
-    w.ue(3); w.bits(0, 1)  # refs, gaps
+    w.ue(3); w.write(0, 1)  # refs, gaps
     w.ue(19); w.ue(8)  # 320 x (2*144)
-    w.bits(0, 1)  # frame_mbs_only = 0 (interlaced)
-    w.bits(0, 1)  # mb_adaptive
-    w.bits(1, 1)  # direct_8x8
-    w.bits(0, 1); w.bits(0, 1)  # no crop, no vui
+    w.write(0, 1)  # frame_mbs_only = 0 (interlaced)
+    w.write(0, 1)  # mb_adaptive
+    w.write(1, 1)  # direct_8x8
+    w.write(0, 1); w.write(0, 1)  # no crop, no vui
     d = h.parse_sps(w.trailing())
     assert (d["width"], d["height"], d["frame_mbs_only"]) == (320, 288, 0)
 
     # poc_type 1 branch with a ref-frame offset list parses through
     w = h._BitWriter()
-    w.bits(66, 8); w.bits(0, 8); w.bits(10, 8)
+    w.write(66, 8); w.write(0, 8); w.write(10, 8)
     w.ue(0); w.ue(4); w.ue(1)
-    w.bits(0, 1); w.ue(2); w.ue(3)  # always_zero, 2 se values (ue-coded +2/-2... se reads)
+    w.write(0, 1); w.ue(2); w.ue(3)  # always_zero, 2 se values (ue-coded +2/-2... se reads)
     w.ue(2); w.ue(1); w.ue(2)  # num_offsets=2? -> careful: se() reads ue then maps
-    w.ue(3); w.bits(0, 1)
-    w.ue(9); w.ue(5); w.bits(1, 1); w.bits(1, 1); w.bits(0, 1); w.bits(0, 1)
+    w.ue(3); w.write(0, 1)
+    w.ue(9); w.ue(5); w.write(1, 1); w.write(1, 1); w.write(0, 1); w.write(0, 1)
     d1 = h.parse_sps(w.trailing())
     assert (d1["width"], d1["height"]) == (160, 96)
 
@@ -3383,8 +3402,8 @@ def test_h264_annexb_walk_sps_and_rejects():
     with _pt.raises(NotImplementedError, match="scaling"):
         # high-profile SPS with seq_scaling_matrix_present_flag forged on
         w = h._BitWriter()
-        w.bits(100, 8); w.bits(0, 8); w.bits(40, 8)
-        w.ue(0); w.ue(1); w.ue(0); w.ue(0); w.bits(0, 1); w.bits(1, 1)
+        w.write(100, 8); w.write(0, 8); w.write(40, 8)
+        w.ue(0); w.ue(1); w.ue(0); w.ue(0); w.write(0, 1); w.write(1, 1)
         h.parse_sps(w.trailing())
     with _pt.raises(NotImplementedError, match="slice decode"):
         h.decode_h264_slices(ok)
@@ -5914,8 +5933,8 @@ def test_tfrecord_crc_and_example_roundtrip():
 
     import pytest as _pt
 
+    from dynamodb_to_datalake_project_spark.llm.bitio import crc32c
     from dynamodb_to_datalake_project_spark.llm.tfrecord import (
-        crc32c,
         encode_tf_example,
         encode_tfrecord,
         parse_tf_example,
@@ -5947,13 +5966,13 @@ def test_tfrecord_crc_and_example_roundtrip():
 
     # unpacked int64_list (legal alternative encoding): field 1,
     # wire 0 varints inside Int64List
+    from dynamodb_to_datalake_project_spark.llm.bitio import uvarint
     from dynamodb_to_datalake_project_spark.llm.tfrecord import (
         _pb_len,
         _pb_tag,
-        _pb_varint,
     )
 
-    unpacked = _pb_tag(1, 0) + _pb_varint(7) + _pb_tag(1, 0) + _pb_varint(9)
+    unpacked = _pb_tag(1, 0) + uvarint(7) + _pb_tag(1, 0) + uvarint(9)
     feature = _pb_len(3, unpacked)
     entry = _pb_len(1, b"n") + _pb_len(2, feature)
     ex = _pb_len(1, _pb_len(1, entry))
@@ -6066,7 +6085,7 @@ def test_kafka_batch_roundtrip_and_rejects():
     with _pt.raises(NotImplementedError, match="magic 1"):
         parse_kafka_batch(bytes(magic1))
     # set a compression codec bit INSIDE the crc'd region, re-crc
-    from dynamodb_to_datalake_project_spark.llm.tfrecord import crc32c
+    from dynamodb_to_datalake_project_spark.llm.bitio import crc32c
 
     gz = bytearray(b)
     struct.pack_into(">h", gz, 21, 1)  # attributes: gzip

@@ -1651,6 +1651,49 @@ def test_merge_reads_only_touched_partition_files(spark, tmp_path):
     assert state == expect
 
 
+@pytest.mark.parametrize("retain", [False, True])
+def test_merge_folds_one_snapshot_per_attempt(
+    spark, tmp_path, monkeypatch, retain
+):
+    """A batch on an existing table folds the Delta log once before
+    its commit claim: that snapshot's version, meta and active files
+    serve the OCC base, the retain mode, the schema and (retain mode)
+    the merge target."""
+    from dynamodb_to_datalake_project_spark import deltatable
+
+    path = str(tmp_path / "lake")
+    schema = "id string, update_at string, note string, day string"
+
+    def batch(rows):
+        return spark.createDataFrame(rows, schema)
+
+    merge.merge_into_parquet(
+        spark, path, batch([("a", "2023-01-01T00:00:00", "v1", "d1"),
+                            ("b", "2023-01-01T00:00:00", "v1", "d2")]),
+        ["id"], ["update_at"], ["day"], retain_files=retain,
+    )
+    folds = []
+    real = deltatable.snapshot_at
+
+    def counting(*args, **kw):
+        folds.append(args)
+        return real(*args, **kw)
+
+    monkeypatch.setattr(deltatable, "snapshot_at", counting)
+    at_hook = []
+    merge.merge_into_parquet(
+        spark, path, batch([("a", "2023-01-02T00:00:00", "v2", "d1")]),
+        ["id"], ["update_at"], ["day"],
+        _hook_before_commit=lambda: at_hook.append(len(folds)),
+    )
+    monkeypatch.undo()
+    assert at_hook == [1]
+    state = {
+        r.id: r.note for r in deltatable.read_snapshot_df(spark, path).collect()
+    }
+    assert state == {"a": "v2", "b": "v1"}
+
+
 @pytest.mark.parametrize("start", [False, True, "logless"])
 def test_merge_escaped_and_null_partitions_keep_untouched_rows(
     spark, tmp_path, start

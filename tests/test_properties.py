@@ -812,7 +812,7 @@ def test_exp_golomb_roundtrip_property(values):
     w = h._BitWriter()
     for v in values:
         w.ue(v)
-    w.bits(1, 1)
+    w.write(1, 1)
     r = h._BitReader(w.trailing())
     assert [r.ue() for _ in values] == values
 
