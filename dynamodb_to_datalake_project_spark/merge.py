@@ -22,6 +22,18 @@ Two implementations:
   table without a log yet (bootstrap) is read the same way, with the
   schema inferred from its footers instead of the log's.
 
+  A CDC micro-batch and the partitions it touches are small, and the
+  fixed cost of Spark jobs dominates merging them. When the batch
+  rows plus the log's `numRecords` of the touched files are at most
+  `_LOCAL_MERGE_ROWS`, the merge runs on the driver: one Arrow collect
+  of the batch (which also names the touched partitions and carries
+  Spark's own xxhash64 tiebreak), a pyarrow read of the touched files,
+  the same latest-wins order, and one staged file per partition. The
+  commit is the same either way. Anything else — over budget, no log
+  yet, a batch that evolves the schema, a type or comparison Arrow
+  does not order exactly as Spark does (`_collect_batch`) — takes the
+  Spark path, whose window and writer scale past the driver.
+
 Round 10 makes the lake table a REAL Delta-protocol table: every
 commit appends `_delta_log/<v>.json` actions (see `deltatable.py`),
 concurrent writers serialize through a version CAS with partition-
@@ -47,6 +59,10 @@ import os
 import shutil
 import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -89,14 +105,9 @@ def upsert_dataframes(
     upstream of the merge (README.rst:62).
     """
     cols = target.columns
-    t = target.select(*cols).withColumn("__src", F.lit(0))
-    s = source.select(*cols).withColumn("__src", F.lit(1))
-    if op_col is not None:
-        t = t.withColumn("__op", F.lit(None).cast("string"))
-        s = source.select(
-            *cols, F.col(op_col).cast("string").alias("__op")
-        ).withColumn("__src", F.lit(1))
-    tagged = t.unionByName(s)
+    tagged = _tagged(target, cols, 0, op_col).unionByName(
+        _tagged(source, cols, 1, op_col)
+    )
     order = [F.col(c).desc() for c in precombine] + [F.col("__src").desc()]
     if op_col is not None:
         # Deterministic tie policy for T8: on a full precombine+src tie
@@ -117,6 +128,18 @@ def upsert_dataframes(
             (~F.col("__op").isin(*delete_types)) | F.col("__op").isNull()
         ).drop("__op")
     return merged
+
+
+def _tagged(df: DataFrame, cols: list[str], src: int, op_col: "str | None"):
+    """`cols` plus the merge's tag columns: `__src` (0 for target rows,
+    1 for source rows) and, with `op_col`, `__op` (the source's op as
+    a string, null on target rows). The latest-wins tiebreak hashes
+    exactly these columns, so both merge paths project through here."""
+    out = [*cols, F.lit(src).alias("__src")]
+    if op_col is not None:
+        op = F.col(op_col) if src else F.lit(None)
+        out.append(op.cast("string").alias("__op"))
+    return df.select(*out)
 
 
 #: (narrow, wide) numeric widenings the merge may apply (Spark
@@ -214,14 +237,15 @@ def touched_partitions(source: DataFrame, partition_cols: list[str]) -> list[dic
 def _partition_rels(
     spark: SparkSession, partition_cols: list[str], parts: list[dict]
 ) -> list[str]:
-    """Table-relative directory of each touched partition ('.' for an
-    unpartitioned table), named by Spark's own writer rule
+    """Table-relative directory of each touched partition in `parts`
+    ('.' for an unpartitioned table), in `parts` order, named by
+    Spark's own writer rule
     (`ExternalCatalogUtils.getPartitionPathString`: escapes `:` `/`
     `%` `=` and the like, maps null and "" to
     `__HIVE_DEFAULT_PARTITION__`) — so a name always matches the
     directory the staged write creates for that partition."""
     if not partition_cols:
-        return ["."]
+        return ["."] * len(parts)
     path_string = (
         spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .getPartitionPathString
@@ -233,40 +257,243 @@ def _partition_rels(
         for c in partition_cols
         for v in {p[c] for p in parts}
     }
-    return sorted(
-        {"/".join(seg[c, p[c]] for c in partition_cols) for p in parts}
-    )
+    return ["/".join(seg[c, p[c]] for c in partition_cols) for p in parts]
+
+
+def _rel_dir(rel_file: str) -> str:
+    """The table-relative partition directory of a data file ('.' at
+    the root of an unpartitioned table)."""
+    return rel_file.rpartition("/")[0] or "."
+
+
+def _touched_files(
+    table_path: str, rels: list[str], active_files: dict, retain: bool
+) -> "dict[str, int | None]":
+    """The live data files of the partitions `rels`, each with its
+    log `numRecords` (None when the log has no stats for it). A
+    retain-mode table takes its snapshot's `active_files` under them
+    (its directories also hold superseded files); a swap-mode table
+    has its directories as its snapshot, so only those are listed.
+    Nothing lists the whole lake."""
+    if retain:
+        wanted = set(rels)
+        return {
+            f: info["num_records"]
+            for f, info in sorted(active_files.items())
+            if _rel_dir(f) in wanted
+        }
+    return {
+        f: (active_files.get(f) or {}).get("num_records")
+        for rel in rels
+        for f in deltatable.data_files_under(table_path, rel)
+    }
+
+
+def _column_order(schema, partition_cols: list[str]) -> list[str]:
+    """The merge target's column order: a parquet read with a given
+    schema puts the partition columns after the data columns, and an
+    empty target keeps the same order, so the tiebreak hash sees the
+    same column order whether or not a touched partition has files."""
+    names = schema.names
+    return [n for n in names if n not in partition_cols] + [
+        c for c in partition_cols if c in names
+    ]
 
 
 def _read_touched(
     spark: SparkSession,
     table_path: str,
-    rels: list[str],
+    files: list[str],
     schema,
-    active_files: "dict | None",
+    partition_cols: list[str],
 ) -> DataFrame:
-    """The merge target: the live data files of the touched partitions
-    only, read with `schema`. Nothing lists the whole lake — a
-    swap-mode table (`active_files` None) has its directories as its
-    snapshot, so only the touched ones are listed; a retain-mode table
-    takes its snapshot's `active_files` under them. The file list does
-    the partition pruning, so no predicate is needed."""
-    if active_files is not None:
-        wanted = set(rels)
-        files = sorted(
-            f for f in active_files if (f.rpartition("/")[0] or ".") in wanted
-        )
-    else:
-        files = [
-            f for rel in rels for f in deltatable.data_files_under(table_path, rel)
-        ]
+    """The Spark merge target: the touched partitions' live `files`
+    (`_touched_files`), read with `schema` and basePath for the
+    partition columns. The file list does the partition pruning, so
+    no predicate is needed."""
     if not files:
-        return spark.createDataFrame([], schema)
+        order = _column_order(schema, partition_cols)
+        return spark.createDataFrame([], T.StructType([schema[c] for c in order]))
     return (
         spark.read.schema(schema)
         .option("basePath", table_path)
         .parquet(*[os.path.join(table_path, f) for f in files])
     )
+
+
+#: Source plus target rows at or under which `merge_into_parquet`
+#: merges on the driver with pyarrow instead of through Spark jobs
+#: (see SCALE.md "Shuffle discipline" for the measured crossover).
+_LOCAL_MERGE_ROWS = 250_000
+
+#: Column types the driver-local merge reads, sorts and writes exactly
+#: as Spark does
+_LOCAL_TYPES = (
+    T.StringType, T.BinaryType, T.BooleanType, T.ByteType, T.ShortType,
+    T.IntegerType, T.LongType, T.FloatType, T.DoubleType, T.DecimalType,
+    T.DateType, T.TimestampType, T.TimestampNTZType,
+)
+
+
+def _collect_batch(
+    source: DataFrame,
+    schema_json: "str | None",
+    keys: list[str],
+    precombine: list[str],
+    partition_cols: list[str],
+    op_col: "str | None",
+):
+    """The batch as one Arrow table for the driver-local merge: the
+    log schema's columns in target order (`_column_order`), the tags
+    of `_tagged`, and `__hash`, the Spark path's xxhash64 tiebreak
+    over them — one Spark job, bounded by the limit. None sends the
+    batch to the Spark path:
+    - no log yet (`schema_json` None), or batch columns other than
+      the log's (a batch that evolves the schema);
+    - a type outside `_LOCAL_TYPES`, or a partition column that is
+      not a plain string;
+    - a floating-point key or precombine (Spark ranks NaN above every
+      number and groups -0.0 with 0.0, Arrow does neither), or a
+      string one with a collation;
+    - more than `_LOCAL_MERGE_ROWS` rows."""
+    if schema_json is None:
+        return None
+    schema = _schema_of(schema_json)
+    types = {f.name: f.dataType for f in schema.fields}
+    batch_types = {
+        f.name: f.dataType for f in source.schema.fields if f.name != op_col
+    }
+
+    def ordered_as_in_spark(t) -> bool:
+        if isinstance(t, T.StringType):
+            return t == T.StringType()
+        return not isinstance(t, (T.FloatType, T.DoubleType))
+
+    if (
+        batch_types != types
+        or not all(isinstance(t, _LOCAL_TYPES) for t in types.values())
+        or any(types[c] != T.StringType() for c in partition_cols)
+        or not all(ordered_as_in_spark(types[c]) for c in keys + precombine)
+    ):
+        return None
+    tagged = _tagged(source, _column_order(schema, partition_cols), 1, op_col)
+    batch = (
+        tagged.select("*", F.xxhash64(*tagged.columns).alias("__hash"))
+        .limit(_LOCAL_MERGE_ROWS + 1)
+        .toArrow()
+    )
+    if batch.num_rows > _LOCAL_MERGE_ROWS:
+        return None
+    # every column nullable, so target rows (null tags) concatenate
+    return batch.cast(pa.schema([f.with_nullable(True) for f in batch.schema]))
+
+
+def _batch_partitions(batch, partition_cols: list[str]):
+    """The distinct partition tuples of a collected batch (values as
+    written, None for null) and, per row, the index of its tuple."""
+    index: dict[tuple, int] = {}
+    code = [
+        index.setdefault(tuple(r.values()), len(index))
+        for r in batch.select(partition_cols).to_pylist()
+    ]
+    parts = [dict(zip(partition_cols, t)) for t in index]
+    return parts, np.array(code, dtype=np.int64)
+
+
+def _merge_local(
+    table_path: str,
+    batch,
+    row_rel,
+    rels: list[str],
+    files: list[str],
+    keys: list[str],
+    precombine: list[str],
+    partition_cols: list[str],
+    delete_types: tuple[str, ...],
+) -> "tuple[str, str, list[str]] | None":
+    """Steps 3-5 of `merge_into_parquet` on the driver: read the
+    touched `files` with pyarrow, apply `upsert_dataframes`'
+    latest-wins order to them and the collected `batch` (`row_rel`:
+    each batch row's index into `rels`), and write one file per
+    partition into a fresh `_staging/<commit_id>/<rel>`. Returns what
+    `_stage` returns, or None when the target rows are not key-unique
+    (the Spark path's window is the authority then)."""
+    schema = batch.schema
+    rel_index = {rel: i for i, rel in enumerate(rels)}
+    pieces, target_rel = [], []
+    for f in files:
+        data = pq.ParquetFile(
+            os.path.join(table_path, f), coerce_int96_timestamp_unit="us"
+        ).read()
+        n = data.num_rows
+        pv = deltatable.partition_values_of(f, partition_cols)
+        cols = []
+        for fld in schema:
+            if fld.name in pv:
+                cols.append(pa.array([pv[fld.name]] * n, fld.type))
+            elif fld.name == "__src":
+                cols.append(pa.array(np.zeros(n, dtype=np.int32)))
+            elif fld.name in data.column_names:
+                cols.append(data.column(fld.name).cast(fld.type))
+            else:
+                # a file older than a schema evolution: NULL backfill
+                cols.append(pa.nulls(n, fld.type))
+        pieces.append(pa.table(cols, schema=schema))
+        target_rel.append(np.full(n, rel_index[_rel_dir(f)], dtype=np.int64))
+    if pieces:
+        target = pa.concat_tables(pieces)
+        if target.group_by(keys).aggregate([]).num_rows != target.num_rows:
+            return None
+    rows = pa.concat_tables([batch, *pieces])
+    rel_of = np.concatenate([row_rel, *target_rel])
+    # upsert_dataframes' order: precombine DESC NULLS LAST, source over
+    # target, a delete loses a full tie, then the content hash
+    sort_keys = [(c, "descending") for c in precombine]
+    sort_keys.append(("__src", "descending"))
+    has_op = "__op" in schema.names
+    if has_op:
+        is_delete = pc.is_in(rows["__op"], value_set=pa.array(delete_types))
+        rows = rows.append_column("__live", pc.invert(is_delete))
+        sort_keys.append(("__live", "descending"))
+    sort_keys.append(("__hash", "descending"))
+    order = pc.sort_indices(rows, sort_keys=sort_keys, null_placement="at_end")
+    rows = rows.take(order).append_column(
+        "__pos", pa.array(np.arange(rows.num_rows))
+    )
+    rel_of = rel_of[order.to_numpy()]
+    # the first row of each key wins; a winning delete removes the key
+    firsts = rows.group_by(keys).aggregate([("__pos", "min")])
+    keep = np.sort(firsts["__pos_min"].to_numpy())
+    if has_op:
+        keep = keep[rows["__live"].to_numpy(zero_copy_only=False)[keep]]
+    keep = keep[np.argsort(rel_of[keep], kind="stable")]
+    counts = np.bincount(rel_of[keep], minlength=len(rels))
+    data_cols = [
+        c for c in schema.names
+        if c not in partition_cols and c not in ("__src", "__op", "__hash")
+    ]
+    out = rows.select(data_cols).take(keep)
+
+    commit_id = uuid.uuid4().hex[:12]
+    staging = os.path.join(table_path, "_staging", commit_id)
+    os.makedirs(staging)
+    staged, start = [], 0
+    for rel, n in zip(rels, counts):
+        # an unpartitioned table stages a file even when every row was
+        # deleted, as Spark's writer does: it replaces the root files
+        if n or not partition_cols:
+            d = os.path.join(staging, rel)
+            os.makedirs(d, exist_ok=True)
+            name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+            pq.write_table(out.slice(start, n), os.path.join(d, name))
+            staged.append(rel)
+        start += n
+    return commit_id, staging, staged
+
+
+def _schema_of(schema_json: str):
+    """The Spark schema of a Delta `schemaString`."""
+    return T.StructType.fromJson(json.loads(schema_json))
 
 
 def _apply_commit(table_path: str, commit_id: str) -> None:
@@ -498,26 +725,30 @@ def _delta_actions(
     for rel in rels:
         staged_files += deltatable.data_files_under(staging, rel)
 
+    if base_version >= 0 and retain:
+        # retained-file mode: the directory holds superseded files
+        # too — the LOG's active set, restricted to the touched/removed
+        # partitions, is what this commit replaces
+        replaced = set(
+            _touched_files(
+                table_path, rels + removed,
+                deltatable.snapshot_at(table_path)["active_files"],
+                retain=True,
+            )
+        )
+    else:
+        # swap mode (a bootstrap commit always is): the directories
+        # are the snapshot
+        replaced = set(
+            _touched_files(
+                table_path, [r for r in rels + removed if r != "."], {},
+                retain=False,
+            )
+        )
+        if "." in rels:
+            replaced.update(root_removed)
     if base_version >= 0:
-        gone: list[str] = []
-        if retain:
-            # retained-file mode: the directory holds superseded
-            # files too — the LOG's active set, restricted to the
-            # touched/removed partitions, is what this commit removes
-            touched_rels = set(rels) | set(removed)
-            for f in deltatable.snapshot_at(table_path)["active_files"]:
-                rel_dir = "/".join(f.split("/")[:-1]) or "."
-                if rel_dir in touched_rels:
-                    gone.append(f)
-        else:
-            for rel in rels:
-                if rel == ".":
-                    gone += root_removed
-                else:
-                    gone += deltatable.data_files_under(table_path, rel)
-            for rel in removed:
-                gone += deltatable.data_files_under(table_path, rel)
-        for f in sorted(set(gone)):
+        for f in sorted(replaced):
             actions.append(
                 {
                     "remove": deltatable.build_remove(
@@ -527,14 +758,6 @@ def _delta_actions(
             )
     else:
         # bootstrap: live files outside the touched/removed set stay
-        replaced = set()
-        for rel in list(rels) + list(removed):
-            if rel == ".":
-                replaced.update(root_removed)
-            else:
-                replaced.update(
-                    deltatable.data_files_under(table_path, rel)
-                )
         for f in _all_data_files(table_path):
             if f not in replaced:
                 actions.append(
@@ -695,18 +918,29 @@ def merge_into_parquet(
     only touched partitions, with an ATOMIC commit protocol.
 
     1. replay any interrupted prior commit (`recover_pending_commits`);
-    2. derive touched partition tuples from the batch (small collect);
-    3. read only those partitions of the target (`_read_touched`): the
-       live data files of the touched partition directories, with
+    2. collect the batch once as Arrow, with its tiebreak hash
+       (`_collect_batch`), and derive the touched partitions from it —
+       or, for a batch that takes the Spark path, from a distinct
+       collect (`touched_partitions`);
+    3. take the live files of those partitions only (`_touched_files`):
+       the log's snapshot, or the touched directories of a swap-mode
+       table. When the collected batch plus the log's `numRecords` of
+       those files is at most `_LOCAL_MERGE_ROWS`, read them with
+       pyarrow; otherwise read them with Spark (`_read_touched`), with
        basePath for the partition columns and the log's schema — or,
        for the one-time bootstrap of a table without a log, the schema
        inferred from its footers (such a table is in swap mode, so its
        directories are its snapshot);
     4. union + latest-wins dedup (optionally honoring `op_col` hard
-       deletes — see `upsert_dataframes`);
-    5. write the rewritten partitions to `_staging/<commit_id>/`, then
-       atomically create `_commits/<commit_id>.json` (the commit
-       point), then swap each staged partition directory into place.
+       deletes — see `upsert_dataframes`), on the driver in the same
+       order (`_merge_local`) or as a Spark window;
+    5. write the rewritten partitions to `_staging/<commit_id>/`, one
+       file per partition on the driver path, then atomically create
+       `_commits/<commit_id>.json` (the commit point), then swap each
+       staged partition directory into place.
+
+    An OCC retry reuses the collected batch and re-reads only the
+    target, from the new snapshot.
 
     Crash safety (the Hudi-timeline property, minimally): before the
     marker exists the table is untouched (staged files are garbage-
@@ -725,17 +959,30 @@ def merge_into_parquet(
     """
     if os.path.isdir(table_path):
         recover_pending_commits(table_path, staging_grace_seconds=3600.0)
-    parts = touched_partitions(source, partition_cols)
     # one snapshot per attempt: its version is the OCC base, its meta
     # the schema and the retain mode, its active files the target
     snap = deltatable.snapshot_at(table_path)
     retain_files = _resolve_retain_mode(table_path, retain_files, snap["meta"])
+    batch_schema = (snap["meta"] or {}).get("schemaString")
+    batch = _collect_batch(
+        source, batch_schema, keys, precombine, partition_cols, op_col
+    )
+    if batch is None:
+        parts = touched_partitions(source, partition_cols)
+    else:
+        parts, part_of_row = _batch_partitions(batch, partition_cols)
     if not parts:
         return
     # our touched set in Delta partitionValues form; the writer stores
     # "" as null, so "" names the null partition
     ours = [{c: p[c] or None for c in partition_cols} for p in parts]
-    touched_rels = _partition_rels(spark, partition_cols, ours)
+    part_rels = _partition_rels(spark, partition_cols, ours)
+    touched_rels = sorted(set(part_rels))
+    if batch is not None:
+        rel_index = {rel: i for i, rel in enumerate(touched_rels)}
+        row_rel = np.array(
+            [rel_index[r] for r in part_rels], dtype=np.int64
+        )[part_of_row]
     from pyspark.errors import AnalysisException
 
     for attempt in range(max_commit_retries):
@@ -746,9 +993,7 @@ def merge_into_parquet(
             # the log's schema, not one sampled footer's: after schema
             # evolution old partitions lack the new columns, and
             # NULL-backfill needs the full schema
-            schema = T.StructType.fromJson(
-                json.loads(snap["meta"]["schemaString"])
-            )
+            schema = _schema_of(snap["meta"]["schemaString"])
         else:
             # no log yet: the table is in swap mode (its directories
             # are its snapshot, whatever retain_files says), and its
@@ -771,27 +1016,46 @@ def merge_into_parquet(
                     op_col, delete_types, retain_files,
                 )
                 return
-        target = _read_touched(
-            spark, table_path, touched_rels, schema,
-            snap["active_files"] if retain_files and base_version >= 0 else None,
+        files = _touched_files(
+            table_path, touched_rels, snap["active_files"],
+            retain=retain_files and base_version >= 0,
         )
-        schema_changed = False
-        if evolve_schema:
-            target, source, schema_changed = _align_schemas(
-                target, source, op_col, partition_cols
+        stage = None
+        if (
+            batch is not None
+            and snap["meta"]["schemaString"] == batch_schema
+            and None not in files.values()
+            and batch.num_rows + sum(files.values()) <= _LOCAL_MERGE_ROWS
+        ):
+            stage = _merge_local(
+                table_path, batch, row_rel, touched_rels, list(files),
+                keys, precombine, partition_cols, delete_types,
             )
-        src_cols = list(target.columns) + ([op_col] if op_col else [])
-        merged = upsert_dataframes(
-            target,
-            source.select(*src_cols),
-            keys,
-            precombine,
-            op_col=op_col,
-            delete_types=delete_types,
-        )
+        schema_changed = False
+        if stage is None:
+            target = _read_touched(
+                spark, table_path, list(files), schema, partition_cols
+            )
+            if evolve_schema:
+                target, source, schema_changed = _align_schemas(
+                    target, source, op_col, partition_cols
+                )
+            src_cols = list(target.columns) + ([op_col] if op_col else [])
+            merged = upsert_dataframes(
+                target,
+                source.select(*src_cols),
+                keys,
+                precombine,
+                op_col=op_col,
+                delete_types=delete_types,
+            )
+            stage = _stage(merged, table_path, partition_cols)
+            schema_json = deltatable.schema_string(merged.schema)
+        else:
+            schema_json = batch_schema
 
         # --- atomic commit: stage, claim, mark, swap ---
-        commit_id, staging, rels = _stage(merged, table_path, partition_cols)
+        commit_id, staging, rels = stage
         removed: list[str] = []
         if op_col and partition_cols:
             # hard deletes can empty a touched partition entirely — it
@@ -841,7 +1105,7 @@ def merge_into_parquet(
             root_removed,
             partition_cols,
             base_version,
-            deltatable.schema_string(merged.schema),
+            schema_json,
             commit_id,
             retain=retain_files,
             schema_changed=schema_changed,
@@ -927,8 +1191,7 @@ def optimize_table(
             )
         by_part: dict[str, list[str]] = {}
         for f in snap["active_files"]:
-            rel = "/".join(f.split("/")[:-1]) or "."
-            by_part.setdefault(rel, []).append(f)
+            by_part.setdefault(_rel_dir(f), []).append(f)
         todo = {
             rel: fs for rel, fs in by_part.items() if len(fs) > max_files_ok
         }

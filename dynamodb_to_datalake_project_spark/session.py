@@ -117,6 +117,10 @@ def get_spark(
             "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # no `[Stage n:...]` console bar: it is redrawn with carriage
+        # returns on stderr and ends up on the same lines as a tool's
+        # own results, so filtering a log by line drops results
+        .config("spark.ui.showConsoleProgress", "false")
     )
     for k, v in RUNTIME_CONF.items():
         b = b.config(k, v)

@@ -1744,3 +1744,207 @@ def test_merge_escaped_and_null_partitions_keep_untouched_rows(
             table = spark.read.parquet(path)
         state = {r.id: r.note for r in table.collect()}
         assert state == expect, (v, state)
+
+
+# the partition column is not last: a Spark read of the target moves
+# it after the data columns, and the tiebreak hash sees that order
+_TYPED_SCHEMA = (
+    "id string, p string, update_at string, note string, "
+    "amount decimal(10,2), big decimal(38,9), ts timestamp, dt date, "
+    "flag boolean, x double, bin binary, event_name string"
+)
+
+
+def _typed(id_, update_at, note, p, op="INSERT", x=1.5):
+    """One `_TYPED_SCHEMA` row; the typed columns vary with the row."""
+    import datetime
+    from decimal import Decimal
+
+    n = len(id_) + len(note or "")
+    return (
+        id_, p, update_at, note, Decimal(n) / 4, Decimal(f"{n}.000000001"),
+        datetime.datetime(2023, 1, 1, 0, 0, n, 123456),
+        datetime.date(2023, 1, 1 + n % 28), n % 2 == 0, x,
+        bytes([n, 0, 255]), op,
+    )
+
+
+def _typed_batches():
+    t0, t1, t2, t3 = (f"2023-01-0{d}T00:00:00" for d in range(1, 5))
+    nan = float("nan")
+    values = [None, "", "a:b", "50%", "plain"]
+    first = [
+        _typed(f"k{j}-{i}", t1, "v1", v) for j, v in enumerate(values)
+        for i in range(2)
+    ]
+    second = [
+        # in-batch duplicate keys, then a three-way precombine tie
+        _typed("d", t2, "first", "plain"),
+        _typed("d", t3, "tie-a", "plain", x=nan),
+        _typed("d", t3, "tie-b", "plain", x=2.0),
+        _typed("d", t3, "tie-c", "plain"),
+        # equal precombine against the target: the source wins; a late
+        # older update loses
+        _typed("k4-0", t1, "resent", "plain"),
+        _typed("k4-1", t0, "stale", "plain"),
+        # a null precombine loses to any value; two nulls tie
+        _typed("n1", None, "null-pc", "a:b"),
+        _typed("n1", t0, "has-pc", "a:b"),
+        _typed("n2", None, "null-a", "a:b", x=nan),
+        _typed("n2", None, "null-b", "a:b", x=-1.0),
+        # a newer delete removes its key, an older one is a no-op
+        _typed("k2-0", t2, None, "a:b", "REMOVE"),
+        _typed("k1-0", t0, None, "", "REMOVE"),
+        # delete vs re-insert at equal precombine: the delete loses
+        _typed("k1-1", t2, None, "", "REMOVE"),
+        _typed("k1-1", t2, "reinserted", "", "MODIFY"),
+        # two deletes empty the "50%" partition; a null op is kept
+        _typed("k3-0", t2, None, "50%", "REMOVE"),
+        _typed("k3-1", t2, None, "50%", "REMOVE"),
+        _typed("k0-0", t2, "null-op", None, None),
+        # a partition with no files yet
+        _typed("f1", t1, "fresh", "fresh", x=nan),
+        _typed("f2", t1, "fresh", "fresh", x=None),
+        # more ties the hash decides
+        _typed("t1", t2, "tie-x", None),
+        _typed("t1", t2, "tie-y", None),
+        _typed("t2", t2, "tie-p", "fresh"),
+        _typed("t2", t2, "tie-q", "fresh"),
+        _typed("t3", t2, "tie-u", "plain"),
+        _typed("t3", t2, "tie-v", "plain"),
+    ]
+    third = [
+        # reads the files the previous merge staged
+        _typed("d", t3, "tie-again", "plain", x=nan),
+        _typed("d", t3, "tie-more", "plain"),
+        _typed("n2", t1, "now-dated", "a:b"),
+        _typed("k0-1", t3, None, None, "REMOVE"),
+        _typed("k3-9", t3, "back", "50%"),
+        _typed("f1", t0, "older", "fresh"),
+    ]
+    return [first, second, third]
+
+
+def _log_shape(path):
+    """Each commit's actions with file names left out: adds as
+    (partition, numRecords, dataChange), removes as their partition."""
+    import json
+
+    from dynamodb_to_datalake_project_spark import deltatable
+
+    out = []
+    for _v, text in deltatable.read_commits(path):
+        acts = []
+        for line in text.splitlines():
+            a = json.loads(line)
+            if "add" in a:
+                add = a["add"]
+                acts.append((
+                    "add", merge._rel_dir(add["path"]),
+                    json.loads(add["stats"])["numRecords"], add["dataChange"],
+                ))
+            elif "remove" in a:
+                acts.append(("remove", merge._rel_dir(a["remove"]["path"])))
+            elif "commitInfo" in a:
+                ci = a["commitInfo"]
+                acts.append(("commitInfo", ci["operation"], ci["readVersion"]))
+            elif "metaData" in a:
+                m = a["metaData"]
+                acts.append((
+                    "metaData", m["schemaString"], m["partitionColumns"],
+                    m["configuration"],
+                ))
+            else:
+                acts.append(tuple(sorted(a.items())))
+        out.append(sorted(acts, key=repr))
+    return out
+
+
+def _merge_sequence(spark, path, monkeypatch, budget, retain):
+    """Merge `_typed_batches` into a new table with the driver-local
+    budget at `budget`: the final table (schema and rows), the log's
+    shape, and how many merges ran on the driver."""
+    from dynamodb_to_datalake_project_spark import deltatable
+
+    ran_local = []
+    real = merge._merge_local
+
+    def spy(*args, **kwargs):
+        out = real(*args, **kwargs)
+        ran_local.append(out is not None)
+        return out
+
+    monkeypatch.setattr(merge, "_LOCAL_MERGE_ROWS", budget)
+    monkeypatch.setattr(merge, "_merge_local", spy)
+    for rows in _typed_batches():
+        merge.merge_into_parquet(
+            spark, path, spark.createDataFrame(rows, _TYPED_SCHEMA),
+            ["id"], ["update_at"], ["p"], op_col="event_name",
+            retain_files=retain,
+        )
+    monkeypatch.undo()
+    table = deltatable.read_snapshot_df(spark, path)
+    # repr: NaN == NaN, and rows of mixed None/values sort
+    rows = sorted(repr(tuple(r)) for r in table.collect())
+    return table.schema, rows, _log_shape(path), sum(ran_local)
+
+
+@pytest.mark.parametrize("retain", [False, True], ids=["swap", "retain"])
+def test_local_merge_equals_spark_merge(spark, tmp_path, monkeypatch, retain):
+    """The driver-local merge and the Spark merge give the same table
+    and the same log, apart from file names, over a batch sequence
+    with in-batch duplicate keys, precombine ties the hash decides,
+    null precombines, hard deletes (delete vs re-insert at equal
+    precombine, a partition emptied), null, "", "a:b" and "50%"
+    partitions, a partition with no files yet, and decimal, timestamp,
+    date, boolean, double (NaN) and binary columns."""
+    budget = merge._LOCAL_MERGE_ROWS
+    by_spark = _merge_sequence(
+        spark, str(tmp_path / "spark"), monkeypatch, 0, retain
+    )
+    local = _merge_sequence(
+        spark, str(tmp_path / "local"), monkeypatch, budget, retain
+    )
+    assert (by_spark[3], local[3]) == (0, 2)
+    assert local[:3] == by_spark[:3]
+
+
+def test_local_merge_runs_one_spark_job(spark, tmp_path):
+    """Shape: an in-budget batch on a table with a log merges on the
+    driver — at most one Spark job (the batch collect) and no file
+    listing job in the merge's job group. A float precombine never
+    does: Spark ranks NaN above every number, Arrow after them."""
+    path = str(tmp_path / "lake")
+    schema = "id string, update_at string, note string, day string"
+    rows = [
+        (f"{d}-{i}", "2023-01-01T00:00:00", "v1", d)
+        for d in ("d1", "d2", "d3")
+        for i in range(3)
+    ]
+    merge.merge_into_parquet(
+        spark, path, spark.createDataFrame(rows, schema),
+        ["id"], ["update_at"], ["day"],
+    )
+    batch = spark.createDataFrame(
+        [("d1-0", "2023-01-02T00:00:00", "v2", "d1"),
+         ("d2-9", "2023-01-02T00:00:00", "new", "d2")],
+        schema,
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("local_merge", "in-budget merge")
+    try:
+        merge.merge_into_parquet(
+            spark, path, batch, ["id"], ["update_at"], ["day"]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("local_merge")) <= 1
+    assert _listing_jobs(spark, "local_merge") == []
+    state = {r.id: r.note for r in spark.read.parquet(path).collect()}
+    expect = {r[0]: r[2] for r in rows}
+    expect.update({"d1-0": "v2", "d2-9": "new"})
+    assert state == expect
+    floats = spark.createDataFrame([], "id string, x double, day string")
+    assert merge._collect_batch(
+        floats, floats.schema.json(), ["id"], ["x"], ["day"], None
+    ) is None
