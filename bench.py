@@ -15,6 +15,10 @@ import os
 import sys
 import time
 
+# stdlib-only: the status-tracker/status-store shape reader of the
+# traced benchmark, reused so both harnesses count a job the same way
+from perfbench.spans import job_shape
+
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -269,19 +273,67 @@ def _release_blocks(spark) -> None:
         pass  # measurement hygiene only — never fail the bench over it
 
 
+def timed_run(spark, name: str, sf_dir: str, cores: int) -> dict:
+    """One timed run of catalog query `name`: builder, then `count()`,
+    in the Spark job group named after the query. Returns the run's
+    seconds, its builder seconds (`build_s`), its start epoch, its row
+    count and the `job_shape` of the jobs it ran, read after the run
+    from the status tracker and status store (no UI needed)."""
+    from dynamodb_to_datalake_project_spark import catalog
+
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(name))
+    sc.setJobGroup(name, name)
+    try:
+        t = time.time()
+        df = catalog.QUERIES[name](spark, sf_dir)
+        built = time.time()
+        n = df.count()
+        done = time.time()
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status store is fed by the listener bus: let it catch up
+    # with the run's last events before reading the shape
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(name)) - before
+    return {
+        "sec": done - t,
+        "build_s": built - t,
+        "start": t,
+        "rows": n,
+        "shape": job_shape(spark, jobs, cores),
+    }
+
+
+def measure(spark, name: str, sf_dir: str, cores: int) -> list[dict]:
+    """The timed runs of one query (`timed_run` each); the steady-state
+    time is the fastest run's.
+
+    The first run pays one-time codegen/JIT compilation (~4x steady
+    state at a tiny SF), which a resident cluster amortizes away. Three
+    runs minimum (tiered JIT descends SHALLOWLY — observed 3.4 -> 3.1
+    -> 2.8 ... -> 1.8 on the string-hash-HOF queries, so a two-run best
+    reports compiler tail, not engine), then extra runs while the last
+    run still improves >7% on the best prior run, capped at 5: stable
+    queries stay at 3 runs while outliers measure the engine, not the
+    compiler."""
+    runs = [timed_run(spark, name, sf_dir, cores) for _ in range(3)]
+    while len(runs) < 5 and runs[-1]["sec"] < 0.93 * min(
+        r["sec"] for r in runs[:-1]
+    ):
+        runs.append(timed_run(spark, name, sf_dir, cores))
+    return runs
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # Subset filter for local A/B probes: comma-separated query names.
-    # The driver never sets it, so recorded BENCH_r{N}.json always
-    # covers the full headline list.
+    # Subset filter for A/B comparisons: comma-separated query names;
+    # each query's stderr line carries its shape. The driver never sets
+    # it, so recorded BENCH_r{N}.json always covers the full headline
+    # list.
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     headline = [n for n in HEADLINE if n in set(only.split(","))] if only else HEADLINE
-    # Protocol delta (round 9): block-store cleanup between queries,
-    # default ON — see PERFDRIFT.md for the one-time both-protocols
-    # measurement that standardized it. Set SPARK_GRAFT_BENCH_RESET=0
-    # to reproduce the round-4..8 protocol exactly.
-    reset = os.environ.get("SPARK_GRAFT_BENCH_RESET", "1") != "0"
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
     t0 = time.time()
@@ -366,55 +418,39 @@ def main():
     ).count()
     startup = time.time() - t0
 
-    # Per-query time = best of 3-5 consecutive runs: the first run
-    # pays one-time codegen/JIT compilation (~4x steady-state at this
-    # tiny SF), which a resident cluster amortizes away. Three runs
-    # minimum (tiered JIT descends SHALLOWLY — observed 3.4 -> 3.1 ->
-    # 2.8 ... -> 1.8 on the string-hash-HOF queries, so a two-run
-    # best systematically reports compiler tail, not engine), then
-    # extra runs while the last run still improves >7% on the best
-    # prior run — a threshold the ~10%/run shallow-JIT descent above
-    # actually crosses (the former 15% bar never fired for it) —
-    # capped at 5: stable queries stay at 3 runs and the sweep stays
-    # fast while outliers measure the engine, not the compiler.
+    # Per-query time = best of 3-5 consecutive runs (`measure`);
     # first_run captures the cold number so cold-start behavior stays
-    # visible next to the steady-state headline.
-    # NOTE: the warm-up protocol and this run-selection policy are
+    # visible next to the steady-state headline, and shape is the
+    # builder time and Spark shape of the run that set the steady state.
+    # NOTE: the warm-up protocol and the run-selection policy are
     # FROZEN as of round 4 (r3->r4 itself carries two deltas a
     # per-query comparison must account for: the extra-run threshold
     # moved 0.85 -> 0.93 per the round-3 advice, and bpe_train_merges
     # now measures the size-gated driver path). From r4 onward,
     # BENCH_r{N}.json files are apples-to-apples, with ONE later
-    # delta: round 9 adds between-query block-store cleanup (default
-    # on; SPARK_GRAFT_BENCH_RESET=0 restores the old protocol). The
+    # delta: round 9 adds between-query block-store cleanup. The
     # one-time both-protocols run and the r7->r8 regression root-cause
     # (environment drift, not code) are in PERFDRIFT.md.
     timings: dict[str, float] = {}
     first_run: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     run_at: dict[str, list[float]] = {}
+    shapes: dict[str, dict] = {}
     for name in headline:
-        if reset:
-            _release_blocks(spark)
-        builder = catalog.QUERIES[name]
-        runs, starts, n = [], [], 0
-        for _ in range(3):
-            t = time.time()
-            n = builder(spark, sf_dir).count()
-            starts.append(t)
-            runs.append(time.time() - t)
-        while len(runs) < 5 and runs[-1] < 0.93 * min(runs[:-1]):
-            t = time.time()
-            n = builder(spark, sf_dir).count()
-            starts.append(t)
-            runs.append(time.time() - t)
-        timings[name] = round(min(runs), 3)
-        first_run[name] = round(runs[0], 3)
-        all_runs[name] = [round(r, 3) for r in runs]
-        run_at[name] = [round(t, 2) for t in starts]
+        _release_blocks(spark)
+        runs = measure(spark, name, sf_dir, cpus)
+        best = min(runs, key=lambda r: r["sec"])
+        timings[name] = round(best["sec"], 3)
+        first_run[name] = round(runs[0]["sec"], 3)
+        all_runs[name] = [round(r["sec"], 3) for r in runs]
+        run_at[name] = [round(r["start"], 2) for r in runs]
+        shapes[name] = {
+            k: round(v, 3)
+            for k, v in {"build_s": best["build_s"], **best["shape"]}.items()
+        }
         print(
-            f"# {name}: {timings[name]}s ({n} rows) "
-            f"runs={all_runs[name]}",
+            f"# {name}: {timings[name]}s ({runs[-1]['rows']} rows) "
+            f"runs={all_runs[name]} shape={json.dumps(shapes[name])}",
             file=sys.stderr,
         )
 
@@ -461,6 +497,7 @@ def main():
                     "queries": timings,
                     "first_run": first_run,
                     "runs": all_runs,
+                    "shape": shapes,
                 },
                 fh,
                 indent=1,

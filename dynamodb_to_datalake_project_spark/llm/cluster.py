@@ -268,7 +268,7 @@ def _arrow_min_d2(emb: DataFrame, cands: "list[list[float]]") -> DataFrame:
     reproduced dim-by-dim, min is an exact reduction), ~E× faster per
     row than the element-at-a-time codegen fold at large E·rows —
     measured 43 s -> ~2 s for one 24-candidate scan over 200k vectors
-    (tools/scale10_probe.py --graph-x100, VERDICT r6 ask #7)."""
+    (SCALING.md "x100 graph-family probe", VERDICT r6 ask #7)."""
     import numpy as np
 
     from pyspark.sql import types as T

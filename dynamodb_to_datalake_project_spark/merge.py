@@ -997,9 +997,12 @@ def merge_into_parquet(
         else:
             # no log yet: the table is in swap mode (its directories
             # are its snapshot, whatever retain_files says), and its
-            # footers give the schema
+            # footers give the schema. A missing directory is a first
+            # batch without asking Spark, which would log a stack trace.
+            schema = None
             try:
-                schema = spark.read.parquet(table_path).schema
+                if os.path.isdir(table_path):
+                    schema = spark.read.parquet(table_path).schema
             except AnalysisException as e:
                 # ONLY a missing/uninitialized table means "first
                 # batch". Any other failure (transient IO, permissions,
@@ -1011,6 +1014,7 @@ def merge_into_parquet(
                     "PATH_NOT_FOUND" in cond or "UNABLE_TO_INFER_SCHEMA" in cond
                 ):
                     raise
+            if schema is None:
                 _create_table(
                     table_path, source, keys, precombine, partition_cols,
                     op_col, delete_types, retain_files,

@@ -108,14 +108,10 @@ def get_spark(
         # rerun. Worker startup is not on any measured path, so a
         # generous accept window costs nothing.
         .config("spark.python.authenticate.socketTimeout", "120s")
-        # UI off by default (bench hygiene: the listener event log is
-        # pure overhead in a 200-query sweep); SPARK_GRAFT_UI=1 turns
-        # it on for plan/metric inspection (tools/job_probe.py reads
-        # job counts and shuffle bytes from the REST API).
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
+        # UI off: bench.py reads each query's jobs, stages and shuffle
+        # bytes from the status tracker and status store, which need
+        # no UI
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # no `[Stage n:...]` console bar: it is redrawn with carriage
         # returns on stderr and ends up on the same lines as a tool's

@@ -1948,3 +1948,48 @@ def test_local_merge_runs_one_spark_job(spark, tmp_path):
     assert merge._collect_batch(
         floats, floats.schema.json(), ["id"], ["x"], ["day"], None
     ) is None
+
+
+def test_first_batch_creates_table_without_reading_a_missing_path(
+    spark, tmp_path, monkeypatch
+):
+    """A first batch creates the table: into a missing path without a
+    Spark read of it (Spark would log a FileNotFoundException trace
+    before failing), and into a directory without data files through
+    the UNABLE_TO_INFER_SCHEMA handler. An empty first batch creates
+    nothing."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    schema = "id string, update_at string, note string, day string"
+    rows = [("a", "2023-01-01T00:00:00", "v1", "d1"),
+            ("b", "2023-01-01T00:00:00", "v1", "d2")]
+    missing = str(tmp_path / "missing")
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    read, named = DataFrameReader.parquet, []
+
+    def spy(self, *paths, **kwargs):
+        named.extend(paths)
+        return read(self, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    merge.merge_into_parquet(
+        spark, missing, spark.createDataFrame([], schema),
+        ["id"], ["update_at"], ["day"],
+    )
+    assert not os.path.exists(missing)
+    for path in (missing, str(empty)):
+        merge.merge_into_parquet(
+            spark, path, spark.createDataFrame(rows, schema),
+            ["id"], ["update_at"], ["day"],
+        )
+    assert missing not in named
+    assert str(empty) in named  # the empty directory is still read
+    monkeypatch.undo()
+    for path in (missing, str(empty)):
+        assert {r.id: r.day for r in spark.read.parquet(path).collect()} == {
+            "a": "d1", "b": "d2"
+        }
+        assert os.path.isfile(
+            os.path.join(path, "_delta_log", "00000000000000000000.json")
+        )

@@ -4,10 +4,14 @@ BENCH_r*.json wrapper (only its helper on synthetic lines) and
 false-FAILed on the artifact it exists to validate — so every tools/
 script now gets a main()-level test against on-disk fixtures or the
 committed artifacts themselves (VERDICT r5 asks #1 and #5). The Spark
-probes run narrowed smoke configurations at sf0.001 writing to tmp."""
+tools run narrowed smoke configurations at sf0.001 writing to tmp."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import importlib
+import importlib.util
 import json
 import os
 import sys
@@ -16,7 +20,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from check_bench_tail import check_line, check_tail  # noqa: E402
-from scale10_probe import replace_section  # noqa: E402
+from check_oracle import replace_section  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -181,45 +185,6 @@ def test_explain_audit_main_smoke(spark, tmp_path):
     assert "q1_pricing_summary" in text and "Scan parquet" in text
 
 
-def test_scaling_probe_main_smoke(spark, tmp_path):
-    from scaling_probe import main
-
-    out = tmp_path / "SCALING.md"
-    main(
-        ["--sf", SF_DIR, "--probe", "q1_pricing_summary", "--out", str(out),
-         "--reps", "1"]
-    )
-    assert "q1_pricing_summary" in out.read_text()
-
-
-def test_scale10_probe_main_smoke(spark, tmp_path):
-    from scale10_probe import main
-
-    out = tmp_path / "SCALING.md"
-    main(
-        ["--sf", SF_DIR, "--out", str(out), "--probe", "text_stats",
-         "--reps", "1"]
-    )
-    text = out.read_text()
-    assert "x10 / x100 within-session probe" in text and "text_stats" in text
-
-
-def test_scale_pairing_probe_main_smoke(spark, tmp_path):
-    from scale_pairing_probe import main
-
-    out = tmp_path / "SCALING.md"
-    try:
-        main(
-            ["--sf", SF_DIR, "--out", str(out), "--probe", "minhash",
-             "--max-scale", "x1"]
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-    text = out.read_text()
-    assert "pairing-operator probe" in text and "minhash" in text
-    assert "connected_components" in text  # CC stage ran on the real edges
-
-
 def test_bench_streaming_main_smoke(spark, capsys):
     from bench_streaming import main
 
@@ -272,3 +237,115 @@ def test_check_full_record_accepts_and_rejects(tmp_path):
     bad_keys = json.loads(json.dumps(good))
     del bad_keys["runs"]["qb"]
     assert not check_full_record(bad_keys, "bad_keys")
+
+
+def _full_record(shape=True, **wall):
+    queries = {"qa": 1.0, "qb": 2.0, **wall}
+    rec = {
+        "metric": "headline_queries_full",
+        "sf": 0.1,
+        "startup_sec": 30.0,
+        "value": round(sum(queries.values()), 3),
+        "first_run_total_sec": 9.0,
+        "n_queries": len(queries),
+        "queries": queries,
+        "first_run": {k: 4.0 for k in queries},
+        "runs": {k: [4.0, v, v] for k, v in queries.items()},
+    }
+    if shape:
+        from perfbench.spans import SHAPE_KEYS
+
+        rec["shape"] = {
+            k: {"build_s": 0.1, **dict.fromkeys(SHAPE_KEYS, 0), "jobs": 2,
+                "stages": 3, "tasks": 8, "shuffle_read_bytes": 100}
+            for k in queries
+        }
+    return rec
+
+
+def test_check_full_record_checks_shape_keys():
+    from check_bench_tail import check_full_record
+
+    assert check_full_record(_full_record(), "good")
+    assert check_full_record(_full_record(shape=False), "no shape")
+
+    missing = _full_record()
+    del missing["shape"]["qb"]["tasks"]
+    assert not check_full_record(missing, "missing key")
+
+    negative = _full_record()
+    negative["shape"]["qa"]["jobs"] = -1
+    assert not check_full_record(negative, "negative")
+
+    unmatched = _full_record()
+    del unmatched["shape"]["qa"]
+    assert not check_full_record(unmatched, "key sets")
+
+
+def test_diff_records_labels_shape_wall_and_missing(tmp_path, capsys):
+    from check_bench_tail import diff_records, main
+
+    old = _full_record()
+    new = _full_record(qb=2.5)
+    new["shape"]["qa"]["jobs"] = 3
+    new["shape"]["qa"]["shuffle_read_bytes"] = 40
+    labels = diff_records(old, new)
+    assert labels["qa"] == "shape changed: jobs +1, shuffle_read_bytes -60"
+    assert labels["qb"] == "wall-only +0.500s"
+
+    bare = diff_records(_full_record(shape=False), new)
+    assert set(bare.values()) == {"no shape (wall +0.000s)", "no shape (wall +0.500s)"}
+
+    po, pn = tmp_path / "old.json", tmp_path / "new.json"
+    po.write_text(json.dumps(old))
+    pn.write_text(json.dumps(new))
+    assert main(["--diff", str(po), str(pn)]) == 0
+    out = capsys.readouterr().out
+    assert "qa: shape changed" in out and "qb: wall-only" in out
+    assert main(["--diff", str(po), str(po)]) == 0
+    assert "shape changed" not in capsys.readouterr().out
+
+
+def test_every_tool_and_its_imports_load():
+    """Every tools/*.py module imports, and every module any of them
+    imports (at module level or inside a function) exists — so a tool
+    left importing a deleted one fails here, not when someone runs it."""
+    tools = sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
+    assert tools
+    for path in tools:
+        importlib.import_module(os.path.basename(path)[:-3])
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                names = [node.module]
+            else:
+                continue
+            for name in names:
+                assert importlib.util.find_spec(name.split(".")[0]), (path, name)
+
+
+def test_bench_measure_records_each_query_shape(spark):
+    """bench.py's per-query run: each run executes in the job group
+    named after its query and reads its shape with the UI off."""
+    import bench
+    from dynamodb_to_datalake_project_spark import catalog
+
+    catalog.load_all()
+    assert spark.sparkContext.uiWebUrl is None  # the UI is off
+    tracker = spark.sparkContext.statusTracker()
+    names = ["q1_pricing_summary", "graph_triangles"]
+    before = {n: set(tracker.getJobIdsForGroup(n)) for n in names}
+    measured = {n: bench.measure(spark, n, SF_DIR, 4) for n in names}
+    for name, runs in measured.items():
+        shapes = [(r["shape"]["jobs"], r["shape"]["stages"], r["shape"]["tasks"])
+                  for r in runs]
+        assert shapes[0][0] >= 1 and shapes[0][1] >= 1 and shapes[0][2] >= 1
+        assert len(set(shapes)) == 1, (name, shapes)  # every run, one shape
+        assert all(0 <= r["build_s"] <= r["sec"] for r in runs)
+        # each run counts exactly its own query's jobs: the runs' jobs
+        # add up to the jobs its group gained, nothing from the other
+        grown = set(tracker.getJobIdsForGroup(name)) - before[name]
+        assert sum(s[0] for s in shapes) == len(grown)

@@ -28,6 +28,11 @@ This tool replays the driver's capture against a recorded BENCH_r*.json
 Usage: python tools/check_bench_tail.py [BENCH_rNN.json | bench_stdout.txt ...]
 With no args, checks every BENCH_r*.json in the repo root and flags the
 pre-round-5 files as KNOWN-BAD (they predate the ordering fix).
+
+       python tools/check_bench_tail.py --diff OLD.json NEW.json
+labels each query two bench_full_r*.json records both timed: "shape
+changed" (its jobs/stages/tasks/shuffle bytes differ), "wall-only" (same
+shape; only the seconds moved) or "no shape" (a record without shapes).
 """
 
 from __future__ import annotations
@@ -38,7 +43,14 @@ import os
 import re
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from perfbench.spans import SHAPE_KEYS  # noqa: E402  (stdlib-only)
+
 TAIL = 2000
+# the shape numbers that tell a plan change from a wall-clock change
+DIFF_KEYS = ("jobs", "stages", "tasks", "shuffle_read_bytes", "shuffle_write_bytes")
 
 # keys on the record lines that are NOT per-query timings
 _SCALAR_KEYS = {"sf", "startup_sec", "value", "first_run_total_sec", "n_queries"}
@@ -182,12 +194,46 @@ def check_full_record(obj: dict, label: str) -> bool:
     if obj.get("n_queries") != len(q):
         print(f"{label}: FAIL — n_queries != len(queries)")
         ok = False
+    shape = obj.get("shape")
+    if shape is not None:  # records before bench.py kept shapes have none
+        if set(shape) != set(q):
+            print(f"{label}: FAIL — shape/queries key sets differ")
+            ok = False
+        for name, s in shape.items():
+            bad = [
+                k for k in ("build_s", *SHAPE_KEYS)
+                if not isinstance(s.get(k), (int, float)) or s[k] < 0
+            ]
+            if bad:
+                print(f"{label}: FAIL — {name}: shape keys missing or negative {bad}")
+                ok = False
     if ok:
         print(
             f"{label}: OK — full record, {len(q)} queries, "
             f"total={obj.get('value')}s cold={obj.get('first_run_total_sec')}s"
         )
     return ok
+
+
+def diff_records(old: dict, new: dict) -> dict[str, str]:
+    """Label each query both full records timed: "shape changed" with
+    the jobs/stages/tasks/shuffle-byte deltas, "wall-only" with the
+    steady-state seconds delta, or "no shape" when either record has
+    no shape for it."""
+    out = {}
+    for name in sorted(set(old["queries"]) & set(new["queries"])):
+        wall = new["queries"][name] - old["queries"][name]
+        a = old.get("shape", {}).get(name)
+        b = new.get("shape", {}).get(name)
+        if a is None or b is None:
+            out[name] = f"no shape (wall {wall:+.3f}s)"
+            continue
+        moved = [f"{k} {b[k] - a[k]:+}" for k in DIFF_KEYS if b[k] != a[k]]
+        if moved:
+            out[name] = "shape changed: " + ", ".join(moved)
+        else:
+            out[name] = f"wall-only {wall:+.3f}s"
+    return out
 
 
 def check_path(p: str) -> bool:
@@ -220,10 +266,20 @@ def check_path(p: str) -> bool:
 
 def main(argv: list[str] | None = None) -> int:
     paths = list(sys.argv[1:] if argv is None else argv)
+    if paths[:1] == ["--diff"]:
+        if len(paths) != 3:
+            print("usage: check_bench_tail.py --diff OLD.json NEW.json")
+            return 2
+        records = []
+        for p in paths[1:]:
+            with open(p) as fh:
+                records.append(json.load(fh))
+        for name, label in diff_records(*records).items():
+            print(f"{name}: {label}")
+        return 0
     if not paths:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        paths = sorted(glob.glob(os.path.join(root, "BENCH_r*.json"))) + sorted(
-            glob.glob(os.path.join(root, "bench_full_r*.json"))
+        paths = sorted(glob.glob(os.path.join(ROOT, "BENCH_r*.json"))) + sorted(
+            glob.glob(os.path.join(ROOT, "bench_full_r*.json"))
         )
     rc = 0
     for p in paths:

@@ -193,8 +193,6 @@ def _write_timings(sf_dir: str, timings: "dict[str, tuple]") -> None:
     execution from THIS correctness run — a second within-session
     timing source that costs no extra sweep and is immune to the
     host-level cross-run variance documented below."""
-    from scale10_probe import replace_section  # same tools dir
-
     total_cold = sum(c for c, _ in timings.values())
     total_warm = sum(w for _, w in timings.values())
     lines = [
@@ -221,6 +219,32 @@ def _write_timings(sf_dir: str, timings: "dict[str, tuple]") -> None:
         lines.append(f"| {name} | {c:.2f}s | {w:.2f}s | {c / max(w, 1e-9):.1f} |")
     replace_section("SCALE.md", "## Oracle-gate cold/warm timings", lines)
     print(f"wrote cold/warm timing table ({len(timings)} queries) to SCALE.md")
+
+
+def replace_section(path: str, header: str, lines: "list[str]") -> None:
+    """Rewrite the section starting at `header` (through the next
+    `## `-level header or EOF) in place, so repeated runs REPLACE
+    their table instead of accumulating stale duplicates. Appends the
+    section if the header is absent."""
+    try:
+        with open(path) as f:
+            text = f.read()
+    except FileNotFoundError:
+        text = ""
+    start = text.find(header)
+    block = "\n".join(lines) + "\n"
+    if start < 0:
+        out = text + block
+    else:
+        # back up over ONE preceding newline (our block carries its own
+        # leading blank line), keep the section separator intact
+        if start > 0 and text[start - 1] == "\n":
+            start -= 1
+        nxt = text.find("\n## ", start + len(header))
+        tail = "" if nxt < 0 else text[nxt:]
+        out = text[:start] + block + tail
+    with open(path, "w") as f:
+        f.write(out)
 
 
 if __name__ == "__main__":

@@ -233,10 +233,23 @@ NOTES = {
 }
 
 
+def parse_flags(argv: "list[str]") -> "dict[str, list[str]]":
+    """`--flag value` pairs collected into lists (flags may repeat)."""
+    out: dict[str, list[str]] = {}
+    i = 0
+    while i < len(argv):
+        a = argv[i]
+        if a.startswith("--") and i + 1 < len(argv):
+            out.setdefault(a[2:], []).append(argv[i + 1])
+            i += 2
+        else:
+            i += 1
+    return out
+
+
 def main(argv: "list[str] | None" = None) -> None:
     from dynamodb_to_datalake_project_spark import catalog, get_spark
     from bench import HEADLINE
-    from scaling_probe import parse_flags
 
     flags = parse_flags(sys.argv[1:] if argv is None else argv)
     queries = flags.get("query", list(HEADLINE))
