@@ -854,13 +854,12 @@ def delete_where(
     `values` is a bounded key set (it travels in the task closure —
     the same envelope every broadcast-hash-join build side has).
     Returns the new snapshot id, or None when nothing matched."""
-    import pandas as _pd
-    from collections.abc import Iterator as _Iterator
     from pyspark.sql import types as _T
 
     from dynamodb_to_datalake_project_spark.llm.parquetwrite import (
         write_parquet,
     )
+    from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
     live = live_files(table_path)
     file_meta = [
@@ -876,44 +875,26 @@ def delete_where(
         ]
     )
 
-    def _find(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
+    def _find(rel, pv):
+        import numpy as _np
         import pyarrow.parquet as pq
 
-        for pdf in batches:
-            for rel, pv in zip(pdf["file_path"], pdf["pv"]):
-                import numpy as _np
-
-                col = pq.read_table(
-                    os.path.join(table_path, rel), columns=[column]
-                ).column(0)
-                try:
-                    # vectorized membership over the Arrow column —
-                    # the per-row Python `in` loop was the hot path
-                    arr = col.to_numpy(zero_copy_only=False)
-                    hits = _np.nonzero(
-                        _np.isin(arr, _np.array(sorted(vals)))
-                    )[0].tolist()
-                except (TypeError, ValueError):
-                    # non-numeric columns fall back to the exact loop
-                    hits = [
-                        i for i, v in enumerate(col.to_pylist()) if v in vals
-                    ]
-                if hits:
-                    yield _pd.DataFrame(
-                        {
-                            "file_path": [rel] * len(hits),
-                            "pos": hits,
-                            "pv": [pv] * len(hits),
-                        }
-                    )
+        col = pq.read_table(os.path.join(table_path, rel), columns=[column]).column(0)
+        try:
+            # vectorized membership over the Arrow column —
+            # the per-row Python `in` loop was the hot path
+            arr = col.to_numpy(zero_copy_only=False)
+            hits = _np.nonzero(_np.isin(arr, _np.array(sorted(vals))))[0].tolist()
+        except (TypeError, ValueError):
+            # non-numeric columns fall back to the exact loop
+            hits = [i for i, v in enumerate(col.to_pylist()) if v in vals]
+        for pos in hits:
+            yield rel, pos, pv
 
     files_df = spark.createDataFrame(file_meta, "file_path string, pv string")
     par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    pairs = (
-        files_df.repartition(min(par, max(1, len(file_meta))))
-        .mapInPandas(_find, schema)
-        .collect()
-    )
+    files_df = files_df.repartition(min(par, max(1, len(file_meta))))
+    pairs = map_rows(files_df, _find, schema).collect()
     if not pairs:
         return None
 
@@ -1125,8 +1106,8 @@ def read_table_df_mor(spark, table_path: str):
     envelope; a delete-heavy table compacts via overwrite); each data
     file is read executor-side in physical order so positions line
     up, with the partition column re-attached from the manifest."""
-    import pandas as _pd
-    from collections.abc import Iterator as _Iterator
+
+    from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
     st = spark_schema_of(table_path)
     meta = read_metadata(table_path)
@@ -1171,62 +1152,27 @@ def read_table_df_mor(spark, table_path: str):
         for f, seq in data
     ]
 
-    def _read(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
+    def _read(rel, pv, dseq):
         import pyarrow.parquet as pq
 
-        for pdf in batches:
-            for rel, pv, dseq in zip(
-                pdf["file_path"], pdf["pv"], pdf["seq"]
-            ):
-                t = pq.read_table(os.path.join(table_path, rel))
-                n = t.num_rows
-                gone = drops.get(rel, set())
-                cols_raw = {
-                    f.name: (
-                        t.column(f.name).to_pylist()
-                        if f.name in t.column_names
-                        else None
-                    )
-                    for f in st.fields
-                }
-                live_eq = [
-                    (c, vs) for c, vs, es in eq_sets if int(dseq) < es
-                ]
-                keep = []
-                for i in range(n):
-                    if i in gone:
-                        continue
-                    hit = False
-                    for c, vs in live_eq:
-                        cv = (
-                            cols_raw[c][i]
-                            if cols_raw.get(c) is not None
-                            else (pv if c == partition_field else None)
-                        )
-                        if cv in vs:
-                            hit = True
-                            break
-                    if not hit:
-                        keep.append(i)
-                out = {}
-                for f in st.fields:
-                    raw = cols_raw[f.name]
-                    if raw is not None:
-                        out[f.name] = [raw[i] for i in keep]
-                    elif f.name == partition_field:
-                        out[f.name] = [pv] * len(keep)
-                    else:
-                        out[f.name] = [None] * len(keep)
-                yield _pd.DataFrame(out)
+        t = pq.read_table(os.path.join(table_path, rel))
+        gone = drops.get(rel, set())
+
+        def values(name):
+            if name in t.column_names and name in st.fieldNames():
+                return t.column(name).to_pylist()
+            return [pv if name == partition_field else None] * t.num_rows
+
+        live_eq = [(values(c), vs) for c, vs, es in eq_sets if dseq < es]
+        for i, r in enumerate(zip(*(values(f.name) for f in st.fields))):
+            if i not in gone and not any(col[i] in vs for col, vs in live_eq):
+                yield r
 
     files_df = spark.createDataFrame(
         rows_meta, "file_path string, pv string, seq long"
     )
     par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        files_df.repartition(min(par, max(1, len(rows_meta))))
-        .mapInPandas(_read, st)
-    )
+    return map_rows(files_df.repartition(min(par, max(1, len(rows_meta)))), _read, st)
 
 
 # ---------------------------------------------------------------------------

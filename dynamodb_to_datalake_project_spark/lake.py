@@ -26,20 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 from dynamodb_to_datalake_project_spark.session import tune
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table as parquet.
@@ -61,10 +50,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in ntz:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 
 
 # ---------------------------------------------------------------------------
@@ -227,6 +212,15 @@ def write_json_lines_zstd(df: DataFrame, path: str) -> int:
     return int(sum(counts))
 
 
+def _zstd_lines(blob: bytes):
+    """The non-empty JSON lines of one `.json.zst` part."""
+    from dynamodb_to_datalake_project_spark.llm.zstd import zstd_decompress
+
+    for ln in zstd_decompress(blob).decode("utf-8").split("\n"):
+        if ln:
+            yield (ln,)
+
+
 def read_json_lines_zstd(
     spark: SparkSession, path: str, schema: T.StructType | str
 ) -> DataFrame:
@@ -237,22 +231,7 @@ def read_json_lines_zstd(
     everywhere in this module). Files parallelize by part; each part
     decodes independently, so the scan scales with partition count
     exactly like the gzip path."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
     from pyspark.sql import functions as F
-
-    def decode(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        from dynamodb_to_datalake_project_spark.llm.zstd import (
-            zstd_decompress,
-        )
-
-        for pdf in batches:
-            lines: list[str] = []
-            for blob in pdf["content"]:
-                text = zstd_decompress(bytes(blob)).decode("utf-8")
-                lines.extend(ln for ln in text.split("\n") if ln)
-            yield _pd.DataFrame({"line": lines})
 
     raw = (
         spark.read.format("binaryFile")
@@ -260,7 +239,7 @@ def read_json_lines_zstd(
         .load(path)
         .select("content")
     )
-    lines = raw.mapInPandas(decode, "line string")
+    lines = map_rows(raw, _zstd_lines, "line string")
     if isinstance(schema, T.StructType):
         schema = schema.simpleString()
     return lines.select(
@@ -281,9 +260,6 @@ def read_json_lines_zstd_stream(
     binaryFile file source (explicit schema, bounded files/trigger =
     T6, glob-filtered) -> one Arrow decode stage -> from_json.
     Offsets/exactly-once ride the file source's checkpoint contract."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
     from pyspark.sql import functions as F
 
     bin_schema = T.StructType(
@@ -303,23 +279,10 @@ def read_json_lines_zstd_stream(
         .load(path)
         .select("content")
     )
-
-    def decode(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        from dynamodb_to_datalake_project_spark.llm.zstd import (
-            zstd_decompress,
-        )
-
-        for pdf in batches:
-            lines: list[str] = []
-            for blob in pdf["content"]:
-                text = zstd_decompress(bytes(blob)).decode("utf-8")
-                lines.extend(ln for ln in text.split("\n") if ln)
-            yield _pd.DataFrame({"line": lines})
-
     if isinstance(schema, T.StructType):
         schema = schema.simpleString()
     return (
-        raw.mapInPandas(decode, "line string")
+        map_rows(raw, _zstd_lines, "line string")
         .select(F.from_json("line", schema).alias("j"))
         .select("j.*")
     )

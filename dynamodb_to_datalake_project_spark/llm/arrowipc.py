@@ -32,6 +32,8 @@ from __future__ import annotations
 
 import struct
 
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
+
 _CONT = 0xFFFFFFFF
 
 # Message.fbs header union ordering
@@ -292,9 +294,7 @@ def arrow_stream_stats(docs):
     back by the zero-dep flatbuffers walker, equality-asserted, and
     the word-formula census emitted."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -308,54 +308,44 @@ def arrow_stream_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        import io
+    import io
 
-        import pyarrow as pa
-        import pyarrow.ipc as ipc
+    import pyarrow as pa
+    import pyarrow.ipc as ipc
 
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                nw = len(words)
-                idx = [
-                    None if did % 2 and i % 7 == 0 else i
-                    for i in range(nw)
-                ]
-                t = pa.table(
-                    {
-                        "idx": pa.array(idx, pa.int64()),
-                        "word": pa.array(words, pa.string()),
-                    }
-                )
-                buf = io.BytesIO()
-                chunk = max(1, -(-nw // (did % 3 + 1)))
-                with ipc.new_stream(buf, t.schema) as w:
-                    for b in t.to_batches(max_chunksize=chunk):
-                        w.write_batch(b)
-                payload = buf.getvalue()
-                got = read_arrow_stream(payload)
-                assert got["idx"] == idx
-                assert got["word"] == words
-                n_batches = -(-nw // chunk) if nw else 0
-                out["doc_id"].append(did)
-                out["n_values"].append(nw)
-                out["n_batches"].append(n_batches)
-                out["n_nulls"].append(sum(1 for v in idx if v is None))
-                out["sum_idx"].append(sum(v for v in idx if v is not None))
-                out["words_md5"].append(
-                    hashlib.md5(" ".join(words).encode()).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        nw = len(words)
+        idx = [
+            None if did % 2 and i % 7 == 0 else i
+            for i in range(nw)
+        ]
+        t = pa.table(
+            {
+                "idx": pa.array(idx, pa.int64()),
+                "word": pa.array(words, pa.string()),
+            }
+        )
+        buf = io.BytesIO()
+        chunk = max(1, -(-nw // (did % 3 + 1)))
+        with ipc.new_stream(buf, t.schema) as w:
+            for b in t.to_batches(max_chunksize=chunk):
+                w.write_batch(b)
+        payload = buf.getvalue()
+        got = read_arrow_stream(payload)
+        assert got["idx"] == idx
+        assert got["word"] == words
+        n_batches = -(-nw // chunk) if nw else 0
+        yield (
+            did,
+            nw,
+            n_batches,
+            sum(1 for v in idx if v is None),
+            sum(v for v in idx if v is not None),
+            hashlib.md5(" ".join(words).encode()).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def _register() -> None:

@@ -18,12 +18,9 @@ the Σ|bucket|² scale argument carries over unchanged.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dynamodb_to_datalake_project_spark.catalog import query
@@ -33,6 +30,7 @@ from dynamodb_to_datalake_project_spark.llm.imagehash import (
     banded_hamming_pairs,
 )
 from dynamodb_to_datalake_project_spark.llm.multimodal import encode_wav
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 #: frames per fingerprint — 65 frames → 64 adjacent-difference bits
 _N_FRAMES = 65
@@ -91,32 +89,18 @@ def fixture_audio_fingerprints(docs: DataFrame) -> DataFrame:
     import struct
     import wave
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in AUDIO_FP_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                payload = encode_wav([int(x) for x in _fixture_samples(did)])
-                with wave.open(io.BytesIO(payload), "rb") as w:
-                    frames = w.readframes(w.getnframes())
-                    n = w.getnframes() * w.getnchannels()
-                pcm = np.array(
-                    struct.unpack(f"<{n}h", frames), dtype=np.int64
-                )
-                hi, lo = audio_energy_fingerprint(pcm)
-                out["doc_id"].append(did)
-                out["fp_hi"].append(hi)
-                out["fp_lo"].append(lo)
-                out["fp_bits"].append(bin(hi).count("1") + bin(lo).count("1"))
-        yield pd.DataFrame(out)
-
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id").repartition(par).mapInPandas(
-            op, AUDIO_FP_SCHEMA
+    def row(did):
+        payload = encode_wav([int(x) for x in _fixture_samples(did)])
+        with wave.open(io.BytesIO(payload), "rb") as w:
+            frames = w.readframes(w.getnframes())
+            n = w.getnframes() * w.getnchannels()
+        pcm = np.array(
+            struct.unpack(f"<{n}h", frames), dtype=np.int64
         )
-    )
+        hi, lo = audio_energy_fingerprint(pcm)
+        yield (did, hi, lo, bin(hi).count("1") + bin(lo).count("1"))
+
+    return map_rows(docs.select("doc_id"), row, AUDIO_FP_SCHEMA, spread=True)
 
 
 # per-doc frame energies + envelope bits, replayed from the formula:

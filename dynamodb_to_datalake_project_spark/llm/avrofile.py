@@ -30,6 +30,7 @@ from dynamodb_to_datalake_project_spark.llm.bitio import (
     uvarint,
     zigzag,
 )
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 _MAGIC = b"Obj\x01"
 _SIMPLE = ("null", "boolean", "int", "long", "double", "string", "bytes")
@@ -488,9 +489,7 @@ def avro_evolution_stats(docs):
     promotion, new double weight with default 1.5) — the resolved
     census is a pure function of the word formulas."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -523,58 +522,40 @@ def avro_evolution_stats(docs):
         ],
     }
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                recs = [
-                    {
-                        "id": i,
-                        "name": w,
-                        "score": None if i % 5 == 0 else i * 3,
-                        "tag": "x" + w,
-                    }
-                    for i, w in enumerate(words)
-                ]
-                blob = encode_avro(
-                    recs, v1, codec="deflate" if did % 2 else "null",
-                    records_per_block=7,
-                )
-                got = resolve_avro(blob, v2)["records"]
-                assert [g["record_id"] for g in got] == list(
-                    range(len(words))
-                )
-                assert all("tag" not in g for g in got)
-                assert all(g["weight"] == 1.5 for g in got)
-                out["doc_id"].append(did)
-                out["n_records"].append(len(got))
-                out["sum_record_id"].append(
-                    sum(g["record_id"] for g in got)
-                )
-                out["null_scores"].append(
-                    sum(1 for g in got if g["score"] is None)
-                )
-                out["score_sum"].append(
-                    float(sum(g["score"] or 0.0 for g in got))
-                )
-                out["weight_sum"].append(
-                    float(sum(g["weight"] for g in got))
-                )
-                out["names_md5"].append(
-                    hashlib.md5(
-                        " ".join(g["name"] for g in got).encode()
-                    ).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        recs = [
+            {
+                "id": i,
+                "name": w,
+                "score": None if i % 5 == 0 else i * 3,
+                "tag": "x" + w,
+            }
+            for i, w in enumerate(words)
+        ]
+        blob = encode_avro(
+            recs, v1, codec="deflate" if did % 2 else "null",
+            records_per_block=7,
+        )
+        got = resolve_avro(blob, v2)["records"]
+        assert [g["record_id"] for g in got] == list(
+            range(len(words))
+        )
+        assert all("tag" not in g for g in got)
+        assert all(g["weight"] == 1.5 for g in got)
+        yield (
+            did,
+            len(got),
+            sum(g["record_id"] for g in got),
+            sum(1 for g in got if g["score"] is None),
+            float(sum(g["score"] or 0.0 for g in got)),
+            float(sum(g["weight"] for g in got)),
+            hashlib.md5(
+                " ".join(g["name"] for g in got).encode()
+            ).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def avro_roundtrip_stats(docs):
@@ -583,9 +564,7 @@ def avro_roundtrip_stats(docs):
     with deflate on even ids / null codec on odd, 16 records per
     block — then parsed back and proven equal."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -608,50 +587,36 @@ def avro_roundtrip_stats(docs):
         ],
     }
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                recs = [
-                    {
-                        "idx": i,
-                        "word": w,
-                        "alt": None if i % 3 == 0 else w.upper(),
-                    }
-                    for i, w in enumerate(words)
-                ]
-                payload = encode_avro(
-                    recs, avro_schema,
-                    codec="deflate" if did % 2 == 0 else "null",
-                    records_per_block=16,
-                )
-                d = parse_avro(payload)
-                assert d["records"] == recs  # container roundtrip
-                out["doc_id"].append(did)
-                out["n_records"].append(len(d["records"]))
-                out["n_blocks"].append(d["n_blocks"])
-                out["n_null_alt"].append(
-                    sum(1 for rec in d["records"] if rec["alt"] is None)
-                )
-                out["sum_idx"].append(
-                    sum(rec["idx"] for rec in d["records"])
-                )
-                out["words_md5"].append(
-                    hashlib.md5(
-                        " ".join(rec["word"] for rec in d["records"])
-                        .encode("utf-8")
-                    ).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        recs = [
+            {
+                "idx": i,
+                "word": w,
+                "alt": None if i % 3 == 0 else w.upper(),
+            }
+            for i, w in enumerate(words)
+        ]
+        payload = encode_avro(
+            recs, avro_schema,
+            codec="deflate" if did % 2 == 0 else "null",
+            records_per_block=16,
+        )
+        d = parse_avro(payload)
+        assert d["records"] == recs  # container roundtrip
+        yield (
+            did,
+            len(d["records"]),
+            d["n_blocks"],
+            sum(1 for rec in d["records"] if rec["alt"] is None),
+            sum(rec["idx"] for rec in d["records"]),
+            hashlib.md5(
+                " ".join(rec["word"] for rec in d["records"])
+                .encode("utf-8")
+            ).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def _register() -> None:

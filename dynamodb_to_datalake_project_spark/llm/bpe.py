@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
 from dynamodb_to_datalake_project_spark.llm.text import tokens
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 
 def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -287,18 +288,18 @@ def bpe_encode_pandas(
     merges: list[tuple[str, str]],
     text_col: str = "text",
 ) -> DataFrame:
-    """Production encode path: Arrow-batched `mapInPandas` with a
-    per-batch distinct-word cache — token frequencies are power-law,
-    so each distinct word is encoded once per batch no matter how
+    """Production encode path: Arrow-batched `map_rows` with a
+    per-task distinct-word cache — token frequencies are power-law,
+    so each distinct word is encoded once per task no matter how
     often it occurs. Same greedy-left-to-right-per-merge semantics as
     `bpe_encode_stats` (asserted equal in tests); use this one when
     the merge table is production-sized (tens of thousands of ranks),
     where a chained Catalyst fold plan would be absurd. Map-only: the
     merge list ships in the closure (the tokenizer artifact is KBs),
     and no shuffle happens anywhere."""
-    import pandas as pd
+    cache: dict = {}
 
-    def enc_len(word: str, cache: dict) -> int:
+    def enc_len(word: str) -> int:
         n = cache.get(word)
         if n is None:
             syms = list(word)
@@ -313,29 +314,22 @@ def bpe_encode_pandas(
             n = cache[word] = len(syms)
         return n
 
-    def op(batches):
-        for pdf in batches:
-            cache: dict = {}
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                words = [w for w in (text or "").split(" ") if w]
-                if not words:
-                    continue
-                n_bpe = sum(enc_len(w, cache) for w in words)
-                n_chars = sum(len(w) for w in words)
-                # HALF_UP to match F.round (Catalyst) and DuckDB; Python
-                # round() is banker's and would diverge on exact .xxxxxx5
-                # ties, breaking the asserted cross-path equality.
-                ratio = math.floor(n_chars / n_bpe * 1e6 + 0.5) / 1e6
-                rows.append((doc_id, len(words), n_bpe, ratio))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_words", "n_bpe_tokens", "chars_per_token"],
-            )
+    def row(doc_id, text):
+        words = [w for w in (text or "").split(" ") if w]
+        if not words:
+            return
+        n_bpe = sum(enc_len(w) for w in words)
+        n_chars = sum(len(w) for w in words)
+        # HALF_UP to match F.round (Catalyst) and DuckDB; Python
+        # round() is banker's and would diverge on exact .xxxxxx5
+        # ties, breaking the asserted cross-path equality.
+        ratio = math.floor(n_chars / n_bpe * 1e6 + 0.5) / 1e6
+        yield doc_id, len(words), n_bpe, ratio
 
-    return docs.select("doc_id", text_col).mapInPandas(
-        op,
-        schema="doc_id long, n_words long, n_bpe_tokens long, chars_per_token double",
+    return map_rows(
+        docs.select("doc_id", text_col),
+        row,
+        "doc_id long, n_words long, n_bpe_tokens long, chars_per_token double",
     )
 
 
@@ -543,9 +537,7 @@ def wordpiece_stats(docs):
     the corpus vocabulary; emits piece counts, fertility, and the
     md5 of the full piece stream in word order."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     vocab = set(wordpiece_vocab(docs))
@@ -560,32 +552,20 @@ def wordpiece_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                pieces: "list[str]" = []
-                for w in words:
-                    pieces.extend(wordpiece_segment(w, vocab))
-                out["doc_id"].append(did)
-                out["n_words"].append(len(words))
-                out["n_pieces"].append(len(pieces))
-                out["fertility"].append(
-                    float(len(pieces)) / len(words) if words else 0.0
-                )
-                out["pieces_md5"].append(
-                    hashlib.md5(" ".join(pieces).encode()).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        pieces: "list[str]" = []
+        for w in words:
+            pieces.extend(wordpiece_segment(w, vocab))
+        yield (
+            did,
+            len(words),
+            len(pieces),
+            float(len(pieces)) / len(words) if words else 0.0,
+            hashlib.md5(" ".join(pieces).encode()).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 _WP_ORACLE = f"""

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
 from dynamodb_to_datalake_project_spark.llm.text import shingles_from_tokens, tokens
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 
 def _shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
@@ -2033,9 +2034,7 @@ def q_dedup_cdc_chunks(spark, sf_dir):
     in-op. 2^53-safe: pow(257,15) < 2^53 so the double-powered
     DuckDB term is exact before the cast."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     from dynamodb_to_datalake_project_spark.lake import load_table
@@ -2050,35 +2049,27 @@ def q_dedup_cdc_chunks(spark, sf_dir):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                raw = text.encode("utf-8")
-                chunks = cdc_chunks(raw)
-                assert b"".join(chunks) == raw  # reassembly invariant
-                cuts = []
-                at = 0
-                for c in chunks[:-1]:
-                    at += len(c)
-                    cuts.append(at)
-                # the final chunk end is only a "cut" if the hash
-                # fired exactly at L (then the loop above already
-                # consumed it) — cuts here are interior boundaries
-                out["doc_id"].append(did)
-                out["n_chunks"].append(len(chunks))
-                out["total_bytes"].append(len(raw))
-                out["first_cut"].append(cuts[0] if cuts else (
-                    len(raw) if len(chunks) == 1 and _ends_on_cut(raw)
-                    else 0))
-                out["cuts_md5"].append(
-                    hashlib.md5(
-                        ",".join(str(c) for c in _all_cuts(raw))
-                        .encode()
-                    ).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        raw = text.encode("utf-8")
+        chunks = cdc_chunks(raw)
+        assert b"".join(chunks) == raw  # reassembly invariant
+        cuts = []
+        at = 0
+        for c in chunks[:-1]:
+            at += len(c)
+            cuts.append(at)
+        yield (
+            did,
+            len(chunks),
+            len(raw),
+            cuts[0] if cuts else (
+len(raw) if len(chunks) == 1 and _ends_on_cut(raw)
+else 0),
+            hashlib.md5(
+                ",".join(str(c) for c in _all_cuts(raw))
+                .encode()
+            ).hexdigest(),
+        )
 
     def _all_cuts(raw: bytes) -> "list[int]":
         import numpy as np
@@ -2099,7 +2090,4 @@ def q_dedup_cdc_chunks(spark, sf_dir):
         return bool(cuts) and cuts[-1] == len(raw)
 
     docs = load_table(spark, sf_dir, "documents")
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par).mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema, spread=True)

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import json
 
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
+
 
 def replay_delta_log(
     commits: "list[tuple[int, str]]",
@@ -188,9 +190,7 @@ def delta_checkpoint_stats(docs):
     version 2, then two JSON commits (an add + a remove, then an
     add) folded on top — the cold-start path every production Delta
     reader takes. The census is a pure function of the formulas."""
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -205,81 +205,75 @@ def delta_checkpoint_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        import io
+    import io
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    add_t = pa.struct(
+        [("path", pa.string()), ("size", pa.int64()),
+         ("stats", pa.string())]
+    )
+    rem_t = pa.struct([("path", pa.string())])
+    meta_t = pa.struct([("schemaString", pa.string())])
+    proto_t = pa.struct(
+        [("minReaderVersion", pa.int64()),
+         ("minWriterVersion", pa.int64())]
+    )
 
-        add_t = pa.struct(
-            [("path", pa.string()), ("size", pa.int64()),
-             ("stats", pa.string())]
+    def row(did):
+        k = 4 + did % 4
+        rows_add = [None, None] + [
+            {
+                "path": f"part-{i:03d}.parquet",
+                "size": 1000 * (i + 1) + did % 7,
+                "stats": json.dumps(
+                    {"numRecords": 50 + (did + i) % 9}
+                ),
+            }
+            for i in range(k)
+        ]
+        rows_rem = [None] * (k + 2)
+        rows_meta = [None, {
+            "schemaString": json.dumps({
+                "type": "struct",
+                "fields": [{"name": "pk"}, {"name": "val"}],
+            })
+        }] + [None] * k
+        rows_proto = [
+            {"minReaderVersion": 1, "minWriterVersion": 2}
+        ] + [None] * (k + 1)
+        t = pa.table({
+            "add": pa.array(rows_add, add_t),
+            "remove": pa.array(rows_rem, rem_t),
+            "metaData": pa.array(rows_meta, meta_t),
+            "protocol": pa.array(rows_proto, proto_t),
+        })
+        buf = io.BytesIO()
+        pq.write_table(t, buf)
+        commits = [
+            (3, json.dumps({"add": {
+                "path": "part-new3.parquet", "size": 5000,
+                "stats": json.dumps({"numRecords": 70}),
+            }}) + "\n" + json.dumps({"remove": {
+                "path": "part-001.parquet"}})),
+            (4, json.dumps({"add": {
+                "path": "part-new4.parquet", "size": 7000,
+                "stats": json.dumps({"numRecords": 90}),
+            }})),
+        ]
+        res = replay_delta_checkpoint(buf.getvalue(), 2, commits)
+        assert res["schema_cols"] == ["pk", "val"]
+        yield (
+            did,
+            res["version"],
+            len(res["active_files"]),
+            res["n_removed"],
+            res["total_bytes"],
+            res["total_rows"],
+            res["protocol"][0],
         )
-        rem_t = pa.struct([("path", pa.string())])
-        meta_t = pa.struct([("schemaString", pa.string())])
-        proto_t = pa.struct(
-            [("minReaderVersion", pa.int64()),
-             ("minWriterVersion", pa.int64())]
-        )
 
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                k = 4 + did % 4
-                rows_add = [None, None] + [
-                    {
-                        "path": f"part-{i:03d}.parquet",
-                        "size": 1000 * (i + 1) + did % 7,
-                        "stats": json.dumps(
-                            {"numRecords": 50 + (did + i) % 9}
-                        ),
-                    }
-                    for i in range(k)
-                ]
-                rows_rem = [None] * (k + 2)
-                rows_meta = [None, {
-                    "schemaString": json.dumps({
-                        "type": "struct",
-                        "fields": [{"name": "pk"}, {"name": "val"}],
-                    })
-                }] + [None] * k
-                rows_proto = [
-                    {"minReaderVersion": 1, "minWriterVersion": 2}
-                ] + [None] * (k + 1)
-                t = pa.table({
-                    "add": pa.array(rows_add, add_t),
-                    "remove": pa.array(rows_rem, rem_t),
-                    "metaData": pa.array(rows_meta, meta_t),
-                    "protocol": pa.array(rows_proto, proto_t),
-                })
-                buf = io.BytesIO()
-                pq.write_table(t, buf)
-                commits = [
-                    (3, json.dumps({"add": {
-                        "path": "part-new3.parquet", "size": 5000,
-                        "stats": json.dumps({"numRecords": 70}),
-                    }}) + "\n" + json.dumps({"remove": {
-                        "path": "part-001.parquet"}})),
-                    (4, json.dumps({"add": {
-                        "path": "part-new4.parquet", "size": 7000,
-                        "stats": json.dumps({"numRecords": 90}),
-                    }})),
-                ]
-                res = replay_delta_checkpoint(buf.getvalue(), 2, commits)
-                assert res["schema_cols"] == ["pk", "val"]
-                out["doc_id"].append(did)
-                out["version"].append(res["version"])
-                out["n_active"].append(len(res["active_files"]))
-                out["n_removed"].append(res["n_removed"])
-                out["total_bytes"].append(res["total_bytes"])
-                out["total_rows"].append(res["total_rows"])
-                out["proto_reader"].append(res["protocol"][0])
-        yield _pd.DataFrame(out)
-
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, schema_t)
+    return map_rows(docs.select("doc_id"), row, schema_t, spread=True)
 
 
 def delta_log_stats(docs):
@@ -287,9 +281,7 @@ def delta_log_stats(docs):
     protocol + metaData + (2 + id%4) files of formula sizes/rows;
     commit 1 removes every 3rd file and adds one compaction file
     holding the removed rows — replayed to the snapshot."""
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -304,77 +296,70 @@ def delta_log_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                k = 2 + did % 4
-                schema_str = json.dumps(
-                    {
-                        "type": "struct",
-                        "fields": [
-                            {"name": n, "type": "long", "nullable": True,
-                             "metadata": {}}
-                            for n in ("id", "payload", "ts")
-                        ],
-                    }
-                )
-                c0_lines = [
-                    json.dumps({"protocol": {"minReaderVersion": 1,
-                                             "minWriterVersion": 2}}),
-                    json.dumps({"metaData": {
-                        "id": f"tbl-{did}",
-                        "schemaString": schema_str,
-                        "partitionColumns": ["ts"],
-                        "format": {"provider": "parquet"},
-                    }}),
-                ]
-                rows = [100 + 7 * (did + i) % 50 for i in range(k)]
-                sizes = [1000 + 13 * (did + i) % 500 for i in range(k)]
-                for i in range(k):
-                    c0_lines.append(json.dumps({"add": {
-                        "path": f"part-{i:05d}.parquet",
-                        "size": sizes[i],
-                        "dataChange": True,
-                        "stats": json.dumps({"numRecords": rows[i]}),
-                    }}))
-                removed = [i for i in range(k) if i % 3 == 0]
-                compact_rows = sum(rows[i] for i in removed)
-                c1_lines = [
-                    json.dumps({"commitInfo": {"operation": "OPTIMIZE"}})
-                ]
-                for i in removed:
-                    c1_lines.append(json.dumps({"remove": {
-                        "path": f"part-{i:05d}.parquet",
-                        "deletionTimestamp": 1,
-                        "dataChange": False,
-                    }}))
-                c1_lines.append(json.dumps({"add": {
-                    "path": "compact-00000.parquet",
-                    "size": 4096,
-                    "dataChange": False,
-                    "stats": json.dumps({"numRecords": compact_rows}),
-                }}))
-                state = replay_delta_log(
-                    [(0, "\n".join(c0_lines)), (1, "\n".join(c1_lines))]
-                )
-                assert state["protocol"] == (1, 2)
-                assert state["partition_cols"] == ["ts"]
-                out["doc_id"].append(did)
-                out["snapshot_version"].append(state["version"])
-                out["n_active"].append(len(state["active_files"]))
-                out["n_removed"].append(state["n_removed"])
-                out["total_rows"].append(state["total_rows"])
-                out["total_bytes"].append(state["total_bytes"])
-                out["n_schema_cols"].append(len(state["schema_cols"]))
-        yield _pd.DataFrame(out)
+    def row(did):
+        k = 2 + did % 4
+        schema_str = json.dumps(
+            {
+                "type": "struct",
+                "fields": [
+                    {"name": n, "type": "long", "nullable": True,
+                     "metadata": {}}
+                    for n in ("id", "payload", "ts")
+                ],
+            }
+        )
+        c0_lines = [
+            json.dumps({"protocol": {"minReaderVersion": 1,
+                                     "minWriterVersion": 2}}),
+            json.dumps({"metaData": {
+                "id": f"tbl-{did}",
+                "schemaString": schema_str,
+                "partitionColumns": ["ts"],
+                "format": {"provider": "parquet"},
+            }}),
+        ]
+        rows = [100 + 7 * (did + i) % 50 for i in range(k)]
+        sizes = [1000 + 13 * (did + i) % 500 for i in range(k)]
+        for i in range(k):
+            c0_lines.append(json.dumps({"add": {
+                "path": f"part-{i:05d}.parquet",
+                "size": sizes[i],
+                "dataChange": True,
+                "stats": json.dumps({"numRecords": rows[i]}),
+            }}))
+        removed = [i for i in range(k) if i % 3 == 0]
+        compact_rows = sum(rows[i] for i in removed)
+        c1_lines = [
+            json.dumps({"commitInfo": {"operation": "OPTIMIZE"}})
+        ]
+        for i in removed:
+            c1_lines.append(json.dumps({"remove": {
+                "path": f"part-{i:05d}.parquet",
+                "deletionTimestamp": 1,
+                "dataChange": False,
+            }}))
+        c1_lines.append(json.dumps({"add": {
+            "path": "compact-00000.parquet",
+            "size": 4096,
+            "dataChange": False,
+            "stats": json.dumps({"numRecords": compact_rows}),
+        }}))
+        state = replay_delta_log(
+            [(0, "\n".join(c0_lines)), (1, "\n".join(c1_lines))]
+        )
+        assert state["protocol"] == (1, 2)
+        assert state["partition_cols"] == ["ts"]
+        yield (
+            did,
+            state["version"],
+            len(state["active_files"]),
+            state["n_removed"],
+            state["total_rows"],
+            state["total_bytes"],
+            len(state["schema_cols"]),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id").repartition(par).mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id"), row, schema_t, spread=True)
 
 
 def _register() -> None:

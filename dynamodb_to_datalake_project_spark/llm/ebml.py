@@ -22,14 +22,13 @@ this is north-star multimodal-ingest tooling (SURVEY.md §2.8).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 # Matroska/WebM element IDs (with their length-marker bits, as they
 # appear on the wire)
@@ -283,63 +282,57 @@ def webm_container_stats(docs: DataFrame) -> DataFrame:
     audio, cluster/block counts and frame sizes from integer
     formulas; frame payloads opaque — VP9/Opus decode honestly out of
     scope), demux it with `parse_webm`, one row per track. Arrow
-    `mapInPandas`, map-only."""
-    from pyspark.sql import functions as F  # noqa: F401
+    `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in WEBM_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nc = 2 + did % 4
-                w, h = 16 * (1 + did % 5), 16 * (1 + did % 3)
-                clusters = []
-                for c in range(nc):
-                    blocks = []
-                    for b in range(1 + (did + c) % 3):  # video blocks
-                        sz = 30 + (did * 7 + c * 11 + b * 13) % 90
-                        fb = (did * 3 + c * 17 + b * 19) % 256
-                        blocks.append(
-                            (1, b * 10, bytes([fb]) + bytes([(did + b) % 256]) * (sz - 1))
-                        )
-                    for b in range(2 + (did + c) % 2):  # audio blocks
-                        sz = 10 + (did * 5 + c * 7 + b * 11) % 30
-                        fb = (did * 11 + c * 13 + b * 23) % 256
-                        blocks.append(
-                            (2, b * 20, bytes([fb]) + bytes([(did + b) % 256]) * (sz - 1))
-                        )
-                    clusters.append({"timestamp": c * 100, "blocks": blocks})
-                payload = encode_webm(
-                    [
-                        {
-                            "number": 1,
-                            "type": 1,
-                            "codec": "V_VP9" if did % 2 == 0 else "V_VP8",
-                            "width": w,
-                            "height": h,
-                        },
-                        {"number": 2, "type": 2, "codec": "A_OPUS", "rate": 48000},
-                    ],
-                    clusters,
+    def row(did):
+        nc = 2 + did % 4
+        w, h = 16 * (1 + did % 5), 16 * (1 + did % 3)
+        clusters = []
+        for c in range(nc):
+            blocks = []
+            for b in range(1 + (did + c) % 3):  # video blocks
+                sz = 30 + (did * 7 + c * 11 + b * 13) % 90
+                fb = (did * 3 + c * 17 + b * 19) % 256
+                blocks.append(
+                    (1, b * 10, bytes([fb]) + bytes([(did + b) % 256]) * (sz - 1))
                 )
-                d = parse_webm(payload)
-                for t in d["tracks"]:
-                    out["doc_id"].append(did)
-                    out["track_num"].append(t["number"])
-                    out["track_type"].append(t["type"])
-                    out["codec"].append(t["codec"])
-                    out["n_blocks"].append(t["n_blocks"])
-                    out["frame_bytes"].append(t["frame_bytes"])
-                    out["first_byte_sum"].append(t["first_byte_sum"])
-                    out["width"].append(t["width"])
-                    out["height"].append(t["height"])
-                    out["n_clusters"].append(d["n_clusters"])
-                    out["duration_ms"].append(d["duration_ms"])
-        yield pd.DataFrame(out)
+            for b in range(2 + (did + c) % 2):  # audio blocks
+                sz = 10 + (did * 5 + c * 7 + b * 11) % 30
+                fb = (did * 11 + c * 13 + b * 23) % 256
+                blocks.append(
+                    (2, b * 20, bytes([fb]) + bytes([(did + b) % 256]) * (sz - 1))
+                )
+            clusters.append({"timestamp": c * 100, "blocks": blocks})
+        payload = encode_webm(
+            [
+                {
+                    "number": 1,
+                    "type": 1,
+                    "codec": "V_VP9" if did % 2 == 0 else "V_VP8",
+                    "width": w,
+                    "height": h,
+                },
+                {"number": 2, "type": 2, "codec": "A_OPUS", "rate": 48000},
+            ],
+            clusters,
+        )
+        d = parse_webm(payload)
+        for t in d["tracks"]:
+            yield (
+                did,
+                t["number"],
+                t["type"],
+                t["codec"],
+                t["n_blocks"],
+                t["frame_bytes"],
+                t["first_byte_sum"],
+                t["width"],
+                t["height"],
+                d["n_clusters"],
+                d["duration_ms"],
+            )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, WEBM_STATS_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, WEBM_STATS_SCHEMA, spread=True)
 
 
 @query(

@@ -27,15 +27,14 @@ Reference parity: none — north-star multimodal ingest tooling
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
 from dynamodb_to_datalake_project_spark.llm.bitio import MsbReader, MsbWriter
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 #: profile_idc values that carry the chroma-format/bit-depth SPS
 #: extension (ISO 14496-10 §7.3.2.1.1 condition list)
@@ -355,48 +354,39 @@ def h264_nal_stats(docs: DataFrame) -> DataFrame:
     SPS (profile cycling baseline/main/high, level table, dims and
     cropping by formula), PPS, SEI on every 3rd doc, one IDR plus
     2 + doc_id%6 non-IDR slices with formula payloads — then walk it
-    back with `parse_h264_annexb`. Arrow `mapInPandas`, map-only.
+    back with `parse_h264_annexb`. Arrow `map_rows`, map-only.
     Slice payload bytes live in 0x40..0x7F so the fixture contains no
     EPB sites (byte totals stay pure-SQL); EPB round-trips are pinned
     by unit tests instead."""
     levels = (10, 20, 30, 31, 40, 41, 50, 51)
     profiles = (66, 77, 100)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in H264_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                crop = (
-                    (0, 1 + did % 3, 0, did % 2) if did % 5 == 0 else None
-                )
-                sps = encode_sps(
-                    profiles[did % 3],
-                    levels[did % 8],
-                    width_mbs=8 + did % 28,
-                    height_map_units=6 + did % 17,
-                    crop=crop,
-                )
-                pps = bytes((0xE8, 0x43, 0x8F, 0x13))  # opaque valid RBSP
-                nals = [(3, NAL_SPS, sps), (3, NAL_PPS, pps)]
-                if did % 3 == 0:
-                    nals.append((0, NAL_SEI, bytes((0x05, 0x02, 0x61, 0x62, 0x80))))
-                n_slices = 3 + did % 6
-                for i in range(n_slices):
-                    body = bytes(
-                        0x40 + (did * 11 + i * 17 + j) % 64
-                        for j in range(15 + (did * 3 + i * 7) % 60)
-                    )
-                    nals.append((3 if i == 0 else 2, NAL_IDR if i == 0 else NAL_SLICE, body))
-                d = parse_h264_annexb(encode_h264_annexb(nals))
-                out["doc_id"].append(did)
-                for f in H264_STATS_SCHEMA.fields[1:]:
-                    out[f.name].append(d[f.name])
-        yield pd.DataFrame(out)
+    def row(did):
+        crop = (
+            (0, 1 + did % 3, 0, did % 2) if did % 5 == 0 else None
+        )
+        sps = encode_sps(
+            profiles[did % 3],
+            levels[did % 8],
+            width_mbs=8 + did % 28,
+            height_map_units=6 + did % 17,
+            crop=crop,
+        )
+        pps = bytes((0xE8, 0x43, 0x8F, 0x13))  # opaque valid RBSP
+        nals = [(3, NAL_SPS, sps), (3, NAL_PPS, pps)]
+        if did % 3 == 0:
+            nals.append((0, NAL_SEI, bytes((0x05, 0x02, 0x61, 0x62, 0x80))))
+        n_slices = 3 + did % 6
+        for i in range(n_slices):
+            body = bytes(
+                0x40 + (did * 11 + i * 17 + j) % 64
+                for j in range(15 + (did * 3 + i * 7) % 60)
+            )
+            nals.append((3 if i == 0 else 2, NAL_IDR if i == 0 else NAL_SLICE, body))
+        d = parse_h264_annexb(encode_h264_annexb(nals))
+        yield did, *(d[f.name] for f in H264_STATS_SCHEMA.fields[1:])
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, H264_STATS_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, H264_STATS_SCHEMA, spread=True)
 
 
 @query(

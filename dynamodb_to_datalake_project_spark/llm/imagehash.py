@@ -21,10 +21,8 @@ floor mean — so an independent SQL oracle can replay every bit.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,6 +33,7 @@ from dynamodb_to_datalake_project_spark.llm.multimodal import (
     decode_bmp_array,
     encode_bmp_array,
 )
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 
 def gray_u8(px: np.ndarray) -> np.ndarray:
@@ -97,29 +96,17 @@ def image_hashes(
 ) -> DataFrame:
     """Perceptual signatures for a corpus of BMP payloads: REAL
     container decode (`decode_bmp_array`) → integer luma → dHash +
-    aHash. Arrow `mapInPandas`, map-only — scan speed at any corpus
+    aHash. Arrow `map_rows`, map-only — scan speed at any corpus
     size; the signature table it emits is 5 longs/image."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in IMAGE_HASH_SCHEMA.fields}
-        for pdf in batches:
-            for iid, payload in zip(pdf[id_col], pdf[payload_col]):
-                px = decode_bmp_array(bytes(payload))["px"]
-                dhi, dlo = image_dhash(px)
-                ahi, alo = image_ahash(px)
-                out["doc_id"].append(int(iid))
-                out["dhash_hi"].append(dhi)
-                out["dhash_lo"].append(dlo)
-                out["ahash_hi"].append(ahi)
-                out["ahash_lo"].append(alo)
-                out["dhash_bits"].append(
-                    bin(dhi).count("1") + bin(dlo).count("1")
-                )
-        yield pd.DataFrame(out)
+    def row(iid, payload):
+        px = decode_bmp_array(payload)["px"]
+        dhi, dlo = image_dhash(px)
+        ahi, alo = image_ahash(px)
+        bits = bin(dhi).count("1") + bin(dlo).count("1")
+        yield iid, dhi, dlo, ahi, alo, bits
 
-    return images.select(
-        F.col(id_col).alias(id_col), F.col(payload_col).alias(payload_col)
-    ).mapInPandas(op, IMAGE_HASH_SCHEMA)
+    return map_rows(images.select(id_col, payload_col), row, IMAGE_HASH_SCHEMA)
 
 
 def banded_hamming_pairs(
@@ -176,7 +163,7 @@ def banded_hamming_pairs(
     # materialized ONCE: the self-join consumes `sig` on both sides,
     # and without the checkpoint the whole upstream signature plan —
     # for the catalog queries a REAL per-row codec encode→decode→hash
-    # Arrow stage — executes twice (plan audit: two MapInPandas
+    # Arrow stage — executes twice (plan audit: two MapInArrow
     # subtrees, no cross-branch reuse). The signature table is 5 longs
     # per (doc, band): bounded, cheap to store.
     sig = hashes.select(
@@ -252,34 +239,16 @@ def fixture_image_hashes(docs: DataFrame) -> DataFrame:
     """Synthesize the fixture BMP per doc (quadratic luma formula,
     R=G=B), push it through the REAL encode→decode→hash chain."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in IMAGE_HASH_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                payload = encode_bmp_array(
-                    _fixture_image(did), _IMG_W, _IMG_H
-                )
-                px = decode_bmp_array(payload)["px"]
-                dhi, dlo = image_dhash(px)
-                ahi, alo = image_ahash(px)
-                out["doc_id"].append(did)
-                out["dhash_hi"].append(dhi)
-                out["dhash_lo"].append(dlo)
-                out["ahash_hi"].append(ahi)
-                out["ahash_lo"].append(alo)
-                out["dhash_bits"].append(
-                    bin(dhi).count("1") + bin(dlo).count("1")
-                )
-        yield pd.DataFrame(out)
-
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id").repartition(par).mapInPandas(
-            op, IMAGE_HASH_SCHEMA
+    def row(did):
+        payload = encode_bmp_array(
+            _fixture_image(did), _IMG_W, _IMG_H
         )
-    )
+        px = decode_bmp_array(payload)["px"]
+        dhi, dlo = image_dhash(px)
+        ahi, alo = image_ahash(px)
+        yield (did, dhi, dlo, ahi, alo, bin(dhi).count("1") + bin(dlo).count("1"))
+
+    return map_rows(docs.select("doc_id"), row, IMAGE_HASH_SCHEMA, spread=True)
 
 
 # shared oracle scaffolding: per-doc luma at every pixel the two

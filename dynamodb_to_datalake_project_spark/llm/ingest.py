@@ -23,6 +23,7 @@ All are single-Arrow-stage shapes over raw bytes: linear in payload,
 parallel by file/partition, no shuffle."""
 
 from __future__ import annotations
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 _BOMS = (
     (b"\xef\xbb\xbf", "utf-8", 3),
@@ -181,9 +182,7 @@ def encoding_detect_stats(docs):
     utf-16le+BOM / utf-16be+BOM / utf-16le WITHOUT BOM — the
     heuristic branch), detected, decoded, and round-trip-pinned."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -196,39 +195,29 @@ def encoding_detect_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                branch = did % 5
-                if branch == 0:
-                    raw = text.encode("utf-8")
-                elif branch == 1:
-                    raw = b"\xef\xbb\xbf" + text.encode("utf-8")
-                elif branch == 2:
-                    raw = b"\xff\xfe" + text.encode("utf-16-le")
-                elif branch == 3:
-                    raw = b"\xfe\xff" + text.encode("utf-16-be")
-                else:
-                    raw = text.encode("utf-16-le")
-                d = detect_encoding(raw)
-                assert d["text"] == text
-                out["doc_id"].append(did)
-                out["encoding"].append(d["encoding"])
-                out["had_bom"].append(int(d["had_bom"]))
-                out["n_bytes"].append(len(raw))
-                out["text_md5"].append(
-                    hashlib.md5(d["text"].encode("utf-8")).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        branch = did % 5
+        if branch == 0:
+            raw = text.encode("utf-8")
+        elif branch == 1:
+            raw = b"\xef\xbb\xbf" + text.encode("utf-8")
+        elif branch == 2:
+            raw = b"\xff\xfe" + text.encode("utf-16-le")
+        elif branch == 3:
+            raw = b"\xfe\xff" + text.encode("utf-16-be")
+        else:
+            raw = text.encode("utf-16-le")
+        d = detect_encoding(raw)
+        assert d["text"] == text
+        yield (
+            did,
+            d["encoding"],
+            int(d["had_bom"]),
+            len(raw),
+            hashlib.md5(d["text"].encode("utf-8")).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def csv_sniff_stats(docs):
@@ -238,9 +227,7 @@ def csv_sniff_stats(docs):
     the header rule has signal), sniffed and parsed; the recovered
     cell grid is md5-pinned against the formula."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -254,47 +241,37 @@ def csv_sniff_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                n = len(words)
-                d = _CANDIDATES[did % 4]
-                rows = max(1, n // 3)
-                grid = []
-                lines = [d.join(["c0", "c1", "c2", "c3"])]
-                for i in range(rows):
-                    c0 = words[(3 * i) % n]
-                    c1 = words[(3 * i + 1) % n] + d + 'q"t'
-                    c2 = words[(3 * i + 2) % n]
-                    c3 = str(i)
-                    grid.append([c0, c1, c2, c3])
-                    q = '"' + c1.replace('"', '""') + '"'
-                    lines.append(d.join([c0, q, c2, c3]))
-                csv_text = "\r\n".join(lines) + "\r\n"
-                dd = sniff_csv_dialect(csv_text)
-                assert dd["delimiter"] == d and dd["has_header"]
-                parsed = parse_csv_rfc4180(csv_text, delim=d)
-                assert parsed[1:] == grid
-                flat = "\x1f".join(c for r in grid for c in r)
-                out["doc_id"].append(did)
-                out["delimiter_index"].append(dd["delimiter_index"])
-                out["has_header"].append(int(dd["has_header"]))
-                out["n_rows"].append(len(parsed) - 1)
-                out["n_cols"].append(dd["n_cols"])
-                out["cells_md5"].append(
-                    hashlib.md5(flat.encode()).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        n = len(words)
+        d = _CANDIDATES[did % 4]
+        rows = max(1, n // 3)
+        grid = []
+        lines = [d.join(["c0", "c1", "c2", "c3"])]
+        for i in range(rows):
+            c0 = words[(3 * i) % n]
+            c1 = words[(3 * i + 1) % n] + d + 'q"t'
+            c2 = words[(3 * i + 2) % n]
+            c3 = str(i)
+            grid.append([c0, c1, c2, c3])
+            q = '"' + c1.replace('"', '""') + '"'
+            lines.append(d.join([c0, q, c2, c3]))
+        csv_text = "\r\n".join(lines) + "\r\n"
+        dd = sniff_csv_dialect(csv_text)
+        assert dd["delimiter"] == d and dd["has_header"]
+        parsed = parse_csv_rfc4180(csv_text, delim=d)
+        assert parsed[1:] == grid
+        flat = "\x1f".join(c for r in grid for c in r)
+        yield (
+            did,
+            dd["delimiter_index"],
+            int(dd["has_header"]),
+            len(parsed) - 1,
+            dd["n_cols"],
+            hashlib.md5(flat.encode()).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def _register() -> None:

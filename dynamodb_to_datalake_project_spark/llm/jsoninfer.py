@@ -25,7 +25,11 @@ is the universal fallback)."""
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, functions as F
+
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 
 def json_type_observations(df: DataFrame, group_col: str, json_col: str) -> DataFrame:
@@ -34,9 +38,7 @@ def json_type_observations(df: DataFrame, group_col: str, json_col: str) -> Data
     array elements (element observations are deduplicated per row —
     presence, not multiplicity). Malformed JSON rows are quarantined
     as path `$` type `MALFORMED` instead of failing the scan."""
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -71,28 +73,16 @@ def json_type_observations(df: DataFrame, group_col: str, json_col: str) -> Data
             for el in v:
                 walk(el, f"{path}[*]", out)
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        import json as _json
+    def row(g, blob):
+        obs: set = set()
+        try:
+            walk(json.loads(blob), "$", obs)
+        except (ValueError, RecursionError):
+            obs = {("$", "MALFORMED")}
+        for p, t in obs:
+            yield g, p, t
 
-        for pdf in batches:
-            grps, paths, types = [], [], []
-            for g, blob in zip(pdf[group_col], pdf[json_col]):
-                obs: set = set()
-                try:
-                    walk(_json.loads(blob), "$", obs)
-                except (ValueError, RecursionError):
-                    obs = {("$", "MALFORMED")}
-                for p, t in obs:
-                    grps.append(g)
-                    paths.append(p)
-                    types.append(t)
-            yield _pd.DataFrame(
-                {"grp": grps, "path": paths, "jtype": types}
-            )
-
-    return df.select(
-        F.col(group_col).alias(group_col), F.col(json_col)
-    ).mapInPandas(op, schema_t)
+    return map_rows(df.select(group_col, json_col), row, schema_t)
 
 
 def infer_json_schema(df: DataFrame, group_col: str, json_col: str) -> DataFrame:

@@ -28,6 +28,7 @@ from dynamodb_to_datalake_project_spark.llm.bitio import (
     uvarint,
     zigzag,
 )
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 
 def _zz(v: int) -> bytes:
@@ -233,27 +234,18 @@ def read_kafka_segment_stream(
         ]
     )
 
-    def op(batches):
-        import pandas as _pd
+    def row(content):
+        for b in parse_kafka_segment(content):
+            for r in b["records"]:
+                key, value = r["key"], r["value"]
+                yield (
+                    r["offset"],
+                    r["timestamp"],
+                    None if key is None else key.decode("utf-8"),
+                    None if value is None else value.decode("utf-8"),
+                )
 
-        for pdf in batches:
-            cols: "dict[str, list]" = {f.name: [] for f in rec_schema.fields}
-            for content in pdf["content"]:
-                for b in parse_kafka_segment(bytes(content)):
-                    for r in b["records"]:
-                        cols["kafka_offset"].append(r["offset"])
-                        cols["kafka_ts"].append(r["timestamp"])
-                        cols["kafka_key"].append(
-                            None if r["key"] is None
-                            else r["key"].decode("utf-8")
-                        )
-                        cols["kafka_value"].append(
-                            None if r["value"] is None
-                            else r["value"].decode("utf-8")
-                        )
-            yield _pd.DataFrame(cols)
-
-    decoded = raw.mapInPandas(op, rec_schema)
+    decoded = map_rows(raw, row, rec_schema)
     return decoded.select(
         "kafka_offset",
         "kafka_ts",
@@ -312,9 +304,7 @@ def kafka_segment_stats(docs):
     ceil(n/16)-record batches in one segment, walked back with CRC
     verification."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -328,59 +318,45 @@ def kafka_segment_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                ops = ["I", "U", "D"]
-                segment = bytearray()
-                for b0 in range(0, len(words), 16):
-                    chunk = words[b0 : b0 + 16]
-                    recs = [
-                        {
-                            "key": str(b0 + j).encode(),
-                            "value": w.encode(),
-                            "ts_delta": j,
-                            "headers": [("op", ops[(b0 + j) % 3].encode())],
-                        }
-                        for j, w in enumerate(chunk)
-                    ]
-                    segment += encode_kafka_batch(recs, base_offset=b0)
-                parsed = parse_kafka_segment(bytes(segment))
-                recovered = [
-                    r["value"].decode()
-                    for b in parsed
-                    for r in b["records"]
-                ]
-                assert recovered == words  # segment roundtrip
-                n_del = sum(
-                    1
-                    for b in parsed
-                    for r in b["records"]
-                    if dict(r["headers"])["op"] == b"D"
-                )
-                out["doc_id"].append(did)
-                out["n_batches"].append(len(parsed))
-                out["n_records"].append(
-                    sum(b["n_records"] for b in parsed)
-                )
-                out["last_offset"].append(
-                    parsed[-1]["records"][-1]["offset"]
-                )
-                out["n_deletes"].append(n_del)
-                out["values_md5"].append(
-                    hashlib.md5(" ".join(recovered).encode()).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        ops = ["I", "U", "D"]
+        segment = bytearray()
+        for b0 in range(0, len(words), 16):
+            chunk = words[b0 : b0 + 16]
+            recs = [
+                {
+                    "key": str(b0 + j).encode(),
+                    "value": w.encode(),
+                    "ts_delta": j,
+                    "headers": [("op", ops[(b0 + j) % 3].encode())],
+                }
+                for j, w in enumerate(chunk)
+            ]
+            segment += encode_kafka_batch(recs, base_offset=b0)
+        parsed = parse_kafka_segment(bytes(segment))
+        recovered = [
+            r["value"].decode()
+            for b in parsed
+            for r in b["records"]
+        ]
+        assert recovered == words  # segment roundtrip
+        n_del = sum(
+            1
+            for b in parsed
+            for r in b["records"]
+            if dict(r["headers"])["op"] == b"D"
+        )
+        yield (
+            did,
+            len(parsed),
+            sum(b["n_records"] for b in parsed),
+            parsed[-1]["records"][-1]["offset"],
+            n_del,
+            hashlib.md5(" ".join(recovered).encode()).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def _register() -> None:

@@ -26,6 +26,7 @@ term order, which is what makes the cross-engine hash equality
 possible at all."""
 
 from __future__ import annotations
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 #: EM initialization (documented constants; round count fixed at 3)
 _INIT = {
@@ -148,9 +149,7 @@ def linkage_em_stats(docs):
     then the fixed 3-round Fellegi-Sunter EM. Emits the learned
     parameters RAW (selection/divisions identical in both engines)
     plus the predicted-match census at posterior > 0.5."""
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -165,71 +164,42 @@ def linkage_em_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        empty_ids: list[int] = []
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                if not words:
-                    # n = 0 makes EM's tot_m / n a 0/0: the DuckDB
-                    # oracle yields NULL parameters there (DOUBLE
-                    # 0/0 -> NULL), and NULL > 0.5 is never true,
-                    # so pred = 0. Emit the same sentinel row
-                    # instead of raising ZeroDivisionError.
-                    empty_ids.append(did)
-                    continue
-                n = len(words)
-                counts = [0] * 8
-                pats = []
-                for i in range(n):
-                    a_w = words[i]
-                    if i % 3 == 0:
-                        p = 7
-                    elif i % 3 == 1:
-                        p = 4  # A vs A+'x': first char only
-                    else:
-                        b_w = words[(i + 7) % n]
-                        a1 = 1 if a_w[:1] == b_w[:1] else 0
-                        a2 = 1 if len(a_w) == len(b_w) else 0
-                        a3 = 1 if a_w == b_w else 0
-                        p = a1 * 4 + a2 * 2 + a3
-                    counts[p] += 1
-                    pats.append(p)
-                fit = em_fit(counts)
-                pred = sum(
-                    counts[p] for p in range(8)
-                    if fit["posterior"][p] > 0.5
-                )
-                out["doc_id"].append(did)
-                out["lam"].append(fit["lam"])
-                for k in range(3):
-                    out[f"m{k + 1}"].append(fit["m"][k])
-                    out[f"u{k + 1}"].append(fit["u"][k])
-                out["n_pairs"].append(n)
-                out["n_match_pred"].append(pred)
-        yield _pd.DataFrame(out)
-        if empty_ids:
-            sent = {
-                "doc_id": _pd.array(empty_ids, dtype="int64"),
-                **{
-                    c: _pd.array([None] * len(empty_ids), dtype=object)
-                    for c in ("lam", "m1", "m2", "m3", "u1", "u2", "u3")
-                },
-                "n_pairs": _pd.array([0] * len(empty_ids), dtype="int64"),
-                "n_match_pred": _pd.array(
-                    [0] * len(empty_ids), dtype="int64"
-                ),
-            }
-            yield _pd.DataFrame(sent)
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        if not words:
+            # n = 0 makes EM's tot_m / n a 0/0: the DuckDB
+            # oracle yields NULL parameters there (DOUBLE
+            # 0/0 -> NULL), and NULL > 0.5 is never true,
+            # so pred = 0. Emit the same sentinel row
+            # instead of raising ZeroDivisionError.
+            yield did, *([None] * 7), 0, 0
+            return
+        n = len(words)
+        counts = [0] * 8
+        pats = []
+        for i in range(n):
+            a_w = words[i]
+            if i % 3 == 0:
+                p = 7
+            elif i % 3 == 1:
+                p = 4  # A vs A+'x': first char only
+            else:
+                b_w = words[(i + 7) % n]
+                a1 = 1 if a_w[:1] == b_w[:1] else 0
+                a2 = 1 if len(a_w) == len(b_w) else 0
+                a3 = 1 if a_w == b_w else 0
+                p = a1 * 4 + a2 * 2 + a3
+            counts[p] += 1
+            pats.append(p)
+        fit = em_fit(counts)
+        pred = sum(
+            counts[p] for p in range(8)
+            if fit["posterior"][p] > 0.5
+        )
+        m, u = fit["m"], fit["u"]
+        yield did, fit["lam"], *m[:3], *u[:3], n, pred
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def _oracle_sql() -> str:

@@ -17,15 +17,14 @@ Reference parity: none — north-star multimodal-ingest tooling
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
 from dynamodb_to_datalake_project_spark.llm.bitio import crc32_msb
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 TS_PACKET = 188
 _PAYLOAD = TS_PACKET - 4
@@ -249,53 +248,48 @@ def mpegts_stats(docs: DataFrame) -> DataFrame:
     AAC declarations, PES counts/sizes from integer formulas; ES
     payloads opaque), demux it with `parse_mpegts` — which re-verifies
     every PSI CRC and continuity counter — one row per elementary
-    stream. Arrow `mapInPandas`, map-only."""
+    stream. Arrow `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in TS_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
+    def row(did):
 
-                def pes_list(npes, base, mul):
-                    return [
-                        bytes([(did * mul + j * 31) % 256])
-                        + bytes([(did + j) % 256])
-                        * (base + (did * 7 + j * 13) % 300)
-                        for j in range(npes)
-                    ]
+        def pes_list(npes, base, mul):
+            return [
+                bytes([(did * mul + j * 31) % 256])
+                + bytes([(did + j) % 256])
+                * (base + (did * 7 + j * 13) % 300)
+                for j in range(npes)
+            ]
 
-                nv, na = 2 + did % 3, 3 + did % 4
-                payload = encode_mpegts(
-                    [
-                        {
-                            "pid": 0x100,
-                            "stream_type": 0x1B,  # H.264
-                            "stream_id": 0xE0,
-                            "pes": pes_list(nv, 199, 3),
-                        },
-                        {
-                            "pid": 0x101,
-                            "stream_type": 0x0F,  # AAC
-                            "stream_id": 0xC0,
-                            "pes": pes_list(na, 49, 11),
-                        },
-                    ]
-                )
-                d = parse_mpegts(payload)
-                for s in d["streams"]:
-                    out["doc_id"].append(did)
-                    out["pid"].append(s["pid"])
-                    out["stream_type"].append(s["stream_type"])
-                    out["n_pes"].append(s["n_pes"])
-                    out["ts_packets"].append(s["ts_packets"])
-                    out["es_bytes"].append(s["es_bytes"])
-                    out["first_byte_sum"].append(s["first_byte_sum"])
-        yield pd.DataFrame(out)
+        nv, na = 2 + did % 3, 3 + did % 4
+        payload = encode_mpegts(
+            [
+                {
+                    "pid": 0x100,
+                    "stream_type": 0x1B,  # H.264
+                    "stream_id": 0xE0,
+                    "pes": pes_list(nv, 199, 3),
+                },
+                {
+                    "pid": 0x101,
+                    "stream_type": 0x0F,  # AAC
+                    "stream_id": 0xC0,
+                    "pes": pes_list(na, 49, 11),
+                },
+            ]
+        )
+        d = parse_mpegts(payload)
+        for s in d["streams"]:
+            yield (
+                did,
+                s["pid"],
+                s["stream_type"],
+                s["n_pes"],
+                s["ts_packets"],
+                s["es_bytes"],
+                s["first_byte_sum"],
+            )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, TS_STATS_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, TS_STATS_SCHEMA, spread=True)
 
 
 @query(

@@ -1,9 +1,11 @@
 """Multimodal columns: opaque `binary` payloads + typed metadata, with
-feature extraction over `mapInPandas`.
+feature extraction in per-document Arrow row kernels (`rowmap.map_rows`).
 
 The Spark-side plumbing is real and tested: binary column construction,
-metadata structs, Arrow-batched `mapInPandas` with an explicit output
-schema, and partition-parallel execution. Four codecs are REAL with
+metadata structs, one `mapInArrow` stage per codec whose row function
+sees exact Python values (a null is `None`, a long stays exact) and
+yields tuples typed by an explicit output schema, and
+partition-parallel execution. Four codecs are REAL with
 zero third-party deps — RIFF/WAVE 16-bit PCM (`encode_wav`/
 `decode_wav`), 24-bit BI_RGB BMP (`encode_bmp`/`decode_bmp`, plus a
 genuine nearest-neighbor `resize_image`), 8-bit truecolor PNG
@@ -50,9 +52,7 @@ also compute — proving the Arrow round-trip bit-for-bit.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -65,6 +65,7 @@ from dynamodb_to_datalake_project_spark.llm.bitio import (
     crc16,
     crc32_msb,
 )
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 #: canonical multimodal record shape: opaque payload + typed metadata
 MULTIMODAL_SCHEMA = T.StructType(
@@ -846,7 +847,7 @@ _JPEG_IDCT_A = None
 def _jpeg_huff_table(bits: "list[int]", values: "list[int]") -> list:
     """Canonical Huffman table as its cache entry [lut, peek]: lut =
     {(code_length, code): value}; peek = the (value, length) flat
-    peek-16 lists `_jpeg_fast_lut` fills on first decode use. Cached
+    peek-16 tables `_jpeg_fast_lut` fills on first decode use. Cached
     on the raw (bits, values) bytes; past the cap the oldest entry
     makes room, so a table seen again is always a hit."""
     key = bytes(bits) + bytes(values)
@@ -880,11 +881,6 @@ def _jpeg_idct_matrix():
                 a[u, x] = 0.5 * c * math.cos((2 * x + 1) * u * math.pi / 16)
         _JPEG_IDCT_A = a
     return _JPEG_IDCT_A
-
-
-def _jpeg_extend(v: int, t: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map t-bit magnitude to signed value."""
-    return v - (1 << t) + 1 if t and v < (1 << (t - 1)) else v
 
 
 def _jpeg_entropy_segments(
@@ -934,20 +930,23 @@ def _jpeg_entropy_segments(
     return segs
 
 
-def _jpeg_fast_lut(table: list) -> "tuple[list, list]":
-    """The (value, length) flat peek-16 lists of a `_jpeg_huff_table`
-    entry, built once and kept in the entry."""
+def _jpeg_fast_lut(table: list) -> "tuple[bytes, bytes]":
+    """The (value, length) flat peek-16 tables of a `_jpeg_huff_table`
+    entry, built once and kept in the entry. Huffman symbols are 8-bit
+    and code lengths at most 16, so each table is one 64 KiB `bytes`
+    (the 256-entry cache stays near 32 MiB per process); indexing it
+    returns the same small ints a list would. Length 0 marks a code no
+    symbol owns."""
     if table[1] is None:
-        import numpy as np
-
-        val = np.zeros(65536, np.int32)
-        ln = np.zeros(65536, np.int32)
+        val = bytearray(65536)
+        ln = bytearray(65536)
         for (length, code), v in table[0].items():
             lo = code << (16 - length)
-            hi = lo + (1 << (16 - length))
-            val[lo:hi] = v
-            ln[lo:hi] = length
-        table[1] = (val.tolist(), ln.tolist())
+            hi = min(lo + (1 << (16 - length)), 65536)
+            if lo < hi:  # an overfull (malformed) DHT's codes run past 16 bits
+                val[lo:hi] = bytes([v]) * (hi - lo)
+                ln[lo:hi] = bytes([length]) * (hi - lo)
+        table[1] = (bytes(val), bytes(ln))
     return table[1]
 
 
@@ -1987,27 +1986,17 @@ def to_binary_docs(docs: DataFrame, mime: str = "text/plain") -> DataFrame:
 def extract_features(binary_docs: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
-    `mapInPandas` processes whole Arrow record batches per partition —
+    `map_rows` processes whole Arrow record batches per partition —
     the shape a real decode (image resize, audio frame-sample) plugs
     into. The fake feature is deterministic so tests/oracles can verify
     the full binary round-trip.
     """
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": payloads.map(len),
-                    "checksum": payloads.map(lambda b: hashlib.md5(b).hexdigest()),
-                    "fake_feature": payloads.map(
-                        lambda b: (len(b) * 7 + (b[0] if len(b) else 0)) % 997
-                    ),
-                }
-            )
+    def row(doc_id, payload):
+        feature = (len(payload) * 7 + (payload[0] if payload else 0)) % 997
+        yield doc_id, len(payload), hashlib.md5(payload).hexdigest(), feature
 
-    return binary_docs.mapInPandas(op, FEATURE_SCHEMA)
+    return map_rows(binary_docs.select("doc_id", "payload"), row, FEATURE_SCHEMA)
 
 
 @query(
@@ -2022,7 +2011,7 @@ def extract_features(binary_docs: DataFrame) -> DataFrame:
     """,
 )
 def q_multimodal_features(spark, sf_dir):
-    """documents → binary payload + metadata → mapInPandas feature
+    """documents → binary payload + metadata → map_rows feature
     extraction; the SQL oracle recomputes every feature from the text,
     so a single flipped byte anywhere in the Arrow round-trip fails."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2056,29 +2045,27 @@ def wav_roundtrip_stats(docs: DataFrame, max_samples: int = 256) -> DataFrame:
     header fields, frame count, payload size, AND every PCM sample
     survived the WAV container bit-for-bit."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {k.name: [] for k in WAV_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                # NULL n_chars arrives as None/NaN — treat as an empty
-                # payload (0 samples), mirroring the oracle's coalesce
-                n = 0 if pd.isna(n_chars) else min(int(n_chars), max_samples)
-                samples = [
-                    ((int(doc_id) * 131 + i * 7919) % 65536) - 32768
-                    for i in range(n)
-                ]
-                payload = encode_wav(samples)
-                feat = decode_wav(payload)
-                out["doc_id"].append(int(doc_id))
-                out["n_channels"].append(feat["n_channels"])
-                out["sample_rate"].append(feat["sample_rate"])
-                out["n_samples"].append(feat["n_samples"])
-                out["n_payload_bytes"].append(len(payload))
-                out["sum_abs"].append(feat["sum_abs"])
-                out["peak"].append(feat["peak"])
-        yield pd.DataFrame(out)
+    def row(doc_id, n_chars):
+        # NULL n_chars is None — treat as an empty
+        # payload (0 samples), mirroring the oracle's coalesce
+        n = 0 if n_chars is None else min(n_chars, max_samples)
+        samples = [
+            ((doc_id * 131 + i * 7919) % 65536) - 32768
+            for i in range(n)
+        ]
+        payload = encode_wav(samples)
+        feat = decode_wav(payload)
+        yield (
+            doc_id,
+            feat["n_channels"],
+            feat["sample_rate"],
+            feat["n_samples"],
+            len(payload),
+            feat["sum_abs"],
+            feat["peak"],
+        )
 
-    return docs.select("doc_id", "n_chars").mapInPandas(op, WAV_STATS_SCHEMA)
+    return map_rows(docs.select("doc_id", "n_chars"), row, WAV_STATS_SCHEMA)
 
 
 @query(
@@ -2130,39 +2117,32 @@ def wav_tags_stats(docs: DataFrame) -> DataFrame:
     """Per document: a real 16-bit PCM WAV with a LIST/INFO tag chunk
     appended (RIFF size patched), the chunk walk run back over it, and
     the stdlib decode re-run on the tagged payload to prove the tags
-    leave the PCM frames intact. Arrow `mapInPandas`, map-only."""
+    leave the PCM frames intact. Arrow `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in WAV_TAGS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id, lang in zip(pdf["doc_id"], pdf["lang"]):
-                did = int(doc_id)
-                n = 2 + did % 3
-                samples = [((did * 131 + i) % 65536) - 32768 for i in range(n)]
-                fields = [("INAM", f"doc-{did}"), ("ILNG", str(lang))]
-                if did % 5 == 0:
-                    fields.append(("IART", f"artist-{did % 7}"))
-                tagged = wav_append_info(encode_wav(samples), fields)
-                d = parse_wav_info(tagged)
-                feat = decode_wav(tagged)  # stdlib decode still clean
-                if feat["n_samples"] != n:
-                    raise ValueError("wav: tag append corrupted frames")
-                tags = dict(d["info"])
-                out["doc_id"].append(did)
-                out["title"].append(tags.get("INAM"))
-                out["language"].append(tags.get("ILNG"))
-                out["artist"].append(tags.get("IART"))
-                out["sample_rate"].append(d["fmt"]["sample_rate"])
-                out["n_samples"].append(feat["n_samples"])
-                out["data_bytes"].append(d["data_bytes"])
-                out["n_chunks"].append(d["n_chunks"])
-        yield pd.DataFrame(out)
+    def row(did, lang):
+        n = 2 + did % 3
+        samples = [((did * 131 + i) % 65536) - 32768 for i in range(n)]
+        fields = [("INAM", f"doc-{did}"), ("ILNG", str(lang))]
+        if did % 5 == 0:
+            fields.append(("IART", f"artist-{did % 7}"))
+        tagged = wav_append_info(encode_wav(samples), fields)
+        d = parse_wav_info(tagged)
+        feat = decode_wav(tagged)  # stdlib decode still clean
+        if feat["n_samples"] != n:
+            raise ValueError("wav: tag append corrupted frames")
+        tags = dict(d["info"])
+        yield (
+            did,
+            tags.get("INAM"),
+            tags.get("ILNG"),
+            tags.get("IART"),
+            d["fmt"]["sample_rate"],
+            feat["n_samples"],
+            d["data_bytes"],
+            d["n_chunks"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "lang").repartition(par).mapInPandas(op, WAV_TAGS_SCHEMA)
-    )
+    return map_rows(docs.select("doc_id", "lang"), row, WAV_TAGS_SCHEMA, spread=True)
 
 
 @query(
@@ -2220,39 +2200,30 @@ def flac_roundtrip_stats(docs: DataFrame, max_frames: int = 192) -> DataFrame:
         encode_flac,
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {k.name: [] for k in FLAC_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                did = int(doc_id)
-                n = 0 if pd.isna(n_chars) else min(int(n_chars), max_frames)
-                samples = []
-                for i in range(n):
-                    samples.append(((did * 131 + i * 7919) % 65536) - 32768)
-                    samples.append(((did * 37 + i * 101) % 65536) - 32768)
-                payload = encode_flac(samples, n_channels=2, block_size=64)
-                d = decode_flac_samples(payload)
-                dec = d["samples"]
-                out["doc_id"].append(did)
-                out["n_channels"].append(d["n_channels"])
-                out["sample_rate"].append(d["sample_rate"])
-                out["n_samples"].append(len(dec))
-                out["sum_abs"].append(sum(abs(s) for s in dec))
-                out["peak"].append(max((abs(s) for s in dec), default=0))
-                out["ord_checksum"].append(
-                    sum((i + 1) * s for i, s in enumerate(dec))
-                )
-        yield pd.DataFrame(out)
+    def row(did, n_chars):
+        n = 0 if n_chars is None else min(n_chars, max_frames)
+        samples = []
+        for i in range(n):
+            samples.append(((did * 131 + i * 7919) % 65536) - 32768)
+            samples.append(((did * 37 + i * 101) % 65536) - 32768)
+        payload = encode_flac(samples, n_channels=2, block_size=64)
+        d = decode_flac_samples(payload)
+        dec = d["samples"]
+        yield (
+            did,
+            d["n_channels"],
+            d["sample_rate"],
+            len(dec),
+            sum(abs(s) for s in dec),
+            max((abs(s) for s in dec), default=0),
+            sum((i + 1) * s for i, s in enumerate(dec)),
+        )
 
     # spread the Arrow batches across cores (same rationale as the
     # JPEG/WebP stats stages: real per-doc Python codec work, 1-2
     # parquet input splits)
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "n_chars")
-        .repartition(par)
-        .mapInPandas(op, FLAC_STATS_SCHEMA)
+    return map_rows(
+        docs.select("doc_id", "n_chars"), row, FLAC_STATS_SCHEMA, spread=True
     )
 
 
@@ -2381,48 +2352,39 @@ def flac_tags_stats(docs: DataFrame) -> DataFrame:
     block spliced into the metadata chain, walked back out — tags AND
     STREAMINFO in one pass, then the full sample decode re-run on the
     tagged payload to prove the splice leaves the audio bit-exact.
-    Arrow `mapInPandas`, map-only."""
+    Arrow `map_rows`, map-only."""
     from dynamodb_to_datalake_project_spark.llm.flac import (
         decode_flac_samples,
         encode_flac,
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in FLAC_TAGS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id, lang, source in zip(
-                pdf["doc_id"], pdf["lang"], pdf["source"]
-            ):
-                did = int(doc_id)
-                n = 2 + did % 3
-                samples = [((did * 131 + i) % 65536) - 32768 for i in range(n)]
-                plain = encode_flac(samples, n_channels=1, block_size=64)
-                comments = [("TITLE", f"doc-{did}"), ("LANGUAGE", str(lang))]
-                if did % 4 == 0:
-                    comments.append(("SOURCE", str(source)))
-                body = _encode_comment_body("spark-graft flac", comments)
-                tagged = flac_insert_metadata(plain, [(4, body)])
-                d = parse_flac_metadata(tagged)
-                dec = decode_flac_samples(tagged)  # audio still bit-exact
-                if dec["samples"] != samples:
-                    raise ValueError("flac: tag splice corrupted audio")
-                tags = dict(d["comments"]["comments"])
-                out["doc_id"].append(did)
-                out["vendor"].append(d["comments"]["vendor"])
-                out["n_comments"].append(d["comments"]["n_comments"])
-                out["title"].append(tags.get("TITLE"))
-                out["language"].append(tags.get("LANGUAGE"))
-                out["source"].append(tags.get("SOURCE"))
-                out["sample_rate"].append(d["streaminfo"]["sample_rate"])
-                out["total_samples"].append(d["streaminfo"]["total_samples"])
-        yield pd.DataFrame(out)
+    def row(did, lang, source):
+        n = 2 + did % 3
+        samples = [((did * 131 + i) % 65536) - 32768 for i in range(n)]
+        plain = encode_flac(samples, n_channels=1, block_size=64)
+        comments = [("TITLE", f"doc-{did}"), ("LANGUAGE", str(lang))]
+        if did % 4 == 0:
+            comments.append(("SOURCE", str(source)))
+        body = _encode_comment_body("spark-graft flac", comments)
+        tagged = flac_insert_metadata(plain, [(4, body)])
+        d = parse_flac_metadata(tagged)
+        dec = decode_flac_samples(tagged)  # audio still bit-exact
+        if dec["samples"] != samples:
+            raise ValueError("flac: tag splice corrupted audio")
+        tags = dict(d["comments"]["comments"])
+        yield (
+            did,
+            d["comments"]["vendor"],
+            d["comments"]["n_comments"],
+            tags.get("TITLE"),
+            tags.get("LANGUAGE"),
+            tags.get("SOURCE"),
+            d["streaminfo"]["sample_rate"],
+            d["streaminfo"]["total_samples"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "lang", "source")
-        .repartition(par)
-        .mapInPandas(op, FLAC_TAGS_SCHEMA)
+    return map_rows(
+        docs.select("doc_id", "lang", "source"), row, FLAC_TAGS_SCHEMA, spread=True
     )
 
 
@@ -2487,38 +2449,35 @@ def bmp_roundtrip_stats(docs: DataFrame, max_chars: int = 126) -> DataFrame:
 
     import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in IMAGE_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                did = int(doc_id)
-                # clamp BOTH ends: NULL and negative n_chars (corrupt
-                # metadata) degrade to the minimal 7x1 image, mirroring
-                # the oracle's greatest(0, least(...)) — never a
-                # negative height crashing the Arrow batch
-                n = 0 if pd.isna(n_chars) else max(0, min(int(n_chars), max_chars))
-                h = n // 7 + 1
-                # deterministic pixel grid as one vectorized expression
-                p = np.arange(7 * h, dtype=np.int64)[:, None]
-                c = np.arange(3, dtype=np.int64)[None, :]
-                px = ((did * 131 + p * 7919 + c * 104729) % 256).reshape(h, 7, 3)
-                payload = encode_bmp_array(px, 7, h)
-                img = decode_bmp_array(payload)
-                flat = img["px"].astype(np.int64)
-                resized = resize_image(payload, 3, 2)
-                rflat = decode_bmp_array(resized)["px"].astype(np.int64)
-                out["doc_id"].append(did)
-                out["width"].append(img["width"])
-                out["height"].append(img["height"])
-                out["n_pixels"].append(img["width"] * img["height"])
-                out["n_payload_bytes"].append(len(payload))
-                out["sum_rgb"].append(int(flat.sum()))
-                out["peak"].append(int(flat.max()))
-                out["n_resized_bytes"].append(len(resized))
-                out["resized_sum"].append(int(rflat.sum()))
-        yield pd.DataFrame(out)
+    def row(did, n_chars):
+        # clamp BOTH ends: NULL and negative n_chars (corrupt
+        # metadata) degrade to the minimal 7x1 image, mirroring
+        # the oracle's greatest(0, least(...)) — never a
+        # negative height crashing the Arrow batch
+        n = 0 if n_chars is None else max(0, min(n_chars, max_chars))
+        h = n // 7 + 1
+        # deterministic pixel grid as one vectorized expression
+        p = np.arange(7 * h, dtype=np.int64)[:, None]
+        c = np.arange(3, dtype=np.int64)[None, :]
+        px = ((did * 131 + p * 7919 + c * 104729) % 256).reshape(h, 7, 3)
+        payload = encode_bmp_array(px, 7, h)
+        img = decode_bmp_array(payload)
+        flat = img["px"].astype(np.int64)
+        resized = resize_image(payload, 3, 2)
+        rflat = decode_bmp_array(resized)["px"].astype(np.int64)
+        yield (
+            did,
+            img["width"],
+            img["height"],
+            img["width"] * img["height"],
+            len(payload),
+            int(flat.sum()),
+            int(flat.max()),
+            len(resized),
+            int(rflat.sum()),
+        )
 
-    return docs.select("doc_id", "n_chars").mapInPandas(op, IMAGE_STATS_SCHEMA)
+    return map_rows(docs.select("doc_id", "n_chars"), row, IMAGE_STATS_SCHEMA)
 
 
 @query(
@@ -2598,60 +2557,53 @@ def jpeg_roundtrip_stats(docs: DataFrame) -> DataFrame:
 
     import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in JPEG_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                wb = 2 + did % 2
-                w, h = 8 * wb, 16
-                k = np.arange(2 * wb, dtype=np.int64)
-                cols = np.stack(
-                    [
-                        (did * 31 + k * 41) % 199 + 17,
-                        (did * 37 + k * 43) % 199 + 17,
-                        (did * 29 + k * 47) % 199 + 17,
-                    ],
-                    axis=1,
-                )  # (2*wb, 3)
-                px = (
-                    cols.reshape(2, wb, 3)[:, None, :, None, :]
-                    .repeat(8, axis=1)
-                    .repeat(8, axis=3)
-                    .reshape(h, w, 3)
-                    .astype(np.uint8)
-                )
-                payload = encode_jpeg(px, w, h, quality=95)
-                img = decode_jpeg_array(payload)
-                flat = img["px"].astype(np.int64)
-                bv = flat.reshape(2, 8, wb, 8, 3)
-                ptp = bv.max(axis=(1, 3)) - bv.min(axis=(1, 3))  # (2, wb, 3)
-                uniform = int((ptp.max(axis=2) == 0).sum())
-                tl = bv[:, 0, :, 0, :].reshape(2 * wb, 3)  # block colors
-                weights = np.arange(1, 2 * wb + 1, dtype=np.int64)
-                checksum = int(
-                    (weights * (tl[:, 0] + 2 * tl[:, 1] + 3 * tl[:, 2])).sum()
-                )
-                out["doc_id"].append(did)
-                out["width"].append(img["width"])
-                out["height"].append(img["height"])
-                out["n_pixels"].append(img["width"] * img["height"])
-                out["sum_rgb"].append(int(flat.sum()))
-                out["peak"].append(int(flat.max()))
-                out["block_checksum"].append(checksum)
-                out["uniform_blocks"].append(uniform)
-        yield pd.DataFrame(out)
+    def row(did):
+        wb = 2 + did % 2
+        w, h = 8 * wb, 16
+        k = np.arange(2 * wb, dtype=np.int64)
+        cols = np.stack(
+            [
+                (did * 31 + k * 41) % 199 + 17,
+                (did * 37 + k * 43) % 199 + 17,
+                (did * 29 + k * 47) % 199 + 17,
+            ],
+            axis=1,
+        )  # (2*wb, 3)
+        px = (
+            cols.reshape(2, wb, 3)[:, None, :, None, :]
+            .repeat(8, axis=1)
+            .repeat(8, axis=3)
+            .reshape(h, w, 3)
+            .astype(np.uint8)
+        )
+        payload = encode_jpeg(px, w, h, quality=95)
+        img = decode_jpeg_array(payload)
+        flat = img["px"].astype(np.int64)
+        bv = flat.reshape(2, 8, wb, 8, 3)
+        ptp = bv.max(axis=(1, 3)) - bv.min(axis=(1, 3))  # (2, wb, 3)
+        uniform = int((ptp.max(axis=2) == 0).sum())
+        tl = bv[:, 0, :, 0, :].reshape(2 * wb, 3)  # block colors
+        weights = np.arange(1, 2 * wb + 1, dtype=np.int64)
+        checksum = int(
+            (weights * (tl[:, 0] + 2 * tl[:, 1] + 3 * tl[:, 2])).sum()
+        )
+        yield (
+            did,
+            img["width"],
+            img["height"],
+            img["width"] * img["height"],
+            int(flat.sum()),
+            int(flat.max()),
+            checksum,
+            uniform,
+        )
 
     # spread the Arrow batches across all cores BEFORE the map: the
     # codec costs ~1.3 ms/doc of real Python DCT+Huffman work, and the
     # documents parquet arrives in 1-2 input splits — without this
     # exchange (1 long column, cheap) the whole corpus encodes on two
     # cores (measured 7.0 s -> sub-second at sf0.1/local[32])
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id").repartition(par).mapInPandas(op, JPEG_STATS_SCHEMA)
-    )
+    return map_rows(docs.select("doc_id"), row, JPEG_STATS_SCHEMA, spread=True)
 
 
 @query(
@@ -2717,53 +2669,45 @@ def jpeg_exif_stats(docs: DataFrame) -> DataFrame:
     """Synthesize a real 8x8 baseline JPEG per document, splice in a
     conformant APP1 Exif segment (byte order alternating II/MM by
     doc parity — both wire dialects exercised at every batch), and
-    extract the routing metadata with the TIFF IFD walk. Arrow
-    `mapInPandas`, map-only."""
+    extract the routing metadata with the TIFF IFD walk. Arrow row
+    kernel (`map_rows`), map-only."""
     import struct as _struct
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        out: dict[str, list] = {f.name: [] for f in JPEG_EXIF_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                big = did % 2 == 1
-                e = ">" if big else "<"
-                dt = f"2024:01:{1 + did % 28:02d} {did % 24:02d}:00:00"
-                ifd0 = [
-                    (0x010E, *_exif_ascii(f"doc-{did}")),
-                    (0x0112, 3, 1, _struct.pack(e + "H", 1 + did % 8)),
-                    (0x0132, *_exif_ascii(dt)),
-                ]
-                exif_ifd = [
-                    (0x829A, 5, 1, _struct.pack(e + "II", 1, 50 + did % 200)),
-                    (0xA002, 4, 1, _struct.pack(e + "I", 8)),
-                    (0xA003, 4, 1, _struct.pack(e + "I", 8)),
-                ]
-                app1 = encode_exif_app1(ifd0, exif_ifd, big_endian=big)
-                px = np.full((8, 8, 3), (did * 31) % 199 + 17, dtype=np.uint8)
-                jpg = encode_jpeg(px, 8, 8, quality=95)
-                payload = jpg[:2] + app1 + jpg[2:]  # APP1 right after SOI
-                d = parse_jpeg_exif(payload)
-                out["doc_id"].append(did)
-                for k in (
-                    "byte_order",
-                    "n_ifd0",
-                    "orientation",
-                    "description",
-                    "pixel_x",
-                    "pixel_y",
-                    "exposure_num",
-                    "exposure_den",
-                ):
-                    out[k].append(d[k])
-                out["exif_datetime"].append(d["datetime"])
-        yield pd.DataFrame(out)
+    def row(did):
+        big = did % 2 == 1
+        e = ">" if big else "<"
+        dt = f"2024:01:{1 + did % 28:02d} {did % 24:02d}:00:00"
+        ifd0 = [
+            (0x010E, *_exif_ascii(f"doc-{did}")),
+            (0x0112, 3, 1, _struct.pack(e + "H", 1 + did % 8)),
+            (0x0132, *_exif_ascii(dt)),
+        ]
+        exif_ifd = [
+            (0x829A, 5, 1, _struct.pack(e + "II", 1, 50 + did % 200)),
+            (0xA002, 4, 1, _struct.pack(e + "I", 8)),
+            (0xA003, 4, 1, _struct.pack(e + "I", 8)),
+        ]
+        app1 = encode_exif_app1(ifd0, exif_ifd, big_endian=big)
+        px = np.full((8, 8, 3), (did * 31) % 199 + 17, dtype=np.uint8)
+        jpg = encode_jpeg(px, 8, 8, quality=95)
+        payload = jpg[:2] + app1 + jpg[2:]  # APP1 right after SOI
+        d = parse_jpeg_exif(payload)
+        yield (
+            did,
+            d["byte_order"],
+            d["n_ifd0"],
+            d["orientation"],
+            d["description"],
+            d["datetime"],
+            d["pixel_x"],
+            d["pixel_y"],
+            d["exposure_num"],
+            d["exposure_den"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, JPEG_EXIF_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, JPEG_EXIF_SCHEMA, spread=True)
 
 
 @query(
@@ -2817,59 +2761,52 @@ def png_text_stats(docs: DataFrame) -> DataFrame:
     """Per document: a real 2x2 PNG with tEXt + iTXt (compressed on
     every third doc) + pHYs spliced after IHDR, metadata walked back
     out, and the pixel decode re-run on the spliced payload to prove
-    the chunks leave the image bit-exact. Arrow `mapInPandas`,
+    the chunks leave the image bit-exact. Arrow `map_rows`,
     map-only."""
     import struct as _struct
     import zlib as _zlib
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        out: dict[str, list] = {f.name: [] for f in PNG_TEXT_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id, lang in zip(pdf["doc_id"], pdf["lang"]):
-                did = int(doc_id)
-                px = np.full((2, 2, 3), (did * 13) % 251, dtype=np.uint8)
-                plain = encode_png(px, 2, 2)
-                comp = 1 if did % 3 == 0 else 0
-                txt = f"c-{did}".encode("utf-8")
-                itxt = (
-                    b"Comment\x00"
-                    + bytes((comp, 0))
-                    + str(lang).encode("ascii")
-                    + b"\x00\x00"
-                    + (_zlib.compress(txt) if comp else txt)
-                )
-                phys = _struct.pack(">IIB", 2835 + did % 100, 2835, 1)
-                tagged = png_insert_chunks(
-                    plain,
-                    [
-                        (b"tEXt", b"Title\x00" + f"doc-{did}".encode("latin-1")),
-                        (b"iTXt", itxt),
-                        (b"pHYs", phys),
-                    ],
-                )
-                d = parse_png_metadata(tagged)
-                dec = decode_png_array(tagged)  # pixels still bit-exact
-                if not (dec["px"] == px).all():
-                    raise ValueError("png: text splice corrupted pixels")
-                tmap = {k: (lg, v) for k, lg, v in d["texts"]}
-                out["doc_id"].append(did)
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["title"].append(tmap["Title"][1])
-                out["comment"].append(tmap["Comment"][1])
-                out["comment_lang"].append(tmap["Comment"][0])
-                out["compressed"].append(comp)
-                out["ppu_x"].append(d["phys"]["ppu_x"])
-                out["n_chunks"].append(d["n_chunks"])
-        yield pd.DataFrame(out)
+    def row(did, lang):
+        px = np.full((2, 2, 3), (did * 13) % 251, dtype=np.uint8)
+        plain = encode_png(px, 2, 2)
+        comp = 1 if did % 3 == 0 else 0
+        txt = f"c-{did}".encode("utf-8")
+        itxt = (
+            b"Comment\x00"
+            + bytes((comp, 0))
+            + str(lang).encode("ascii")
+            + b"\x00\x00"
+            + (_zlib.compress(txt) if comp else txt)
+        )
+        phys = _struct.pack(">IIB", 2835 + did % 100, 2835, 1)
+        tagged = png_insert_chunks(
+            plain,
+            [
+                (b"tEXt", b"Title\x00" + f"doc-{did}".encode("latin-1")),
+                (b"iTXt", itxt),
+                (b"pHYs", phys),
+            ],
+        )
+        d = parse_png_metadata(tagged)
+        dec = decode_png_array(tagged)  # pixels still bit-exact
+        if not (dec["px"] == px).all():
+            raise ValueError("png: text splice corrupted pixels")
+        tmap = {k: (lg, v) for k, lg, v in d["texts"]}
+        yield (
+            did,
+            d["width"],
+            d["height"],
+            tmap["Title"][1],
+            tmap["Comment"][1],
+            tmap["Comment"][0],
+            comp,
+            d["phys"]["ppu_x"],
+            d["n_chunks"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "lang").repartition(par).mapInPandas(op, PNG_TEXT_SCHEMA)
-    )
+    return map_rows(docs.select("doc_id", "lang"), row, PNG_TEXT_SCHEMA, spread=True)
 
 
 @query(
@@ -2915,37 +2852,30 @@ def gif_meta_stats(docs: DataFrame) -> DataFrame:
     """Per document: a real GIF89a with a Comment Extension and a
     NETSCAPE2.0 loop count spliced after the global color table, the
     block walk run back over it, and the LZW pixel decode re-run on
-    the tagged payload. Arrow `mapInPandas`, map-only."""
+    the tagged payload. Arrow `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        out: dict[str, list] = {f.name: [] for f in GIF_META_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                px = np.full((2, 2, 3), (did * 29) % 251, dtype=np.uint8)
-                plain = encode_gif(px, 2, 2)
-                tagged = gif_insert_extensions(
-                    plain, comment=f"doc-{did}", loop_count=did % 100
-                )
-                d = parse_gif_extensions(tagged)
-                dec = decode_gif(tagged)  # LZW decode still clean
-                if dec["pixels"] != [tuple(int(c) for c in p) for row in px for p in row]:
-                    raise ValueError("gif: extension splice corrupted pixels")
-                out["doc_id"].append(did)
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["comment"].append(d["comment"])
-                out["loop_count"].append(d["loop_count"])
-                out["n_images"].append(d["n_images"])
-        yield pd.DataFrame(out)
+    def row(did):
+        px = np.full((2, 2, 3), (did * 29) % 251, dtype=np.uint8)
+        plain = encode_gif(px, 2, 2)
+        tagged = gif_insert_extensions(
+            plain, comment=f"doc-{did}", loop_count=did % 100
+        )
+        d = parse_gif_extensions(tagged)
+        dec = decode_gif(tagged)  # LZW decode still clean
+        if dec["pixels"] != [tuple(int(c) for c in p) for row in px for p in row]:
+            raise ValueError("gif: extension splice corrupted pixels")
+        yield (
+            did,
+            d["width"],
+            d["height"],
+            d["comment"],
+            d["loop_count"],
+            d["n_images"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id").repartition(par).mapInPandas(op, GIF_META_SCHEMA)
-    )
+    return map_rows(docs.select("doc_id"), row, GIF_META_SCHEMA, spread=True)
 
 
 @query(
@@ -3000,49 +2930,42 @@ def webp_roundtrip_stats(docs: DataFrame) -> DataFrame:
         encode_webp,
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in WEBP_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 4 + did % 5, 3 + did % 4
-                ys, xs = np.mgrid[0:h, 0:w]
-                px = np.stack(
-                    [
-                        (did * 7 + xs * 11 + ys * 13) % 251,
-                        (did * 5 + xs * 3 + ys * 17) % 251,
-                        (did * 3 + xs * 19 + ys * 7) % 251,
-                    ],
-                    axis=2,
-                ).astype(np.uint8)
-                img = decode_webp_array(encode_webp(px, w, h))
-                flat = img["px"].astype(np.int64)
-                pos = (ys * w + xs + 1).astype(np.int64)
-                weighted = (
-                    pos
-                    * (
-                        flat[:, :, 0]
-                        + 2 * flat[:, :, 1]
-                        + 3 * flat[:, :, 2]
-                    )
-                ).sum()
-                out["doc_id"].append(did)
-                out["width"].append(img["width"])
-                out["height"].append(img["height"])
-                out["n_pixels"].append(img["width"] * img["height"])
-                out["sum_rgb"].append(int(flat.sum()))
-                out["peak"].append(int(flat.max()))
-                out["checksum"].append(int(weighted))
-        yield pd.DataFrame(out)
+    def row(did):
+        w, h = 4 + did % 5, 3 + did % 4
+        ys, xs = np.mgrid[0:h, 0:w]
+        px = np.stack(
+            [
+                (did * 7 + xs * 11 + ys * 13) % 251,
+                (did * 5 + xs * 3 + ys * 17) % 251,
+                (did * 3 + xs * 19 + ys * 7) % 251,
+            ],
+            axis=2,
+        ).astype(np.uint8)
+        img = decode_webp_array(encode_webp(px, w, h))
+        flat = img["px"].astype(np.int64)
+        pos = (ys * w + xs + 1).astype(np.int64)
+        weighted = (
+            pos
+            * (
+                flat[:, :, 0]
+                + 2 * flat[:, :, 1]
+                + 3 * flat[:, :, 2]
+            )
+        ).sum()
+        yield (
+            did,
+            img["width"],
+            img["height"],
+            img["width"] * img["height"],
+            int(flat.sum()),
+            int(flat.max()),
+            int(weighted),
+        )
 
     # same core-spreading exchange as the JPEG stats stage: the codec
     # is real per-doc Python work and the documents parquet arrives in
     # 1-2 input splits
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id").repartition(par).mapInPandas(op, WEBP_STATS_SCHEMA)
-    )
+    return map_rows(docs.select("doc_id"), row, WEBP_STATS_SCHEMA, spread=True)
 
 
 @query(
@@ -3085,7 +3008,7 @@ def resize_image(payload: bytes, width: int, height: int) -> bytes:
     """REAL resize for BMP/PNG/GIF/JPEG/WebP-lossless payloads:
     decode → nearest-neighbor sample (src = dst * src_dim // dst_dim,
     as a vectorized fancy-index) → re-encode IN THE SAME FORMAT.
-    Binary in → binary out, the contract a `mapInPandas` pipeline
+    Binary in → binary out, the contract a `map_rows` pipeline
     stage plugs into; for formats without a stdlib codec the decode
     raises the honest stub."""
     import numpy as np
@@ -3136,23 +3059,14 @@ def frame_sample(
     independently of any codec."""
     import hashlib as _hashlib
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "frame_idx": [], "n_frame_bytes": [], "frame_md5": []
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                s = bytes(payload).decode("utf-8")
-                nframes = (len(s) + frame_chars - 1) // frame_chars
-                for i in range(0, nframes, every):
-                    b = s[i * frame_chars : (i + 1) * frame_chars].encode("utf-8")
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["n_frame_bytes"].append(len(b))
-                    out["frame_md5"].append(_hashlib.md5(b).hexdigest())
-            yield pd.DataFrame(out)
+    def row(doc_id, payload):
+        s = payload.decode("utf-8")
+        nframes = (len(s) + frame_chars - 1) // frame_chars
+        for i in range(0, nframes, every):
+            b = s[i * frame_chars : (i + 1) * frame_chars].encode("utf-8")
+            yield doc_id, i, len(b), _hashlib.md5(b).hexdigest()
 
-    return binary_docs.mapInPandas(op, FRAME_SCHEMA)
+    return map_rows(binary_docs.select("doc_id", "payload"), row, FRAME_SCHEMA)
 
 
 @query(
@@ -3335,42 +3249,35 @@ def video_frame_stats(docs: DataFrame, every: int = 2) -> DataFrame:
     frames are never IDCT'd."""
     import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in VIDEO_FRAME_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nf = 2 + did % 3
-                frames = []
-                for f in range(nf):
-                    col = np.array(
-                        [
-                            (did * 31 + f * 41) % 199 + 17,
-                            (did * 37 + f * 43) % 199 + 17,
-                            (did * 29 + f * 47) % 199 + 17,
-                        ],
-                        dtype=np.uint8,
-                    )
-                    frames.append(np.broadcast_to(col, (8, 8, 3)).copy())
-                payload = encode_avi_mjpeg(frames, 8, 8, quality=95)
-                d = decode_avi_frames(payload, every=every)
-                for idx, px in zip(d["sampled_idx"], d["frames"]):
-                    flat = px.reshape(-1, 3)
-                    out["doc_id"].append(did)
-                    out["frame_idx"].append(idx)
-                    out["n_frames"].append(d["n_frames"])
-                    out["width"].append(d["width"])
-                    out["height"].append(d["height"])
-                    out["r"].append(int(flat[0, 0]))
-                    out["g"].append(int(flat[0, 1]))
-                    out["b"].append(int(flat[0, 2]))
-        yield pd.DataFrame(out)
+    def row(did):
+        nf = 2 + did % 3
+        frames = []
+        for f in range(nf):
+            col = np.array(
+                [
+                    (did * 31 + f * 41) % 199 + 17,
+                    (did * 37 + f * 43) % 199 + 17,
+                    (did * 29 + f * 47) % 199 + 17,
+                ],
+                dtype=np.uint8,
+            )
+            frames.append(np.broadcast_to(col, (8, 8, 3)).copy())
+        payload = encode_avi_mjpeg(frames, 8, 8, quality=95)
+        d = decode_avi_frames(payload, every=every)
+        for idx, px in zip(d["sampled_idx"], d["frames"]):
+            flat = px.reshape(-1, 3)
+            yield (
+                did,
+                idx,
+                d["n_frames"],
+                d["width"],
+                d["height"],
+                int(flat[0, 0]),
+                int(flat[0, 1]),
+                int(flat[0, 2]),
+            )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id").repartition(par).mapInPandas(op, VIDEO_FRAME_SCHEMA)
-    )
+    return map_rows(docs.select("doc_id"), row, VIDEO_FRAME_SCHEMA, spread=True)
 
 
 @query(
@@ -4255,65 +4162,58 @@ def mp4_container_stats(docs: DataFrame) -> DataFrame:
     duration math, the first payload byte of every resolved sample
     offset — is re-derived by the SQL oracle from the same formulas
     with no parser, so a hash match pins the round trip end-to-end.
-    Arrow `mapInPandas`, map-only: the per-document work never
+    Arrow `map_rows`, map-only: the per-document work never
     shuffles."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in MP4_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nv, na = 3 + did % 5, 4 + did % 7
-                w, h = 16 * (1 + did % 4), 16 * (1 + did % 3)
-                vsamples = [
-                    bytes([(did * 3 + i * 17) % 256])
-                    + bytes([(did + i) % 256]) * (49 + (did * 7 + i * 13) % 100)
-                    for i in range(nv)
-                ]
-                asamples = [
-                    bytes([(did * 11 + i * 19) % 256])
-                    + bytes([(did + i) % 256]) * (19 + (did * 5 + i * 11) % 50)
-                    for i in range(na)
-                ]
-                payload = encode_mp4_container(
-                    [
-                        {
-                            "handler": "vide",
-                            "codec": "avc1" if did % 2 == 0 else "mp4v",
-                            "timescale": 1000,
-                            "sample_delta": 40,
-                            "samples": vsamples,
-                            "width": w,
-                            "height": h,
-                        },
-                        {
-                            "handler": "soun",
-                            "codec": "mp4a",
-                            "timescale": 48000,
-                            "sample_delta": 1024,
-                            "samples": asamples,
-                        },
-                    ]
-                )
-                d = parse_mp4_boxes(payload)
-                for t in d["tracks"]:
-                    out["doc_id"].append(did)
-                    out["track_id"].append(t["track_id"])
-                    out["handler"].append(t["handler"])
-                    out["codec"].append(t["codec"])
-                    out["n_samples"].append(t["n_samples"])
-                    out["sample_bytes"].append(t["sample_bytes"])
-                    out["duration_ms"].append(
-                        t["duration"] * 1000 // t["timescale"]
-                    )
-                    out["width"].append(t["width"])
-                    out["height"].append(t["height"])
-                    out["first_byte_sum"].append(t["first_byte_sum"])
-        yield pd.DataFrame(out)
+    def row(did):
+        nv, na = 3 + did % 5, 4 + did % 7
+        w, h = 16 * (1 + did % 4), 16 * (1 + did % 3)
+        vsamples = [
+            bytes([(did * 3 + i * 17) % 256])
+            + bytes([(did + i) % 256]) * (49 + (did * 7 + i * 13) % 100)
+            for i in range(nv)
+        ]
+        asamples = [
+            bytes([(did * 11 + i * 19) % 256])
+            + bytes([(did + i) % 256]) * (19 + (did * 5 + i * 11) % 50)
+            for i in range(na)
+        ]
+        payload = encode_mp4_container(
+            [
+                {
+                    "handler": "vide",
+                    "codec": "avc1" if did % 2 == 0 else "mp4v",
+                    "timescale": 1000,
+                    "sample_delta": 40,
+                    "samples": vsamples,
+                    "width": w,
+                    "height": h,
+                },
+                {
+                    "handler": "soun",
+                    "codec": "mp4a",
+                    "timescale": 48000,
+                    "sample_delta": 1024,
+                    "samples": asamples,
+                },
+            ]
+        )
+        d = parse_mp4_boxes(payload)
+        for t in d["tracks"]:
+            yield (
+                did,
+                t["track_id"],
+                t["handler"],
+                t["codec"],
+                t["n_samples"],
+                t["sample_bytes"],
+                t["duration"] * 1000 // t["timescale"],
+                t["width"],
+                t["height"],
+                t["first_byte_sum"],
+            )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, MP4_STATS_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, MP4_STATS_SCHEMA, spread=True)
 
 
 @query(
@@ -4393,62 +4293,53 @@ def mp4_tags_stats(docs: DataFrame) -> DataFrame:
     patched, stco offsets shifted), tags walked back out, and the FULL
     demux re-run on the tagged payload — the emitted first-byte sum
     comes from the TAGGED file's resolved sample offsets, so a hash
-    match proves the offset surgery byte-exactly. Arrow `mapInPandas`,
+    match proves the offset surgery byte-exactly. Arrow `map_rows`,
     map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in MP4_TAGS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                did = int(doc_id)
-                nv = 2 + did % 3
-                vsamples = [
-                    bytes([(did * 3 + i * 17) % 256])
-                    + bytes([(did + i) % 256]) * (9 + (did + i) % 20)
-                    for i in range(nv)
-                ]
-                plain = encode_mp4_container(
-                    [
-                        {
-                            "handler": "vide",
-                            "codec": "avc1",
-                            "timescale": 1000,
-                            "sample_delta": 40,
-                            "samples": vsamples,
-                            "width": 16,
-                            "height": 16,
-                        }
-                    ]
-                )
-                udta = encode_mp4_udta_tags(
-                    [
-                        ("©nam", f"doc-{did}"),
-                        ("©ART", str(source)),
-                        ("©day", str(2000 + did % 25)),
-                    ],
-                    trkn=(1 + did % 12, 12),
-                )
-                tagged = mp4_insert_udta(plain, udta)
-                t = parse_mp4_tags(tagged)
-                d = parse_mp4_boxes(tagged)  # offsets must still resolve
-                texts = dict(t["texts"])
-                out["doc_id"].append(did)
-                out["title"].append(texts.get("©nam"))
-                out["artist"].append(texts.get("©ART"))
-                out["year"].append(texts.get("©day"))
-                out["track_no"].append(t["trkn"][0])
-                out["track_total"].append(t["trkn"][1])
-                out["n_items"].append(t["n_items"])
-                out["first_byte_sum"].append(d["tracks"][0]["first_byte_sum"])
-        yield pd.DataFrame(out)
+    def row(did, source):
+        nv = 2 + did % 3
+        vsamples = [
+            bytes([(did * 3 + i * 17) % 256])
+            + bytes([(did + i) % 256]) * (9 + (did + i) % 20)
+            for i in range(nv)
+        ]
+        plain = encode_mp4_container(
+            [
+                {
+                    "handler": "vide",
+                    "codec": "avc1",
+                    "timescale": 1000,
+                    "sample_delta": 40,
+                    "samples": vsamples,
+                    "width": 16,
+                    "height": 16,
+                }
+            ]
+        )
+        udta = encode_mp4_udta_tags(
+            [
+                ("©nam", f"doc-{did}"),
+                ("©ART", str(source)),
+                ("©day", str(2000 + did % 25)),
+            ],
+            trkn=(1 + did % 12, 12),
+        )
+        tagged = mp4_insert_udta(plain, udta)
+        t = parse_mp4_tags(tagged)
+        d = parse_mp4_boxes(tagged)  # offsets must still resolve
+        texts = dict(t["texts"])
+        yield (
+            did,
+            texts.get("©nam"),
+            texts.get("©ART"),
+            texts.get("©day"),
+            t["trkn"][0],
+            t["trkn"][1],
+            t["n_items"],
+            d["tracks"][0]["first_byte_sum"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "source")
-        .repartition(par)
-        .mapInPandas(op, MP4_TAGS_SCHEMA)
-    )
+    return map_rows(docs.select("doc_id", "source"), row, MP4_TAGS_SCHEMA, spread=True)
 
 
 @query(
@@ -4506,99 +4397,80 @@ def mp4_pts_stats(docs: DataFrame) -> DataFrame:
     decode anchors. The demux resolves DTS → CTS → PTS (the math any
     seek-accurate frame sampler needs) and emits per-track PTS
     aggregates; the oracle replays every number from the integer
-    formulas. Arrow `mapInPandas`, map-only."""
+    formulas. Arrow `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in MP4_PTS_SCHEMA.fields}
+    #: per-track fields, in schema order after doc_id and container
+    track_keys = [f.name for f in MP4_PTS_SCHEMA.fields[2:]]
 
-        def emit(did, container, t):
-            out["doc_id"].append(did)
-            out["container"].append(container)
-            out["track_id"].append(t["track_id"])
-            out["handler"].append(t["handler"])
-            out["n_samples"].append(t["n_samples"])
-            out["n_presented"].append(t["n_presented"])
-            out["n_reordered"].append(t["n_reordered"])
-            out["pts_min"].append(t["pts_min"])
-            out["pts_max"].append(t["pts_max"])
-            out["pts_sum"].append(t["pts_sum"])
-            out["n_sync"].append(t["n_sync"])
-            out["pts_sum_sync"].append(t["pts_sum_sync"])
+    def row(did):
+        nv, na = 3 + did % 5, 4 + did % 7
+        neg = 40 if did % 3 == 0 else 0
+        vsamples = [bytes([(did + i) % 256]) * 8 for i in range(nv)]
+        plain = encode_mp4_container(
+            [
+                {
+                    "handler": "vide",
+                    "codec": "avc1",
+                    "timescale": 1000,
+                    "sample_delta": 40,
+                    "samples": vsamples,
+                    "width": 16,
+                    "height": 16,
+                    "ctts_offsets": [
+                        40 * ((did + i) % 3) - neg for i in range(nv)
+                    ],
+                    # every third sample is a keyframe (GOP-ish)
+                    "sync_samples": [
+                        i + 1 for i in range(nv) if (did + i) % 3 == 0
+                    ],
+                    # lead-trim edit: media_time = one frame for
+                    # odd docs, to-end duration
+                    "edits": [(0, 40 * (did % 2))],
+                },
+                {
+                    "handler": "soun",
+                    "codec": "mp4a",
+                    "timescale": 48000,
+                    "sample_delta": 1024,
+                    "samples": [
+                        bytes([(did + i) % 256]) * 4 for i in range(na)
+                    ],
+                },
+            ]
+        )
+        for t in parse_mp4_boxes(plain)["tracks"]:
+            yield did, "mp4", *(t[k] for k in track_keys)
 
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nv, na = 3 + did % 5, 4 + did % 7
-                neg = 40 if did % 3 == 0 else 0
-                vsamples = [bytes([(did + i) % 256]) * 8 for i in range(nv)]
-                plain = encode_mp4_container(
-                    [
-                        {
-                            "handler": "vide",
-                            "codec": "avc1",
-                            "timescale": 1000,
-                            "sample_delta": 40,
-                            "samples": vsamples,
-                            "width": 16,
-                            "height": 16,
-                            "ctts_offsets": [
-                                40 * ((did + i) % 3) - neg for i in range(nv)
-                            ],
-                            # every third sample is a keyframe (GOP-ish)
-                            "sync_samples": [
-                                i + 1 for i in range(nv) if (did + i) % 3 == 0
-                            ],
-                            # lead-trim edit: media_time = one frame for
-                            # odd docs, to-end duration
-                            "edits": [(0, 40 * (did % 2))],
-                        },
-                        {
-                            "handler": "soun",
-                            "codec": "mp4a",
-                            "timescale": 48000,
-                            "sample_delta": 1024,
-                            "samples": [
-                                bytes([(did + i) % 256]) * 4 for i in range(na)
-                            ],
-                        },
-                    ]
+        fneg = 40 if did % 5 == 0 else 0
+        nfrag = 2 + did % 3
+        frags = [
+            [
+                (
+                    bytes([(did + f + j) % 256]) * 6,
+                    40,
+                    40 * ((did + f + j) % 2) - fneg,
                 )
-                for t in parse_mp4_boxes(plain)["tracks"]:
-                    emit(did, "mp4", t)
+                for j in range(1 + (did + f) % 3)
+            ]
+            for f in range(nfrag)
+        ]
+        frag = encode_mp4_fragmented(
+            [
+                {
+                    "handler": "vide",
+                    "codec": "avc1",
+                    "timescale": 1000,
+                    "sample_delta": 40,
+                    "width": 16,
+                    "height": 16,
+                    "fragments": frags,
+                }
+            ]
+        )
+        for t in parse_mp4_boxes(frag)["tracks"]:
+            yield did, "fmp4", *(t[k] for k in track_keys)
 
-                fneg = 40 if did % 5 == 0 else 0
-                nfrag = 2 + did % 3
-                frags = [
-                    [
-                        (
-                            bytes([(did + f + j) % 256]) * 6,
-                            40,
-                            40 * ((did + f + j) % 2) - fneg,
-                        )
-                        for j in range(1 + (did + f) % 3)
-                    ]
-                    for f in range(nfrag)
-                ]
-                frag = encode_mp4_fragmented(
-                    [
-                        {
-                            "handler": "vide",
-                            "codec": "avc1",
-                            "timescale": 1000,
-                            "sample_delta": 40,
-                            "width": 16,
-                            "height": 16,
-                            "fragments": frags,
-                        }
-                    ]
-                )
-                for t in parse_mp4_boxes(frag)["tracks"]:
-                    emit(did, "fmp4", t)
-        yield pd.DataFrame(out)
-
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, MP4_PTS_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, MP4_PTS_SCHEMA, spread=True)
 
 
 @query(
@@ -5034,48 +4906,30 @@ def mp3_stream_stats(docs: DataFrame) -> DataFrame:
     Every output — frame count, the VBR byte total through the
     144000*kbps//sr + padding formula, duration, tag detection, the
     first payload byte of every frame — is re-derived by the SQL
-    oracle from the same formulas with no parser. Arrow `mapInPandas`,
+    oracle from the same formulas with no parser. Arrow `map_rows`,
     map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in MP3_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nf = 5 + did % 9
-                sr_idx = did % 3
-                frames = [
-                    (
-                        1 + (did + 3 * i) % 14,
-                        (did + i) % 2,
-                        bytes([(did * 7 + i * 23) % 256]),
-                    )
-                    for i in range(nf)
-                ]
-                payload = encode_mp3_stream(
-                    frames,
-                    sr_idx,
-                    id3v2=(b"\x00" * (10 + did % 50)) if did % 4 == 0 else None,
-                    id3v1=did % 5 == 0,
-                )
-                d = parse_mp3_frames(payload)
-                out["doc_id"].append(did)
-                for k in (
-                    "n_frames",
-                    "sample_rate",
-                    "frame_bytes",
-                    "duration_ms",
-                    "bitrate_kbps_sum",
-                    "padded_frames",
-                    "first_byte_sum",
-                    "has_id3v2",
-                ):
-                    out[k].append(d[k])
-        yield pd.DataFrame(out)
+    def row(did):
+        nf = 5 + did % 9
+        sr_idx = did % 3
+        frames = [
+            (
+                1 + (did + 3 * i) % 14,
+                (did + i) % 2,
+                bytes([(did * 7 + i * 23) % 256]),
+            )
+            for i in range(nf)
+        ]
+        payload = encode_mp3_stream(
+            frames,
+            sr_idx,
+            id3v2=(b"\x00" * (10 + did % 50)) if did % 4 == 0 else None,
+            id3v1=did % 5 == 0,
+        )
+        d = parse_mp3_frames(payload)
+        yield did, *(d[f.name] for f in MP3_STATS_SCHEMA.fields[1:])
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, MP3_STATS_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, MP3_STATS_SCHEMA, spread=True)
 
 
 @query(
@@ -5139,45 +4993,36 @@ def mp3_tags_stats(docs: DataFrame) -> DataFrame:
     TLAN carrying actual table columns, TPE1 on every third doc),
     demux the audio framing with `parse_mp3_frames` AND parse the tag
     with `parse_id3v2` — the metadata an audio-ingest pipeline routes
-    on without touching a granule. Arrow `mapInPandas`, map-only."""
+    on without touching a granule. Arrow `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in MP3_TAGS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id, lang in zip(pdf["doc_id"], pdf["lang"]):
-                did = int(doc_id)
-                frames = [("TIT2", f"doc-{did}"), ("TLAN", str(lang))]
-                if did % 3 == 0:
-                    frames.append(("TPE1", f"artist-{did % 7}"))
-                tag_body = encode_id3v2_frames(frames, version=3)
-                nf = 2 + did % 4
-                payload = encode_mp3_stream(
-                    [
-                        (1 + (did + i) % 14, (did + i) % 2, bytes([(did + i) % 256]))
-                        for i in range(nf)
-                    ],
-                    sr_idx=did % 3,
-                    id3v2=tag_body,
-                )
-                d = parse_mp3_frames(payload)  # validates the framing walk
-                t = parse_id3v2(payload)
-                tagmap = dict(t["frames"])
-                out["doc_id"].append(did)
-                out["id3_version"].append(t["version"])
-                out["n_text_frames"].append(len(t["frames"]))
-                out["title"].append(tagmap.get("TIT2"))
-                out["language"].append(tagmap.get("TLAN"))
-                out["artist"].append(tagmap.get("TPE1"))
-                out["n_frames"].append(d["n_frames"])
-        yield pd.DataFrame(out)
+    def row(did, lang):
+        frames = [("TIT2", f"doc-{did}"), ("TLAN", str(lang))]
+        if did % 3 == 0:
+            frames.append(("TPE1", f"artist-{did % 7}"))
+        tag_body = encode_id3v2_frames(frames, version=3)
+        nf = 2 + did % 4
+        payload = encode_mp3_stream(
+            [
+                (1 + (did + i) % 14, (did + i) % 2, bytes([(did + i) % 256]))
+                for i in range(nf)
+            ],
+            sr_idx=did % 3,
+            id3v2=tag_body,
+        )
+        d = parse_mp3_frames(payload)  # validates the framing walk
+        t = parse_id3v2(payload)
+        tagmap = dict(t["frames"])
+        yield (
+            did,
+            t["version"],
+            len(t["frames"]),
+            tagmap.get("TIT2"),
+            tagmap.get("TLAN"),
+            tagmap.get("TPE1"),
+            d["n_frames"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "lang")
-        .repartition(par)
-        .mapInPandas(op, MP3_TAGS_SCHEMA)
-    )
+    return map_rows(docs.select("doc_id", "lang"), row, MP3_TAGS_SCHEMA, spread=True)
 
 
 @query(
@@ -5223,62 +5068,55 @@ def mp3_sideinfo_stats(docs: DataFrame) -> DataFrame:
     """Per document: a Layer III frame whose first 32 payload bytes are
     a REAL bit-packed side-info block (formula-driven granule fields),
     demuxed by `parse_mp3_frames` and bit-unpacked by
-    `parse_mp3_side_info`. Arrow `mapInPandas`, map-only."""
+    `parse_mp3_side_info`. Arrow `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in MP3_SIDEINFO_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                si = {
-                    "main_data_begin": did % 512,
-                    "private_bits": did % 8,
-                    "scfsi": [(did + c) % 16 for c in range(2)],
-                    "granules": [
-                        [
-                            {
-                                "part2_3_length": (did * 7 + 13 * g + 29 * c)
-                                % 4096,
-                                "big_values": (did + 3 * g + 5 * c) % 289,
-                                "global_gain": (did * 11 + g + 2 * c) % 256,
-                                "scalefac_compress": (did + g + c) % 16,
-                                "table_select": [
-                                    (did + g + c + k) % 32 for k in range(3)
-                                ],
-                                "region0_count": (did + g) % 16,
-                                "region1_count": (did + c) % 8,
-                                "preflag": did % 2,
-                                "scalefac_scale": g,
-                                "count1table_select": c,
-                            }
-                            for c in range(2)
-                        ]
-                        for g in range(2)
-                    ],
-                }
-                head = encode_mp3_side_info(si, channels=2)
-                payload = encode_mp3_stream(
-                    [(1 + did % 14, did % 2, head)], sr_idx=did % 3
-                )
-                parse_mp3_frames(payload)  # framing walk still validates
-                d = mp3_first_side_info(payload, channels=2)
-                if d != si:
-                    raise ValueError("mp3 side info: roundtrip mismatch")
-                flat = [d["granules"][g][c] for g in range(2) for c in range(2)]
-                out["doc_id"].append(did)
-                out["main_data_begin"].append(d["main_data_begin"])
-                out["scfsi_sum"].append(sum(d["scfsi"]))
-                out["sum_part23"].append(sum(x["part2_3_length"] for x in flat))
-                out["sum_big_values"].append(sum(x["big_values"] for x in flat))
-                out["max_gain"].append(max(x["global_gain"] for x in flat))
-                out["preflag"].append(flat[0]["preflag"])
-        yield pd.DataFrame(out)
+    def row(did):
+        si = {
+            "main_data_begin": did % 512,
+            "private_bits": did % 8,
+            "scfsi": [(did + c) % 16 for c in range(2)],
+            "granules": [
+                [
+                    {
+                        "part2_3_length": (did * 7 + 13 * g + 29 * c)
+                        % 4096,
+                        "big_values": (did + 3 * g + 5 * c) % 289,
+                        "global_gain": (did * 11 + g + 2 * c) % 256,
+                        "scalefac_compress": (did + g + c) % 16,
+                        "table_select": [
+                            (did + g + c + k) % 32 for k in range(3)
+                        ],
+                        "region0_count": (did + g) % 16,
+                        "region1_count": (did + c) % 8,
+                        "preflag": did % 2,
+                        "scalefac_scale": g,
+                        "count1table_select": c,
+                    }
+                    for c in range(2)
+                ]
+                for g in range(2)
+            ],
+        }
+        head = encode_mp3_side_info(si, channels=2)
+        payload = encode_mp3_stream(
+            [(1 + did % 14, did % 2, head)], sr_idx=did % 3
+        )
+        parse_mp3_frames(payload)  # framing walk still validates
+        d = mp3_first_side_info(payload, channels=2)
+        if d != si:
+            raise ValueError("mp3 side info: roundtrip mismatch")
+        flat = [d["granules"][g][c] for g in range(2) for c in range(2)]
+        yield (
+            did,
+            d["main_data_begin"],
+            sum(d["scfsi"]),
+            sum(x["part2_3_length"] for x in flat),
+            sum(x["big_values"] for x in flat),
+            max(x["global_gain"] for x in flat),
+            flat[0]["preflag"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id").repartition(par).mapInPandas(op, MP3_SIDEINFO_SCHEMA)
-    )
+    return map_rows(docs.select("doc_id"), row, MP3_SIDEINFO_SCHEMA, spread=True)
 
 
 @query(
@@ -5476,44 +5314,27 @@ def ogg_container_stats(docs: DataFrame) -> DataFrame:
     and serial all integer formulas; genuine per-page CRCs), demux it
     with `parse_ogg_pages` — which RECOMPUTES every CRC — and emit one
     row per document. The SQL oracle re-derives every column from the
-    same formulas with no parser. Arrow `mapInPandas`, map-only."""
+    same formulas with no parser. Arrow `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in OGG_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                np_ = 3 + did % 5
-                pages = []
-                for p in range(np_):
-                    k = 1 + (did + p) % 3
-                    pages.append(
-                        [
-                            bytes([(did * 13 + p * 5 + j * 3) % 256])
-                            + bytes([(did + p + j) % 256])
-                            * (19 + (did * 3 + p * 7 + j * 11) % 300)
-                            for j in range(k)
-                        ]
-                    )
-                granules = [(p + 1) * (did % 7 + 1) * 100 for p in range(np_)]
-                payload = encode_ogg_stream(pages, did % 100000, granules)
-                d = parse_ogg_pages(payload)
-                out["doc_id"].append(did)
-                for k2 in (
-                    "n_pages",
-                    "n_packets",
-                    "payload_bytes",
-                    "last_granule",
-                    "serial",
-                    "first_byte_sum",
-                    "bos_eos_ok",
-                ):
-                    out[k2].append(d[k2])
-        yield pd.DataFrame(out)
+    def row(did):
+        np_ = 3 + did % 5
+        pages = []
+        for p in range(np_):
+            k = 1 + (did + p) % 3
+            pages.append(
+                [
+                    bytes([(did * 13 + p * 5 + j * 3) % 256])
+                    + bytes([(did + p + j) % 256])
+                    * (19 + (did * 3 + p * 7 + j * 11) % 300)
+                    for j in range(k)
+                ]
+            )
+        granules = [(p + 1) * (did % 7 + 1) * 100 for p in range(np_)]
+        payload = encode_ogg_stream(pages, did % 100000, granules)
+        d = parse_ogg_pages(payload)
+        yield did, *(d[f.name] for f in OGG_STATS_SCHEMA.fields[1:])
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, OGG_STATS_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, OGG_STATS_SCHEMA, spread=True)
 
 
 @query(
@@ -5788,53 +5609,48 @@ def ogg_codec_stats(docs: DataFrame) -> DataFrame:
     `parse_ogg_pages` (every CRC recomputed), then parse the ID header
     back out of the reassembled first packet. One row per document;
     the oracle replays every field from the integer formulas. Arrow
-    `mapInPandas`, map-only."""
+    `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in OGG_CODEC_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                channels = 1 + (did % 5) % 2
-                rate = _OGG_RATES[did % 5]
-                if did % 2 == 0:
-                    hdr = encode_vorbis_id_header(
-                        rate, channels, 64000 + (did % 10) * 16000
-                    )
-                else:
-                    hdr = encode_opus_id_header(channels, 312 + did % 100, rate)
-                np_ = 4 + did % 5  # header page + 3..7 audio pages
-                pages = [[hdr]]
-                for p in range(1, np_):
-                    k = 1 + (did + p) % 3
-                    pages.append(
-                        [
-                            bytes([(did * 13 + p * 5 + j * 3) % 256])
-                            + bytes([(did + p + j) % 256])
-                            * (19 + (did * 3 + p * 7 + j * 11) % 300)
-                            for j in range(k)
-                        ]
-                    )
-                granules = [0] + [
-                    p * (did % 7 + 1) * 100 for p in range(1, np_)
+    def row(did):
+        channels = 1 + (did % 5) % 2
+        rate = _OGG_RATES[did % 5]
+        if did % 2 == 0:
+            hdr = encode_vorbis_id_header(
+                rate, channels, 64000 + (did % 10) * 16000
+            )
+        else:
+            hdr = encode_opus_id_header(channels, 312 + did % 100, rate)
+        np_ = 4 + did % 5  # header page + 3..7 audio pages
+        pages = [[hdr]]
+        for p in range(1, np_):
+            k = 1 + (did + p) % 3
+            pages.append(
+                [
+                    bytes([(did * 13 + p * 5 + j * 3) % 256])
+                    + bytes([(did + p + j) % 256])
+                    * (19 + (did * 3 + p * 7 + j * 11) % 300)
+                    for j in range(k)
                 ]
-                payload = encode_ogg_stream(pages, did % 100000, granules)
-                d = parse_ogg_pages(payload)
-                ident = identify_ogg_codec(d["first_packet"])
-                out["doc_id"].append(did)
-                out["codec"].append(ident["codec"])
-                out["sample_rate"].append(ident["sample_rate"])
-                out["channels"].append(ident["channels"])
-                out["pre_skip"].append(ident["pre_skip"])
-                out["bitrate_nominal"].append(ident["bitrate_nominal"])
-                out["n_pages"].append(d["n_pages"])
-                out["n_packets"].append(d["n_packets"])
-                out["payload_bytes"].append(d["payload_bytes"])
-        yield pd.DataFrame(out)
+            )
+        granules = [0] + [
+            p * (did % 7 + 1) * 100 for p in range(1, np_)
+        ]
+        payload = encode_ogg_stream(pages, did % 100000, granules)
+        d = parse_ogg_pages(payload)
+        ident = identify_ogg_codec(d["first_packet"])
+        yield (
+            did,
+            ident["codec"],
+            ident["sample_rate"],
+            ident["channels"],
+            ident["pre_skip"],
+            ident["bitrate_nominal"],
+            d["n_pages"],
+            d["n_packets"],
+            d["payload_bytes"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, OGG_CODEC_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, OGG_CODEC_SCHEMA, spread=True)
 
 
 @query(
@@ -5902,55 +5718,46 @@ def ogg_tags_stats(docs: DataFrame) -> DataFrame:
     second packet — title/language/source/artist, the provenance block
     an ingest pipeline routes on. The LANGUAGE/SOURCE tags carry REAL
     table columns, so the oracle reads them straight off `documents`.
-    Arrow `mapInPandas`, map-only."""
+    Arrow `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in OGG_TAGS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id, lang, source in zip(
-                pdf["doc_id"], pdf["lang"], pdf["source"]
-            ):
-                did = int(doc_id)
-                comments = [
-                    ("TITLE", f"doc-{did}"),
-                    ("LANGUAGE", str(lang)),
-                    ("SOURCE", str(source)),
-                ]
-                if did % 3 == 0:
-                    comments.append(("ARTIST", f"a{did % 7}"))
-                hdr = encode_opus_id_header(
-                    1 + (did % 5) % 2, 312 + did % 100, _OGG_RATES[did % 5]
-                )
-                tags = encode_opus_tags(f"engine-{did % 10}", comments)
-                pages = [[hdr], [tags]]
-                for p in range(2, 4 + did % 3):
-                    pages.append(
-                        [bytes([(did + p) % 256]) * (25 + (did * 3 + p) % 60)]
-                    )
-                granules = [0, 0] + [
-                    p * 960 for p in range(2, len(pages))
-                ]
-                d = parse_ogg_pages(
-                    encode_ogg_stream(pages, did % 100000, granules)
-                )
-                identify_ogg_codec(d["first_packet"])  # validates OpusHead
-                meta = parse_ogg_comments(d["second_packet"])
-                tagmap = dict(meta["comments"])
-                out["doc_id"].append(did)
-                out["vendor"].append(meta["vendor"])
-                out["n_comments"].append(meta["n_comments"])
-                out["title"].append(tagmap.get("TITLE"))
-                out["language"].append(tagmap.get("LANGUAGE"))
-                out["source_tag"].append(tagmap.get("SOURCE"))
-                out["artist"].append(tagmap.get("ARTIST"))
-        yield pd.DataFrame(out)
+    def row(did, lang, source):
+        comments = [
+            ("TITLE", f"doc-{did}"),
+            ("LANGUAGE", str(lang)),
+            ("SOURCE", str(source)),
+        ]
+        if did % 3 == 0:
+            comments.append(("ARTIST", f"a{did % 7}"))
+        hdr = encode_opus_id_header(
+            1 + (did % 5) % 2, 312 + did % 100, _OGG_RATES[did % 5]
+        )
+        tags = encode_opus_tags(f"engine-{did % 10}", comments)
+        pages = [[hdr], [tags]]
+        for p in range(2, 4 + did % 3):
+            pages.append(
+                [bytes([(did + p) % 256]) * (25 + (did * 3 + p) % 60)]
+            )
+        granules = [0, 0] + [
+            p * 960 for p in range(2, len(pages))
+        ]
+        d = parse_ogg_pages(
+            encode_ogg_stream(pages, did % 100000, granules)
+        )
+        identify_ogg_codec(d["first_packet"])  # validates OpusHead
+        meta = parse_ogg_comments(d["second_packet"])
+        tagmap = dict(meta["comments"])
+        yield (
+            did,
+            meta["vendor"],
+            meta["n_comments"],
+            tagmap.get("TITLE"),
+            tagmap.get("LANGUAGE"),
+            tagmap.get("SOURCE"),
+            tagmap.get("ARTIST"),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "lang", "source")
-        .repartition(par)
-        .mapInPandas(op, OGG_TAGS_SCHEMA)
+    return map_rows(
+        docs.select("doc_id", "lang", "source"), row, OGG_TAGS_SCHEMA, spread=True
     )
 
 
@@ -6143,79 +5950,72 @@ def mp4_fragmented_stats(docs: DataFrame) -> DataFrame:
     `parse_mp4_boxes` (which resolves trun entries against
     default-base-is-moof addressing and validates mfhd sequencing),
     and emit one row per track, same schema as `multimodal_mp4_stats`.
-    Arrow `mapInPandas`, map-only."""
+    Arrow `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in MP4_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nfrag = 2 + did % 3
-                w, h = 16 * (1 + did % 4), 16 * (1 + did % 3)
+    def row(did):
+        nfrag = 2 + did % 3
+        w, h = 16 * (1 + did % 4), 16 * (1 + did % 3)
 
-                def vsamples(f):
-                    nv = 1 + (did + f) % 3
-                    return [
-                        (
-                            bytes([(did * 3 + f * 17 + i * 19) % 256])
-                            + bytes([(did + f + i) % 256])
-                            * (39 + (did * 7 + f * 11 + i * 13) % 80),
-                            30 + (did * 3 + f * 5 + i * 7) % 20,
-                        )
-                        for i in range(nv)
-                    ]
-
-                def asamples(f):
-                    na = 2 + (did + f) % 2
-                    return [
-                        (
-                            bytes([(did * 11 + f * 13 + i * 23) % 256])
-                            + bytes([(did + f + i) % 256])
-                            * (14 + (did * 5 + f * 7 + i * 11) % 40),
-                            1024,
-                        )
-                        for i in range(na)
-                    ]
-
-                payload = encode_mp4_fragmented(
-                    [
-                        {
-                            "handler": "vide",
-                            "codec": "avc1" if did % 2 == 0 else "hvc1",
-                            "timescale": 1000,
-                            "sample_delta": 40,
-                            "width": w,
-                            "height": h,
-                            "fragments": [vsamples(f) for f in range(nfrag)],
-                        },
-                        {
-                            "handler": "soun",
-                            "codec": "mp4a",
-                            "timescale": 48000,
-                            "sample_delta": 1024,
-                            "fragments": [asamples(f) for f in range(nfrag)],
-                        },
-                    ]
+        def vsamples(f):
+            nv = 1 + (did + f) % 3
+            return [
+                (
+                    bytes([(did * 3 + f * 17 + i * 19) % 256])
+                    + bytes([(did + f + i) % 256])
+                    * (39 + (did * 7 + f * 11 + i * 13) % 80),
+                    30 + (did * 3 + f * 5 + i * 7) % 20,
                 )
-                d = parse_mp4_boxes(payload)
-                for t in d["tracks"]:
-                    out["doc_id"].append(did)
-                    out["track_id"].append(t["track_id"])
-                    out["handler"].append(t["handler"])
-                    out["codec"].append(t["codec"])
-                    out["n_samples"].append(t["n_samples"])
-                    out["sample_bytes"].append(t["sample_bytes"])
-                    out["duration_ms"].append(
-                        t["duration"] * 1000 // t["timescale"]
-                    )
-                    out["width"].append(t["width"])
-                    out["height"].append(t["height"])
-                    out["first_byte_sum"].append(t["first_byte_sum"])
-        yield pd.DataFrame(out)
+                for i in range(nv)
+            ]
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, MP4_STATS_SCHEMA)
+        def asamples(f):
+            na = 2 + (did + f) % 2
+            return [
+                (
+                    bytes([(did * 11 + f * 13 + i * 23) % 256])
+                    + bytes([(did + f + i) % 256])
+                    * (14 + (did * 5 + f * 7 + i * 11) % 40),
+                    1024,
+                )
+                for i in range(na)
+            ]
+
+        payload = encode_mp4_fragmented(
+            [
+                {
+                    "handler": "vide",
+                    "codec": "avc1" if did % 2 == 0 else "hvc1",
+                    "timescale": 1000,
+                    "sample_delta": 40,
+                    "width": w,
+                    "height": h,
+                    "fragments": [vsamples(f) for f in range(nfrag)],
+                },
+                {
+                    "handler": "soun",
+                    "codec": "mp4a",
+                    "timescale": 48000,
+                    "sample_delta": 1024,
+                    "fragments": [asamples(f) for f in range(nfrag)],
+                },
+            ]
+        )
+        d = parse_mp4_boxes(payload)
+        for t in d["tracks"]:
+            yield (
+                did,
+                t["track_id"],
+                t["handler"],
+                t["codec"],
+                t["n_samples"],
+                t["sample_bytes"],
+                t["duration"] * 1000 // t["timescale"],
+                t["width"],
+                t["height"],
+                t["first_byte_sum"],
+            )
+
+    return map_rows(docs.select("doc_id"), row, MP4_STATS_SCHEMA, spread=True)
 
 
 @query(
@@ -6439,38 +6239,29 @@ def aac_stream_stats(docs: DataFrame) -> DataFrame:
     """Synthesize a REAL ADTS stream per document (frame count,
     payload sizes, profile/rate/channels and the CRC-vs-not header
     variant all by doc_id formula), walk it back with
-    `parse_aac_adts`, one row per document. Arrow `mapInPandas`,
+    `parse_aac_adts`, one row per document. Arrow `map_rows`,
     map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in AAC_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nf = 4 + did % 8
-                payloads = [
-                    bytes(
-                        (did * 13 + i * 31 + j) % 256
-                        for j in range(20 + (did * 5 + i * 11) % 200)
-                    )
-                    for i in range(nf)
-                ]
-                stream = encode_aac_adts(
-                    payloads,
-                    profile=did % 3,
-                    sf_idx=3 + did % 6,
-                    channels=1 + did % 2,
-                    crc=did % 3 == 0,
-                )
-                d = parse_aac_adts(stream)
-                out["doc_id"].append(did)
-                for f in AAC_STATS_SCHEMA.fields[1:]:
-                    out[f.name].append(d[f.name])
-        yield pd.DataFrame(out)
+    def row(did):
+        nf = 4 + did % 8
+        payloads = [
+            bytes(
+                (did * 13 + i * 31 + j) % 256
+                for j in range(20 + (did * 5 + i * 11) % 200)
+            )
+            for i in range(nf)
+        ]
+        stream = encode_aac_adts(
+            payloads,
+            profile=did % 3,
+            sf_idx=3 + did % 6,
+            channels=1 + did % 2,
+            crc=did % 3 == 0,
+        )
+        d = parse_aac_adts(stream)
+        yield did, *(d[f.name] for f in AAC_STATS_SCHEMA.fields[1:])
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, AAC_STATS_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, AAC_STATS_SCHEMA, spread=True)
 
 
 @query(
@@ -6683,42 +6474,33 @@ def subtitle_cue_stats(docs: DataFrame) -> DataFrame:
     """Synthesize a caption file per document (WebVTT on even doc ids
     with NOTE blocks / identifiers / cue settings, SRT on odd ids;
     cue timing and text by doc_id formula), parse it back with
-    `parse_subtitles`, one row per document. Arrow `mapInPandas`,
+    `parse_subtitles`, one row per document. Arrow `map_rows`,
     map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in VTT_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                fmt = "vtt" if did % 2 == 0 else "srt"
-                nc = 3 + did % 6
-                step = 1500 + did % 500
-                off = did % 100
-                cues = []
-                for i in range(nc):
-                    start = off + i * step
-                    dur = 900 + (did * 7 + i * 13) % 600
-                    lines = [f"cue {i} of doc {did}"]
-                    if i % 2 == 0:
-                        lines.append("line two")
-                    cues.append((start, start + dur, lines))
-                payload = encode_subtitles(
-                    cues,
-                    fmt,
-                    note=f"doc {did}" if did % 4 == 0 and fmt == "vtt" else None,
-                    idents=fmt == "vtt",
-                    settings="align:start position:10%" if fmt == "vtt" else None,
-                )
-                d = parse_subtitles(payload)
-                out["doc_id"].append(did)
-                for f in VTT_STATS_SCHEMA.fields[1:]:
-                    out[f.name].append(d[f.name])
-        yield pd.DataFrame(out)
+    def row(did):
+        fmt = "vtt" if did % 2 == 0 else "srt"
+        nc = 3 + did % 6
+        step = 1500 + did % 500
+        off = did % 100
+        cues = []
+        for i in range(nc):
+            start = off + i * step
+            dur = 900 + (did * 7 + i * 13) % 600
+            lines = [f"cue {i} of doc {did}"]
+            if i % 2 == 0:
+                lines.append("line two")
+            cues.append((start, start + dur, lines))
+        payload = encode_subtitles(
+            cues,
+            fmt,
+            note=f"doc {did}" if did % 4 == 0 and fmt == "vtt" else None,
+            idents=fmt == "vtt",
+            settings="align:start position:10%" if fmt == "vtt" else None,
+        )
+        d = parse_subtitles(payload)
+        yield did, *(d[f.name] for f in VTT_STATS_SCHEMA.fields[1:])
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, VTT_STATS_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, VTT_STATS_SCHEMA, spread=True)
 
 
 @query(
@@ -6787,74 +6569,69 @@ def exif_gps_scrub_stats(docs: DataFrame) -> DataFrame:
     three docs — read the coordinates, SCRUB them with
     `strip_exif_gps`, and verify the scrubbed file re-parses with no
     GPS, identical remaining tags, and an untouched compressed image
-    stream. Arrow `mapInPandas`, map-only."""
+    stream. Arrow `map_rows`, map-only."""
     import struct as _struct
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        out: dict[str, list] = {f.name: [] for f in EXIF_GPS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                big = did % 2 == 1
-                e = ">" if big else "<"
-                ifd0 = [
-                    (0x010E, *_exif_ascii(f"doc-{did}")),
-                    (0x0112, 3, 1, _struct.pack(e + "H", 1 + did % 8)),
-                ]
-                exif_ifd = [
-                    (0x829A, 5, 1, _struct.pack(e + "II", 1, 50 + did % 200)),
-                ]
-                gps_ifd = None
-                if did % 3 != 2:
-                    lat_ref = b"N\x00" if did % 2 == 0 else b"S\x00"
-                    lon_ref = b"E\x00" if did % 4 < 2 else b"W\x00"
-                    deg, minu, sec = did % 90, did % 60, did % 600
-                    dms = _struct.pack(e + "6I", deg, 1, minu, 1, sec, 10)
-                    gps_ifd = [
-                        (0x0001, 2, 2, lat_ref),
-                        (0x0002, 5, 3, dms),
-                        (0x0003, 2, 2, lon_ref),
-                        (0x0004, 5, 3, dms),
-                    ]
-                app1 = encode_exif_app1(
-                    ifd0, exif_ifd, big_endian=big, gps_ifd=gps_ifd
+    def row(did):
+        big = did % 2 == 1
+        e = ">" if big else "<"
+        ifd0 = [
+            (0x010E, *_exif_ascii(f"doc-{did}")),
+            (0x0112, 3, 1, _struct.pack(e + "H", 1 + did % 8)),
+        ]
+        exif_ifd = [
+            (0x829A, 5, 1, _struct.pack(e + "II", 1, 50 + did % 200)),
+        ]
+        gps_ifd = None
+        if did % 3 != 2:
+            lat_ref = b"N\x00" if did % 2 == 0 else b"S\x00"
+            lon_ref = b"E\x00" if did % 4 < 2 else b"W\x00"
+            deg, minu, sec = did % 90, did % 60, did % 600
+            dms = _struct.pack(e + "6I", deg, 1, minu, 1, sec, 10)
+            gps_ifd = [
+                (0x0001, 2, 2, lat_ref),
+                (0x0002, 5, 3, dms),
+                (0x0003, 2, 2, lon_ref),
+                (0x0004, 5, 3, dms),
+            ]
+        app1 = encode_exif_app1(
+            ifd0, exif_ifd, big_endian=big, gps_ifd=gps_ifd
+        )
+        px = np.full((8, 8, 3), (did * 13) % 211 + 20, dtype=np.uint8)
+        jpg = encode_jpeg(px, 8, 8, quality=95)
+        payload = jpg[:2] + app1 + jpg[2:]
+        before = parse_jpeg_exif(payload)
+        scrubbed, had = strip_exif_gps(payload)
+        after = parse_jpeg_exif(scrubbed)
+        # surgery invariants: GPS gone, everything else equal,
+        # compressed image stream untouched
+        assert after["gps"] is None
+        assert scrubbed.endswith(jpg[2:])
+        intact = int(
+            all(
+                before[k] == after[k]
+                for k in (
+                    "byte_order", "description", "orientation",
+                    "exposure_num", "exposure_den",
                 )
-                px = np.full((8, 8, 3), (did * 13) % 211 + 20, dtype=np.uint8)
-                jpg = encode_jpeg(px, 8, 8, quality=95)
-                payload = jpg[:2] + app1 + jpg[2:]
-                before = parse_jpeg_exif(payload)
-                scrubbed, had = strip_exif_gps(payload)
-                after = parse_jpeg_exif(scrubbed)
-                # surgery invariants: GPS gone, everything else equal,
-                # compressed image stream untouched
-                assert after["gps"] is None
-                assert scrubbed.endswith(jpg[2:])
-                intact = int(
-                    all(
-                        before[k] == after[k]
-                        for k in (
-                            "byte_order", "description", "orientation",
-                            "exposure_num", "exposure_den",
-                        )
-                    )
-                )
-                g = before["gps"]
-                out["doc_id"].append(did)
-                out["had_gps"].append(int(had))
-                out["lat_mas"].append(g["lat_mas"] if g else None)
-                out["lon_mas"].append(g["lon_mas"] if g else None)
-                out["lat_ref"].append(g.get("lat_ref") if g else None)
-                out["lon_ref"].append(g.get("lon_ref") if g else None)
-                out["n_ifd0_before"].append(before["n_ifd0"])
-                out["n_ifd0_after"].append(after["n_ifd0"])
-                out["intact"].append(intact)
-        yield pd.DataFrame(out)
+            )
+        )
+        g = before["gps"]
+        yield (
+            did,
+            int(had),
+            g["lat_mas"] if g else None,
+            g["lon_mas"] if g else None,
+            g.get("lat_ref") if g else None,
+            g.get("lon_ref") if g else None,
+            before["n_ifd0"],
+            after["n_ifd0"],
+            intact,
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, EXIF_GPS_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, EXIF_GPS_SCHEMA, spread=True)
 
 
 @query(
@@ -6949,31 +6726,20 @@ AUDIO_QUALITY_SCHEMA = T.StructType(
 def audio_quality_stats(docs: DataFrame) -> DataFrame:
     """Synthesize formula PCM per document (noise with planted clipped
     rails), round-trip it through the REAL WAV codec, and emit the
-    quality features. Arrow `mapInPandas`, map-only."""
+    quality features. Arrow `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in AUDIO_QUALITY_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 200 + did % 300
-                samples = [
-                    32767 if i % 50 == 7
-                    else -32768 if i % 97 == 13
-                    else ((did * 31 + i * 97) % 65536) - 32768
-                    for i in range(n)
-                ]
-                d = wav_pcm_quality(encode_wav(samples))
-                out["doc_id"].append(did)
-                for f in AUDIO_QUALITY_SCHEMA.fields[1:]:
-                    out[f.name].append(d[f.name])
-        yield pd.DataFrame(out)
+    def row(did):
+        n = 200 + did % 300
+        samples = [
+            32767 if i % 50 == 7
+            else -32768 if i % 97 == 13
+            else ((did * 31 + i * 97) % 65536) - 32768
+            for i in range(n)
+        ]
+        d = wav_pcm_quality(encode_wav(samples))
+        yield did, *(d[f.name] for f in AUDIO_QUALITY_SCHEMA.fields[1:])
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(
-        op, AUDIO_QUALITY_SCHEMA
-    )
+    return map_rows(docs.select("doc_id"), row, AUDIO_QUALITY_SCHEMA, spread=True)
 
 
 @query(
@@ -7128,65 +6894,52 @@ def webdataset_stats(docs: DataFrame) -> DataFrame:
     REAL text plus a .bin payload of formula bytes; every 3rd shard
     drops one sample's .bin (an incomplete sample the grouper must
     surface, not hide). Round-trips the ustar walk + grouping.
-    Arrow `mapInPandas`, map-only."""
+    Arrow `map_rows`, map-only."""
     import hashlib
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in WEBDATASET_SCHEMA.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                ns = 2 + did % 5
-                base, rem = divmod(len(text), ns)
-                members: "list[tuple[str, bytes]]" = []
-                at = 0
-                for s in range(ns):
-                    size = base + (1 if s < rem else 0)
-                    key = f"{did:06d}-{s:03d}"
-                    members.append(
-                        (key + ".txt", text[at : at + size].encode("utf-8"))
+    def row(did, text):
+        ns = 2 + did % 5
+        base, rem = divmod(len(text), ns)
+        members: "list[tuple[str, bytes]]" = []
+        at = 0
+        for s in range(ns):
+            size = base + (1 if s < rem else 0)
+            key = f"{did:06d}-{s:03d}"
+            members.append(
+                (key + ".txt", text[at : at + size].encode("utf-8"))
+            )
+            at += size
+            if not (did % 3 == 0 and s == 0):
+                members.append(
+                    (
+                        key + ".bin",
+                        bytes(
+                            (did * 7 + s * 13 + j) % 256
+                            for j in range(10 + (did + s) % 40)
+                        ),
                     )
-                    at += size
-                    if not (did % 3 == 0 and s == 0):
-                        members.append(
-                            (
-                                key + ".bin",
-                                bytes(
-                                    (did * 7 + s * 13 + j) % 256
-                                    for j in range(10 + (did + s) % 40)
-                                ),
-                            )
-                        )
-                tar = encode_tar(members)
-                groups = group_webdataset(parse_tar(tar))
-                txt = b"".join(
-                    groups[k]["txt"] for k in sorted(groups)
-                ).decode("utf-8")
-                assert txt == text  # fixture invariant
-                complete = sum(
-                    1 for f in groups.values() if {"txt", "bin"} <= set(f)
                 )
-                out["doc_id"].append(did)
-                out["n_members"].append(len(members))
-                out["n_samples"].append(len(groups))
-                out["complete_samples"].append(complete)
-                out["txt_bytes"].append(
-                    sum(len(f["txt"]) for f in groups.values())
-                )
-                out["bin_bytes"].append(
-                    sum(len(f.get("bin", b"")) for f in groups.values())
-                )
-                out["tar_bytes"].append(len(tar))
-                out["text_md5"].append(
-                    hashlib.md5(txt.encode("utf-8")).hexdigest()
-                )
-        yield pd.DataFrame(out)
+        tar = encode_tar(members)
+        groups = group_webdataset(parse_tar(tar))
+        txt = b"".join(
+            groups[k]["txt"] for k in sorted(groups)
+        ).decode("utf-8")
+        assert txt == text  # fixture invariant
+        complete = sum(
+            1 for f in groups.values() if {"txt", "bin"} <= set(f)
+        )
+        yield (
+            did,
+            len(members),
+            len(groups),
+            complete,
+            sum(len(f["txt"]) for f in groups.values()),
+            sum(len(f.get("bin", b"")) for f in groups.values()),
+            len(tar),
+            hashlib.md5(txt.encode("utf-8")).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id", "text").repartition(par).mapInPandas(
-        op, WEBDATASET_SCHEMA
-    )
+    return map_rows(docs.select("doc_id", "text"), row, WEBDATASET_SCHEMA, spread=True)
 
 
 @query(
@@ -7285,40 +7038,33 @@ def video_scenecut_stats(docs: DataFrame, threshold: int = 30) -> DataFrame:
     cuts."""
     import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in SCENECUT_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nf, scene_len = 12 + did % 5, 3 + did % 3
-                frames = []
-                for f in range(nf):
-                    s, k = divmod(f, scene_len)
-                    col = np.array(
-                        [
-                            (did * 31 + s * 59) % 180 + 20 + k % 2,
-                            (did * 37 + s * 61) % 180 + 20 + k % 2,
-                            (did * 29 + s * 67) % 180 + 20 + k % 2,
-                        ],
-                        dtype=np.uint8,
-                    )
-                    frames.append(np.broadcast_to(col, (8, 8, 3)).copy())
-                payload = encode_avi_mjpeg(frames, 8, 8, quality=95)
-                d = decode_avi_frames(payload, every=1)
-                sc = detect_scene_cuts(d["frames"], threshold=threshold)
-                out["doc_id"].append(did)
-                out["n_frames"].append(d["n_frames"])
-                out["n_cuts"].append(len(sc["cuts"]))
-                out["first_cut"].append(sc["cuts"][0] if sc["cuts"] else None)
-                out["sum_diff"].append(sc["sum_diff"])
-                out["max_diff"].append(sc["max_diff"])
-        yield pd.DataFrame(out)
+    def row(did):
+        nf, scene_len = 12 + did % 5, 3 + did % 3
+        frames = []
+        for f in range(nf):
+            s, k = divmod(f, scene_len)
+            col = np.array(
+                [
+                    (did * 31 + s * 59) % 180 + 20 + k % 2,
+                    (did * 37 + s * 61) % 180 + 20 + k % 2,
+                    (did * 29 + s * 67) % 180 + 20 + k % 2,
+                ],
+                dtype=np.uint8,
+            )
+            frames.append(np.broadcast_to(col, (8, 8, 3)).copy())
+        payload = encode_avi_mjpeg(frames, 8, 8, quality=95)
+        d = decode_avi_frames(payload, every=1)
+        sc = detect_scene_cuts(d["frames"], threshold=threshold)
+        yield (
+            did,
+            d["n_frames"],
+            len(sc["cuts"]),
+            sc["cuts"][0] if sc["cuts"] else None,
+            sc["sum_diff"],
+            sc["max_diff"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id").repartition(par).mapInPandas(op, SCENECUT_SCHEMA)
-    )
+    return map_rows(docs.select("doc_id"), row, SCENECUT_SCHEMA, spread=True)
 
 
 @query(

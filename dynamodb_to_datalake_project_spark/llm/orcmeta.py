@@ -21,6 +21,7 @@ import zlib
 
 from dynamodb_to_datalake_project_spark.llm.bitio import read_uvarint, unzigzag
 from dynamodb_to_datalake_project_spark.llm.tfrecord import _pb_walk
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 _ORC_COMPRESSION = {
     0: "NONE", 1: "ZLIB", 2: "SNAPPY", 3: "LZO", 4: "LZ4", 5: "ZSTD",
@@ -161,9 +162,7 @@ def orc_audit_stats(docs):
     hand-parsed tail alone — rows, stripe census (one stripe at this
     size; the writer splits at 1024-row batches, proven multi-stripe
     in the unit tests), type-tree kinds and field names."""
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -177,49 +176,39 @@ def orc_audit_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        import io
+    import io
 
-        import pyarrow as pa
-        from pyarrow import orc as _orc
+    import pyarrow as pa
+    from pyarrow import orc as _orc
 
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                table = pa.table(
-                    {
-                        "idx": pa.array(range(len(words)), pa.int64()),
-                        "word": pa.array(words, pa.string()),
-                    }
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        table = pa.table(
+            {
+                "idx": pa.array(range(len(words)), pa.int64()),
+                "word": pa.array(words, pa.string()),
+            }
+        )
+        buf = io.BytesIO()
+        _orc.write_table(table, buf)
+        d = parse_orc_tail(buf.getvalue())
+        assert d["num_rows"] == len(words)
+        assert sum(d["stripe_rows"]) == len(words)
+        yield (
+            did,
+            d["num_rows"],
+            d["n_stripes"],
+            len(d["field_names"]),
+            ",".join(
+                f"{n}:{k}"
+                for n, k in zip(
+                    d["field_names"], d["column_kinds"][1:]
                 )
-                buf = io.BytesIO()
-                _orc.write_table(table, buf)
-                d = parse_orc_tail(buf.getvalue())
-                assert d["num_rows"] == len(words)
-                assert sum(d["stripe_rows"]) == len(words)
-                out["doc_id"].append(did)
-                out["num_rows"].append(d["num_rows"])
-                out["n_stripes"].append(d["n_stripes"])
-                out["n_columns"].append(len(d["field_names"]))
-                out["schema_sig"].append(
-                    ",".join(
-                        f"{n}:{k}"
-                        for n, k in zip(
-                            d["field_names"], d["column_kinds"][1:]
-                        )
-                    )
-                )
-                out["compression"].append(d["compression"])
-        yield _pd.DataFrame(out)
+            ),
+            d["compression"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 # ---------------------------------------------------------------------------
@@ -522,9 +511,7 @@ def orc_value_scan_stats(docs, compression_by_doc: bool = True):
     emitted surface is a pure function of the word list, shared with
     the parquet scans (`_SCAN_ORACLE`)."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -538,47 +525,40 @@ def orc_value_scan_stats(docs, compression_by_doc: bool = True):
     )
     codecs = [None, "zlib", "zstd"]
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        import io
+    import io
 
-        import pyarrow as pa
-        from pyarrow import orc as _orc
+    import pyarrow as pa
+    from pyarrow import orc as _orc
 
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                table = pa.table(
-                    {
-                        "idx": pa.array(range(len(words)), pa.int64()),
-                        "word": pa.array(words, pa.string()),
-                    }
-                )
-                buf = io.BytesIO()
-                codec = codecs[did % 3] if compression_by_doc else None
-                if codec is None:
-                    _orc.write_table(table, buf)
-                else:
-                    _orc.write_table(table, buf, compression=codec)
-                payload = buf.getvalue()
-                idx = read_orc_column(payload, "idx")
-                ws = read_orc_column(payload, "word")
-                assert idx == list(range(len(words)))
-                assert [w.decode() for w in ws] == words
-                joined = b" ".join(ws)
-                out["doc_id"].append(did)
-                out["n_values"].append(len(idx))
-                out["sum_idx"].append(sum(idx))
-                out["word_bytes"].append(sum(len(w) for w in ws))
-                out["words_md5"].append(hashlib.md5(joined).hexdigest())
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        table = pa.table(
+            {
+                "idx": pa.array(range(len(words)), pa.int64()),
+                "word": pa.array(words, pa.string()),
+            }
+        )
+        buf = io.BytesIO()
+        codec = codecs[did % 3] if compression_by_doc else None
+        if codec is None:
+            _orc.write_table(table, buf)
+        else:
+            _orc.write_table(table, buf, compression=codec)
+        payload = buf.getvalue()
+        idx = read_orc_column(payload, "idx")
+        ws = read_orc_column(payload, "word")
+        assert idx == list(range(len(words)))
+        assert [w.decode() for w in ws] == words
+        joined = b" ".join(ws)
+        yield (
+            did,
+            len(idx),
+            sum(idx),
+            sum(len(w) for w in ws),
+            hashlib.md5(joined).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par).mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema, spread=True)
 
 
 def _register() -> None:

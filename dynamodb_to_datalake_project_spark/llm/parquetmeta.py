@@ -21,6 +21,7 @@ from __future__ import annotations
 import struct
 
 from dynamodb_to_datalake_project_spark.llm.bitio import read_uvarint, unzigzag
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 # thrift compact element types
 _CT_STOP = 0
@@ -234,9 +235,7 @@ def parquet_audit_stats(docs):
     census, leaf schema, and per-chunk value counts all come from the
     hand-parsed footer and are cross-checked against the known layout
     in-op."""
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -251,62 +250,51 @@ def parquet_audit_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        import io
+    import io
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                table = pa.table(
-                    {
-                        "idx": pa.array(range(len(words)), pa.int64()),
-                        "word": pa.array(words, pa.string()),
-                    }
-                )
-                buf = io.BytesIO()
-                n_rg = did % 3 + 1
-                rows_per = max(1, -(-len(words) // n_rg))
-                pq.write_table(
-                    table, buf, row_group_size=rows_per,
-                    compression="NONE", use_dictionary=False,
-                )
-                d = parse_parquet_footer(buf.getvalue())
-                assert d["num_rows"] == len(words)
-                assert sum(rg["num_rows"] for rg in d["row_groups"]) == len(
-                    words
-                )
-                uncompressed = all(
-                    c["codec"] == "UNCOMPRESSED"
-                    for rg in d["row_groups"]
-                    for c in rg["columns"]
-                )
-                out["doc_id"].append(did)
-                out["num_rows"].append(d["num_rows"])
-                out["n_row_groups"].append(len(d["row_groups"]))
-                out["n_leaf_columns"].append(len(d["columns"]))
-                out["schema_sig"].append(
-                    ",".join(f"{c['name']}:{c['type']}" for c in d["columns"])
-                )
-                out["sum_chunk_values"].append(
-                    sum(
-                        c["num_values"]
-                        for rg in d["row_groups"]
-                        for c in rg["columns"]
-                    )
-                )
-                out["uncompressed"].append(int(uncompressed))
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        table = pa.table(
+            {
+                "idx": pa.array(range(len(words)), pa.int64()),
+                "word": pa.array(words, pa.string()),
+            }
+        )
+        buf = io.BytesIO()
+        n_rg = did % 3 + 1
+        rows_per = max(1, -(-len(words) // n_rg))
+        pq.write_table(
+            table, buf, row_group_size=rows_per,
+            compression="NONE", use_dictionary=False,
+        )
+        d = parse_parquet_footer(buf.getvalue())
+        assert d["num_rows"] == len(words)
+        assert sum(rg["num_rows"] for rg in d["row_groups"]) == len(
+            words
+        )
+        uncompressed = all(
+            c["codec"] == "UNCOMPRESSED"
+            for rg in d["row_groups"]
+            for c in rg["columns"]
+        )
+        yield (
+            did,
+            d["num_rows"],
+            len(d["row_groups"]),
+            len(d["columns"]),
+            ",".join(f"{c['name']}:{c['type']}" for c in d["columns"]),
+            sum(
+                c["num_values"]
+                for rg in d["row_groups"]
+                for c in rg["columns"]
+            ),
+            int(uncompressed),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par).mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema, spread=True)
 
 
 def _register() -> None:
@@ -366,9 +354,7 @@ def lake_footer_audit(spark, sf_dir: str):
     on a cluster the same op runs over `spark.read.format
     ("binaryFile")` (or a manifest join, `lake.manifest_paths`) — the
     audit cost is O(footer bytes · files), never O(data)."""
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -379,19 +365,13 @@ def lake_footer_audit(spark, sf_dir: str):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for t in pdf["t"]:
-                with open(f"{sf_dir}/{t}.parquet", "rb") as fh:
-                    d = parse_parquet_footer(fh.read())
-                out["table_name"].append(str(t))
-                out["num_rows"].append(d["num_rows"])
-                out["n_leaf_columns"].append(len(d["columns"]))
-        yield _pd.DataFrame(out)
+    def row(t):
+        with open(f"{sf_dir}/{t}.parquet", "rb") as fh:
+            d = parse_parquet_footer(fh.read())
+        yield t, d["num_rows"], len(d["columns"])
 
     tables = spark.createDataFrame([(t,) for t in LAKE_TABLES], "t string")
-    return tables.repartition(len(LAKE_TABLES)).mapInPandas(op, schema)
+    return map_rows(tables.repartition(len(LAKE_TABLES)), row, schema)
 
 
 def _register_lake() -> None:
@@ -583,9 +563,7 @@ def parquet_scan_stats(
     `v2_delta=True` writes DataPageV2 pages with DELTA_BINARY_PACKED
     idx and DELTA_BYTE_ARRAY words — the parquet-mr v2 defaults."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     minimal = compression == "NONE" and not use_dictionary and not v2_delta
@@ -599,61 +577,54 @@ def parquet_scan_stats(
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        import io
+    import io
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    reader = read_parquet_column if minimal else read_parquet_column_full
 
-        reader = read_parquet_column if minimal else read_parquet_column_full
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                table = pa.table(
-                    {
-                        "idx": pa.array(range(len(words)), pa.int64()),
-                        "word": pa.array(words, pa.string()),
-                    }
-                )
-                buf = io.BytesIO()
-                v2_kw = (
-                    {
-                        "version": "2.6",
-                        "data_page_version": "2.0",
-                        "column_encoding": {
-                            "idx": "DELTA_BINARY_PACKED",
-                            "word": "DELTA_BYTE_ARRAY",
-                        },
-                    }
-                    if v2_delta
-                    else {}
-                )
-                pq.write_table(
-                    table, buf, compression=compression,
-                    use_dictionary=use_dictionary,
-                    row_group_size=max(1, -(-len(words) // (did % 3 + 1))),
-                    **v2_kw,
-                )
-                payload = buf.getvalue()
-                idx = reader(payload, "idx")
-                ws = reader(payload, "word")
-                assert idx == list(range(len(words)))
-                assert [w.decode() for w in ws] == words
-                joined = b" ".join(ws)
-                out["doc_id"].append(did)
-                out["n_values"].append(len(idx))
-                out["sum_idx"].append(sum(idx))
-                out["word_bytes"].append(sum(len(w) for w in ws))
-                out["words_md5"].append(hashlib.md5(joined).hexdigest())
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        table = pa.table(
+            {
+                "idx": pa.array(range(len(words)), pa.int64()),
+                "word": pa.array(words, pa.string()),
+            }
+        )
+        buf = io.BytesIO()
+        v2_kw = (
+            {
+                "version": "2.6",
+                "data_page_version": "2.0",
+                "column_encoding": {
+                    "idx": "DELTA_BINARY_PACKED",
+                    "word": "DELTA_BYTE_ARRAY",
+                },
+            }
+            if v2_delta
+            else {}
+        )
+        pq.write_table(
+            table, buf, compression=compression,
+            use_dictionary=use_dictionary,
+            row_group_size=max(1, -(-len(words) // (did % 3 + 1))),
+            **v2_kw,
+        )
+        payload = buf.getvalue()
+        idx = reader(payload, "idx")
+        ws = reader(payload, "word")
+        assert idx == list(range(len(words)))
+        assert [w.decode() for w in ws] == words
+        joined = b" ".join(ws)
+        yield (
+            did,
+            len(idx),
+            sum(idx),
+            sum(len(w) for w in ws),
+            hashlib.md5(joined).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par).mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema, spread=True)
 
 
 #: shared oracle for the fixture-file scans: the recovered values are
@@ -1192,9 +1163,7 @@ def lake_value_scan(spark, sf_dir: str):
     of the sorted utf-8 values (string) — all derived from bytes the
     hand-rolled snappy/dictionary/page walk decoded itself."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -1207,33 +1176,18 @@ def lake_value_scan(spark, sf_dir: str):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for t, c, is_str in zip(
-                pdf["t"], pdf["c"], pdf["is_str"]
-            ):
-                with open(f"{sf_dir}/{t}.parquet", "rb") as fh:
-                    vals = read_parquet_column_full(fh.read(), str(c))
-                out["table_name"].append(str(t))
-                out["column_name"].append(str(c))
-                out["n_values"].append(len(vals))
-                if is_str:
-                    joined = " ".join(
-                        sorted(v.decode("utf-8") for v in vals)
-                    )
-                    out["int_sum"].append(None)
-                    out["sorted_md5"].append(
-                        hashlib.md5(joined.encode()).hexdigest()
-                    )
-                else:
-                    out["int_sum"].append(int(sum(vals)))
-                    out["sorted_md5"].append(None)
-        yield _pd.DataFrame(out)
+    def row(t, c, is_str):
+        with open(f"{sf_dir}/{t}.parquet", "rb") as fh:
+            vals = read_parquet_column_full(fh.read(), c)
+        if is_str:
+            joined = " ".join(sorted(v.decode("utf-8") for v in vals))
+            yield t, c, len(vals), None, hashlib.md5(joined.encode()).hexdigest()
+        else:
+            yield t, c, len(vals), int(sum(vals)), None
 
     rows = [(t, c, s) for t, c, s in _LAKE_SCAN_COLS]
     frame = spark.createDataFrame(rows, "t string, c string, is_str boolean")
-    return frame.repartition(len(rows)).mapInPandas(op, schema)
+    return map_rows(frame.repartition(len(rows)), row, schema)
 
 
 def _register_value_scan() -> None:

@@ -36,6 +36,7 @@ NotImplementedError.
 from __future__ import annotations
 
 from dynamodb_to_datalake_project_spark.llm.bitio import uvarint, zigzag
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 # thrift compact type nibbles
 _T_TRUE, _T_FALSE, _T_BYTE = 1, 2, 3
@@ -736,9 +737,7 @@ def handwritten_parquet_stats(docs, page_version: int = 1):
     word-formula census is emitted. A single malformed byte anywhere
     in the thrift/page/footer chain breaks one of the readers."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -751,69 +750,58 @@ def handwritten_parquet_stats(docs, page_version: int = 1):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        import io
+    import io
 
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
+    from dynamodb_to_datalake_project_spark.llm.parquetmeta import (
+        read_parquet_column_full,
+    )
 
-        from dynamodb_to_datalake_project_spark.llm.parquetmeta import (
-            read_parquet_column_full,
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        use_dict = (did >> 2) % 2 == 1
+        payload = write_parquet(
+            {
+                "idx": ("INT64", list(range(len(words)))),
+                "word": ("BYTE_ARRAY", words),
+            },
+            codec=(
+                "UNCOMPRESSED",
+                "SNAPPY",
+                "GZIP",
+                "ZSTD",
+                "LZ4_RAW",
+            )[did % 5],
+            row_group_size=max(1, -(-len(words) // (did % 3 + 1))),
+            dictionary=use_dict,
+            page_version=page_version,
+        )
+        pf = pq.ParquetFile(io.BytesIO(payload))
+        t = pf.read()
+        assert t.column("idx").to_pylist() == list(
+            range(len(words))
+        )
+        assert t.column("word").to_pylist() == words
+        if words:  # pyarrow trusts the hand-written stats
+            st = pf.metadata.row_group(0).column(0).statistics
+            assert st.has_min_max and st.min == 0
+            assert st.null_count == 0
+        if words and page_version == 2 and not use_dict:
+            encs = pf.metadata.row_group(0).column(0).encodings
+            assert "DELTA_BINARY_PACKED" in encs, encs
+        assert read_parquet_column_full(payload, "idx") == list(
+            range(len(words))
+        )
+        joined = " ".join(words).encode()
+        yield (
+            did,
+            len(words),
+            len(words) * (len(words) - 1) // 2,
+            sum(len(w.encode()) for w in words),
+            hashlib.md5(joined).hexdigest(),
         )
 
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                use_dict = (did >> 2) % 2 == 1
-                payload = write_parquet(
-                    {
-                        "idx": ("INT64", list(range(len(words)))),
-                        "word": ("BYTE_ARRAY", words),
-                    },
-                    codec=(
-                        "UNCOMPRESSED",
-                        "SNAPPY",
-                        "GZIP",
-                        "ZSTD",
-                        "LZ4_RAW",
-                    )[did % 5],
-                    row_group_size=max(1, -(-len(words) // (did % 3 + 1))),
-                    dictionary=use_dict,
-                    page_version=page_version,
-                )
-                pf = pq.ParquetFile(io.BytesIO(payload))
-                t = pf.read()
-                assert t.column("idx").to_pylist() == list(
-                    range(len(words))
-                )
-                assert t.column("word").to_pylist() == words
-                if words:  # pyarrow trusts the hand-written stats
-                    st = pf.metadata.row_group(0).column(0).statistics
-                    assert st.has_min_max and st.min == 0
-                    assert st.null_count == 0
-                if words and page_version == 2 and not use_dict:
-                    encs = pf.metadata.row_group(0).column(0).encodings
-                    assert "DELTA_BINARY_PACKED" in encs, encs
-                assert read_parquet_column_full(payload, "idx") == list(
-                    range(len(words))
-                )
-                joined = " ".join(words).encode()
-                out["doc_id"].append(did)
-                out["n_values"].append(len(words))
-                out["sum_idx"].append(len(words) * (len(words) - 1) // 2)
-                out["word_bytes"].append(
-                    sum(len(w.encode()) for w in words)
-                )
-                out["words_md5"].append(hashlib.md5(joined).hexdigest())
-        yield _pd.DataFrame(out)
-
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def _register() -> None:

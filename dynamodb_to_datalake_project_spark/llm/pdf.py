@@ -30,14 +30,13 @@ Reference parity: none — north-star LLM-corpus ingest tooling
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 
 def _pdf_escape(s: str) -> str:
@@ -373,42 +372,33 @@ def pdf_extract_stats(docs: DataFrame) -> DataFrame:
     pages (each page a Tj + a 2-piece TJ whose concatenation is the
     page slice), written as a conformant Flate-compressed PDF and
     parsed back — extraction must recover the document text exactly.
-    Arrow `mapInPandas`, map-only."""
+    Arrow `map_rows`, map-only."""
     import hashlib
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in PDF_STATS_SCHEMA.fields}
-        for pdf_batch in batches:
-            for did, text in zip(pdf_batch["doc_id"], pdf_batch["text"]):
-                did = int(did)
-                n = 1 + did % 4
-                base, rem = divmod(len(text), n)
-                pages = []
-                at = 0
-                for p in range(n):
-                    size = base + (1 if p < rem else 0)
-                    slice_ = text[at : at + size]
-                    at += size
-                    h = len(slice_) // 2
-                    q = h + (len(slice_) - h) // 2
-                    pages.append((slice_[:h], slice_[h:q], slice_[q:]))
-                d = parse_pdf(encode_pdf(pages))
-                assert d["text"] == text  # fixture invariant
-                out["doc_id"].append(did)
-                out["n_pages"].append(d["n_pages"])
-                out["n_objects"].append(d["n_objects"])
-                out["n_show_ops"].append(d["n_show_ops"])
-                out["extracted_chars"].append(d["extracted_chars"])
-                out["extracted_md5"].append(
-                    hashlib.md5(d["text"].encode("utf-8")).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def row(did, text):
+        n = 1 + did % 4
+        base, rem = divmod(len(text), n)
+        pages = []
+        at = 0
+        for p in range(n):
+            size = base + (1 if p < rem else 0)
+            slice_ = text[at : at + size]
+            at += size
+            h = len(slice_) // 2
+            q = h + (len(slice_) - h) // 2
+            pages.append((slice_[:h], slice_[h:q], slice_[q:]))
+        d = parse_pdf(encode_pdf(pages))
+        assert d["text"] == text  # fixture invariant
+        yield (
+            did,
+            d["n_pages"],
+            d["n_objects"],
+            d["n_show_ops"],
+            d["extracted_chars"],
+            hashlib.md5(d["text"].encode("utf-8")).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id", "text").repartition(par).mapInPandas(
-        op, PDF_STATS_SCHEMA
-    )
+    return map_rows(docs.select("doc_id", "text"), row, PDF_STATS_SCHEMA, spread=True)
 
 
 @query(

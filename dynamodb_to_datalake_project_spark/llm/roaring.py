@@ -35,6 +35,7 @@ Everything raises ValueError on malformed bytes (truncation, bad
 cookie, out-of-order keys, overlapping runs)."""
 
 from __future__ import annotations
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 _COOKIE_RUN = 12347
 _COOKIE_NORUN = 12346
@@ -288,9 +289,7 @@ def dv_delete_read_stats(docs):
     The oracle replays the formula; the in-op asserts pin the
     roundtrip and the survivor list element-wise."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -303,55 +302,45 @@ def dv_delete_read_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        from dynamodb_to_datalake_project_spark.llm.parquetmeta import (
-            read_parquet_column_full,
-        )
-        from dynamodb_to_datalake_project_spark.llm.parquetwrite import (
-            write_parquet,
-        )
-
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                n = len(words)
-                run_lo = did % 3
-                run_hi = min(n, run_lo + 4)  # contiguous run
-                dels = sorted(
-                    set(range(run_lo, run_hi))
-                    | {p for p in range(n) if p % 5 == did % 5}
-                )
-                blob = roaring_serialize(dels)
-                assert roaring_deserialize(blob) == dels
-                payload = write_parquet(
-                    {"word": ("BYTE_ARRAY", words)}
-                )
-                vals = read_parquet_column_full(payload, "word")
-                live = [
-                    w.decode()
-                    for w in apply_delete_vector(vals, blob)
-                ]
-                want = [
-                    w for i, w in enumerate(words) if i not in set(dels)
-                ]
-                assert live == want
-                out["doc_id"].append(did)
-                out["n_live"].append(len(live))
-                out["n_deleted"].append(len(dels))
-                out["dv_containers"].append(1)  # all ordinals < 65536
-                out["live_md5"].append(
-                    hashlib.md5(" ".join(live).encode()).hexdigest()
-                )
-        yield _pd.DataFrame(out)
-
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
+    from dynamodb_to_datalake_project_spark.llm.parquetmeta import (
+        read_parquet_column_full,
     )
+    from dynamodb_to_datalake_project_spark.llm.parquetwrite import (
+        write_parquet,
+    )
+
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        n = len(words)
+        run_lo = did % 3
+        run_hi = min(n, run_lo + 4)  # contiguous run
+        dels = sorted(
+            set(range(run_lo, run_hi))
+            | {p for p in range(n) if p % 5 == did % 5}
+        )
+        blob = roaring_serialize(dels)
+        assert roaring_deserialize(blob) == dels
+        payload = write_parquet(
+            {"word": ("BYTE_ARRAY", words)}
+        )
+        vals = read_parquet_column_full(payload, "word")
+        live = [
+            w.decode()
+            for w in apply_delete_vector(vals, blob)
+        ]
+        want = [
+            w for i, w in enumerate(words) if i not in set(dels)
+        ]
+        assert live == want
+        yield (
+            did,
+            len(live),
+            len(dels),
+            1,
+            hashlib.md5(" ".join(live).encode()).hexdigest(),
+        )
+
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def _register() -> None:

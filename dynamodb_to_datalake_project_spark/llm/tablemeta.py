@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import json
 
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
+
 
 def replay_hudi_timeline(commits: "list[tuple[str, str]]") -> dict:
     """Fold Hudi commit metadata files (instant_time, content) into
@@ -313,9 +315,7 @@ def table_format_stats(docs):
     upsert rewriting every 2nd file group) AND an Iceberg metadata
     file with (2 + id%3) snapshots — both replayed/parsed and their
     censuses emitted side by side."""
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -331,90 +331,83 @@ def table_format_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                k = 2 + did % 4  # file groups
-                rows = [50 + (did + i) % 20 for i in range(k)]
-                def pstats(indices, slice_no):
-                    by_part: "dict[str, list]" = {}
-                    for i in indices:
-                        part = f"dt=2024-01-{1 + i % 2:02d}"
-                        by_part.setdefault(part, []).append({
-                            "fileId": f"fg-{i}",
-                            "path": f"{part}/fg-{i}_{slice_no}.parquet",
-                            "numWrites": rows[i] + 5 * slice_no,
-                            "numInserts": rows[i] if slice_no == 0 else 5,
-                            "numDeletes": 0,
-                            "numUpdateWrites": rows[i] if slice_no else 0,
-                            "totalWriteBytes": (1000 + 100 * slice_no)
-                            * (i + 1),
-                        })
-                    return by_part
-
-                c0 = json.dumps({
-                    "operationType": "insert",
-                    "partitionToWriteStats": pstats(range(k), 0),
+    def row(did):
+        k = 2 + did % 4  # file groups
+        rows = [50 + (did + i) % 20 for i in range(k)]
+        def pstats(indices, slice_no):
+            by_part: "dict[str, list]" = {}
+            for i in indices:
+                part = f"dt=2024-01-{1 + i % 2:02d}"
+                by_part.setdefault(part, []).append({
+                    "fileId": f"fg-{i}",
+                    "path": f"{part}/fg-{i}_{slice_no}.parquet",
+                    "numWrites": rows[i] + 5 * slice_no,
+                    "numInserts": rows[i] if slice_no == 0 else 5,
+                    "numDeletes": 0,
+                    "numUpdateWrites": rows[i] if slice_no else 0,
+                    "totalWriteBytes": (1000 + 100 * slice_no)
+                    * (i + 1),
                 })
-                upd = [i for i in range(k) if i % 2 == 0]
-                c1 = json.dumps({
-                    "operationType": "upsert",
-                    "partitionToWriteStats": pstats(upd, 1),
-                })
-                hudi = replay_hudi_timeline(
-                    [("20240101000000", c0), ("20240102000000", c1)]
-                )
-                n_snap = 2 + did % 3
-                total_recs = sum(rows) + 5 * len(upd)
-                ice = parse_iceberg_metadata(json.dumps({
-                    "format-version": 2,
-                    "table-uuid": f"uuid-{did}",
-                    "current-schema-id": 0,
-                    "schemas": [{
-                        "schema-id": 0,
-                        "fields": [
-                            {"id": j + 1, "name": nm, "type": "long"}
-                            for j, nm in enumerate(("id", "payload", "ts"))
-                        ],
-                    }],
-                    "default-spec-id": 0,
-                    "partition-specs": [{
-                        "spec-id": 0,
-                        "fields": [{"name": "dt", "source-id": 3,
-                                    "transform": "day"}],
-                    }],
-                    "current-snapshot-id": n_snap - 1,
-                    "snapshots": [
-                        {
-                            "snapshot-id": s,
-                            "summary": {
-                                "operation": "append",
-                                "total-records": str(
-                                    total_recs if s == n_snap - 1 else s
-                                ),
-                                "total-data-files": str(k),
-                            },
-                        }
-                        for s in range(n_snap)
-                    ],
-                }))
-                out["doc_id"].append(did)
-                out["hudi_file_groups"].append(hudi["n_file_groups"])
-                out["hudi_live_records"].append(hudi["live_records"])
-                out["hudi_inserts"].append(hudi["total_inserts"])
-                out["hudi_updates"].append(hudi["total_updates"])
-                out["ice_snapshots"].append(ice["n_snapshots"])
-                out["ice_total_records"].append(ice["total_records"])
-                out["ice_cols"].append(len(ice["schema_cols"]))
-        yield _pd.DataFrame(out)
+            return by_part
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id").repartition(par).mapInPandas(op, schema_t)
-    )
+        c0 = json.dumps({
+            "operationType": "insert",
+            "partitionToWriteStats": pstats(range(k), 0),
+        })
+        upd = [i for i in range(k) if i % 2 == 0]
+        c1 = json.dumps({
+            "operationType": "upsert",
+            "partitionToWriteStats": pstats(upd, 1),
+        })
+        hudi = replay_hudi_timeline(
+            [("20240101000000", c0), ("20240102000000", c1)]
+        )
+        n_snap = 2 + did % 3
+        total_recs = sum(rows) + 5 * len(upd)
+        ice = parse_iceberg_metadata(json.dumps({
+            "format-version": 2,
+            "table-uuid": f"uuid-{did}",
+            "current-schema-id": 0,
+            "schemas": [{
+                "schema-id": 0,
+                "fields": [
+                    {"id": j + 1, "name": nm, "type": "long"}
+                    for j, nm in enumerate(("id", "payload", "ts"))
+                ],
+            }],
+            "default-spec-id": 0,
+            "partition-specs": [{
+                "spec-id": 0,
+                "fields": [{"name": "dt", "source-id": 3,
+                            "transform": "day"}],
+            }],
+            "current-snapshot-id": n_snap - 1,
+            "snapshots": [
+                {
+                    "snapshot-id": s,
+                    "summary": {
+                        "operation": "append",
+                        "total-records": str(
+                            total_recs if s == n_snap - 1 else s
+                        ),
+                        "total-data-files": str(k),
+                    },
+                }
+                for s in range(n_snap)
+            ],
+        }))
+        yield (
+            did,
+            hudi["n_file_groups"],
+            hudi["live_records"],
+            hudi["total_inserts"],
+            hudi["total_updates"],
+            ice["n_snapshots"],
+            ice["total_records"],
+            len(ice["schema_cols"]),
+        )
+
+    return map_rows(docs.select("doc_id"), row, schema_t, spread=True)
 
 
 def iceberg_manifest_stats(docs):
@@ -425,9 +418,7 @@ def iceberg_manifest_stats(docs):
     through `resolve_iceberg_snapshot` back to the live file census.
     The emitted numbers all come out of the Avro walk; the oracle
     recomputes them from the generation formulas."""
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     from dynamodb_to_datalake_project_spark.llm.avrofile import encode_avro
@@ -443,124 +434,117 @@ def iceberg_manifest_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                m = 1 + did % 3
-                codec = "deflate" if did % 2 == 0 else "null"
-                files: "dict[str, bytes]" = {}
-                ml_rows = []
-                live_records = live_files = 0
-                for j in range(m):
-                    fj = 2 + (did + j) % 3
-                    entries = []
-                    for i in range(fj):
-                        deleted = j == m - 1 and i == 0 and m > 1
-                        rec = 50 + (did + 7 * j + i) % 20
-                        entries.append(
-                            {
-                                "status": _DELETED if deleted else _ADDED,
-                                "snapshot_id": None if deleted else 7,
-                                "data_file": {
-                                    "file_path": f"data/f{j}-{i}.parquet",
-                                    "file_format": "PARQUET",
-                                    "partition": {
-                                        "dt": f"2024-01-{1 + i % 2:02d}"
-                                    },
-                                    "record_count": rec,
-                                    "file_size_in_bytes": 1000 * (i + 1)
-                                    + 10 * j,
-                                },
-                            }
-                        )
-                        if not deleted:
-                            live_records += rec
-                            live_files += 1
-                    blob = encode_avro(
-                        entries, MANIFEST_SCHEMA, codec=codec,
-                        records_per_block=2,
-                    )
-                    path = f"meta/m{j}.avro"
-                    files[path] = blob
-                    adds = [e for e in entries if e["status"] == _ADDED]
-                    dels = [e for e in entries if e["status"] == _DELETED]
-                    ml_rows.append(
-                        {
-                            "manifest_path": path,
-                            "manifest_length": len(blob),
-                            "partition_spec_id": 0,
-                            "added_snapshot_id": 7,
-                            "added_files_count": len(adds),
-                            "existing_files_count": 0,
-                            "deleted_files_count": len(dels),
-                            "added_rows_count": sum(
-                                e["data_file"]["record_count"] for e in adds
-                            ),
-                            "existing_rows_count": 0,
-                            "deleted_rows_count": sum(
-                                e["data_file"]["record_count"] for e in dels
-                            ),
-                        }
-                    )
-                files["meta/ml.avro"] = encode_avro(
-                    ml_rows, MANIFEST_LIST_SCHEMA, codec=codec
-                )
-                metadata = json.dumps(
+    def row(did):
+        m = 1 + did % 3
+        codec = "deflate" if did % 2 == 0 else "null"
+        files: "dict[str, bytes]" = {}
+        ml_rows = []
+        live_records = live_files = 0
+        for j in range(m):
+            fj = 2 + (did + j) % 3
+            entries = []
+            for i in range(fj):
+                deleted = j == m - 1 and i == 0 and m > 1
+                rec = 50 + (did + 7 * j + i) % 20
+                entries.append(
                     {
-                        "format-version": 2,
-                        "table-uuid": f"uuid-{did}",
-                        "current-schema-id": 0,
-                        "schemas": [
-                            {
-                                "schema-id": 0,
-                                "fields": [
-                                    {"id": 1, "name": "id", "type": "long"}
-                                ],
-                            }
+                        "status": _DELETED if deleted else _ADDED,
+                        "snapshot_id": None if deleted else 7,
+                        "data_file": {
+                            "file_path": f"data/f{j}-{i}.parquet",
+                            "file_format": "PARQUET",
+                            "partition": {
+                                "dt": f"2024-01-{1 + i % 2:02d}"
+                            },
+                            "record_count": rec,
+                            "file_size_in_bytes": 1000 * (i + 1)
+                            + 10 * j,
+                        },
+                    }
+                )
+                if not deleted:
+                    live_records += rec
+                    live_files += 1
+            blob = encode_avro(
+                entries, MANIFEST_SCHEMA, codec=codec,
+                records_per_block=2,
+            )
+            path = f"meta/m{j}.avro"
+            files[path] = blob
+            adds = [e for e in entries if e["status"] == _ADDED]
+            dels = [e for e in entries if e["status"] == _DELETED]
+            ml_rows.append(
+                {
+                    "manifest_path": path,
+                    "manifest_length": len(blob),
+                    "partition_spec_id": 0,
+                    "added_snapshot_id": 7,
+                    "added_files_count": len(adds),
+                    "existing_files_count": 0,
+                    "deleted_files_count": len(dels),
+                    "added_rows_count": sum(
+                        e["data_file"]["record_count"] for e in adds
+                    ),
+                    "existing_rows_count": 0,
+                    "deleted_rows_count": sum(
+                        e["data_file"]["record_count"] for e in dels
+                    ),
+                }
+            )
+        files["meta/ml.avro"] = encode_avro(
+            ml_rows, MANIFEST_LIST_SCHEMA, codec=codec
+        )
+        metadata = json.dumps(
+            {
+                "format-version": 2,
+                "table-uuid": f"uuid-{did}",
+                "current-schema-id": 0,
+                "schemas": [
+                    {
+                        "schema-id": 0,
+                        "fields": [
+                            {"id": 1, "name": "id", "type": "long"}
                         ],
-                        "default-spec-id": 0,
-                        "partition-specs": [
+                    }
+                ],
+                "default-spec-id": 0,
+                "partition-specs": [
+                    {
+                        "spec-id": 0,
+                        "fields": [
                             {
-                                "spec-id": 0,
-                                "fields": [
-                                    {
-                                        "name": "dt",
-                                        "source-id": 1,
-                                        "transform": "day",
-                                    }
-                                ],
-                            }
-                        ],
-                        "current-snapshot-id": 7,
-                        "snapshots": [
-                            {
-                                "snapshot-id": 7,
-                                "manifest-list": "meta/ml.avro",
-                                "summary": {
-                                    "operation": "overwrite",
-                                    "total-records": str(live_records),
-                                    "total-data-files": str(live_files),
-                                },
+                                "name": "dt",
+                                "source-id": 1,
+                                "transform": "day",
                             }
                         ],
                     }
-                )
-                res = resolve_iceberg_snapshot(metadata, files)
-                out["doc_id"].append(did)
-                out["n_manifests"].append(res["n_manifests"])
-                out["live_files"].append(res["live_files"])
-                out["live_records"].append(res["live_records"])
-                out["deleted_files"].append(res["deleted_files"])
-                out["live_bytes"].append(res["live_bytes"])
-        yield _pd.DataFrame(out)
+                ],
+                "current-snapshot-id": 7,
+                "snapshots": [
+                    {
+                        "snapshot-id": 7,
+                        "manifest-list": "meta/ml.avro",
+                        "summary": {
+                            "operation": "overwrite",
+                            "total-records": str(live_records),
+                            "total-data-files": str(live_files),
+                        },
+                    }
+                ],
+            }
+        )
+        res = resolve_iceberg_snapshot(metadata, files)
+        yield (
+            did,
+            res["n_manifests"],
+            res["live_files"],
+            res["live_records"],
+            res["deleted_files"],
+            res["live_bytes"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id").repartition(par).mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id"), row, schema_t, spread=True)
 
 
 # ---------------------------------------------------------------------------
@@ -717,9 +701,7 @@ def iceberg_bounds_prune_stats(docs):
     with two ranges — a narrow one-file window and a half-domain
     scan. All through REAL Avro manifests (arrays of bound records
     — the Avro subset gained arrays for this)."""
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     from dynamodb_to_datalake_project_spark.llm.avrofile import encode_avro
@@ -735,83 +717,79 @@ def iceberg_bounds_prune_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for doc_id in _pd.concat(list(batches))["doc_id"]:
-            did = int(doc_id)
-            k = 6 + did % 5
-            entries = []
-            for j in range(k):
-                bounds = (
-                    []
-                    if j % 4 == 3
-                    else [{"field_id": 1, "lo": 100 * j,
-                           "hi": 100 * j + 149}]
-                )
-                entries.append(
-                    {
-                        "status": _ADDED,
-                        "snapshot_id": 7,
-                        "data_file": {
-                            "content": 0,
-                            "file_path": f"data/f{j}.parquet",
-                            "file_format": "PARQUET",
-                            "partition": {"dt": "2024-01-01"},
-                            "record_count": 10 + j,
-                            "file_size_in_bytes": 1000,
-                            "column_bounds": bounds,
-                        },
-                    }
-                )
-            blob = encode_avro(entries, MANIFEST_V2_SCHEMA)
-            files = {"meta/m0.avro": blob}
-            files["meta/ml.avro"] = encode_avro(
-                [
-                    {
-                        "manifest_path": "meta/m0.avro",
-                        "manifest_length": len(blob),
-                        "partition_spec_id": 0,
-                        "content": 0,
-                        "sequence_number": 1,
-                        "added_snapshot_id": 7,
-                        "added_files_count": k,
-                        "existing_files_count": 0,
-                        "deleted_files_count": 0,
-                        "added_rows_count": sum(
-                            10 + j for j in range(k)
-                        ),
-                        "existing_rows_count": 0,
-                        "deleted_rows_count": 0,
-                    }
-                ],
-                MANIFEST_LIST_V2_SCHEMA,
+    def row(did):
+        k = 6 + did % 5
+        entries = []
+        for j in range(k):
+            bounds = (
+                []
+                if j % 4 == 3
+                else [{"field_id": 1, "lo": 100 * j,
+                       "hi": 100 * j + 149}]
             )
-            metadata = json.dumps(
+            entries.append(
                 {
-                    "format-version": 2,
-                    "current-snapshot-id": 7,
-                    "snapshots": [
-                        {"snapshot-id": 7, "manifest-list": "meta/ml.avro"}
-                    ],
+                    "status": _ADDED,
+                    "snapshot_id": 7,
+                    "data_file": {
+                        "content": 0,
+                        "file_path": f"data/f{j}.parquet",
+                        "file_format": "PARQUET",
+                        "partition": {"dt": "2024-01-01"},
+                        "record_count": 10 + j,
+                        "file_size_in_bytes": 1000,
+                        "column_bounds": bounds,
+                    },
                 }
             )
-            # narrow probe: one 50-wide window at file did%k's start
-            w = did % k
-            narrow = iceberg_scan_plan(
-                metadata, files, 1, 100 * w, 100 * w + 50
-            )
-            half = iceberg_scan_plan(metadata, files, 1, 0, 50 * k)
-            out["doc_id"].append(did)
-            out["n_files"].append(narrow["total"])
-            out["narrow_scanned"].append(narrow["scanned"])
-            out["narrow_skipped"].append(narrow["skipped"])
-            out["half_scanned"].append(half["scanned"])
-            out["narrow_rows"].append(narrow["scanned_rows"])
-        yield _pd.DataFrame(out)
+        blob = encode_avro(entries, MANIFEST_V2_SCHEMA)
+        files = {"meta/m0.avro": blob}
+        files["meta/ml.avro"] = encode_avro(
+            [
+                {
+                    "manifest_path": "meta/m0.avro",
+                    "manifest_length": len(blob),
+                    "partition_spec_id": 0,
+                    "content": 0,
+                    "sequence_number": 1,
+                    "added_snapshot_id": 7,
+                    "added_files_count": k,
+                    "existing_files_count": 0,
+                    "deleted_files_count": 0,
+                    "added_rows_count": sum(
+                        10 + j for j in range(k)
+                    ),
+                    "existing_rows_count": 0,
+                    "deleted_rows_count": 0,
+                }
+            ],
+            MANIFEST_LIST_V2_SCHEMA,
+        )
+        metadata = json.dumps(
+            {
+                "format-version": 2,
+                "current-snapshot-id": 7,
+                "snapshots": [
+                    {"snapshot-id": 7, "manifest-list": "meta/ml.avro"}
+                ],
+            }
+        )
+        # narrow probe: one 50-wide window at file did%k's start
+        w = did % k
+        narrow = iceberg_scan_plan(
+            metadata, files, 1, 100 * w, 100 * w + 50
+        )
+        half = iceberg_scan_plan(metadata, files, 1, 0, 50 * k)
+        yield (
+            did,
+            narrow["total"],
+            narrow["scanned"],
+            narrow["skipped"],
+            half["scanned"],
+            narrow["scanned_rows"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, schema_t)
+    return map_rows(docs.select("doc_id"), row, schema_t, spread=True)
 
 
 def read_iceberg_with_deletes(
@@ -957,9 +935,7 @@ def iceberg_delete_read_stats(docs):
     recovered entirely through the zero-dep readers. The oracle
     replays the same drop formula over the word list."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     from dynamodb_to_datalake_project_spark.llm.avrofile import encode_avro
@@ -974,156 +950,143 @@ def iceberg_delete_read_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        import io
+    import io
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    def parquet_bytes(table):
+        buf = io.BytesIO()
+        pq.write_table(table, buf)
+        return buf.getvalue()
 
-        def parquet_bytes(table):
-            buf = io.BytesIO()
-            pq.write_table(table, buf)
-            return buf.getvalue()
-
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                n = len(words)
-                h = (n + 1) // 2
-                chunks = {"data/f0.parquet": words[:h],
-                          "data/f1.parquet": words[h:]}
-                files: "dict[str, bytes]" = {
-                    p: parquet_bytes(
-                        pa.table({"word": pa.array(ws, pa.string())})
-                    )
-                    for p, ws in chunks.items()
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        n = len(words)
+        h = (n + 1) // 2
+        chunks = {"data/f0.parquet": words[:h],
+                  "data/f1.parquet": words[h:]}
+        files: "dict[str, bytes]" = {
+            p: parquet_bytes(
+                pa.table({"word": pa.array(ws, pa.string())})
+            )
+            for p, ws in chunks.items()
+        }
+        del_rows = [
+            ("data/f0.parquet", p)
+            for p in range(h)
+            if p % 4 == did % 4
+        ] + [
+            ("data/f1.parquet", p)
+            for p in range(n - h)
+            if p % 3 == did % 3
+        ]
+        files["data/del0.parquet"] = parquet_bytes(
+            pa.table(
+                {
+                    "file_path": pa.array(
+                        [r[0] for r in del_rows], pa.string()
+                    ),
+                    "pos": pa.array(
+                        [r[1] for r in del_rows], pa.int64()
+                    ),
                 }
-                del_rows = [
-                    ("data/f0.parquet", p)
-                    for p in range(h)
-                    if p % 4 == did % 4
-                ] + [
-                    ("data/f1.parquet", p)
-                    for p in range(n - h)
-                    if p % 3 == did % 3
-                ]
-                files["data/del0.parquet"] = parquet_bytes(
-                    pa.table(
-                        {
-                            "file_path": pa.array(
-                                [r[0] for r in del_rows], pa.string()
-                            ),
-                            "pos": pa.array(
-                                [r[1] for r in del_rows], pa.int64()
-                            ),
-                        }
-                    )
-                )
-                manifests = [
-                    ("meta/m0.avro", 0, [
-                        {
-                            "status": _ADDED,
-                            "snapshot_id": 7,
-                            "data_file": {
-                                "content": 0,
-                                "file_path": p,
-                                "file_format": "PARQUET",
-                                "partition": {"dt": "2024-01-01"},
-                                "record_count": len(ws),
-                                "file_size_in_bytes": len(files[p]),
-                            },
-                        }
-                        for p, ws in chunks.items()
-                    ]),
-                    ("meta/m1.avro", 1, [
-                        {
-                            "status": _ADDED,
-                            "snapshot_id": 7,
-                            "data_file": {
-                                "content": 1,
-                                "file_path": "data/del0.parquet",
-                                "file_format": "PARQUET",
-                                "partition": {"dt": "2024-01-01"},
-                                "record_count": len(del_rows),
-                                "file_size_in_bytes": len(
-                                    files["data/del0.parquet"]
-                                ),
-                            },
-                        }
-                    ]),
-                ]
-                ml_rows = []
-                for path, content, entries in manifests:
-                    blob = encode_avro(entries, MANIFEST_V2_SCHEMA)
-                    files[path] = blob
-                    ml_rows.append(
-                        {
-                            "manifest_path": path,
-                            "manifest_length": len(blob),
-                            "partition_spec_id": 0,
-                            "content": content,
-                            "sequence_number": 1 if content == 0 else 2,
-                            "added_snapshot_id": 7,
-                            "added_files_count": len(entries),
-                            "existing_files_count": 0,
-                            "deleted_files_count": 0,
-                            "added_rows_count": sum(
-                                e["data_file"]["record_count"]
-                                for e in entries
-                            ),
-                            "existing_rows_count": 0,
-                            "deleted_rows_count": 0,
-                        }
-                    )
-                files["meta/ml.avro"] = encode_avro(
-                    ml_rows, MANIFEST_LIST_V2_SCHEMA
-                )
-                metadata = json.dumps(
+            )
+        )
+        manifests = [
+            ("meta/m0.avro", 0, [
+                {
+                    "status": _ADDED,
+                    "snapshot_id": 7,
+                    "data_file": {
+                        "content": 0,
+                        "file_path": p,
+                        "file_format": "PARQUET",
+                        "partition": {"dt": "2024-01-01"},
+                        "record_count": len(ws),
+                        "file_size_in_bytes": len(files[p]),
+                    },
+                }
+                for p, ws in chunks.items()
+            ]),
+            ("meta/m1.avro", 1, [
+                {
+                    "status": _ADDED,
+                    "snapshot_id": 7,
+                    "data_file": {
+                        "content": 1,
+                        "file_path": "data/del0.parquet",
+                        "file_format": "PARQUET",
+                        "partition": {"dt": "2024-01-01"},
+                        "record_count": len(del_rows),
+                        "file_size_in_bytes": len(
+                            files["data/del0.parquet"]
+                        ),
+                    },
+                }
+            ]),
+        ]
+        ml_rows = []
+        for path, content, entries in manifests:
+            blob = encode_avro(entries, MANIFEST_V2_SCHEMA)
+            files[path] = blob
+            ml_rows.append(
+                {
+                    "manifest_path": path,
+                    "manifest_length": len(blob),
+                    "partition_spec_id": 0,
+                    "content": content,
+                    "sequence_number": 1 if content == 0 else 2,
+                    "added_snapshot_id": 7,
+                    "added_files_count": len(entries),
+                    "existing_files_count": 0,
+                    "deleted_files_count": 0,
+                    "added_rows_count": sum(
+                        e["data_file"]["record_count"]
+                        for e in entries
+                    ),
+                    "existing_rows_count": 0,
+                    "deleted_rows_count": 0,
+                }
+            )
+        files["meta/ml.avro"] = encode_avro(
+            ml_rows, MANIFEST_LIST_V2_SCHEMA
+        )
+        metadata = json.dumps(
+            {
+                "format-version": 2,
+                "current-snapshot-id": 7,
+                "snapshots": [
                     {
-                        "format-version": 2,
-                        "current-snapshot-id": 7,
-                        "snapshots": [
-                            {
-                                "snapshot-id": 7,
-                                "manifest-list": "meta/ml.avro",
-                            }
-                        ],
+                        "snapshot-id": 7,
+                        "manifest-list": "meta/ml.avro",
                     }
-                )
-                got = read_iceberg_with_deletes(metadata, files, "word")
-                live = [
-                    w.decode()
-                    for p in ("data/f0.parquet", "data/f1.parquet")
-                    for w in got[p]
-                ]
-                # independent replay of the drop formula
-                want = [
-                    w for i, w in enumerate(words[:h])
-                    if i % 4 != did % 4
-                ] + [
-                    w for i, w in enumerate(words[h:])
-                    if i % 3 != did % 3
-                ]
-                assert live == want
-                out["doc_id"].append(did)
-                out["n_live"].append(len(live))
-                out["n_deleted"].append(n - len(live))
-                out["live_word_bytes"].append(
-                    sum(len(w.encode()) for w in live)
-                )
-                out["live_md5"].append(
-                    hashlib.md5(" ".join(live).encode()).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+                ],
+            }
+        )
+        got = read_iceberg_with_deletes(metadata, files, "word")
+        live = [
+            w.decode()
+            for p in ("data/f0.parquet", "data/f1.parquet")
+            for w in got[p]
+        ]
+        # independent replay of the drop formula
+        want = [
+            w for i, w in enumerate(words[:h])
+            if i % 4 != did % 4
+        ] + [
+            w for i, w in enumerate(words[h:])
+            if i % 3 != did % 3
+        ]
+        assert live == want
+        yield (
+            did,
+            len(live),
+            n - len(live),
+            sum(len(w.encode()) for w in live),
+            hashlib.md5(" ".join(live).encode()).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def iceberg_equality_delete_stats(docs):
@@ -1136,9 +1099,7 @@ def iceberg_equality_delete_stats(docs):
     copies in f1 survive (`n_shielded` counts exactly those). The
     oracle replays both rules from the word formulas."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     from dynamodb_to_datalake_project_spark.llm.avrofile import encode_avro
@@ -1152,113 +1113,94 @@ def iceberg_equality_delete_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        import io
+    import io
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        def pq_words(ws):
-            buf = io.BytesIO()
-            pq.write_table(
-                pa.table({"word": pa.array(ws, pa.string())}), buf
-            )
-            return buf.getvalue()
+    def pq_words(ws):
+        buf = io.BytesIO()
+        pq.write_table(pa.table({"word": pa.array(ws, pa.string())}), buf)
+        return buf.getvalue()
 
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        rows = []
-        for pdf in batches:
-            rows.extend(zip(pdf["doc_id"], pdf["text"]))
-        for did, text in rows:
-            did = int(did)
-            words = [w for w in text.split(" ") if w]
-            f1_words = [w for i, w in enumerate(words) if i % 7 == 0]
-            dels = sorted({w for w in words if len(w) % 3 == did % 3})
-            files = {
-                "data/f0.parquet": pq_words(words),
-                "data/f1.parquet": pq_words(f1_words),
-                "data/eq.parquet": pq_words(dels),
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        f1_words = [w for i, w in enumerate(words) if i % 7 == 0]
+        dels = sorted({w for w in words if len(w) % 3 == did % 3})
+        files = {
+            "data/f0.parquet": pq_words(words),
+            "data/f1.parquet": pq_words(f1_words),
+            "data/eq.parquet": pq_words(dels),
+        }
+
+        def df_entry(path, content, rec):
+            return {
+                "status": _ADDED,
+                "snapshot_id": 7,
+                "data_file": {
+                    "content": content,
+                    "file_path": path,
+                    "file_format": "PARQUET",
+                    "partition": {"dt": "2024-01-01"},
+                    "record_count": rec,
+                    "file_size_in_bytes": len(files[path]),
+                },
             }
 
-            def df_entry(path, content, rec):
-                return {
-                    "status": _ADDED,
-                    "snapshot_id": 7,
-                    "data_file": {
-                        "content": content,
-                        "file_path": path,
-                        "file_format": "PARQUET",
-                        "partition": {"dt": "2024-01-01"},
-                        "record_count": rec,
-                        "file_size_in_bytes": len(files[path]),
-                    },
-                }
-
-            manifests = [
-                ("meta/m0.avro", 0, 1,
-                 [df_entry("data/f0.parquet", 0, len(words))]),
-                ("meta/m1.avro", 2, 2,
-                 [df_entry("data/eq.parquet", 2, len(dels))]),
-                ("meta/m2.avro", 0, 3,
-                 [df_entry("data/f1.parquet", 0, len(f1_words))]),
-            ]
-            ml_rows = []
-            for path, content, seq, entries in manifests:
-                blob = encode_avro(entries, MANIFEST_V2_SCHEMA)
-                files[path] = blob
-                ml_rows.append(
-                    {
-                        "manifest_path": path,
-                        "manifest_length": len(blob),
-                        "partition_spec_id": 0,
-                        "content": content,
-                        "sequence_number": seq,
-                        "added_snapshot_id": 7,
-                        "added_files_count": len(entries),
-                        "existing_files_count": 0,
-                        "deleted_files_count": 0,
-                        "added_rows_count": sum(
-                            e["data_file"]["record_count"] for e in entries
-                        ),
-                        "existing_rows_count": 0,
-                        "deleted_rows_count": 0,
-                    }
-                )
-            files["meta/ml.avro"] = encode_avro(
-                ml_rows, MANIFEST_LIST_V2_SCHEMA
-            )
-            metadata = json.dumps(
+        manifests = [
+            ("meta/m0.avro", 0, 1,
+             [df_entry("data/f0.parquet", 0, len(words))]),
+            ("meta/m1.avro", 2, 2,
+             [df_entry("data/eq.parquet", 2, len(dels))]),
+            ("meta/m2.avro", 0, 3,
+             [df_entry("data/f1.parquet", 0, len(f1_words))]),
+        ]
+        ml_rows = []
+        for path, content, seq, entries in manifests:
+            blob = encode_avro(entries, MANIFEST_V2_SCHEMA)
+            files[path] = blob
+            ml_rows.append(
                 {
-                    "format-version": 2,
-                    "current-snapshot-id": 7,
-                    "snapshots": [
-                        {"snapshot-id": 7, "manifest-list": "meta/ml.avro"}
-                    ],
+                    "manifest_path": path,
+                    "manifest_length": len(blob),
+                    "partition_spec_id": 0,
+                    "content": content,
+                    "sequence_number": seq,
+                    "added_snapshot_id": 7,
+                    "added_files_count": len(entries),
+                    "existing_files_count": 0,
+                    "deleted_files_count": 0,
+                    "added_rows_count": sum(
+                        e["data_file"]["record_count"] for e in entries
+                    ),
+                    "existing_rows_count": 0,
+                    "deleted_rows_count": 0,
                 }
             )
-            got = read_iceberg_with_deletes(metadata, files, "word")
-            f0_live = [w.decode() for w in got["data/f0.parquet"]]
-            f1_live = [w.decode() for w in got["data/f1.parquet"]]
-            want_f0 = [w for w in words if len(w) % 3 != did % 3]
-            assert f0_live == want_f0
-            assert f1_live == f1_words  # seq 3 > 2: shielded
-            live = f0_live + f1_live
-            out["doc_id"].append(did)
-            out["n_live"].append(len(live))
-            out["n_shielded"].append(
-                sum(1 for w in f1_words if len(w) % 3 == did % 3)
-            )
-            out["live_md5"].append(
-                hashlib.md5(" ".join(live).encode()).hexdigest()
-            )
-        yield _pd.DataFrame(out)
+        files["meta/ml.avro"] = encode_avro(
+            ml_rows, MANIFEST_LIST_V2_SCHEMA
+        )
+        metadata = json.dumps(
+            {
+                "format-version": 2,
+                "current-snapshot-id": 7,
+                "snapshots": [
+                    {"snapshot-id": 7, "manifest-list": "meta/ml.avro"}
+                ],
+            }
+        )
+        got = read_iceberg_with_deletes(metadata, files, "word")
+        f0_live = [w.decode() for w in got["data/f0.parquet"]]
+        f1_live = [w.decode() for w in got["data/f1.parquet"]]
+        want_f0 = [w for w in words if len(w) % 3 != did % 3]
+        assert f0_live == want_f0
+        assert f1_live == f1_words  # seq 3 > 2: shielded
+        live = f0_live + f1_live
+        n_shielded = sum(1 for w in f1_words if len(w) % 3 == did % 3)
+        live_md5 = hashlib.md5(" ".join(live).encode()).hexdigest()
+        yield did, len(live), n_shielded, live_md5
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def _register() -> None:

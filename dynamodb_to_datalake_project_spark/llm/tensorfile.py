@@ -25,6 +25,8 @@ import ast
 import json
 import struct
 
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
+
 #: dtype → byte width for the safetensors names this audit knows
 _ST_DTYPES = {
     "F64": 8, "F32": 4, "F16": 2, "BF16": 2,
@@ -223,10 +225,8 @@ def tensor_file_stats(docs):
     I64 bias from word-length formulas + a BF16 metadata-only blob)
     and a .npy dump of the same ints — audited, value-read, and
     checksummed."""
-    from collections.abc import Iterator as _Iterator
 
     import numpy as np
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -241,49 +241,40 @@ def tensor_file_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = [w for w in text.split(" ") if w]
-                k = len(words)
-                lens = np.array([len(w) for w in words], dtype=np.int64)
-                weight = (lens[:, None] * 7 + np.arange(4)[None, :]
-                          + did % 13).astype(np.float32)
-                bias = lens * 3 + 1
-                half = np.zeros(2 * k, dtype=np.uint8)  # BF16 stand-in
-                st = encode_safetensors(
-                    {
-                        "model.weight": ("F32", [k, 4], weight.tobytes()),
-                        "model.bias": ("I64", [k], bias.tobytes()),
-                        "model.half": ("BF16", [k], half.tobytes()),
-                    },
-                    metadata={"doc": str(did)},
-                )
-                d = parse_safetensors(st)
-                w = read_safetensor(st, "model.weight")
-                b = read_safetensor(st, "model.bias")
-                assert (b == bias).all()
-                npy = encode_npy(lens)
-                nd = parse_npy(npy)
-                assert (nd["values"] == lens).all()
-                out["doc_id"].append(did)
-                out["n_tensors"].append(len(d["tensors"]))
-                out["total_params"].append(d["total_params"])
-                out["data_bytes"].append(d["data_bytes"])
-                # f32 holds these small ints exactly -> integer sum
-                out["weight_sum"].append(int(w.astype(np.int64).sum()))
-                out["npy_elements"].append(nd["n_elements"])
-                out["npy_sum"].append(int(nd["values"].sum()))
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        words = [w for w in text.split(" ") if w]
+        k = len(words)
+        lens = np.array([len(w) for w in words], dtype=np.int64)
+        weight = (lens[:, None] * 7 + np.arange(4)[None, :]
+                  + did % 13).astype(np.float32)
+        bias = lens * 3 + 1
+        half = np.zeros(2 * k, dtype=np.uint8)  # BF16 stand-in
+        st = encode_safetensors(
+            {
+                "model.weight": ("F32", [k, 4], weight.tobytes()),
+                "model.bias": ("I64", [k], bias.tobytes()),
+                "model.half": ("BF16", [k], half.tobytes()),
+            },
+            metadata={"doc": str(did)},
+        )
+        d = parse_safetensors(st)
+        w = read_safetensor(st, "model.weight")
+        b = read_safetensor(st, "model.bias")
+        assert (b == bias).all()
+        npy = encode_npy(lens)
+        nd = parse_npy(npy)
+        assert (nd["values"] == lens).all()
+        yield (
+            did,
+            len(d["tensors"]),
+            d["total_params"],
+            d["data_bytes"],
+            int(w.astype(np.int64).sum()),
+            nd["n_elements"],
+            int(nd["values"].sum()),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def _register() -> None:

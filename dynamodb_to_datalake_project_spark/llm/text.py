@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 #: tiny deterministic stopword list used by quality + lang-id signals
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
@@ -1303,12 +1304,10 @@ def unicode_repair_stats(docs: DataFrame) -> DataFrame:
     accent word appended, then per doc_id%4: NFD decomposition, single
     mojibake, double mojibake, or zero-width/BOM/NBSP/control
     injection — run `repair_unicode`, and prove the repair recovers
-    the clean NFC text exactly (md5). Arrow `mapInPandas`, map-only."""
+    the clean NFC text exactly (md5). Arrow `map_rows`, map-only."""
     import hashlib
     import unicodedata
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -1323,50 +1322,41 @@ def unicode_repair_stats(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def op(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                clean = text + " " + _ACCENT_WORDS[did % 6]
-                case = did % 4
-                if case == 0:
-                    corrupted = unicodedata.normalize("NFD", clean)
-                elif case == 1:
-                    corrupted = clean.encode("utf-8").decode("latin-1")
-                elif case == 2:
-                    corrupted = (
-                        clean.encode("utf-8")
-                        .decode("latin-1")
-                        .encode("utf-8")
-                        .decode("latin-1")
-                    )
-                else:
-                    corrupted = (
-                        "﻿"
-                        + clean[0]
-                        + "​"
-                        + clean[1:].replace(" ", "\xa0", 1)
-                        + "\x07"
-                    )
-                d = repair_unicode(corrupted)
-                assert d["text"] == clean  # fixture invariant
-                out["doc_id"].append(did)
-                out["mojibake_rounds"].append(d["mojibake_rounds"])
-                out["nfc_fixed"].append(d["nfc_fixed"])
-                out["nbsp_fixed"].append(d["nbsp_fixed"])
-                out["removed_chars"].append(d["removed_chars"])
-                out["clean_chars"].append(len(d["text"]))
-                out["clean_md5"].append(
-                    hashlib.md5(d["text"].encode("utf-8")).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        clean = text + " " + _ACCENT_WORDS[did % 6]
+        case = did % 4
+        if case == 0:
+            corrupted = unicodedata.normalize("NFD", clean)
+        elif case == 1:
+            corrupted = clean.encode("utf-8").decode("latin-1")
+        elif case == 2:
+            corrupted = (
+                clean.encode("utf-8")
+                .decode("latin-1")
+                .encode("utf-8")
+                .decode("latin-1")
+            )
+        else:
+            corrupted = (
+                "﻿"
+                + clean[0]
+                + "​"
+                + clean[1:].replace(" ", "\xa0", 1)
+                + "\x07"
+            )
+        d = repair_unicode(corrupted)
+        assert d["text"] == clean  # fixture invariant
+        yield (
+            did,
+            d["mojibake_rounds"],
+            d["nfc_fixed"],
+            d["nbsp_fixed"],
+            d["removed_chars"],
+            len(d["text"]),
+            hashlib.md5(d["text"].encode("utf-8")).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par).mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema, spread=True)
 
 
 @query(
@@ -1473,12 +1463,10 @@ def dialogue_stats(docs: DataFrame) -> DataFrame:
     equal-split across 2·(1 + doc_id%4) alternating user/assistant
     contents (concatenation reconstructs the text exactly), a
     constant system prompt on every 3rd doc — serialize through real
-    JSON, validate + extract. Arrow `mapInPandas`, map-only."""
+    JSON, validate + extract. Arrow `map_rows`, map-only."""
     import hashlib
     import json
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -1493,46 +1481,37 @@ def dialogue_stats(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def op(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                n = 2 * (1 + did % 4)
-                base, rem = divmod(len(text), n)
-                msgs = []
-                if did % 3 == 0:
-                    msgs.append({"role": "system", "content": _SYSTEM_PROMPT})
-                at = 0
-                for j in range(n):
-                    size = base + (1 if j < rem else 0)
-                    msgs.append(
-                        {
-                            "role": "user" if j % 2 == 0 else "assistant",
-                            "content": text[at : at + size],
-                        }
-                    )
-                    at += size
-                d = parse_dialogue(json.dumps(msgs))
-                convo = "".join(
-                    m["content"] for m in msgs if m["role"] != "system"
-                )
-                out["doc_id"].append(did)
-                out["n_messages"].append(d["n_messages"])
-                out["n_turns"].append(d["n_turns"])
-                out["has_system"].append(d["has_system"])
-                out["user_chars"].append(d["user_chars"])
-                out["assistant_chars"].append(d["assistant_chars"])
-                out["convo_md5"].append(
-                    hashlib.md5(convo.encode("utf-8")).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        n = 2 * (1 + did % 4)
+        base, rem = divmod(len(text), n)
+        msgs = []
+        if did % 3 == 0:
+            msgs.append({"role": "system", "content": _SYSTEM_PROMPT})
+        at = 0
+        for j in range(n):
+            size = base + (1 if j < rem else 0)
+            msgs.append(
+                {
+                    "role": "user" if j % 2 == 0 else "assistant",
+                    "content": text[at : at + size],
+                }
+            )
+            at += size
+        d = parse_dialogue(json.dumps(msgs))
+        convo = "".join(
+            m["content"] for m in msgs if m["role"] != "system"
+        )
+        yield (
+            did,
+            d["n_messages"],
+            d["n_turns"],
+            d["has_system"],
+            d["user_chars"],
+            d["assistant_chars"],
+            hashlib.md5(convo.encode("utf-8")).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par).mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema, spread=True)
 
 
 @query(
@@ -1831,11 +1810,9 @@ def markdown_strip_stats(docs: DataFrame) -> DataFrame:
     REAL text with every 7th-cycle word decorated (italic / bold /
     code span / link by position formula), and a trailing code fence —
     strip it back to plain text, and prove the recovery byte-exact.
-    Arrow `mapInPandas`, map-only."""
+    Arrow `map_rows`, map-only."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -1851,50 +1828,41 @@ def markdown_strip_stats(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def op(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = text.split(" ")
-                deco = []
-                for i, w in enumerate(words):
-                    m = i % 7
-                    if w and m == 1:
-                        deco.append(f"*{w}*")
-                    elif w and m == 2:
-                        deco.append(f"**{w}**")
-                    elif w and m == 3:
-                        deco.append(f"`{w}`")
-                    elif w and m == 4:
-                        deco.append(f"[{w}](https://x.example/p{did})")
-                    else:
-                        deco.append(w)
-                md = (
-                    f"# doc {did}\n"
-                    + " ".join(deco)
-                    + f"\n```py\ncode sample {did % 10}\n```"
-                )
-                d = strip_markdown(md)
-                expect = f"doc {did}\n{text}\ncode sample {did % 10}\n"
-                assert d["text"] == expect  # fixture invariant
-                out["doc_id"].append(did)
-                out["n_headers"].append(d["headers"])
-                out["n_links"].append(d["links"])
-                out["n_code_spans"].append(d["code_spans"])
-                out["n_emphasis"].append(d["emphasis"])
-                out["n_fences"].append(d["fences"])
-                out["extracted_chars"].append(len(d["text"]))
-                out["extracted_md5"].append(
-                    hashlib.md5(d["text"].encode("utf-8")).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        words = text.split(" ")
+        deco = []
+        for i, w in enumerate(words):
+            m = i % 7
+            if w and m == 1:
+                deco.append(f"*{w}*")
+            elif w and m == 2:
+                deco.append(f"**{w}**")
+            elif w and m == 3:
+                deco.append(f"`{w}`")
+            elif w and m == 4:
+                deco.append(f"[{w}](https://x.example/p{did})")
+            else:
+                deco.append(w)
+        md = (
+            f"# doc {did}\n"
+            + " ".join(deco)
+            + f"\n```py\ncode sample {did % 10}\n```"
+        )
+        d = strip_markdown(md)
+        expect = f"doc {did}\n{text}\ncode sample {did % 10}\n"
+        assert d["text"] == expect  # fixture invariant
+        yield (
+            did,
+            d["headers"],
+            d["links"],
+            d["code_spans"],
+            d["emphasis"],
+            d["fences"],
+            len(d["text"]),
+            hashlib.md5(d["text"].encode("utf-8")).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par).mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema, spread=True)
 
 
 @query(
@@ -2002,12 +1970,10 @@ def preference_pair_stats(docs: DataFrame) -> DataFrame:
     (longer by construction, so never identical) — then plant one
     violation class per doc_id%10 residue: 7 → identical pair,
     8 → empty rejected, 9 → missing key. Serialize through real JSON,
-    parse + classify with the gate. Arrow `mapInPandas`, map-only."""
+    parse + classify with the gate. Arrow `map_rows`, map-only."""
     import hashlib
     import json
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -2021,52 +1987,43 @@ def preference_pair_stats(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def op(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                cut = len(text) // 3
-                prompt, chosen = text[:cut], text[cut:]
-                m = did % 10
-                if m == 7:
-                    row = {"prompt": prompt, "chosen": chosen,
-                           "rejected": chosen}
-                elif m == 8:
-                    row = {"prompt": prompt, "chosen": chosen,
-                           "rejected": ""}
-                elif m == 9:
-                    row = {"prompt": prompt, "chosen": chosen}
-                else:
-                    row = {"prompt": prompt, "chosen": chosen,
-                           "rejected": chosen + " [worse]"}
-                raw = json.dumps(row)
-                try:
-                    d = parse_preference_pair(raw)
-                    status = "ok"
-                except ValueError as exc:
-                    d = None
-                    status = str(exc).split(":", 1)[0]
-                out["doc_id"].append(did)
-                out["status"].append(status)
-                out["prompt_chars"].append(d and d["prompt_chars"])
-                out["chosen_chars"].append(d and d["chosen_chars"])
-                out["rejected_chars"].append(d and d["rejected_chars"])
-                out["pair_md5"].append(
-                    hashlib.md5(
-                        (row["prompt"] + row["chosen"] + row["rejected"])
-                        .encode("utf-8")
-                    ).hexdigest()
-                    if d
-                    else None
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        cut = len(text) // 3
+        prompt, chosen = text[:cut], text[cut:]
+        m = did % 10
+        if m == 7:
+            row = {"prompt": prompt, "chosen": chosen,
+                   "rejected": chosen}
+        elif m == 8:
+            row = {"prompt": prompt, "chosen": chosen,
+                   "rejected": ""}
+        elif m == 9:
+            row = {"prompt": prompt, "chosen": chosen}
+        else:
+            row = {"prompt": prompt, "chosen": chosen,
+                   "rejected": chosen + " [worse]"}
+        raw = json.dumps(row)
+        try:
+            d = parse_preference_pair(raw)
+            status = "ok"
+        except ValueError as exc:
+            d = None
+            status = str(exc).split(":", 1)[0]
+        yield (
+            did,
+            status,
+            d and d["prompt_chars"],
+            d and d["chosen_chars"],
+            d and d["rejected_chars"],
+            hashlib.md5(
+                (row["prompt"] + row["chosen"] + row["rejected"])
+                .encode("utf-8")
+            ).hexdigest()
+            if d
+            else None,
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par).mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema, spread=True)
 
 
 @query(

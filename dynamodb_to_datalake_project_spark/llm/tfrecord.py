@@ -288,15 +288,13 @@ def tfrecord_stats(docs):
     )
 
     def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
         for pdf in batches:
             # build every doc's example payloads first, then do ONE
             # vectorized CRC pass over the whole Arrow batch — the
             # length-grouped numpy kernel needs cross-doc volume to
             # beat the per-byte loop (measured 82 s -> ~8 s at x100)
             per_doc: "list[tuple[int, list[str], list[bytes]]]" = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
+            for did, text in zip(pdf["doc_id"].tolist(), pdf["text"]):
                 words = [w for w in text.split(" ") if w]
                 payloads = [
                     encode_tf_example(
@@ -312,6 +310,7 @@ def tfrecord_stats(docs):
             flat = [p for _, _, ps in per_doc for p in ps]
             dcrcs = iter(_masked_crc_batch(flat))
             ln_cache: "dict[int, int]" = {}
+            rows = []
             for did, words, payloads in per_doc:
                 shard = bytearray()
                 for p in payloads:
@@ -330,17 +329,17 @@ def tfrecord_stats(docs):
                     r["score"] == [float(len(w))]
                     for r, w in zip(recs, words)
                 )
-                out["doc_id"].append(did)
-                out["n_records"].append(len(recs))
-                out["shard_bytes"].append(len(shard))
-                out["sum_idx"].append(sum(r["idx"][0] for r in recs))
-                out["words_md5"].append(
-                    hashlib.md5(
-                        " ".join(r["text"].decode() for r in recs)
-                        .encode("utf-8")
-                    ).hexdigest()
+                text = " ".join(r["text"].decode() for r in recs)
+                rows.append(
+                    (
+                        did,
+                        len(recs),
+                        len(shard),
+                        sum(r["idx"][0] for r in recs),
+                        hashlib.md5(text.encode("utf-8")).hexdigest(),
+                    )
                 )
-        yield _pd.DataFrame(out)
+            yield _pd.DataFrame(rows, columns=schema_t.fieldNames())
 
     spark = docs.sparkSession
     par = int(spark.conf.get("spark.sql.shuffle.partitions"))

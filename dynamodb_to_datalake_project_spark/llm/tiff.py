@@ -26,6 +26,7 @@ from __future__ import annotations
 import struct
 
 from dynamodb_to_datalake_project_spark.llm.multimodal import _tiff_ifd
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 #: tag numbers used (TIFF 6.0 §8)
 _W, _H, _BITS, _COMP, _PHOTO = 256, 257, 258, 259, 262
@@ -254,10 +255,8 @@ def tiff_roundtrip_stats(docs):
     odd, big-endian on ids % 3 == 0, 4-row strips — decoded back with
     the strict walk and proven equal to the source array in-op; the
     emitted census is recomputed by the SQL oracle."""
-    from collections.abc import Iterator as _Iterator
 
     import numpy as _np
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -273,43 +272,34 @@ def tiff_roundtrip_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                did = int(doc_id)
-                h = max(0, min(int(n_chars or 0), 126)) // 7 + 1
-                w = 7
-                idx = _np.arange(w * h * 3, dtype=_np.int64)
-                vals = (
-                    did * 131 + (idx // 3) * 7919 + (idx % 3) * 104729
-                ) % 256
-                arr = vals.astype(_np.uint8).reshape(h, w, 3)
-                payload = encode_tiff_array(
-                    arr, w, h,
-                    compression="packbits" if did % 2 == 0 else "none",
-                    rows_per_strip=4,
-                    big_endian=did % 3 == 0,
-                )
-                d = decode_tiff_array(payload)
-                assert _np.array_equal(d["px"], arr)  # lossless roundtrip
-                out["doc_id"].append(did)
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["n_pixels"].append(d["width"] * d["height"])
-                out["sum_rgb"].append(int(d["px"].astype(_np.int64).sum()))
-                out["peak"].append(int(d["px"].max()))
-                out["n_strips"].append(d["n_strips"])
-                out["compression"].append(d["compression"])
-        yield _pd.DataFrame(out)
+    def row(did, n_chars):
+        h = max(0, min(int(n_chars or 0), 126)) // 7 + 1
+        w = 7
+        idx = _np.arange(w * h * 3, dtype=_np.int64)
+        vals = (
+            did * 131 + (idx // 3) * 7919 + (idx % 3) * 104729
+        ) % 256
+        arr = vals.astype(_np.uint8).reshape(h, w, 3)
+        payload = encode_tiff_array(
+            arr, w, h,
+            compression="packbits" if did % 2 == 0 else "none",
+            rows_per_strip=4,
+            big_endian=did % 3 == 0,
+        )
+        d = decode_tiff_array(payload)
+        assert _np.array_equal(d["px"], arr)  # lossless roundtrip
+        yield (
+            did,
+            d["width"],
+            d["height"],
+            d["width"] * d["height"],
+            int(d["px"].astype(_np.int64).sum()),
+            int(d["px"].max()),
+            d["n_strips"],
+            d["compression"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "n_chars")
-        .repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "n_chars"), row, schema_t, spread=True)
 
 
 def _register() -> None:

@@ -24,14 +24,13 @@ RFC 9112 §7.1 (chunked transfer coding).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 _CRLF = b"\r\n"
 
@@ -294,65 +293,59 @@ def warc_archive_stats(docs: DataFrame) -> DataFrame:
     """Synthesize a WARC archive per document — warcinfo, one request,
     2 + doc_id%4 responses with formula bodies, chunked transfer on a
     (doc_id+i)%3 cycle, member-gzip on even doc ids — then walk it
-    back with `parse_warc`. Arrow `mapInPandas`, map-only."""
+    back with `parse_warc`. Arrow `map_rows`, map-only."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in WARC_STATS_SCHEMA.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nr = 2 + did % 4
-                records = [
-                    {"type": "warcinfo",
-                     "block": b"software: fixture-crawler/1.0\r\n"},
-                    {"type": "request", "uri": f"https://site{did % 10}.example/",
-                     "block": b"GET / HTTP/1.1\r\nHost: x\r\n\r\n"},
-                ]
-                for i in range(nr):
-                    body = bytes(
-                        (did * 11 + i * 23 + j) % 256
-                        for j in range(30 + (did * 7 + i * 13) % 100)
-                    )
-                    status = 200 if (did + i) % 5 else 404
-                    ctype = (
-                        "text/html; charset=utf-8"
-                        if i % 2 == 0
-                        else "text/plain"
-                    )
-                    records.append(
-                        {
-                            "type": "response",
-                            "uri": f"https://site{did % 10}.example/p{i}",
-                            "block": encode_http_response(
-                                status, ctype, body,
-                                chunked=(did + i) % 3 == 0,
-                            ),
-                        }
-                    )
-                raw = encode_warc(records)
-                if did % 2 == 0:
-                    bounds = []
-                    at = 0
-                    for rec in records:
-                        one = encode_warc([rec])
-                        # encode_warc numbers record ids by index; for
-                        # boundary math only lengths matter and the id
-                        # field is fixed-width, so lengths are exact
-                        at += len(one)
-                        bounds.append(at)
-                    payload = gzip_members(raw, bounds)
-                    d = parse_warc(payload, gzipped=True)
-                else:
-                    d = parse_warc(raw)
-                out["doc_id"].append(did)
-                for f in WARC_STATS_SCHEMA.fields[1:-1]:
-                    out[f.name].append(d[f.name])
-                out["gzipped"].append(1 if did % 2 == 0 else 0)
-        yield pd.DataFrame(out)
+    def row(did):
+        nr = 2 + did % 4
+        records = [
+            {"type": "warcinfo",
+             "block": b"software: fixture-crawler/1.0\r\n"},
+            {"type": "request", "uri": f"https://site{did % 10}.example/",
+             "block": b"GET / HTTP/1.1\r\nHost: x\r\n\r\n"},
+        ]
+        for i in range(nr):
+            body = bytes(
+                (did * 11 + i * 23 + j) % 256
+                for j in range(30 + (did * 7 + i * 13) % 100)
+            )
+            status = 200 if (did + i) % 5 else 404
+            ctype = (
+                "text/html; charset=utf-8"
+                if i % 2 == 0
+                else "text/plain"
+            )
+            records.append(
+                {
+                    "type": "response",
+                    "uri": f"https://site{did % 10}.example/p{i}",
+                    "block": encode_http_response(
+                        status, ctype, body,
+                        chunked=(did + i) % 3 == 0,
+                    ),
+                }
+            )
+        raw = encode_warc(records)
+        if did % 2 == 0:
+            bounds = []
+            at = 0
+            for rec in records:
+                one = encode_warc([rec])
+                # encode_warc numbers record ids by index; for
+                # boundary math only lengths matter and the id
+                # field is fixed-width, so lengths are exact
+                at += len(one)
+                bounds.append(at)
+            payload = gzip_members(raw, bounds)
+            d = parse_warc(payload, gzipped=True)
+        else:
+            d = parse_warc(raw)
+        yield (
+            did,
+            *(d[f.name] for f in WARC_STATS_SCHEMA.fields[1:-1]),
+            1 if did % 2 == 0 else 0,
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, WARC_STATS_SCHEMA)
+    return map_rows(docs.select("doc_id"), row, WARC_STATS_SCHEMA, spread=True)
 
 
 @query(

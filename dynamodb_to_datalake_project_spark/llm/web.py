@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 #: query params stripped during canonicalization (tracking/attribution)
 TRACKING_PARAM_RE = r"^(utm_[^=]*|gclid|fbclid|msclkid|mc_eid)="
@@ -742,12 +743,10 @@ def extract_main_content(
 def html_extract_stats(docs: DataFrame) -> DataFrame:
     """Synthesize the fixture page per document, run the generic
     extractor, and emit one row per document with an md5 of the
-    recovered main text. Arrow `mapInPandas`, map-only — the
+    recovered main text. Arrow `map_rows`, map-only — the
     100 TB shape is a straight scan."""
     import hashlib
-    from collections.abc import Iterator
 
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -762,31 +761,19 @@ def html_extract_stats(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"]
-            ):
-                d = extract_main_content(synth_html(int(did), text, source))
-                out["doc_id"].append(int(did))
-                out["title"].append(d["title"])
-                out["n_blocks"].append(d["n_blocks"])
-                out["n_kept"].append(d["n_kept"])
-                out["extracted_chars"].append(d["extracted_chars"])
-                out["extracted_md5"].append(
-                    hashlib.md5(d["extracted"].encode("utf-8")).hexdigest()
-                )
-                out["boilerplate_chars"].append(d["boilerplate_chars"])
-        yield pd.DataFrame(out)
+    def row(did, text, source):
+        d = extract_main_content(synth_html(did, text, source))
+        yield (
+            did,
+            d["title"],
+            d["n_blocks"],
+            d["n_kept"],
+            d["extracted_chars"],
+            hashlib.md5(d["extracted"].encode("utf-8")).hexdigest(),
+            d["boilerplate_chars"],
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text", "source")
-        .repartition(par)
-        .mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text", "source"), row, schema, spread=True)
 
 
 @query(
@@ -955,13 +942,11 @@ def synth_robots_txt(domain_id: int) -> str:
 
 def robots_filter_stats(docs: DataFrame, agent: str = "trainbot") -> DataFrame:
     """Synthesize each document's fetch URL path and its domain's
-    robots.txt (10 fixture domains; parsed once per batch and cached —
+    robots.txt (10 fixture domains; parsed once per task and cached —
     the broadcast-rules shape), evaluate RFC 9309 longest-match
-    permission, and emit one row per document. Arrow `mapInPandas`,
+    permission, and emit one row per document. Arrow `map_rows`,
     map-only."""
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -975,31 +960,27 @@ def robots_filter_stats(docs: DataFrame, agent: str = "trainbot") -> DataFrame:
         ]
     )
 
-    def op(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        parsed: dict[int, dict] = {}
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                k = did % 10
-                if k not in parsed:
-                    parsed[k] = parse_robots(synth_robots_txt(k), agent)
-                r = parsed[k]
-                path = f"/sec{did % 8}/page-{did}" + (
-                    ".html" if did % 3 == 0 else ""
-                )
-                ok, mlen = robots_allowed(r["rules"], path)
-                out["doc_id"].append(did)
-                out["domain"].append(f"site{k}.example")
-                out["allowed"].append(int(ok))
-                out["matched_len"].append(mlen)
-                out["crawl_delay"].append(int(r["crawl_delay"]))
-                out["n_sitemaps"].append(len(r["sitemaps"]))
-        yield _pd.DataFrame(out)
+    parsed: dict[int, dict] = {}
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, schema)
+    def row(did):
+        k = did % 10
+        if k not in parsed:
+            parsed[k] = parse_robots(synth_robots_txt(k), agent)
+        r = parsed[k]
+        path = f"/sec{did % 8}/page-{did}" + (
+            ".html" if did % 3 == 0 else ""
+        )
+        ok, mlen = robots_allowed(r["rules"], path)
+        yield (
+            did,
+            f"site{k}.example",
+            int(ok),
+            mlen,
+            int(r["crawl_delay"]),
+            len(r["sitemaps"]),
+        )
+
+    return map_rows(docs.select("doc_id"), row, schema, spread=True)
 
 
 @query(
@@ -1157,10 +1138,8 @@ def synth_sitemap(domain_id: int, n_urls: int) -> str:
 def sitemap_stats(docs: DataFrame) -> DataFrame:
     """One fixture sitemap per document (domain = doc_id%10, size by
     formula), parsed back; priorities summed in integer tenths so the
-    oracle is exact. Arrow `mapInPandas`, map-only."""
-    from collections.abc import Iterator as _Iterator
+    oracle is exact. Arrow `map_rows`, map-only."""
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -1174,35 +1153,24 @@ def sitemap_stats(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def op(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                k = did % 10
-                n = 3 + did % 7
-                d = parse_sitemap(synth_sitemap(k, n))
-                out["doc_id"].append(did)
-                out["kind"].append(d["kind"])
-                out["n_entries"].append(len(d["entries"]))
-                out["n_daily"].append(
-                    sum(1 for e in d["entries"] if e["changefreq"] == "daily")
-                )
-                out["priority_tenths"].append(
-                    sum(
-                        round(e["priority"] * 10)
-                        for e in d["entries"]
-                        if e["priority"] is not None
-                    )
-                )
-                out["n_escaped"].append(
-                    sum(1 for e in d["entries"] if "&" in e["loc"])
-                )
-        yield _pd.DataFrame(out)
+    def row(did):
+        k = did % 10
+        n = 3 + did % 7
+        d = parse_sitemap(synth_sitemap(k, n))
+        yield (
+            did,
+            d["kind"],
+            len(d["entries"]),
+            sum(1 for e in d["entries"] if e["changefreq"] == "daily"),
+            sum(
+                round(e["priority"] * 10)
+                for e in d["entries"]
+                if e["priority"] is not None
+            ),
+            sum(1 for e in d["entries"] if "&" in e["loc"]),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return docs.select("doc_id").repartition(par).mapInPandas(op, schema)
+    return map_rows(docs.select("doc_id"), row, schema, spread=True)
 
 
 @query(
@@ -1256,11 +1224,9 @@ def crawl_to_text_stats(docs: DataFrame) -> DataFrame:
     on every 3rd doc, member-gzip on even ids) next to a 404 decoy
     and a text/plain decoy; the pipeline walks the archive, picks the
     HTML 200s, strips boilerplate, repairs encoding, and must recover
-    the document text byte-for-byte. Arrow `mapInPandas`, map-only."""
+    the document text byte-for-byte. Arrow `map_rows`, map-only."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     from dynamodb_to_datalake_project_spark.llm.text import repair_unicode
@@ -1283,81 +1249,68 @@ def crawl_to_text_stats(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def op(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"]
-            ):
-                did = int(did)
-                page = synth_html(did, text, source).encode("utf-8")
-                records = [
-                    {"type": "warcinfo", "block": b"software: fx/1\r\n"},
-                    {
-                        "type": "response",
-                        "uri": f"https://site{did % 10}.example/p",
-                        "block": encode_http_response(
-                            200, "text/html; charset=utf-8", page,
-                            chunked=did % 3 == 0,
-                        ),
-                    },
-                    {
-                        "type": "response",
-                        "uri": "https://x.example/gone",
-                        "block": encode_http_response(404, "text/html", b"gone"),
-                    },
-                    {
-                        "type": "response",
-                        "uri": "https://x.example/robots.txt",
-                        "block": encode_http_response(
-                            200, "text/plain", b"User-agent: *\r\n"
-                        ),
-                    },
-                ]
-                raw = encode_warc(records)
-                if did % 2 == 0:
-                    bounds, at = [], 0
-                    for rec in records:
-                        at += len(encode_warc([rec]))
-                        bounds.append(at)
-                    raw, gz = gzip_members(raw, bounds), True
-                else:
-                    gz = False
-                texts: "list[str]" = []
-                n_records = n_html_ok = n_kept = 0
-                for headers, block in iter_warc_records(raw, gzipped=gz):
-                    n_records += 1
-                    if headers.get("warc-type") != "response":
-                        continue
-                    resp = parse_http_response(block)
-                    ctype = resp["headers"].get("content-type", "")
-                    if resp["status"] != 200 or not ctype.startswith("text/html"):
-                        continue
-                    n_html_ok += 1
-                    d = extract_main_content(
-                        resp["body"].decode("utf-8")
-                    )
-                    n_kept += d["n_kept"]
-                    texts.append(repair_unicode(d["extracted"])["text"])
-                clean = "".join(texts)
-                assert clean == text  # end-to-end fixture invariant
-                out["doc_id"].append(did)
-                out["n_records"].append(n_records)
-                out["n_html_ok"].append(n_html_ok)
-                out["n_kept_blocks"].append(n_kept)
-                out["extracted_chars"].append(len(clean))
-                out["clean_md5"].append(
-                    hashlib.md5(clean.encode("utf-8")).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text, source):
+        page = synth_html(did, text, source).encode("utf-8")
+        records = [
+            {"type": "warcinfo", "block": b"software: fx/1\r\n"},
+            {
+                "type": "response",
+                "uri": f"https://site{did % 10}.example/p",
+                "block": encode_http_response(
+                    200, "text/html; charset=utf-8", page,
+                    chunked=did % 3 == 0,
+                ),
+            },
+            {
+                "type": "response",
+                "uri": "https://x.example/gone",
+                "block": encode_http_response(404, "text/html", b"gone"),
+            },
+            {
+                "type": "response",
+                "uri": "https://x.example/robots.txt",
+                "block": encode_http_response(
+                    200, "text/plain", b"User-agent: *\r\n"
+                ),
+            },
+        ]
+        raw = encode_warc(records)
+        if did % 2 == 0:
+            bounds, at = [], 0
+            for rec in records:
+                at += len(encode_warc([rec]))
+                bounds.append(at)
+            raw, gz = gzip_members(raw, bounds), True
+        else:
+            gz = False
+        texts: "list[str]" = []
+        n_records = n_html_ok = n_kept = 0
+        for headers, block in iter_warc_records(raw, gzipped=gz):
+            n_records += 1
+            if headers.get("warc-type") != "response":
+                continue
+            resp = parse_http_response(block)
+            ctype = resp["headers"].get("content-type", "")
+            if resp["status"] != 200 or not ctype.startswith("text/html"):
+                continue
+            n_html_ok += 1
+            d = extract_main_content(
+                resp["body"].decode("utf-8")
+            )
+            n_kept += d["n_kept"]
+            texts.append(repair_unicode(d["extracted"])["text"])
+        clean = "".join(texts)
+        assert clean == text  # end-to-end fixture invariant
+        yield (
+            did,
+            n_records,
+            n_html_ok,
+            n_kept,
+            len(clean),
+            hashlib.md5(clean.encode("utf-8")).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text", "source")
-        .repartition(par)
-        .mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text", "source"), row, schema, spread=True)
 
 
 @query(
@@ -1434,9 +1387,7 @@ def wet_conversion_stats(docs: DataFrame) -> DataFrame:
     chunked/member-gzip variants) → `warc_to_wet` → re-parse the WET
     and prove the conversion record carries the document text."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     from dynamodb_to_datalake_project_spark.llm.warc import (
@@ -1457,78 +1408,65 @@ def wet_conversion_stats(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def op(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"]
-            ):
-                did = int(did)
-                page = synth_html(did, text, source).encode("utf-8")
-                records = [
-                    {"type": "warcinfo", "block": b"software: fx/1\r\n"},
-                    {
-                        "type": "response",
-                        "uri": f"https://site{did % 10}.example/p",
-                        "block": encode_http_response(
-                            200, "text/html; charset=utf-8", page,
-                            chunked=did % 3 == 0,
-                        ),
-                    },
-                    {
-                        "type": "response",
-                        "uri": "https://x.example/gone",
-                        "block": encode_http_response(404, "text/html", b"gone"),
-                    },
-                    {
-                        "type": "response",
-                        "uri": "https://x.example/robots.txt",
-                        "block": encode_http_response(
-                            200, "text/plain", b"User-agent: *\r\n"
-                        ),
-                    },
-                ]
-                raw = encode_warc(records)
-                if did % 2 == 0:
-                    bounds, at = [], 0
-                    for rec in records:
-                        at += len(encode_warc([rec]))
-                        bounds.append(at)
-                    raw, gz = gzip_members(raw, bounds), True
-                else:
-                    gz = False
-                wet = warc_to_wet(raw, gzipped=gz)
-                n_rec = n_conv = linked = 0
-                texts: "list[str]" = []
-                for headers, block in iter_warc_records(wet):
-                    n_rec += 1
-                    if headers.get("warc-type") != "conversion":
-                        continue
-                    n_conv += 1
-                    if headers.get("warc-refers-to"):
-                        linked += 1
-                    if headers.get("content-type") != "text/plain":
-                        raise ValueError("wet: conversion not text/plain")
-                    texts.append(block.decode("utf-8"))
-                clean = "".join(texts)
-                assert clean == text  # WARC→WET fixture invariant
-                out["doc_id"].append(did)
-                out["n_wet_records"].append(n_rec)
-                out["n_conversions"].append(n_conv)
-                out["refers_linked"].append(linked)
-                out["conversion_chars"].append(len(clean))
-                out["wet_text_md5"].append(
-                    hashlib.md5(clean.encode("utf-8")).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text, source):
+        page = synth_html(did, text, source).encode("utf-8")
+        records = [
+            {"type": "warcinfo", "block": b"software: fx/1\r\n"},
+            {
+                "type": "response",
+                "uri": f"https://site{did % 10}.example/p",
+                "block": encode_http_response(
+                    200, "text/html; charset=utf-8", page,
+                    chunked=did % 3 == 0,
+                ),
+            },
+            {
+                "type": "response",
+                "uri": "https://x.example/gone",
+                "block": encode_http_response(404, "text/html", b"gone"),
+            },
+            {
+                "type": "response",
+                "uri": "https://x.example/robots.txt",
+                "block": encode_http_response(
+                    200, "text/plain", b"User-agent: *\r\n"
+                ),
+            },
+        ]
+        raw = encode_warc(records)
+        if did % 2 == 0:
+            bounds, at = [], 0
+            for rec in records:
+                at += len(encode_warc([rec]))
+                bounds.append(at)
+            raw, gz = gzip_members(raw, bounds), True
+        else:
+            gz = False
+        wet = warc_to_wet(raw, gzipped=gz)
+        n_rec = n_conv = linked = 0
+        texts: "list[str]" = []
+        for headers, block in iter_warc_records(wet):
+            n_rec += 1
+            if headers.get("warc-type") != "conversion":
+                continue
+            n_conv += 1
+            if headers.get("warc-refers-to"):
+                linked += 1
+            if headers.get("content-type") != "text/plain":
+                raise ValueError("wet: conversion not text/plain")
+            texts.append(block.decode("utf-8"))
+        clean = "".join(texts)
+        assert clean == text  # WARC→WET fixture invariant
+        yield (
+            did,
+            n_rec,
+            n_conv,
+            linked,
+            len(clean),
+            hashlib.md5(clean.encode("utf-8")).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text", "source")
-        .repartition(par)
-        .mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text", "source"), row, schema, spread=True)
 
 
 @query(
@@ -1627,9 +1565,7 @@ def table_extract_stats(docs: DataFrame) -> DataFrame:
     of <th> on every 2nd doc), embedded in boilerplate; extract and
     pin the full cell grid via md5."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     from dynamodb_to_datalake_project_spark.llm.wikidump import xml_escape
@@ -1645,60 +1581,51 @@ def table_extract_stats(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def op(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = text.split(" ")
-                n_rows, n_cols = 3 + did % 4, 2 + did % 3
-                hdr = did % 2 == 0
+    def row(did, text):
+        words = text.split(" ")
+        n_rows, n_cols = 3 + did % 4, 2 + did % 3
+        hdr = did % 2 == 0
 
-                def cell(r: int, c: int) -> str:
-                    return words[(r * n_cols + c) % len(words)]
+        def cell(r: int, c: int) -> str:
+            return words[(r * n_cols + c) % len(words)]
 
-                parts = ['<table class="data">']
-                if hdr:
-                    parts.append(
-                        "<tr>" + "".join(
-                            f"<th>{xml_escape(cell(0, c))}</th>"
-                            for c in range(n_cols)
-                        ) + "</tr>"
-                    )
-                for r in range(n_rows):
-                    parts.append(
-                        "<tr>" + "".join(
-                            f'<td align="left">'
-                            f"{xml_escape(cell(r + 1, c))}</td>"
-                            for c in range(n_cols)
-                        ) + "</tr>"
-                    )
-                parts.append("</table>")
-                page = (
-                    "<html><body><p>intro prose</p>"
-                    + "".join(parts)
-                    + "<p>footer</p></body></html>"
-                )
-                tables = extract_html_tables(page)
-                assert len(tables) == 1
-                t = tables[0]
-                grid = ([t["header"]] if t["header"] else []) + t["rows"]
-                flat = "\n".join("\t".join(row) for row in grid)
-                out["doc_id"].append(did)
-                out["n_tables"].append(len(tables))
-                out["n_rows"].append(t["n_rows"])
-                out["n_cols"].append(t["n_cols"])
-                out["has_header"].append(int(t["header"] is not None))
-                out["cells_md5"].append(
-                    hashlib.md5(flat.encode("utf-8")).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+        parts = ['<table class="data">']
+        if hdr:
+            parts.append(
+                "<tr>" + "".join(
+                    f"<th>{xml_escape(cell(0, c))}</th>"
+                    for c in range(n_cols)
+                ) + "</tr>"
+            )
+        for r in range(n_rows):
+            parts.append(
+                "<tr>" + "".join(
+                    f'<td align="left">'
+                    f"{xml_escape(cell(r + 1, c))}</td>"
+                    for c in range(n_cols)
+                ) + "</tr>"
+            )
+        parts.append("</table>")
+        page = (
+            "<html><body><p>intro prose</p>"
+            + "".join(parts)
+            + "<p>footer</p></body></html>"
+        )
+        tables = extract_html_tables(page)
+        assert len(tables) == 1
+        t = tables[0]
+        grid = ([t["header"]] if t["header"] else []) + t["rows"]
+        flat = "\n".join("\t".join(row) for row in grid)
+        yield (
+            did,
+            len(tables),
+            t["n_rows"],
+            t["n_cols"],
+            int(t["header"] is not None),
+            hashlib.md5(flat.encode("utf-8")).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par).mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema, spread=True)
 
 
 @query(

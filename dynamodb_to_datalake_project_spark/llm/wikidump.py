@@ -21,6 +21,8 @@ from __future__ import annotations
 
 import re
 
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
+
 _ENT = {"lt": "<", "gt": ">", "amp": "&", "quot": '"', "apos": "'"}
 
 
@@ -231,9 +233,7 @@ def wiki_extract_stats(docs):
     """Encode → parse → strip per document; emit ns/redirect census,
     feature counts, and md5 of the recovered plain text."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -250,62 +250,53 @@ def wiki_extract_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                if did % 5 == 0:
-                    body = f"#REDIRECT [[Doc {did + 1}]]"
+    def row(did, text):
+        if did % 5 == 0:
+            body = f"#REDIRECT [[Doc {did + 1}]]"
+        else:
+            words = text.split(" ")
+            deco = []
+            for i, w in enumerate(words):
+                m = i % 7
+                if w and m == 1:
+                    deco.append(f"[[{w}]]")
+                elif w and m == 2:
+                    deco.append(f"[[Doc {did}|{w}]]")
+                elif w and m == 3:
+                    deco.append(f"'''{w}'''")
+                elif w and m == 4:
+                    deco.append(f"{w}<ref>cite {did}</ref>")
+                elif w and m == 5:
+                    deco.append("{{tmpl|%d}}%s" % (did, w))
                 else:
-                    words = text.split(" ")
-                    deco = []
-                    for i, w in enumerate(words):
-                        m = i % 7
-                        if w and m == 1:
-                            deco.append(f"[[{w}]]")
-                        elif w and m == 2:
-                            deco.append(f"[[Doc {did}|{w}]]")
-                        elif w and m == 3:
-                            deco.append(f"'''{w}'''")
-                        elif w and m == 4:
-                            deco.append(f"{w}<ref>cite {did}</ref>")
-                        elif w and m == 5:
-                            deco.append("{{tmpl|%d}}%s" % (did, w))
-                        else:
-                            deco.append(w)
-                    body = f"== Doc {did} ==\n" + " ".join(deco)
-                page = {
-                    "title": f"Doc {did}",
-                    "ns": did % 3,
-                    "id": did,
-                    "redirect": f"Doc {did + 1}" if did % 5 == 0 else None,
-                    "text": body,
-                }
-                parsed = parse_wiki_dump(encode_wiki_dump([page]))
-                assert len(parsed) == 1 and parsed[0]["text"] == body
-                d = strip_wikitext(parsed[0]["text"])
-                if did % 5 != 0:
-                    expect = f"Doc {did}\n{text}"
-                    assert d["text"] == expect  # fixture invariant
-                out["doc_id"].append(did)
-                out["ns"].append(parsed[0]["ns"])
-                out["is_redirect"].append(d["redirect"])
-                out["n_links"].append(d["links"])
-                out["n_templates"].append(d["templates"])
-                out["n_refs"].append(d["refs"])
-                out["n_bold"].append(d["bold"])
-                out["extracted_chars"].append(len(d["text"]))
-                out["extracted_md5"].append(
-                    hashlib.md5(d["text"].encode("utf-8")).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+                    deco.append(w)
+            body = f"== Doc {did} ==\n" + " ".join(deco)
+        page = {
+            "title": f"Doc {did}",
+            "ns": did % 3,
+            "id": did,
+            "redirect": f"Doc {did + 1}" if did % 5 == 0 else None,
+            "text": body,
+        }
+        parsed = parse_wiki_dump(encode_wiki_dump([page]))
+        assert len(parsed) == 1 and parsed[0]["text"] == body
+        d = strip_wikitext(parsed[0]["text"])
+        if did % 5 != 0:
+            expect = f"Doc {did}\n{text}"
+            assert d["text"] == expect  # fixture invariant
+        yield (
+            did,
+            parsed[0]["ns"],
+            d["redirect"],
+            d["links"],
+            d["templates"],
+            d["refs"],
+            d["bold"],
+            len(d["text"]),
+            hashlib.md5(d["text"].encode("utf-8")).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par).mapInPandas(op, schema)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema, spread=True)
 
 
 def _register() -> None:

@@ -14,7 +14,7 @@ compression methods other than stored/deflate); corruption raises
 `ValueError` — the same contract as `parse_tar`/`parse_warc`.
 
 Spark-side shape: archives are opaque binary cells; the walk runs in
-Arrow `mapInPandas` batches, map-only — shard-count parallelism, no
+Arrow `map_rows` batches, map-only — shard-count parallelism, no
 shuffle, like the WebDataset tar path it complements.
 """
 
@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import struct
 import zlib
+
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
 
 _LOCAL_SIG = b"PK\x03\x04"
 _CDIR_SIG = b"PK\x01\x02"
@@ -192,12 +194,10 @@ def zip_roundtrip_stats(docs):
     (id/lang/source, stored), and on doc_id%3 != 0 a pad.bin of
     (doc_id%50 + 10) formula bytes (stored). Encode → parse; every
     member's CRC-32 and declared sizes re-verified inside the parse,
-    recovered text/meta pinned by md5. Arrow `mapInPandas`,
+    recovered text/meta pinned by md5. Arrow `map_rows`,
     map-only."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -212,45 +212,30 @@ def zip_roundtrip_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        out: dict[str, list] = {f.name: [] for f in schema.fields}
-        for pdf in batches:
-            for did, text, lang, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"]
-            ):
-                did = int(did)
-                meta = f"{did}\t{lang}\t{source}".encode("utf-8")
-                members = [("doc.txt", text.encode("utf-8")),
-                           ("meta.tsv", meta)]
-                if did % 3 != 0:
-                    pad = bytes((did * 7 + i) % 251
-                                for i in range(did % 50 + 10))
-                    members.append(("pad.bin", pad))
-                payload = encode_zip(members, deflate={"doc.txt"})
-                d = parse_zip(payload)
-                got = dict(d["members"])
-                assert got["doc.txt"] == text.encode("utf-8")  # roundtrip
-                out["doc_id"].append(did)
-                out["n_members"].append(len(d["members"]))
-                out["n_stored"].append(d["n_stored"])
-                out["n_deflated"].append(d["n_deflated"])
-                out["uncomp_bytes"].append(
-                    sum(len(v) for _, v in d["members"])
-                )
-                out["text_md5"].append(
-                    hashlib.md5(got["doc.txt"]).hexdigest()
-                )
-                out["meta_md5"].append(
-                    hashlib.md5(got["meta.tsv"]).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text, lang, source):
+        meta = f"{did}\t{lang}\t{source}".encode("utf-8")
+        members = [("doc.txt", text.encode("utf-8")),
+                   ("meta.tsv", meta)]
+        if did % 3 != 0:
+            pad = bytes((did * 7 + i) % 251
+                        for i in range(did % 50 + 10))
+            members.append(("pad.bin", pad))
+        payload = encode_zip(members, deflate={"doc.txt"})
+        d = parse_zip(payload)
+        got = dict(d["members"])
+        assert got["doc.txt"] == text.encode("utf-8")  # roundtrip
+        yield (
+            did,
+            len(d["members"]),
+            d["n_stored"],
+            d["n_deflated"],
+            sum(len(v) for _, v in d["members"]),
+            hashlib.md5(got["doc.txt"]).hexdigest(),
+            hashlib.md5(got["meta.tsv"]).hexdigest(),
+        )
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text", "lang", "source")
-        .repartition(par)
-        .mapInPandas(op, schema)
+    return map_rows(
+        docs.select("doc_id", "text", "lang", "source"), row, schema, spread=True
     )
 
 

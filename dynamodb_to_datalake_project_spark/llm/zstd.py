@@ -37,6 +37,8 @@ Malformed input raises ValueError (quarantine row), never crashes.
 
 from __future__ import annotations
 
+from dynamodb_to_datalake_project_spark.rowmap import map_rows
+
 _MAGIC = 0xFD2FB528
 _SKIP_LO, _SKIP_HI = 0x184D2A50, 0x184D2A5F
 _MASK64 = (1 << 64) - 1
@@ -999,9 +1001,7 @@ def zstd_roundtrip_stats(docs):
     oracle recomputes it straight from `documents.text` — equality
     proves the codec is transparent end to end."""
     import hashlib
-    from collections.abc import Iterator as _Iterator
 
-    import pandas as _pd
     from pyspark.sql import types as T
 
     schema_t = T.StructType(
@@ -1012,31 +1012,17 @@ def zstd_roundtrip_stats(docs):
         ]
     )
 
-    def op(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        import pyarrow as pa
+    import pyarrow as pa
 
-        codec = pa.Codec("zstd")
-        out: dict[str, list] = {f.name: [] for f in schema_t.fields}
-        for pdf in batches:
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                enc = zstd_compress(raw)
-                dec = zstd_decompress(enc)
-                assert dec == raw
-                assert bytes(codec.decompress(enc, len(raw))) == raw
-                out["doc_id"].append(int(did))
-                out["orig_bytes"].append(len(dec))
-                out["roundtrip_md5"].append(
-                    hashlib.md5(dec).hexdigest()
-                )
-        yield _pd.DataFrame(out)
+    def row(did, text):
+        raw = text.encode("utf-8")
+        enc = zstd_compress(raw)
+        dec = zstd_decompress(enc)
+        assert dec == raw
+        assert pa.decompress(enc, len(raw), codec="zstd", asbytes=True) == raw
+        yield (did, len(dec), hashlib.md5(dec).hexdigest())
 
-    spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text").repartition(par)
-        .mapInPandas(op, schema_t)
-    )
+    return map_rows(docs.select("doc_id", "text"), row, schema_t, spread=True)
 
 
 def _register() -> None:

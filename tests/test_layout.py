@@ -87,3 +87,4 @@ def test_zorder_plan_is_pure_catalyst(spark):
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
     assert "MapInPandas" not in plan
+    assert "MapInArrow" not in plan

@@ -869,9 +869,9 @@ def test_jpeg_restart_interval_decode_and_errors():
 
 
 def test_jpeg_huffman_cache_keeps_hitting_past_its_cap(monkeypatch):
-    """One cache holds each Huffman table with its peek-16 lists: after
+    """One cache holds each Huffman table with its peek-16 tables: after
     300 distinct tables (more than the 256-entry cap), a repeated table
-    still returns the same cached lists, and the lists agree with the
+    still returns the same cached tables, and they agree with the
     table's codes."""
     monkeypatch.setattr(multimodal, "_JPEG_HUFF_CACHE", {})
     bits = [2] + [0] * 15  # two 1-bit codes: 0 and 1
@@ -883,6 +883,43 @@ def test_jpeg_huffman_cache_keeps_hitting_past_its_cap(monkeypatch):
     again = multimodal._jpeg_fast_lut(multimodal._jpeg_huff_table(bits, last))
     assert again[0] is val and again[1] is ln
     assert (val[0], ln[0], val[0xFFFF], ln[0xFFFF]) == (last[0], 1, last[1], 1)
+
+
+def test_jpeg_huffman_peek_tables_are_bounded_bytes(monkeypatch):
+    """Each cached Huffman table's peek-16 (value, length) tables are two
+    64 KiB `bytes` (the 256-entry cache stays near 32 MiB, not ~268 MB
+    of int lists), hold exactly what the 65,536-entry list form held,
+    and a real JPEG decodes to the same pixels through either form."""
+    import sys
+
+    import numpy as np
+
+    def list_lut(table):  # reference: the 65,536-int list form
+        val, ln = np.zeros(65536, np.int32), np.zeros(65536, np.int32)
+        for (length, code), v in table[0].items():
+            lo = code << (16 - length)
+            val[lo : lo + (1 << (16 - length))] = v
+            ln[lo : lo + (1 << (16 - length))] = length
+        return val.tolist(), ln.tolist()
+
+    monkeypatch.setattr(multimodal, "_JPEG_HUFF_CACHE", {})
+    bits, values = multimodal._JPEG_HUFF_AC_LUM
+    table = multimodal._jpeg_huff_table(list(bits), list(values))
+    val, ln = multimodal._jpeg_fast_lut(table)
+    assert type(val) is bytes and type(ln) is bytes
+    assert len(val) == len(ln) == 65536
+    assert sys.getsizeof(val) + sys.getsizeof(ln) < 140_000
+    ref_val, ref_ln = list_lut(table)
+    assert list(val) == ref_val and list(ln) == ref_ln
+
+    h, w = 24, 31
+    yy, xx = np.mgrid[0:h, 0:w]
+    px = np.stack([yy * 8 % 256, xx * 8 % 256, (yy + xx) * 4 % 256], -1)
+    enc = multimodal.encode_jpeg(px.astype(np.uint8), w, h, quality=90)
+    got = multimodal.decode_jpeg_array(enc)["px"]
+    monkeypatch.setattr(multimodal, "_JPEG_HUFF_CACHE", {})
+    monkeypatch.setattr(multimodal, "_jpeg_fast_lut", list_lut)
+    assert np.array_equal(multimodal.decode_jpeg_array(enc)["px"], got)
 
 
 class _VP8LWriter:

@@ -62,7 +62,7 @@ CASES = [
     # novelty: df via window — no second explode branch, no join
     ("text_novelty_score", ["Window"], ["SortMergeJoin", "BroadcastHashJoin"]),
     # round 4: image codec is ONE Arrow python stage — no shuffle at all
-    ("multimodal_image_stats", ["MapInPandas"], ["Exchange", "Join"]),
+    ("multimodal_image_stats", ["MapInArrow"], ["Exchange", "Join"]),
     # round 4: PCA invariant projection/reconstruction is map-only —
     # the only exchange allowed would be none (partials run in a
     # separate job inside pca_components, not this plan)
@@ -73,17 +73,17 @@ CASES = [
     # round 5: every real-codec stage is ONE Arrow python stage behind
     # the single core-spreading exchange — no sort, no join, and no
     # second shuffle may ever creep in (codec cost must stay map-only)
-    ("multimodal_jpeg_stats", ["MapInPandas"], ["Sort", "Join"]),
-    ("multimodal_webp_stats", ["MapInPandas"], ["Sort", "Join"]),
-    ("multimodal_flac_stats", ["MapInPandas"], ["Sort", "Join"]),
-    ("multimodal_video_frames", ["MapInPandas"], ["Sort", "Join"]),
+    ("multimodal_jpeg_stats", ["MapInArrow"], ["Sort", "Join"]),
+    ("multimodal_webp_stats", ["MapInArrow"], ["Sort", "Join"]),
+    ("multimodal_flac_stats", ["MapInArrow"], ["Sort", "Join"]),
+    ("multimodal_video_frames", ["MapInArrow"], ["Sort", "Join"]),
     # round 6: mp4/mp3/ogg demux are the same one-Arrow-stage shape
-    ("multimodal_mp4_stats", ["MapInPandas"], ["Sort", "Join"]),
-    ("multimodal_mp3_stats", ["MapInPandas"], ["Sort", "Join"]),
-    ("multimodal_ogg_stats", ["MapInPandas"], ["Sort", "Join"]),
-    ("multimodal_fmp4_stats", ["MapInPandas"], ["Sort", "Join"]),
-    ("multimodal_webm_stats", ["MapInPandas"], ["Sort", "Join"]),
-    ("multimodal_mpegts_stats", ["MapInPandas"], ["Sort", "Join"]),
+    ("multimodal_mp4_stats", ["MapInArrow"], ["Sort", "Join"]),
+    ("multimodal_mp3_stats", ["MapInArrow"], ["Sort", "Join"]),
+    ("multimodal_ogg_stats", ["MapInArrow"], ["Sort", "Join"]),
+    ("multimodal_fmp4_stats", ["MapInArrow"], ["Sort", "Join"]),
+    ("multimodal_webm_stats", ["MapInArrow"], ["Sort", "Join"]),
+    ("multimodal_mpegts_stats", ["MapInArrow"], ["Sort", "Join"]),
     # round 6: CMS estimate — the bounded sketch table must BROADCAST
     # into the query side (estimating never shuffles the query stream)
     # and no nested-loop may replace the (depth, bucket) equi-join

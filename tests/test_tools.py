@@ -349,3 +349,70 @@ def test_bench_measure_records_each_query_shape(spark):
         # add up to the jobs its group gained, nothing from the other
         grown = set(tracker.getJobIdsForGroup(name)) - before[name]
         assert sum(s[0] for s in shapes) == len(grown)
+
+
+#: the kernels left on `mapInPandas`, as (module, enclosing function):
+#: each computes across a whole batch or partition, not row by row
+BATCH_KERNELS = {
+    ("graph.py", "_triangle_count_broadcast"),  # broadcast CSR intersection
+    ("llm/cluster.py", "_assign_with_vec"),  # numpy nearest-centroid matmul
+    ("llm/cluster.py", "_arrow_min_d2"),
+    ("llm/cluster.py", "_arrow_nearest_pos"),
+    ("llm/decontam.py", "build_bloom"),  # one Bloom bitmap per partition
+    ("llm/dedup.py", "minhash_signatures_pandas"),  # batched reduceat MinHash
+    ("llm/similarity.py", "pca_components"),  # Gram-matrix partials
+    ("llm/similarity.py", "bitext_mine"),  # batch x target cosine matmul
+    ("llm/similarity.py", "bitext_mine_ann"),  # block-pair cosine matrices
+    ("llm/similarity.py", "_lsh_buckets_arrow"),  # batched hyperplane projection
+    ("llm/sketch.py", "heavy_hitters"),  # Misra-Gries partition fold
+    ("llm/sketch.py", "kll_sketch_build"),  # KLL partition fold
+    ("llm/tfrecord.py", "tfrecord_stats"),  # one vectorized CRC pass per batch
+}
+
+
+def _is_field_accumulator(node) -> bool:
+    """`{f.name: [] for f in S.fields}` or a literal dict of `[]`s."""
+    if isinstance(node, ast.DictComp):
+        it = node.generators[0].iter
+        return (
+            isinstance(node.value, ast.List) and not node.value.elts
+            and isinstance(it, ast.Attribute) and it.attr == "fields"
+        )
+    return isinstance(node, ast.Dict) and bool(node.values) and all(
+        isinstance(v, ast.List) and not v.elts for v in node.values
+    )
+
+
+def test_row_kernels_go_through_map_rows():
+    """A per-row kernel runs through `rowmap.map_rows`; `mapInPandas`
+    is left only to the batch-level kernels named above, and none of
+    them builds the per-field list accumulator the row helper
+    replaced."""
+    pkg = os.path.join(REPO, "dynamodb_to_datalake_project_spark")
+    found, accumulators = set(), []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, pkg)
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for call in ast.walk(tree):
+            if not (isinstance(call, ast.Call) and isinstance(call.func, ast.Attribute)
+                    and call.func.attr == "mapInPandas"):
+                continue
+            outer = call
+            while not isinstance(outer, ast.FunctionDef):
+                outer = parent[outer]
+            found.add((rel, outer.name))
+            fn = call.args[0]
+            kernel_name = fn.func.id if isinstance(fn, ast.Call) else fn.id
+            kernels = [
+                d for d in ast.walk(tree)
+                if isinstance(d, ast.FunctionDef) and d.name == kernel_name
+            ]
+            assert kernels, (rel, kernel_name)
+            for k in kernels:
+                accumulators += [
+                    (rel, k.name, n.lineno) for n in ast.walk(k) if _is_field_accumulator(n)
+                ]
+    assert found == BATCH_KERNELS
+    assert accumulators == []

@@ -21,7 +21,7 @@ NOTES = {
     "merge_occ_two_writers": "driver-orchestrated OCC interleaving; returned census is a LocalTableScan — the per-merge plan is the s8 shape, the protocol is filesystem-level (claim CAS + marker + swap)",
     "delta_time_travel": "driver-orchestrated retain-mode merges + OPTIMIZE + vacuum; returned censuses are log-driven file-list scans (basePath parquet reads of exactly the active files)",
     "sketch_kll_quantile": "one mapInPandas fold per partition -> (value,weight) rows -> ONE bounded shuffle (groupBy value) -> windowed cumulative-rank reads; state ~k*log(n/k) rows per partition, never the data",
-    "sft_preference_pairs": "DPO schema gate: one ArrowEvalPython map stage over doc_id+text — zero exchanges beyond the input spread",
+    "sft_preference_pairs": "DPO schema gate: one MapInArrow map stage over doc_id+text — zero exchanges beyond the input spread",
     "multimodal_image_dhash": "real BMP encode→decode→dHash/aHash in ONE Arrow stage; signature table is 5 longs/image",
     "multimodal_image_neardup": "banded LSH over dHash: posexplode 8 bands → bucket equi-join (never all-pairs) → bit_count(xor) verify",
     "multimodal_zip_stats": "EOCD-driven ZIP walk + inflate + CRC verify in ONE Arrow map stage — shard-count parallelism, no shuffle",
@@ -87,7 +87,7 @@ NOTES = {
     "dedup_minhash_lsh": "map-only vectorized signatures → banding explode → bucket groupBy → broadcast verify joins",
     "sim_knn_bruteforce": "broadcast 8-query side × corpus stream; per-query top-k window",
     "text_stats": "scan-speed projection: split/filter/array exprs, no shuffle",
-    "multimodal_features": "binary encode (JVM) → ArrowEvalPython mapInPandas — one python stage, no shuffle",
+    "multimodal_features": "binary encode (JVM) → MapInArrow row-kernel — one python stage, no shuffle",
     "q5_local_supplier_volume": "six-way star: region/nation/supplier broadcast, orders year-filter pushed, one fact shuffle on orderkey",
     "q18_large_orders": "HAVING agg → semi-style join back on l_orderkey (shared partitioning), top-100 TakeOrderedAndProject",
     "asof_last_click": "union-tag + ONE window exchange on user_id — no join, no range explosion",
@@ -105,7 +105,7 @@ NOTES = {
     "dataset_mix": "5-key agg + two broadcast scalar cross-joins; only the count scales with corpus",
     "corpus_ingest_novel": "hash anti-join vs history + capped cross-side block Jaccard; cost ∝ batch",
     "embed_pca_project": "Arrow Gram partials (one row/batch) -> driver eigh -> literal-matrix map-only projection",
-    "multimodal_frame_sample": "binary encode (JVM) -> ArrowEvalPython 1:N mapInPandas expansion, no shuffle",
+    "multimodal_frame_sample": "binary encode (JVM) -> MapInArrow 1:N row-kernel expansion, no shuffle",
     "q2_min_cost_supplier": "correlated-min as per-key aggs sharing l_partkey partitioning; part/supplier broadcast; top-100 heap",
     "q17_small_qty_revenue": "correlated-avg as co-partitioned agg back-join; brand filter broadcast-pruned below the wide join",
     "q21_sole_late_supplier": "EXISTS/NOT-EXISTS pair as one window + one agg on l_orderkey — late frame built once, no self-join",
@@ -127,7 +127,7 @@ NOTES = {
     "q22_dormant_customers": "broadcast avg-balance scalar; NOT EXISTS = date-pruned LEFT ANTI",
     "agg_argmax_family": "single hash agg on user_id — max_by/min_by replace the self-join-on-max antipattern",
     "doc_embedding_coverage": "key-only embedding projection into the id join; 20-source agg",
-    "multimodal_wav_stats": "real WAV encode→decode in ONE ArrowEvalPython stage — no shuffle; every PCM stat re-derived by the oracle",
+    "multimodal_wav_stats": "real WAV encode→decode in ONE MapInArrow stage — no shuffle; every PCM stat re-derived by the oracle",
     "doc_packing": "shard-partitioned running-sum window + same-keyed agg — ONE exchange, no single-partition global sort",
     "dataset_split": "map-only split assignment, one 15-key agg — scan-bound at any scale",
     "doc_rare_bigram_filter": "bigram explode → COUNT OVER bigram key (one shuffle, no join-back) → doc-key agg; integer per-mille score",
@@ -146,14 +146,14 @@ NOTES = {
     "quality_nb_score": "class-conditional token counts (vocab-bounded) + 1-row scalars broadcast; score = one join + per-doc fold, no corpus self-join",
     "cluster_balanced_sample": "map-only broadcast-codebook argmin assign; salted two-phase top-k (no 8-task window collapse)",
     "source_overlap_matrix": "distinct (source,gram) reduction before UNCAPPED in-bucket pair expansion (buckets bounded by source cardinality by construction); 20-row totals broadcast; size-gated localCheckpoint stages the distinct frame once above 256 MB estimate (lazy/barrier-free at this SF)",
-    "multimodal_image_stats": "real BMP encode->decode->resize->decode in ONE ArrowEvalPython stage — no shuffle; oracle recomputes every pixel incl. the resized grid",
+    "multimodal_image_stats": "real BMP encode->decode->resize->decode in ONE MapInArrow stage — no shuffle; oracle recomputes every pixel incl. the resized grid",
     "embed_pca_invariants": "Arrow Gram partials -> driver eigh; then map-only literal projection + explicit reconstruction for k=4/k=16 — Pythagorean identity checked against an eigensolve-free oracle",
     "bpe_encode_stats": "single map-only projection: tokenize → 16 chained merge folds → row-local count sums; zero exchanges",
     "bpe_fertility_by_lang": "same map-only encode; one 5-key bounded agg with exact integer sums",
     "source_unigram_kl": "one corpus pass to (source,token) counts, materialized; marginals re-derived from the small table, KL = bounded-key agg",
-    "multimodal_jpeg_stats": "real baseline-JPEG encode->decode in ONE ArrowEvalPython stage after a 1-column spreading exchange (codec is ~1.3 ms/doc of real Python; without it the 1-2 parquet splits serialize the whole corpus onto two cores — measured 7.0 s -> 0.8 s); piecewise-flat blocks make the lossy codec's output exactly oracle-predictable",
-    "multimodal_webp_stats": "real VP8L encode->decode in ONE ArrowEvalPython stage after the same 1-column spreading exchange; lossless, so every decoded-pixel stat is oracle-recomputable with no codec",
-    "multimodal_flac_stats": "real stereo multi-frame FLAC encode->decode in ONE ArrowEvalPython stage after the spreading exchange; Rice/fixed predictors + CRCs + MD5 all on the hot path, interleaved order pinned by the position-weighted checksum",
+    "multimodal_jpeg_stats": "real baseline-JPEG encode->decode in ONE MapInArrow stage after a 1-column spreading exchange (codec is ~1.3 ms/doc of real Python; without it the 1-2 parquet splits serialize the whole corpus onto two cores — measured 7.0 s -> 0.8 s); piecewise-flat blocks make the lossy codec's output exactly oracle-predictable",
+    "multimodal_webp_stats": "real VP8L encode->decode in ONE MapInArrow stage after the same 1-column spreading exchange; lossless, so every decoded-pixel stat is oracle-recomputable with no codec",
+    "multimodal_flac_stats": "real stereo multi-frame FLAC encode->decode in ONE MapInArrow stage after the spreading exchange; Rice/fixed predictors + CRCs + MD5 all on the hot path, interleaved order pinned by the position-weighted checksum",
     "multimodal_video_frames": "real AVI/MJPEG demux + per-frame T.81 decode, 1:N output (one row per SAMPLED frame); skipped frames never IDCT'd — codec cost scales with frames kept, not frames stored",
     "sample_weighted_aes": "A-ES weighted sample: map-only md5->ln(u)/w key, heap top-k (TakeOrderedAndProject) — zero exchanges, O(k) per partition at any corpus size",
     "p1_variant_decode": "Spark 4 VariantType decode of the DynamoDB wire format: parse_json once -> per-column variant_get path lookups, two fused map-only projects under one codegen stage — zero exchanges",
@@ -166,17 +166,17 @@ NOTES = {
     "cluster_silhouette": "simplified silhouette (O(n*k) vs exact O(n^2)): ONE corpus scan sorts k literal-centroid distances per row (a = ranked[0], b = ranked[1]), exact-decimal per-cluster mean behind the single k-key exchange",
     "sim_ann_ivf_trained": "IVF over deterministically trained cells in a LOSSY config (probe 2/8) with a FULL oracle: cell routing map-only, probed queries broadcast to the candidate cells, rerank reads full vectors only for probed cells' members",
     "cluster_kmeans_parallel_init": "k-means|| init: 3 md5-coin oversampling rounds (2 bounded scans each: exact-decimal phi agg + expected-l filter), one weighting scan, driver-side greedy reduce over the model-sized candidates, then the same Lloyd loop; round count independent of k — final plan is the literal result table",
-    "multimodal_mp4_stats": "ISO-BMFF demux: binary build + box walk + stsc*stco*stsz sample-table resolution in ONE ArrowEvalPython mapInPandas stage — map-only, no shuffle, no frame decode",
+    "multimodal_mp4_stats": "ISO-BMFF demux: binary build + box walk + stsc*stco*stsz sample-table resolution in ONE MapInArrow row-kernel stage — map-only, no shuffle, no frame decode",
     "sketch_cms_estimate": "CMS: explode x4 depths collapses map-side to <=2048 (depth,bucket) cells before ONE bounded exchange; the 2k-cell sketch then BROADCASTS into the top-20 probe side (no SortMergeJoin)",
-    "multimodal_mp3_stats": "mp3 frame-sync walk: build + ID3 skip + VBR frame stepping in ONE ArrowEvalPython mapInPandas stage — map-only, no shuffle, no granule decode",
-    "multimodal_ogg_stats": "Ogg page walk: build + per-page CRC recompute + lacing reassembly in ONE ArrowEvalPython mapInPandas stage — map-only, no shuffle, no Vorbis decode",
+    "multimodal_mp3_stats": "mp3 frame-sync walk: build + ID3 skip + VBR frame stepping in ONE MapInArrow row-kernel stage — map-only, no shuffle, no granule decode",
+    "multimodal_ogg_stats": "Ogg page walk: build + per-page CRC recompute + lacing reassembly in ONE MapInArrow row-kernel stage — map-only, no shuffle, no Vorbis decode",
     "graph_label_propagation": "LPA: 4 unrolled rounds over once-checkpointed edges; per round ONE edge join + ONE node-keyed deterministic-mode agg (ObjectHashAggregate, map-side label->count maps) — no Window, all-integer; A/B: 10.3s (two-agg form) -> 3.0s",
     "graph_modularity": "LPA labels + Newman Q: labels/edges checkpointed once for their 3 consumers, two node-keyed label joins, one degree agg, one label-keyed sum, 1-row scalar crossJoin; integer-exact numerator, single double division",
     "funnel_conversion": "ordered funnel: per step a pushed type filter + user-keyed min-agg + user-keyed join against the USER-sized previous stage; all shuffles on one key, no window over raw events",
     "retention_cohorts": "retention triangle: user-keyed min-agg cohort map + distinct (user, week) activity + one user-keyed join; integral date math, raw events scanned once per leg",
-    "multimodal_fmp4_stats": "fragmented-mp4 demux: moof/tfhd/trun walk with trex-default resolution in ONE ArrowEvalPython mapInPandas stage — map-only, no shuffle, no frame decode",
-    "multimodal_webm_stats": "WebM/EBML demux: VINT walk + SimpleBlock accounting in ONE ArrowEvalPython mapInPandas stage — map-only, no shuffle, no VP9/Opus decode",
-    "multimodal_mpegts_stats": "MPEG-TS demux: 188-byte sync walk + PSI CRC recompute + PES accounting in ONE ArrowEvalPython mapInPandas stage — map-only, no shuffle, no H.264/AAC decode",
+    "multimodal_fmp4_stats": "fragmented-mp4 demux: moof/tfhd/trun walk with trex-default resolution in ONE MapInArrow row-kernel stage — map-only, no shuffle, no frame decode",
+    "multimodal_webm_stats": "WebM/EBML demux: VINT walk + SimpleBlock accounting in ONE MapInArrow row-kernel stage — map-only, no shuffle, no VP9/Opus decode",
+    "multimodal_mpegts_stats": "MPEG-TS demux: 188-byte sync walk + PSI CRC recompute + PES accounting in ONE MapInArrow row-kernel stage — map-only, no shuffle, no H.264/AAC decode",
     "sketch_hll_overlap": "HLL set algebra: per-type sketch agg (map-side partials) -> self-join on type order -> hll_union + inclusion-exclusion; overlap answered from stored aggregates, raw history never rescanned",
     "sketch_quantile_grid": "grid quantile sketch: bounded 256-bucket agg with map-side partials -> cumulative-rank window over the 256-row sketch -> bucket-edge reads; nothing scales with row count",
     "session_paths_topk": "path mining: one user-keyed window pass, (user, session)-keyed array_sort agg, path-keyed count with map-side partials, heap top-20 with full tie-break",
@@ -191,43 +191,43 @@ NOTES = {
     "web_url_canonicalize": "URL canonicalization: parse_url + regexp/array expressions entirely inside whole-stage codegen — map-only projection, zero exchanges at any scale",
     "web_domain_stats": "domain scoreboard: map-only canonicalization then ONE bounded-key hash agg (map-side partials; registered domains << documents); avg is a single double division of exact sums",
     "web_domain_quality_join": "quality join-back: the domain-sized tier table BROADCASTS onto the corpus (corpus never reshuffles for the join), then one bounded (source, tier) agg",
-    "multimodal_ogg_codec_stats": "Ogg codec identification: build + page-CRC walk + first-packet reassembly + Vorbis/Opus ID-header parse in ONE ArrowEvalPython mapInPandas stage — map-only, no shuffle, no sample decode",
-    "multimodal_mp4_pts_stats": "MP4 presentation timing: two container builds (ctts+elst moov; trun-cts+tfdt fragments) + DTS->CTS->PTS resolution in ONE ArrowEvalPython mapInPandas stage — map-only, no shuffle",
+    "multimodal_ogg_codec_stats": "Ogg codec identification: build + page-CRC walk + first-packet reassembly + Vorbis/Opus ID-header parse in ONE MapInArrow row-kernel stage — map-only, no shuffle, no sample decode",
+    "multimodal_mp4_pts_stats": "MP4 presentation timing: two container builds (ctts+elst moov; trun-cts+tfdt fragments) + DTS->CTS->PTS resolution in ONE MapInArrow row-kernel stage — map-only, no shuffle",
     "graph_triangles": "triangle counting: basket-bounded co-purchase pairs -> degree orientation (out-degree O(sqrt m) under any skew) -> ONE apex self-join for wedges -> one closure equi-join -> explode+count; all-integer",
     "graph_clustering_coeff": "triangle_count's plan + one node-keyed degree agg + one node-keyed LEFT join; coefficient = one double division of exact integers",
     "web_url_dedup": "canonicalization (map-only) -> ONE hash-partitioned window on url_canonical (latest-wins shape): no join, no second scan",
     "ts_gapfill_locf": "hypertable gapfill: (user,bucket) hash agg + a 2-column min/max spine scan (Catalyst folds the spine agg straight onto the pruned scan, both map-side combined) -> spine explode + left join + two user-keyed fill windows on the bucket-sized table",
-    "multimodal_jpeg_exif": "EXIF metadata: APP1 TIFF-IFD build (II and MM) spliced into a real baseline JPEG, marker walk + IFD walk back out, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "multimodal_mp3_sideinfo": "Layer III side info: MSB-first 59-bit granule field groups bit-packed into a real frame and unpacked back, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "multimodal_flac_tags": "FLAC VORBIS_COMMENT: metadata-chain splice with last-flag rewrite, tags+STREAMINFO walk, sample decode re-verified on the tagged payload, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "multimodal_png_text": "PNG tEXt/iTXt/pHYs: CRC-live chunk splice + metadata walk + pixel re-verify, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "multimodal_wav_tags": "WAV LIST/INFO: RIFF-size-patched tag append + chunk walk + stdlib decode re-verify, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "multimodal_mp4_tags": "MP4 ilst tags: udta splice into a finished file (moov size patch + stco shift), tag walk + full re-demux through the patched sample tables, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "multimodal_gif_meta": "GIF89a comment/NETSCAPE loop: post-GCT splice + block walk (image skip without LZW) + pixel decode re-verify, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "multimodal_mp3_tags": "ID3v2 metadata: v2.3 tag build + syncsafe header walk + text-frame decode ahead of the Layer III frame validation, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "multimodal_ogg_tags": "Opus metadata: conformant OpusHead+OpusTags+audio build, page-CRC demux, comment-structure parse of the reassembled second packet in ONE ArrowEvalPython stage — map-only, no shuffle",
-    "text_unicode_repair": "ftfy-style repair: mojibake fixpoint + NFC + strip rules with md5-exact oracle, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "web_warc_stats": "WARC demux: member-gzip split + Content-Length record walk + HTTP parse + dechunk, ONE ArrowEvalPython stage - map-only, no shuffle (parallelizes across archive files)",
-    "web_crawl_to_text": "crawl capstone: WARC walk + HTTP dechunk + HTML density extract + unicode repair composed, ONE ArrowEvalPython stage - map-only, md5-exact recovery",
+    "multimodal_jpeg_exif": "EXIF metadata: APP1 TIFF-IFD build (II and MM) spliced into a real baseline JPEG, marker walk + IFD walk back out, ONE MapInArrow stage - map-only, no shuffle",
+    "multimodal_mp3_sideinfo": "Layer III side info: MSB-first 59-bit granule field groups bit-packed into a real frame and unpacked back, ONE MapInArrow stage - map-only, no shuffle",
+    "multimodal_flac_tags": "FLAC VORBIS_COMMENT: metadata-chain splice with last-flag rewrite, tags+STREAMINFO walk, sample decode re-verified on the tagged payload, ONE MapInArrow stage - map-only, no shuffle",
+    "multimodal_png_text": "PNG tEXt/iTXt/pHYs: CRC-live chunk splice + metadata walk + pixel re-verify, ONE MapInArrow stage - map-only, no shuffle",
+    "multimodal_wav_tags": "WAV LIST/INFO: RIFF-size-patched tag append + chunk walk + stdlib decode re-verify, ONE MapInArrow stage - map-only, no shuffle",
+    "multimodal_mp4_tags": "MP4 ilst tags: udta splice into a finished file (moov size patch + stco shift), tag walk + full re-demux through the patched sample tables, ONE MapInArrow stage - map-only, no shuffle",
+    "multimodal_gif_meta": "GIF89a comment/NETSCAPE loop: post-GCT splice + block walk (image skip without LZW) + pixel decode re-verify, ONE MapInArrow stage - map-only, no shuffle",
+    "multimodal_mp3_tags": "ID3v2 metadata: v2.3 tag build + syncsafe header walk + text-frame decode ahead of the Layer III frame validation, ONE MapInArrow stage - map-only, no shuffle",
+    "multimodal_ogg_tags": "Opus metadata: conformant OpusHead+OpusTags+audio build, page-CRC demux, comment-structure parse of the reassembled second packet in ONE MapInArrow stage — map-only, no shuffle",
+    "text_unicode_repair": "ftfy-style repair: mojibake fixpoint + NFC + strip rules with md5-exact oracle, ONE MapInArrow stage - map-only, no shuffle",
+    "web_warc_stats": "WARC demux: member-gzip split + Content-Length record walk + HTTP parse + dechunk, ONE MapInArrow stage - map-only, no shuffle (parallelizes across archive files)",
+    "web_crawl_to_text": "crawl capstone: WARC walk + HTTP dechunk + HTML density extract + unicode repair composed, ONE MapInArrow stage - map-only, md5-exact recovery",
     "code_quality_filter": "StarCoder-style line gate: pure Catalyst split/slice/transform/aggregate HOFs - zero Python, scan speed",
-    "multimodal_webdataset_stats": "WebDataset shard demux: verified-checksum ustar walk + key grouping with exact-tar-size oracle, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "doc_pdf_extract": "PDF extraction: xref walk + Flate inflate + content tokenize with md5-exact text recovery, ONE ArrowEvalPython stage - map-only, no shuffle",
+    "multimodal_webdataset_stats": "WebDataset shard demux: verified-checksum ustar walk + key grouping with exact-tar-size oracle, ONE MapInArrow stage - map-only, no shuffle",
+    "doc_pdf_extract": "PDF extraction: xref walk + Flate inflate + content tokenize with md5-exact text recovery, ONE MapInArrow stage - map-only, no shuffle",
     "dataset_fim_transform": "FIM augmentation: pure Catalyst substring/concat projection - whole-stage codegen, zero Python, zero exchanges",
-    "sft_dialogue_stats": "chat-format SFT gate: JSON parse + strict role/alternation validation + per-role budgets, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "multimodal_audio_quality": "PCM quality gate: WAV round trip + integer peak/clip/RMS/DC/zero-cross features, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "multimodal_exif_gps_scrub": "image-PII scrub: GPS IFD decode + APP1 rebuild without it + re-parse proof, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "web_sitemap_stats": "sitemap protocol parse (urlset/sitemapindex, entity decode, field validation), ONE ArrowEvalPython stage - map-only, no shuffle",
-    "web_robots_filter": "RFC 9309 crawl gate: per-domain rule parse (cached, broadcast-shaped) + longest-match evaluation, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "web_html_extract": "HTML boilerplate removal: fixture-page synth + density block walk + entity decode + md5 of the recovered text, ONE ArrowEvalPython stage - map-only, no shuffle (scan-speed at 100 TB)",
-    "multimodal_aac_stats": "AAC ADTS: header framing + CRC-16 verify + 13-bit frame-length walk, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "multimodal_h264_nal_stats": "H.264 Annex-B: start-code NAL walk + EPB strip + exp-Golomb SPS parse to cropped dims, ONE ArrowEvalPython stage - map-only, no shuffle",
-    "multimodal_vtt_cues": "WebVTT/SRT: both dialect serializers + cue walk (timing, gaps, text chars), ONE ArrowEvalPython stage - map-only, no shuffle",
-    "parquet_v2_delta_scan": "parquet v2 read: pyarrow-written DataPageV2 + DELTA_BINARY_PACKED/DELTA_BYTE_ARRAY fixtures through the zero-dep reader, ONE ArrowEvalPython stage - map-only, no shuffle",
+    "sft_dialogue_stats": "chat-format SFT gate: JSON parse + strict role/alternation validation + per-role budgets, ONE MapInArrow stage - map-only, no shuffle",
+    "multimodal_audio_quality": "PCM quality gate: WAV round trip + integer peak/clip/RMS/DC/zero-cross features, ONE MapInArrow stage - map-only, no shuffle",
+    "multimodal_exif_gps_scrub": "image-PII scrub: GPS IFD decode + APP1 rebuild without it + re-parse proof, ONE MapInArrow stage - map-only, no shuffle",
+    "web_sitemap_stats": "sitemap protocol parse (urlset/sitemapindex, entity decode, field validation), ONE MapInArrow stage - map-only, no shuffle",
+    "web_robots_filter": "RFC 9309 crawl gate: per-domain rule parse (cached, broadcast-shaped) + longest-match evaluation, ONE MapInArrow stage - map-only, no shuffle",
+    "web_html_extract": "HTML boilerplate removal: fixture-page synth + density block walk + entity decode + md5 of the recovered text, ONE MapInArrow stage - map-only, no shuffle (scan-speed at 100 TB)",
+    "multimodal_aac_stats": "AAC ADTS: header framing + CRC-16 verify + 13-bit frame-length walk, ONE MapInArrow stage - map-only, no shuffle",
+    "multimodal_h264_nal_stats": "H.264 Annex-B: start-code NAL walk + EPB strip + exp-Golomb SPS parse to cropped dims, ONE MapInArrow stage - map-only, no shuffle",
+    "multimodal_vtt_cues": "WebVTT/SRT: both dialect serializers + cue walk (timing, gaps, text chars), ONE MapInArrow stage - map-only, no shuffle",
+    "parquet_v2_delta_scan": "parquet v2 read: pyarrow-written DataPageV2 + DELTA_BINARY_PACKED/DELTA_BYTE_ARRAY fixtures through the zero-dep reader, ONE MapInArrow stage - map-only, no shuffle",
     "dedup_prefix_jaccard": "LOSSLESS exact-threshold near-dup join (SSJoin/PPJoin): rarest-first prefix equi-join + integer length/position filters, count-join verify on hashed tokens - never all-pairs, no cartesian",
     "iceberg_write_replay": "driver-orchestrated: three Spark-written commits (append + two partition overwrites) into a v2 metadata chain; returned census is a LocalTableScan read COLD from Avro manifests - data moves only through Spark's parquet writer",
     "merge_schema_evolution": "driver-orchestrated: two merges (second adds a column + widens a type under evolve_schema); final read uses the LOG's schema so old partitions NULL-backfill; census is the s8 shape over the evolved table",
     "sim_bitext_ann_fullprobe": "bitext shortlist in its lossless config: bucket equi-join (single bucket = full pair set), JVM zip_with cosine, 2-exchange margin windows - bit-equal to the broadcast baseline",
-    "iceberg_delete_write": "driver-orchestrated: append + position-delete commit (executor-side pyarrow position scans, in-repo parquet delete files), census from the MOR mapInPandas scan — deletes are metadata, no data rewrite",
+    "iceberg_delete_write": "driver-orchestrated: append + position-delete commit (executor-side pyarrow position scans, in-repo parquet delete files), census from the MOR `map_rows` scan — deletes are metadata, no data rewrite",
     "hudi_write_replay": "driver-orchestrated: three COW commits (file-group-routed repartition writes) into a .hoodie timeline; census is a LocalTableScan read COLD from the timeline's write stats via replay_hudi_timeline",
     "sim_bitext_ann": "banded 8x6 bitext shortlist: map-only LSH signatures both sides, (tbl,bucket) equi-join candidates (never all-pairs), zip_with cosine on the sparse shortlist, same 2-exchange margin tail",
 }
