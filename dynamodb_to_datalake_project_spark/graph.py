@@ -25,7 +25,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from dynamodb_to_datalake_project_spark import local
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
 
@@ -86,13 +88,15 @@ def connected_components(
     """(node, component) for every node appearing in `edges`, where
     component = min node id of its connected component."""
     e = _canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    # eager=False: the convergence-check aggregation right below is an
-    # action anyway, so it MATERIALIZES the checkpoint — one Spark job
-    # per round instead of two (checkpoint job + signature job). The
-    # lineage truncation is identical. NOTE this lazy form is right
-    # ONLY for the one-consumer-per-round shape here: A/B showed it
-    # REGRESSES the multi-branch model tables (llm/lm.py) and the
-    # curation funnel, where several branches of one plan consume the
+    # eager=False: the first action right below — the bounded collect,
+    # or else the convergence-check aggregation — MATERIALIZES the
+    # checkpoint, and an over-budget edge set reuses its blocks: one
+    # Spark job per round instead of two (checkpoint job + signature
+    # job), and the input pairs are computed once. The lineage
+    # truncation is identical. NOTE this lazy form is right ONLY for
+    # the one-consumer-per-round shape here: A/B showed it REGRESSES
+    # the multi-branch model tables (llm/lm.py) and the curation
+    # funnel, where several branches of one plan consume the
     # checkpoint and eager materialization feeds them known-size,
     # already-built blocks.
     # Block lifetime: each round's checkpoint supersedes the previous
@@ -106,21 +110,20 @@ def connected_components(
     # exhausting a local disk across consecutive large jobs
     # (SCALING.md, pairing-probe finding 5).
     e = e.localCheckpoint(eager=False)
+    # Size-adaptive resolution (r12): when the canonical edge set of
+    # integral ids fits the budget — near-dup pair sets are
+    # pair-detector output, orders of magnitude smaller than the
+    # corpus — one bounded collect and one vectorized min-propagation
+    # replace the alternating-star loop's ~8 AQE stage jobs PER ROUND
+    # (identical result by definition: component = min node id,
+    # algorithm-independent). Past the budget, or for non-integral
+    # node ids, the distributed star loop below runs.
+    ids = local.collect_ids(e, _CC_LOCAL_EDGES)
+    if ids is not None:
+        return _connected_components_local(
+            e.sparkSession, ids["hi"], ids["lo"], e.schema["hi"].dataType
+        )
     sig = _signature(e)
-    # Size-adaptive resolution (r12, same budget logic as the triangle
-    # closure): the signature aggregation already materialized the
-    # checkpoint AND returned the exact edge count. When the canonical
-    # edge set fits a broadcast-relation budget — near-dup pair sets
-    # are pair-detector output, orders of magnitude smaller than the
-    # corpus — the alternating-star loop's ~8 AQE stage jobs PER ROUND
-    # collapse into one vectorized min-propagation over the collected
-    # relation (identical result by definition: component = min node
-    # id, algorithm-independent). Past the budget, or for non-integral
-    # node ids, the distributed star loop below runs unchanged.
-    if sig[0] <= _CC_LOCAL_EDGES:
-        local = _connected_components_local(e)
-        if local is not None:
-            return local
     for _ in range(max_iter):
         e2 = _small_star(_large_star(e)).localCheckpoint(eager=False)
         sig2 = _signature(e2)
@@ -136,43 +139,37 @@ def connected_components(
     return members.unionAll(centers).distinct()
 
 
-#: broadcast-relation budget for local component resolution (edges)
+#: collect budget for local component resolution (canonical edges)
 _CC_LOCAL_EDGES = 2_000_000
 
-#: broadcast-relation budget for the NODE-SIZED side of the iterative
-#: graph operators' per-round joins (labels / ranks / frontier /
-#: survivor sets). localCheckpoint scans surface as
-#: UnknownPartitioning, so without the hint every round re-plans a
-#: SortMergeJoin that re-exchanges AND re-sorts the full EDGE table;
-#: broadcasting the side that is one row per node (guide §3.1) leaves
-#: the edge stream untouched per round. Catalyst cannot see these
-#: sizes (no stats behind an RDD scan) — the guard uses the measured
-#: node/edge count the operator already holds.
-_GRAPH_BC_NODES = 4_000_000
+#: broadcast-relation budget (rows) of the 64 MB class Spark broadcasts
+#: for joins. It bounds two things:
+#: - the NODE-SIZED side of the iterative graph operators' per-round
+#:   joins (labels / ranks / frontier / survivor sets).
+#:   localCheckpoint scans surface as UnknownPartitioning, so without
+#:   the hint every round re-plans a SortMergeJoin that re-exchanges
+#:   AND re-sorts the full EDGE table; broadcasting the side that is
+#:   one row per node (guide §3.1) leaves the edge stream untouched per
+#:   round. Catalyst cannot see these sizes (no stats behind an RDD
+#:   scan) — the guard uses the measured node/edge count the operator
+#:   already holds;
+#: - the edge set `triangle_count` collects and broadcasts as packed
+#:   adjacency (4M edges ≈ 64 MB).
+_BROADCAST_ROWS = 4_000_000
 
 
 def _bc_if_small(df: DataFrame, n_rows_bound: int) -> DataFrame:
     """Broadcast-hint `df` when its row bound fits the budget."""
-    return F.broadcast(df) if n_rows_bound <= _GRAPH_BC_NODES else df
+    return F.broadcast(df) if n_rows_bound <= _BROADCAST_ROWS else df
 
 
-def _connected_components_local(e: DataFrame):
+def _connected_components_local(spark, hi, lo, id_type) -> DataFrame:
     """(node, component-min) by vectorized min-label propagation with
-    pointer jumping over the collected canonical edge set, typed like
-    the input node ids (as the star loop's output is). Returns None
-    for non-integral node ids (numpy's string order need not match
-    SQL's) — the caller falls back to the star loop."""
+    pointer jumping over the collected canonical edge set (int64
+    arrays), typed like the input node ids (as the star loop's output
+    is)."""
     import numpy as np
 
-    spark = e.sparkSession
-    pdf = e.toPandas()
-    if len(pdf) and not (
-        str(pdf["hi"].dtype).startswith("int")
-        and str(pdf["lo"].dtype).startswith("int")
-    ):
-        return None
-    hi = pdf["hi"].to_numpy(np.int64) if len(pdf) else np.zeros(0, np.int64)
-    lo = pdf["lo"].to_numpy(np.int64) if len(pdf) else np.zeros(0, np.int64)
     nodes = np.unique(np.concatenate([hi, lo]))
     K = len(nodes)
     ui = np.searchsorted(nodes, hi)
@@ -198,13 +195,9 @@ def _connected_components_local(e: DataFrame):
             parent = nxt
         if np.array_equal(parent, before):
             break
-    import pandas as pd
-
-    out = pd.DataFrame({"node": nodes, "component": nodes[parent]})
-    t = e.schema["hi"].dataType
-    return spark.createDataFrame(
-        out, schema="node long, component long"
-    ).select(F.col("node").cast(t), F.col("component").cast(t))
+    return local.ids_frame(
+        spark, {"node": nodes, "component": nodes[parent]}, id_type
+    )
 
 
 def dedup_clusters(
@@ -1185,25 +1178,25 @@ def triangle_count(
         und = canonical_undirected(edges, src, dst)
 
     # Size-adaptive closure (r12, guide §3.1/§8): when the undirected
-    # edge set fits a broadcast-relation budget, ship the oriented
-    # adjacency ONCE to every task and close wedges by vectorized
-    # binary search against it — the Σ out-degree(apex) wedge stream
-    # then never exists as rows at all (neither shuffled nor
-    # materialized), the per-wedge cost drops from a JVM join-row
+    # edge set of integral ids fits the broadcast budget, ship the
+    # oriented adjacency ONCE to every task and close wedges by
+    # vectorized binary search against it — the Σ out-degree(apex)
+    # wedge stream then never exists as rows at all (neither shuffled
+    # nor materialized), the per-wedge cost drops from a JVM join-row
     # cycle to one numpy searchsorted lane, and the degree aggregation
     # + both orientation joins + the oriented checkpoint disappear
     # (degrees and orientation are a bincount over the broadcast
-    # relation). Decision input is the MEASURED edge count off the
+    # relation). The decision is the bounded collect off the
     # checkpoint — the same size-based call AQE makes for broadcast
     # joins; past the budget the distributed degree-orientation +
     # wedge-join path below runs unchanged. Identical enumeration
     # either way: every triangle found exactly once at its apex edge
-    # pair.
-    n_edges = und.count()
-    if n_edges <= _TRI_BROADCAST_EDGES:
-        out = _triangle_count_broadcast(und, n_edges)
-        if out is not None:
-            return out
+    # pair. coalesce(1): `und` is a checkpoint, so one task only reads
+    # its blocks, and the collect's limit then needs no exchange to a
+    # single partition (~0.35 s at sf0.1's 1.2M edges on 4 vCPU).
+    ids = local.collect_ids(und.select("u", "v").coalesce(1), _BROADCAST_ROWS)
+    if ids is not None:
+        return _triangle_count_broadcast(und, ids["u"], ids["v"])
 
     deg = (
         und.select(F.col("u").alias("node"))
@@ -1246,44 +1239,25 @@ def triangle_count(
     )
 
 
-#: broadcast-closure budget for triangle counting: edges up to this
-#: fit the same relation class Spark broadcasts for joins (64 MB
-#: session threshold — 4M edges ≈ 64 MB of packed adjacency)
-_TRI_BROADCAST_EDGES = 4_000_000
-
-
-def _triangle_count_broadcast(und: DataFrame, n_edges: int):
+def _triangle_count_broadcast(und: DataFrame, uu, vv) -> DataFrame:
     """Per-node triangle counts by broadcast adjacency + vectorized
-    wedge closure. Degrees and the (degree, node)-rank orientation are
-    one bincount/compare over the collected edge relation (u < v holds
-    canonically, so a degree tie orients u→v exactly like the join
-    path's (du = dv AND u < v) arm). For each oriented edge (a, b),
-    the triangles whose apex edge pair lies at (a, b) are exactly the
-    common out-neighbors N+(a) ∩ N+(b) — each triangle {a, b, c} with
-    a→b, a→c, b→c is found ONCE (at edge (a, b); the other two edges
-    fail the both-out-edges test), which is the same enumeration the
-    wedge join performs. Credits: a and b each count the intersection
-    size, every common neighbor c counts 1. Integer-exact. Returns
-    None for non-integral node ids (a string id does not fit the int64
-    arrays, a float id would be truncated) or when the node table is
-    too wide for the offsets array budget — the caller falls back to
-    the distributed join."""
+    wedge closure over the collected edge relation `uu`, `vv` (int64
+    arrays). Degrees and the (degree, node)-rank orientation are one
+    bincount/compare over it (u < v holds canonically, so a degree tie
+    orients u→v exactly like the join path's (du = dv AND u < v) arm).
+    For each oriented edge (a, b), the triangles whose apex edge pair
+    lies at (a, b) are exactly the common out-neighbors N+(a) ∩ N+(b)
+    — each triangle {a, b, c} with a→b, a→c, b→c is found ONCE (at
+    edge (a, b); the other two edges fail the both-out-edges test),
+    which is the same enumeration the wedge join performs. Credits: a
+    and b each count the intersection size, every common neighbor c
+    counts 1. Integer-exact; `node` is typed as the input ids."""
     import numpy as np
     import pandas as pd
 
     spark = und.sparkSession
-    pdf = und.select("u", "v").toPandas()
-    if len(pdf) and not (
-        str(pdf["u"].dtype).startswith("int")
-        and str(pdf["v"].dtype).startswith("int")
-    ):
-        return None
-    uu = pdf["u"].to_numpy(np.int64)
-    vv = pdf["v"].to_numpy(np.int64)
-    nodes = np.unique(np.concatenate([uu, vv])) if len(uu) else np.zeros(0, np.int64)
+    nodes = np.unique(np.concatenate([uu, vv]))
     K = len(nodes)
-    if K > 8_000_000:  # offsets/bincount arrays would exceed the budget
-        return None
     ui = np.searchsorted(nodes, uu).astype(np.int64)
     vi = np.searchsorted(nodes, vv).astype(np.int64)
     degarr = np.bincount(
@@ -1300,7 +1274,10 @@ def _triangle_count_broadcast(und: DataFrame, n_edges: int):
     keys = s_i * K + d_i  # sorted (lexsort) — global binary-search table
     bc = spark.sparkContext.broadcast((nodes, keys, d_i, offs, degarr))
 
-    schema = "node long, cnt long"
+    schema = T.StructType([
+        T.StructField("node", und.schema["u"].dataType),
+        T.StructField("cnt", T.LongType()),
+    ])
 
     def op(batches):
         nodes_b, keys_b, dvals, offs_b, deg_r = bc.value
@@ -1354,7 +1331,8 @@ def _triangle_count_broadcast(und: DataFrame, n_edges: int):
         .repartition(par)
         .mapInPandas(op, schema)
         .groupBy("node")
-        .agg(F.sum("cnt").cast("long").alias("n_triangles"))
+        # coalesce: as non-nullable as the wedge join's count(*)
+        .agg(F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("n_triangles"))
     )
 
 

@@ -35,11 +35,12 @@ O(1) convergence signature.
 
 from __future__ import annotations
 
-import math
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dynamodb_to_datalake_project_spark import local
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
 from dynamodb_to_datalake_project_spark.llm.text import tokens
@@ -79,7 +80,7 @@ def _merge_step(syms, left: str, right: str):
 
 
 def _train_bpe_driver(
-    word_freqs: "list[tuple[str, int]]", n_merges: int, min_count: int
+    word_freqs: "Iterable[tuple[str, int]]", n_merges: int, min_count: int
 ) -> "list[tuple[int, str, str, int]]":
     """Driver-side merge loop over an in-memory (word, freq) table —
     byte-identical semantics to the distributed loop: same pair
@@ -120,12 +121,16 @@ def _train_bpe_driver(
     return merges
 
 
+#: (word, freq) rows at or under which the merge loop runs on the
+#: driver
+_DRIVER_VOCAB_ROWS = 1 << 20
+
+
 def train_bpe_merges(
     docs: DataFrame,
     n_merges: int = 16,
     min_count: int = 2,
     text_col: str = "text",
-    driver_vocab_limit: int = 1 << 20,
 ) -> DataFrame:
     """Learn `n_merges` BPE merges from a corpus; returns a DataFrame
     (rank, left, right, pair_count) ordered by rank. Deterministic:
@@ -137,22 +142,25 @@ def train_bpe_merges(
     work is ALWAYS exactly one distributed pass (explode + combinable
     word count). The merge loop then iterates over the vocab-bounded
     (word, freq) table only; when that table has at most
-    `driver_vocab_limit` rows (counted on the already-materialized
-    checkpoint — a cheap cached-block scan) it is collected once and
-    the loop runs in plain Python, identical semantics, zero further
-    jobs. This removes n_merges rounds of job dispatch + per-iteration
-    codegen, which dominate wall-clock at any corpus size because the
-    loop's cost is a function of VOCABULARY, not data. Beyond the
-    limit (web-scale vocabularies, ~10-100 M distinct words) the
-    distributed per-merge loop below runs instead — same outputs,
-    pinned by `tests/test_llm.py::test_bpe_matches_reference` which
-    asserts full-table equality of BOTH paths against a pure-Python
-    replay."""
+    `_DRIVER_VOCAB_ROWS` rows it comes back in the one bounded collect
+    (`local.collect_bounded`) and the loop runs in plain Python,
+    identical semantics, zero further jobs. This removes n_merges
+    rounds of job dispatch + per-iteration codegen, which dominate
+    wall-clock at any corpus size because the loop's cost is a
+    function of VOCABULARY, not data. Beyond the limit (web-scale
+    vocabularies, ~10-100 M distinct words) the distributed per-merge
+    loop below runs instead — same outputs, pinned by
+    `tests/test_llm.py::test_bpe_matches_reference` which asserts
+    full-table equality of BOTH paths against a pure-Python replay."""
     spark = docs.sparkSession
-    wf = word_frequencies(docs, text_col).localCheckpoint(eager=True)
-    if wf.count() <= driver_vocab_limit:
+    # eager=False: the bounded collect below materializes the
+    # checkpoint, and an over-budget vocab reuses its blocks, so the
+    # corpus is scanned once on either path
+    wf = word_frequencies(docs, text_col).localCheckpoint(eager=False)
+    table = local.collect_bounded(wf, _DRIVER_VOCAB_ROWS)
+    if table is not None:
         merges = _train_bpe_driver(
-            [(r["word"], int(r["freq"])) for r in wf.collect()],
+            zip(table.column("word").to_pylist(), table.column("freq").to_pylist()),
             n_merges,
             min_count,
         )
@@ -241,8 +249,7 @@ def encode_word_syms(word, merges: list[tuple[str, str]]):
     the trainer used (`_merge_step`) — encode MUST replay training's
     merge semantics or token boundaries drift. Pure Catalyst; sensible
     for small merge tables (the chained-fold plan grows linearly with
-    n_merges — production 32k-merge vocabularies go through
-    `bpe_encode_pandas` instead)."""
+    n_merges)."""
     syms = F.transform(
         F.sequence(F.lit(1), F.length(word)), lambda i: word.substr(i, F.lit(1))
     )
@@ -280,56 +287,6 @@ def bpe_encode_stats(
         F.size("tk").cast("long").alias("n_words"),
         n_bpe.alias("n_bpe_tokens"),
         F.round(n_chars_tok.cast("double") / n_bpe, 6).alias("chars_per_token"),
-    )
-
-
-def bpe_encode_pandas(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-) -> DataFrame:
-    """Production encode path: Arrow-batched `map_rows` with a
-    per-task distinct-word cache — token frequencies are power-law,
-    so each distinct word is encoded once per task no matter how
-    often it occurs. Same greedy-left-to-right-per-merge semantics as
-    `bpe_encode_stats` (asserted equal in tests); use this one when
-    the merge table is production-sized (tens of thousands of ranks),
-    where a chained Catalyst fold plan would be absurd. Map-only: the
-    merge list ships in the closure (the tokenizer artifact is KBs),
-    and no shuffle happens anywhere."""
-    cache: dict = {}
-
-    def enc_len(word: str) -> int:
-        n = cache.get(word)
-        if n is None:
-            syms = list(word)
-            for left, right in merges:
-                out: list[str] = []
-                for s in syms:
-                    if out and out[-1] == left and s == right:
-                        out[-1] = left + right
-                    else:
-                        out.append(s)
-                syms = out
-            n = cache[word] = len(syms)
-        return n
-
-    def row(doc_id, text):
-        words = [w for w in (text or "").split(" ") if w]
-        if not words:
-            return
-        n_bpe = sum(enc_len(w) for w in words)
-        n_chars = sum(len(w) for w in words)
-        # HALF_UP to match F.round (Catalyst) and DuckDB; Python
-        # round() is banker's and would diverge on exact .xxxxxx5
-        # ties, breaking the asserted cross-path equality.
-        ratio = math.floor(n_chars / n_bpe * 1e6 + 0.5) / 1e6
-        yield doc_id, len(words), n_bpe, ratio
-
-    return map_rows(
-        docs.select("doc_id", text_col),
-        row,
-        "doc_id long, n_words long, n_bpe_tokens long, chars_per_token double",
     )
 
 

@@ -707,8 +707,7 @@ def pca_components(
     import numpy as np
     import pandas as pd
 
-    d_probe = embeddings.select(vec_col).limit(1).toPandas()
-    dim = len(d_probe.iloc[0, 0])
+    dim = len(embeddings.select(vec_col).first()[0])
 
     def partials(batches):
         for pdf in batches:

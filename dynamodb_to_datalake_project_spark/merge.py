@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dynamodb_to_datalake_project_spark import dedup, deltatable
+from dynamodb_to_datalake_project_spark import dedup, deltatable, local
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
 
@@ -377,12 +377,11 @@ def _collect_batch(
     ):
         return None
     tagged = _tagged(source, _column_order(schema, partition_cols), 1, op_col)
-    batch = (
-        tagged.select("*", F.xxhash64(*tagged.columns).alias("__hash"))
-        .limit(_LOCAL_MERGE_ROWS + 1)
-        .toArrow()
+    batch = local.collect_bounded(
+        tagged.select("*", F.xxhash64(*tagged.columns).alias("__hash")),
+        _LOCAL_MERGE_ROWS,
     )
-    if batch.num_rows > _LOCAL_MERGE_ROWS:
+    if batch is None:
         return None
     # every column nullable, so target rows (null tags) concatenate
     return batch.cast(pa.schema([f.with_nullable(True) for f in batch.schema]))

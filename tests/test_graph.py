@@ -29,23 +29,23 @@ def test_cc_chain_and_cliques(spark):
 
 def test_cc_int32_ids_same_schema_both_paths(spark, monkeypatch):
     """int (int32) node ids: the collected local path (default budget)
-    and the distributed star loop (a budget below every edge count,
-    -1, so the empty edge list takes the star loop too) return the
-    same schema and rows — the result type does not depend on the
-    edge count."""
-    from dynamodb_to_datalake_project_spark import graph
+    and the distributed star loop (every bounded collect refused, so
+    the empty edge list takes the star loop too) return the same
+    schema and rows — the result type does not depend on the edge
+    count."""
+    from dynamodb_to_datalake_project_spark import local
 
     edges = [(i, i + 1) for i in range(5)] + [(20, 21), (22, 21)]
     for rows in (edges, []):
         df = spark.createDataFrame(rows, "a int, b int")
-        local = connected_components(df, "a", "b")
+        collected = connected_components(df, "a", "b")
         with monkeypatch.context() as m:
-            m.setattr(graph, "_CC_LOCAL_EDGES", -1)
+            m.setattr(local, "collect_bounded", lambda df, max_rows: None)
             star = connected_components(df, "a", "b")
             star_rows = sorted(map(tuple, star.collect()))
-        assert local.schema == star.schema
-        assert [f.dataType.simpleString() for f in local.schema] == ["int", "int"]
-        assert sorted(map(tuple, local.collect())) == star_rows
+        assert collected.schema == star.schema
+        assert [f.dataType.simpleString() for f in collected.schema] == ["int", "int"]
+        assert sorted(map(tuple, collected.collect())) == star_rows
 
 
 def test_dedup_clusters_singletons(spark):
@@ -393,10 +393,11 @@ def test_triangle_count_hand_built_graph(spark):
 
 def test_triangle_count_non_integer_ids_match_wedge_join(spark, monkeypatch):
     """String and float node ids give the same counts under the
-    default broadcast budget as on the wedge-join path (budget 0): the
-    broadcast closure works on int64 arrays, so it must step aside
-    rather than fail on strings or truncate 1.5 to 1."""
-    from dynamodb_to_datalake_project_spark import graph
+    default broadcast budget as on the wedge-join path (every bounded
+    collect refused): the broadcast closure works on int64 arrays, so
+    it must step aside rather than fail on strings or truncate 1.5 to
+    1."""
+    from dynamodb_to_datalake_project_spark import graph, local
 
     k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
     extra = [(3, 4), (4, 5), (3, 5), (5, 6), (6, 7)]
@@ -412,7 +413,7 @@ def test_triangle_count_non_integer_ids_match_wedge_join(spark, monkeypatch):
     for df in graphs:
         default = {tuple(r) for r in graph.triangle_count(df).collect()}
         with monkeypatch.context() as m:
-            m.setattr(graph, "_TRI_BROADCAST_EDGES", 0)
+            m.setattr(local, "collect_bounded", lambda df, max_rows: None)
             wedge = {tuple(r) for r in graph.triangle_count(df).collect()}
         assert default == wedge and len(wedge) == 6, (default, wedge)
 

@@ -535,10 +535,11 @@ def _ref_bpe(texts: list[str], n_merges: int, min_count: int):
     return merges
 
 
-def test_bpe_matches_reference(spark, corpus):
+def test_bpe_matches_reference(spark, corpus, monkeypatch):
     """BOTH trainer paths — driver-side (vocab fits the gate) and
-    distributed (gate forced to 0) — must produce the identical full
-    merge table, equal to the pure-Python replay."""
+    distributed (the bounded collect refused) — must produce the
+    identical full merge table, equal to the pure-Python replay."""
+    from dynamodb_to_datalake_project_spark import local
     from dynamodb_to_datalake_project_spark.llm import bpe
 
     texts = [BASE, NEAR, OTHER, BASE]
@@ -547,11 +548,10 @@ def test_bpe_matches_reference(spark, corpus):
         (r.rank, r.left, r.right, r.pair_count)
         for r in bpe.train_bpe_merges(corpus, n_merges=12, min_count=2).collect()
     ]
+    monkeypatch.setattr(local, "collect_bounded", lambda df, max_rows: None)
     distributed = [
         (r.rank, r.left, r.right, r.pair_count)
-        for r in bpe.train_bpe_merges(
-            corpus, n_merges=12, min_count=2, driver_vocab_limit=0
-        ).collect()
+        for r in bpe.train_bpe_merges(corpus, n_merges=12, min_count=2).collect()
     ]
     assert driver == want
     assert distributed == want

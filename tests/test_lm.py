@@ -79,21 +79,6 @@ def test_salted_topk_equals_plain_topk(spark):
     )
 
 
-def test_bpe_encode_pandas_matches_catalyst(spark):
-    from dynamodb_to_datalake_project_spark.lake import load_table
-    from dynamodb_to_datalake_project_spark.llm.bpe import (
-        SHIPPED_MERGES,
-        bpe_encode_pandas,
-        bpe_encode_stats,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents")
-    a = sorted(map(tuple, bpe_encode_stats(docs, SHIPPED_MERGES).collect()))
-    b = sorted(map(tuple, bpe_encode_pandas(docs, SHIPPED_MERGES).collect()))
-    assert a == b
-    assert len(a) == docs.filter(F.length(F.trim("text")) > 0).count()
-
-
 def test_bpe_encode_word_merges_in_rank_order(spark):
     """'master' with merges (a,s)->(as,t) must produce m|as|t|e|r via
     rank-order application; skipping rank order would miss 'ast'."""

@@ -1860,11 +1860,12 @@ def _log_shape(path):
     return out
 
 
-def _merge_sequence(spark, path, monkeypatch, budget, retain):
-    """Merge `_typed_batches` into a new table with the driver-local
-    budget at `budget`: the final table (schema and rows), the log's
-    shape, and how many merges ran on the driver."""
-    from dynamodb_to_datalake_project_spark import deltatable
+def _merge_sequence(spark, path, monkeypatch, collect, retain):
+    """Merge `_typed_batches` into a new table, with the batch collect
+    allowed (`collect`) or refused, which sends every batch to the
+    Spark path: the final table (schema and rows), the log's shape,
+    and how many merges ran on the driver."""
+    from dynamodb_to_datalake_project_spark import deltatable, local
 
     ran_local = []
     real = merge._merge_local
@@ -1874,7 +1875,8 @@ def _merge_sequence(spark, path, monkeypatch, budget, retain):
         ran_local.append(out is not None)
         return out
 
-    monkeypatch.setattr(merge, "_LOCAL_MERGE_ROWS", budget)
+    if not collect:
+        monkeypatch.setattr(local, "collect_bounded", lambda df, max_rows: None)
     monkeypatch.setattr(merge, "_merge_local", spy)
     for rows in _typed_batches():
         merge.merge_into_parquet(
@@ -1898,15 +1900,14 @@ def test_local_merge_equals_spark_merge(spark, tmp_path, monkeypatch, retain):
     precombine, a partition emptied), null, "", "a:b" and "50%"
     partitions, a partition with no files yet, and decimal, timestamp,
     date, boolean, double (NaN) and binary columns."""
-    budget = merge._LOCAL_MERGE_ROWS
     by_spark = _merge_sequence(
-        spark, str(tmp_path / "spark"), monkeypatch, 0, retain
+        spark, str(tmp_path / "spark"), monkeypatch, False, retain
     )
-    local = _merge_sequence(
-        spark, str(tmp_path / "local"), monkeypatch, budget, retain
+    on_driver = _merge_sequence(
+        spark, str(tmp_path / "local"), monkeypatch, True, retain
     )
-    assert (by_spark[3], local[3]) == (0, 2)
-    assert local[:3] == by_spark[:3]
+    assert (by_spark[3], on_driver[3]) == (0, 2)
+    assert on_driver[:3] == by_spark[:3]
 
 
 def test_local_merge_runs_one_spark_job(spark, tmp_path):

@@ -354,18 +354,21 @@ def test_bpe_driver_and_distributed_paths_agree(spark, texts, n_merges):
     distributed per-merge loop must emit the identical full merge
     table (rank, left, right, pair_count) — including early stops and
     tie-breaks on a 3-letter alphabet chosen to force count ties."""
+    from dynamodb_to_datalake_project_spark import local
     from dynamodb_to_datalake_project_spark.llm import bpe
 
     docs = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
-    rows = lambda lim: [  # noqa: E731
+    rows = lambda: [  # noqa: E731
         tuple(r)
-        for r in bpe.train_bpe_merges(
-            docs, n_merges=n_merges, min_count=2, driver_vocab_limit=lim
-        ).collect()
+        for r in bpe.train_bpe_merges(docs, n_merges=n_merges, min_count=2).collect()
     ]
-    assert rows(1 << 20) == rows(0)
+    driver = rows()
+    with pytest.MonkeyPatch.context() as m:  # every bounded collect refused
+        m.setattr(local, "collect_bounded", lambda df, max_rows: None)
+        distributed = rows()
+    assert driver == distributed
 
 
 # ---------------------------------------------------------------------------

@@ -148,20 +148,20 @@ def test_source_overlap_matrix_single_source_empty(spark):
     assert out[0].containment == 1.0
 
 
-def test_bpe_train_empty_and_tiny_corpus(spark):
+def test_bpe_train_empty_and_tiny_corpus(spark, monkeypatch):
     """An empty corpus trains zero merges (empty result frame with the
     right schema); a corpus whose best pair is below min_count stops
     early — on BOTH trainer paths."""
+    from dynamodb_to_datalake_project_spark import local
     from dynamodb_to_datalake_project_spark.llm import bpe
 
     empty = spark.createDataFrame([], "doc_id long, text string")
-    for lim in (1 << 20, 0):  # driver path, distributed path
-        out = bpe.train_bpe_merges(empty, n_merges=4, driver_vocab_limit=lim)
+    tiny = spark.createDataFrame([(1, "ab")], "doc_id long, text string")
+    for driver_path in (True, False):
+        if not driver_path:  # every bounded collect refused
+            monkeypatch.setattr(local, "collect_bounded", lambda df, max_rows: None)
+        out = bpe.train_bpe_merges(empty, n_merges=4)
         assert out.columns == ["rank", "left", "right", "pair_count"]
         assert out.count() == 0
-    tiny = spark.createDataFrame([(1, "ab")], "doc_id long, text string")
-    for lim in (1 << 20, 0):
-        got = bpe.train_bpe_merges(
-            tiny, n_merges=4, min_count=2, driver_vocab_limit=lim
-        ).collect()
+        got = bpe.train_bpe_merges(tiny, n_merges=4, min_count=2).collect()
         assert got == []  # best pair count 1 < min_count

@@ -416,3 +416,23 @@ def test_row_kernels_go_through_map_rows():
                 ]
     assert found == BATCH_KERNELS
     assert accumulators == []
+
+
+def test_driver_collects_go_through_the_size_gate():
+    """Only `local.py` turns a DataFrame into a driver-side pandas or
+    Arrow table: every other package module collects through
+    `local.collect_bounded`, whose row budget is part of the call."""
+    pkg = os.path.join(REPO, "dynamodb_to_datalake_project_spark")
+    found = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, pkg)
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        found += [
+            (rel, call.lineno, call.func.attr)
+            for call in ast.walk(tree)
+            if isinstance(call, ast.Call) and isinstance(call.func, ast.Attribute)
+            and call.func.attr in ("toPandas", "toArrow")
+        ]
+    assert [f for f in found if f[0] != "local.py"] == []
+    assert [f[2] for f in found if f[0] == "local.py"] == ["toArrow"]
